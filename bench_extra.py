@@ -168,7 +168,7 @@ def wand_skip() -> None:
             # method='wand' forces the block-max interval path for every
             # query (the 'auto' dispatch sends short candidate sets to the
             # exhaustive kernel, which never skips by design)
-            B._score_shard(spdf, qplan, 10, "wand", meta.k1, meta.b, meta.avgdl, True,
+            B._score_shard(spdf, qplan, 10, "wand", meta.k1, meta.b, meta.avgdl, 1.0,
                            n_docs=float(meta.n_docs))
         wall = time.perf_counter() - t0
         s = B.wand_stats()
@@ -238,15 +238,11 @@ def wand_skip_big(n_docs: int = 1_000_000) -> None:
         out["build_sec"] = t_build
     for name, qplan in batches.items():
         batch_terms = sorted({t for tws in qplan.values() for t, _ in tws})
-        pdf_all = (
-            B._bucket_pruned(idx.postings, idx.meta, batch_terms)
-            .filter(F.col("term").isin(batch_terms))
-            .toPandas()
-        )
+        pdf_all = idx.postings_for(batch_terms).filter(F.col("term").isin(batch_terms)).toPandas()
         B.reset_wand_stats()
         t0 = time.perf_counter()
         for _sid, spdf in pdf_all.groupby("shard"):
-            B._score_shard(spdf, qplan, 10, "wand", meta.k1, meta.b, meta.avgdl, True,
+            B._score_shard(spdf, qplan, 10, "wand", meta.k1, meta.b, meta.avgdl, 1.0,
                            n_docs=float(meta.n_docs))
         wall = time.perf_counter() - t0
         s = B.wand_stats()

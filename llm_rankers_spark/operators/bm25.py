@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from llm_rankers_spark.functions import codec
 from llm_rankers_spark.functions.tokenize import tokens_col
-from llm_rankers_spark.functions.xxh64 import spark_term_bucket
 from llm_rankers_spark.operators.index_build import InvertedIndex
 
 RESULT_SCHEMA = "qid string, ord long, score double"
@@ -208,17 +207,13 @@ def _score_rows_exhaustive(qid: str, rows: list, k: int, k1: float, b: float, av
 
 
 def _score_rows_wand(
-    qid: str, rows: list, k: int, k1: float, b: float, avgdl: float, use_block_max: bool,
-    safe_ub: bool = False,
+    qid: str, rows: list, k: int, k1: float, b: float, avgdl: float
 ) -> pd.DataFrame:
-    """Block-max WAND with a bounded min-heap over one query's shard lists.
-    ``rows`` = [(posting_row, weight)] already sorted by term. ``safe_ub``
-    replaces the baked per-list tf-norm bound with the universal tf_norm ≤ 1
-    (needed when scoring params differ from the ones baked at build)."""
+    """Block-max WAND with a bounded min-heap over one query's shard lists —
+    the doc-at-a-time reference traversal (``method='wand_dat'``). ``rows`` =
+    [(posting_row, weight)] already sorted by term; the baked bounds must
+    hold, i.e. (k1, b, avgdl) are the index's own."""
     iters = [_ListIter(row, w) for row, w in rows if int(row["n"]) > 0]
-    if safe_ub:
-        for it in iters:
-            it.ub = it.weight
     heap: list[tuple[float, int]] = []  # (score, -ord): kth best at heap[0]
     theta = -np.inf
     while True:
@@ -239,7 +234,7 @@ def _score_rows_wand(
         pivot_doc = live[pivot_idx].cur
         if live[0].cur == pivot_doc:
             involved = [it for it in live if it.cur == pivot_doc]
-            if use_block_max and len(heap) >= k:
+            if len(heap) >= k:
                 bm_ub = sum(it.block_max_contrib() for it in involved)
                 if bm_ub < theta or (bm_ub == theta and heap and -heap[0][1] <= pivot_doc):
                     # The block-max bound only covers the lists at the pivot;
@@ -279,13 +274,25 @@ def _score_rows_wand(
     )
 
 
-def _score_rows_block_max(qid: str, rows: list, k: int, k1: float, b: float, avgdl: float) -> pd.DataFrame:
-    uniq, scores = _block_max_arrays(rows, k, k1, b, avgdl, {})
+def _score_rows_block_max(
+    qid: str, rows: list, k: int, k1: float, b: float, avgdl: float, bound_scale: float | None = 1.0
+) -> pd.DataFrame:
+    uniq, scores = _block_max_arrays(rows, k, k1, b, avgdl, {}, bound_scale)
     return pd.DataFrame({"qid": qid, "ord": uniq, "score": scores})
 
 
+def _bound_scale(meta, k1: float, b: float, avgdl: float) -> float | None:
+    """How a segment's baked block bounds carry over to scoring with
+    (k1, b, avgdl): ``r = min(1, a/a′)`` for the baked avgdl a, or None when
+    k1/b differ from the baked ones (then only tf-norm ≤ 1 holds)."""
+    if k1 != meta.k1 or b != meta.b:
+        return None
+    return min(1.0, meta.avgdl / avgdl) if avgdl > 0 else 1.0
+
+
 def _block_max_arrays(
-    rows: list, k: int, k1: float, b: float, avgdl: float, shared_cache: dict
+    rows: list, k: int, k1: float, b: float, avgdl: float, shared_cache: dict,
+    bound_scale: float | None = 1.0,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized block-max pruned scoring (round-2 verdict #3): exact top-k
     without a doc-at-a-time Python loop.
@@ -317,14 +324,26 @@ def _block_max_arrays(
     shared with the exhaustive path's cache shape) and contribute their
     bound only to intervals that actually contain one of their docs; an
     absent list contributes 0 there, so the interval bound stays a true
-    upper bound and results are exact (property-tested)."""
+    upper bound and results are exact (property-tested).
+
+    Scoring under statistics other than the baked ones (global avgdl a′
+    across segments) keeps the kernel: with ``bound_scale`` r = min(1, a/a′),
+    k1·(1−b+b·dl/a′) ≥ r·k1·(1−b+b·dl/a), so each baked block bound ub
+    becomes 1/(1 + r·(1/ub − 1)), padded up by a relative 1e-12 because
+    pruning is a strict ``<``. ``bound_scale=None`` (k1/b differ from the
+    baked ones) uses tf-norm ≤ 1."""
     lists = []
     for row, w in rows:
         n = int(row["n"])
         if n == 0:
             continue
         bl = np.asarray(row["block_last"], dtype=np.int64)
-        ub = w * np.asarray(row["block_max_tfn"], dtype=np.float64)
+        tfn = np.asarray(row["block_max_tfn"], dtype=np.float64)
+        if bound_scale is None:
+            tfn = np.ones_like(tfn)
+        elif bound_scale < 1.0:
+            tfn = (1.0 + 1e-12) / (1.0 + bound_scale * (1.0 / tfn - 1.0))
+        ub = w * tfn
         lists.append((row, w, n, bl, ub, n <= SMALL_LIST_DECODE_MAX))
     if not lists:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
@@ -438,7 +457,7 @@ def _score_shard(
     k1: float,
     b: float,
     avgdl: float,
-    use_block_max: bool,
+    bound_scale: float | None,
     n_docs: float | None = None,
 ) -> pd.DataFrame:
     """Run every query's traversal over one shard's posting rows.
@@ -447,11 +466,12 @@ def _score_shard(
     carries RAW qw multiplicities and the idf factor is computed here from
     the per-row global ``df`` (layout v3) — no df-lookup job ever ran.
 
-    Methods: 'exhaustive' (decode everything), 'wand' (block-max pruned —
-    vectorized interval scoring when the baked bounds apply, else the
-    doc-at-a-time traversal with safe bounds), 'wand_dat' (always the
-    doc-at-a-time reference traversal), 'auto' (numpy-exhaustive under 64k
-    postings — decode cost beats pruning there — else same as 'wand')."""
+    Methods: 'exhaustive' (decode everything), 'wand' (vectorized block-max
+    interval scoring; ``bound_scale`` carries the baked bounds over to the
+    scoring statistics — see :func:`_block_max_arrays`), 'wand_dat' (the
+    doc-at-a-time reference traversal; baked statistics only), 'auto'
+    (numpy-exhaustive under 64k postings — decode cost beats pruning there —
+    else same as 'wand')."""
     import math
 
     pdf = pdf.sort_values("term")
@@ -496,12 +516,10 @@ def _score_shard(
                 # sorted-term accumulation, same tie-break) — tested in
                 # test_bm25 / test_wand_property.
                 res = _exhaustive_arrays(rows, k, k1, b, avgdl, decode_cache)
-            elif method in ("wand", "auto") and use_block_max:
-                res = _block_max_arrays(rows, k, k1, b, avgdl, block_cache)
+            elif method in ("wand", "auto"):
+                res = _block_max_arrays(rows, k, k1, b, avgdl, block_cache, bound_scale)
             else:
-                df_one = _score_rows_wand(
-                    qid, rows, k, k1, b, avgdl, use_block_max and method == "wand_dat", safe_ub=not use_block_max
-                )
+                df_one = _score_rows_wand(qid, rows, k, k1, b, avgdl)
                 res = (
                     df_one["ord"].to_numpy(np.int64),
                     df_one["score"].to_numpy(np.float64),
@@ -519,35 +537,51 @@ def _score_shard(
     )
 
 
-def _bucket_pruned(postings: DataFrame, meta, terms: list[str]) -> DataFrame:
-    """Static term-bucket pruning from a DRIVER-side term list: bucket =
-    pmod(xxhash64(term), num_buckets) is a pure function of the term, so the
-    bucket set is computed in-process (:func:`...functions.xxh64` mirrors
-    Catalyst's XXH64 bit-for-bit; parity-tested) — the round-5 version spent
-    one Spark job per search() call collecting the same ≤num_buckets values.
-    The filter prunes hive partitions at the file listing, like before."""
-    if getattr(meta, "layout_version", 1) < 2:
-        return postings
-    buckets = sorted({spark_term_bucket(t, meta.num_buckets) for t in terms})
-    return postings.filter(F.col("bucket").isin(buckets))
+#: posting columns the scorers read (layout v3 adds the per-row global df)
+_SCORE_COLS = (
+    "term", "shard", "n", "docs_blob", "tfs_blob", "dls_blob",
+    "block_last", "block_max_tfn", "doc_offs", "tf_offs", "dl_offs",
+)
 
 
-def _prune_buckets(postings: DataFrame, meta, terms_df: DataFrame) -> DataFrame:
-    """Static term-bucket pruning: postings are hive-partitioned by
-    bucket = xxhash64(term) % num_buckets, so a selective batch skips all
-    but its terms' buckets at the file listing (no scan, no IO). The
-    collected bucket list is metadata-sized (≤ num_buckets values)."""
-    if getattr(meta, "layout_version", 1) < 2:
-        return postings
-    buckets = sorted(
-        {
-            r["b"]
-            for r in terms_df.select(
-                F.pmod(F.xxhash64("term"), F.lit(meta.num_buckets)).alias("b")
-            ).distinct().collect()
-        }
+def _plan_params(indexes: list[InvertedIndex], method: str, k1, b) -> tuple:
+    """(k1, b, N, avgdl, per-segment bound scales) for scoring ``indexes``
+    as one index: N and avgdl come from the segments' metadata — the
+    statistics Lucene's IndexSearcher computes across segments."""
+    metas = [ix.meta for ix in indexes]
+    k1 = metas[0].k1 if k1 is None else k1
+    b = metas[0].b if b is None else b
+    n = sum(m.n_docs for m in metas)
+    avgdl = metas[0].avgdl if len(metas) == 1 else (sum(m.avgdl * m.n_docs for m in metas) / n if n else 0.0)
+    scales = [_bound_scale(m, k1, b, avgdl) for m in metas]
+    if method == "wand_dat" and any(s != 1.0 for s in scales):
+        raise ValueError("method='wand_dat' prunes with the baked bounds: it needs the index's own k1, b and avgdl")
+    return k1, b, float(n), avgdl, scales
+
+
+def _tagged_union(indexes: list[InvertedIndex], frame, cols) -> DataFrame:
+    """``frame(index)`` of every index, projected to ``cols`` and tagged
+    with the index's position as ``seg``."""
+    out = None
+    for i, ix in enumerate(indexes):
+        part = frame(ix).select(F.lit(i).alias("seg"), *cols)
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def _docid_topk(indexes: list[InvertedIndex], partial: DataFrame, k: int, tag: str, small: bool) -> DataFrame:
+    """Global top-k of per-(segment, shard) partials. Ordinals are unique
+    only within a segment, so docids attach by (seg, ord) against the union
+    of the doc maps, and the ranking is (score desc, docid asc) — within a
+    segment ordinal order is docid order, so ties break as on one index."""
+    doc_maps = _tagged_union(indexes, lambda ix: ix.doc_ords, ("ord", "docid"))
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
+    return (
+        doc_maps.join(F.broadcast(partial) if small else partial, ["seg", "ord"])
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "docid", "rank", "score", F.lit(tag).alias("tag"))
     )
-    return postings.filter(F.col("bucket").isin(buckets))
 
 
 # above this many queries the driver-planned path's collect + per-task
@@ -559,14 +593,13 @@ DRIVER_QUERY_PLAN_MAX = 1024
 
 
 def search(
-    index: InvertedIndex,
+    index: InvertedIndex | list[InvertedIndex],
     queries: DataFrame,
     k: int = 10,
     method: str = "wand",
     k1: float | None = None,
     b: float | None = None,
     tag: str = "llm_rankers_spark",
-    stats_override: tuple | None = None,
     shards: list[int] | None = None,
     plan: str = "auto",
     merge: str = "auto",
@@ -590,6 +623,10 @@ def search(
     - larger batches → :func:`search_distributed` (the plan stays a
       DataFrame cogrouped with shard postings — no collect anywhere).
 
+    ``index`` may also be a list of segment indexes (the live segments of
+    :func:`...streaming.index_stream.search_segments`): they are searched
+    as one index under global statistics, all segments in one pass.
+
     ``plan`` overrides: ``'driver'`` / ``'distributed'`` force a path
     (``'auto'`` default). ``shards`` (serving a shard subset) implies the
     driver path — per-subset calls are the sharded-serving unit and are
@@ -607,6 +644,7 @@ def search(
     """
     if plan not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown plan {plan!r}")
+    indexes = index if isinstance(index, list) else [index]
     chosen = plan
     probe_n = None
     qrows = None
@@ -633,99 +671,86 @@ def search(
         if shards is not None:
             raise ValueError("shards= is a driver-planned serving knob; use plan='driver'")
         return search_distributed(
-            index, queries, k=k, method=method, k1=k1, b=b, tag=tag,
-            stats_override=stats_override, query_chunks=query_chunks,
+            indexes, queries, k=k, method=method, k1=k1, b=b, tag=tag, query_chunks=query_chunks,
             prune_buckets=prune_buckets, merge=merge, merge_fanin=merge_fanin,
         )
     return _search_driver_planned(
-        index, queries, k=k, method=method, k1=k1, b=b, tag=tag,
-        stats_override=stats_override, shards=shards, _qrows=qrows,
+        indexes, queries, k=k, method=method, k1=k1, b=b, tag=tag, shards=shards, _qrows=qrows,
     )
 
 
 def _search_driver_planned(
-    index: InvertedIndex,
+    indexes: list[InvertedIndex],
     queries: DataFrame,
     k: int = 10,
     method: str = "wand",
     k1: float | None = None,
     b: float | None = None,
     tag: str = "llm_rankers_spark",
-    stats_override: tuple | None = None,
     shards: list[int] | None = None,
     _qrows: list | None = None,
 ) -> DataFrame:
-    """BM25 top-k → TREC-shaped DataFrame (qid, docid, rank, score, tag).
+    """BM25 top-k over one index, or over several segments in one pass →
+    TREC-shaped DataFrame (qid, docid, rank, score, tag).
 
     ``shards`` restricts the traversal to a shard subset — the unit of
     shard-parallel serving across jobs/executors: shards hold disjoint doc
     ranges, so per-subset top-k results union+re-rank to the exact global
     top-k (the same merge search() already does across its shard groups).
 
-    ``stats_override=(n_docs, avgdl, term_stats_df)`` swaps in global
-    statistics — used by multi-segment search, where idf/avgdl must be
-    computed across all segments (Lucene IndexSearcher semantics) while
-    postings stay segment-local.
+    Several ``indexes`` are scored under GLOBAL statistics (Lucene
+    IndexSearcher semantics) while postings stay segment-local: N and
+    avgdl from the segments' metadata, df = Σn per term over all segments'
+    candidate rows in ONE collect. A single layout-v3 index keeps its
+    in-row global df and runs no df job.
 
-    Batch-query plan: postings are LEFT-SEMI joined on the *distinct* term
-    set of the whole batch (each posting row shuffles at most once, never
-    once per query — the naive postings⋈(qid,term) join replicates the
-    index by the batch size), then one ``applyInPandas`` per shard runs
-    every query's traversal over that shard's lists. The per-query term
-    weights (qid, term, qw, idf) are tiny and ride along in the closure.
+    Batch-query plan: each index opens only its batch's bucket directories
+    (:meth:`InvertedIndex.postings_for`), filtered to the batch's *distinct*
+    terms (each posting row is read once, never once per query — the naive
+    postings⋈(qid,term) join replicates the index by the batch size). The
+    segments' candidate rows, tagged with a segment id, go through ONE
+    ``applyInPandas`` per (segment, shard) that runs every query's
+    traversal. The per-query term weights are tiny and ride along in the
+    closure.
     """
-    meta = index.meta
-    k1 = meta.k1 if k1 is None else k1
-    b = meta.b if b is None else b
-    n_override, avgdl_override, ts_override = stats_override if stats_override else (None, None, None)
-    avgdl = avgdl_override if avgdl_override is not None else meta.avgdl
-    # block-max bounds are baked at index (k1, b, segment avgdl); any override
-    # invalidates them → fall back to plain WAND term bounds
-    use_block_max = (
-        method in ("wand", "auto", "wand_dat") and k1 == meta.k1 and b == meta.b and avgdl_override is None
-    )
-
-    # Query batches are driver-side small data: tokenize them right here with
-    # the SAME shared tokenizer (no UDF stage, no shuffle — one filter job
-    # against term_stats fetches the df values).
     import math
     from collections import Counter
 
     from llm_rankers_spark.functions.tokenize import tokenize
 
+    k1, b, n_docs, avgdl, scales = _plan_params(indexes, method, k1, b)
+    spark = queries.sparkSession
     qrows = _qrows if _qrows is not None else queries.select("qid", "query").collect()
-    qcounts = {r["qid"]: Counter(tokenize(r["query"] or "", meta.tokenizer_mode)) for r in qrows}
-    distinct_terms = sorted({t for c in qcounts.values() for t in c})
-    if not distinct_terms:
-        empty = queries.sparkSession.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
+    mode = indexes[0].meta.tokenizer_mode
+    qcounts = {r["qid"]: Counter(tokenize(r["query"] or "", mode)) for r in qrows}
+    terms = sorted({t for c in qcounts.values() for t in c})
+    empty = spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
+    if not terms:
         return empty
-    n_docs = float(n_override if n_override is not None else meta.n_docs)
-    df_in_rows = getattr(meta, "layout_version", 1) >= 3 and ts_override is None
-    qplan: dict[str, list[tuple[str, float]]] = {}
+
+    def open_terms(ix: InvertedIndex) -> DataFrame:
+        p = ix.postings_for(terms)
+        if len(terms) <= 512:
+            # literal IN predicate: reaches the parquet scan as a
+            # PushedFilter, so row groups whose term min/max excludes the
+            # batch are skipped without decoding (the pack writes terms
+            # SORTED within each bucket file, making the stats selective).
+            # A broadcast semi-join cannot prune below the join operator.
+            # Bounded to small batches — a huge IN list bloats the plan.
+            return p.filter(F.col("term").isin(terms))
+        return p.join(F.broadcast(spark.createDataFrame([(t,) for t in terms], "term string")), "term", "left_semi")
+
+    df_in_rows = len(indexes) == 1 and indexes[0].meta.layout_version >= 3
+    cand = _tagged_union(indexes, open_terms, _SCORE_COLS + (("df",) if df_in_rows else ()))
     if df_in_rows:
         # layout v3: global df rides on every posting row, so the scorer
-        # computes idf in-task — no df-lookup job at all. qplan carries the
-        # raw qw multiplicities; absent terms simply match no rows.
-        for qid, counts in qcounts.items():
-            qplan[qid] = [(t, float(qw)) for t, qw in counts.items()]
+        # computes idf in-task. qplan carries the raw qw multiplicities;
+        # absent terms simply match no rows.
+        qplan = {qid: [(t, float(qw)) for t, qw in c.items()] for qid, c in qcounts.items()}
     else:
-        if ts_override is not None:
-            all_terms_df = queries.sparkSession.createDataFrame([(t,) for t in distinct_terms], "term string")
-            ts = ts_override.join(F.broadcast(all_terms_df), "term", "left_semi")
-        else:
-            # df from the bucket-PRUNED postings instead of the full
-            # term_stats scan: the batch's terms live in a handful of
-            # buckets (computed driver-side — no job), the term IN filter
-            # pushes to the parquet scan, and Σn over a term's shard rows
-            # is the global df
-            ts = (
-                _bucket_pruned(index.postings, meta, distinct_terms)
-                .filter(F.col("term").isin(distinct_terms))
-                .groupBy("term")
-                .agg(F.sum("n").alias("df"))
-            )
-        df_map = {r["term"]: int(r["df"]) for r in ts.select("term", "df").collect()}
-        # (qid → [(term, weight)]) — bounded by batch_size × query_len
+        # global df over ALL shards (before any shard-subset filter)
+        df_map = {r["term"]: int(r["df"]) for r in cand.groupBy("term").agg(F.sum("n").alias("df")).collect()}
+        qplan = {}
         for qid, counts in qcounts.items():
             tws = [
                 (t, qw * math.log(1.0 + (n_docs - df_map[t] + 0.5) / (df_map[t] + 0.5)))
@@ -734,48 +759,22 @@ def _search_driver_planned(
             ]
             if tws:
                 qplan[qid] = tws
-        live_terms = sorted({t for tws in qplan.values() for t, _ in tws})
-
-    term_list = distinct_terms if df_in_rows else live_terms
-    # bucket pruning from the DRIVER-side term list (round-6): the bucket
-    # ids are pmod(xxhash64(term), num_buckets) — a pure function of the
-    # terms already in hand, so the old collect-the-buckets job is gone
-    postings = _bucket_pruned(index.postings, meta, term_list)
+        if not qplan:
+            return empty
     if shards is not None:
-        postings = postings.filter(F.col("shard").isin([int(s) for s in shards]))
-    if len(term_list) <= 512:
-        # literal IN predicate: reaches the parquet scan as a PushedFilter,
-        # so row groups whose term min/max excludes the batch are skipped
-        # without decoding (the pack writes terms SORTED within each bucket
-        # file, making the stats selective). A broadcast semi-join cannot
-        # prune below the join operator. Bounded to small batches — a huge
-        # IN list bloats the plan; big batches keep the semi-join (and
-        # belong on search_distributed anyway).
-        cand = postings.filter(F.col("term").isin(term_list))
-    else:
-        terms_df = queries.sparkSession.createDataFrame([(t,) for t in term_list], "term string")
-        cand = postings.join(F.broadcast(terms_df), "term", "left_semi")
+        cand = cand.filter(F.col("shard").isin([int(s) for s in shards]))
 
     score_n_docs = n_docs if df_in_rows else None
-    partial = cand.groupBy("shard").applyInPandas(
+    partial = cand.groupBy("seg", "shard").applyInPandas(
         lambda key, pdf: _score_shard(
-            pdf, qplan, k, method, k1, b, avgdl, use_block_max, n_docs=score_n_docs
-        ),
-        schema=RESULT_SCHEMA,
+            pdf, qplan, k, method, k1, b, avgdl, scales[key[0]], n_docs=score_n_docs
+        ).assign(seg=key[0]),
+        schema=RESULT_SCHEMA + ", seg int",
     )
-
-    # exact global top-k: shards are disjoint doc ranges, so the union of
-    # per-shard top-k contains the global top-k.
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("ord"))
-    topk = partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-    # attach docids: topk is tiny (n_queries × k) → broadcast it against the
-    # big doc_map instead of shuffling doc_map.
-    return (
-        index.doc_map.select("ord", "docid")
-        .join(F.broadcast(topk), "ord", "inner")
-        .select("qid", "docid", "rank", "score", F.lit(tag).alias("tag"))
-    )
+    # exact global top-k: shards (and segments) are disjoint doc sets, so the
+    # union of per-group top-k contains the global top-k; the partials are
+    # tiny (n_queries × groups × k), hence the broadcast
+    return _docid_topk(indexes, partial, k, tag, small=True)
 
 
 def _tree_topk(
@@ -808,14 +807,13 @@ def _tree_topk(
 
 
 def search_distributed(
-    index: InvertedIndex,
+    index: InvertedIndex | list[InvertedIndex],
     queries: DataFrame,
     k: int = 10,
     method: str = "auto",
     k1: float | None = None,
     b: float | None = None,
     tag: str = "llm_rankers_spark",
-    stats_override: tuple | None = None,
     query_chunks: int = 1,
     prune_buckets: bool = True,
     merge: str = "auto",
@@ -828,13 +826,19 @@ def search_distributed(
     dict in every task closure: right for reranking-sized batches, wrong at
     100× (driver serialization + closure bloat — round-1 verdict). Here the
     (qid, term, w=qw·idf) plan is a DataFrame: tokenized by the vectorized
-    UDF, joined with term_stats for df, replicated once per shard (a join
+    UDF, joined with the batch's df table, replicated once per shard (a join
     with the shard-id list, ≲ num_shards × Σ|q| rows — the same volume a
     broadcast would ship per executor), and cogrouped with the shard's
     posting rows. ``queries`` is never collected; chunk a 10^6-query batch
     by qid range upstream if the replicated plan outgrows executor memory.
 
-    ``merge``: how per-shard partial top-k's become the global top-k.
+    A list of segment indexes is searched as one index under global
+    statistics, as in :func:`_search_driver_planned`: df is an aggregate
+    over the segments' candidate rows broadcast back by term — part of the
+    plan, nothing persisted — and the merge ranks by docid.
+
+    ``merge`` (one index): how per-shard partial top-k's become the global
+    top-k.
     ``'auto'`` (default) resolves window vs tree on the shard count
     (cutover at 32 shards with the measured fanin 8 —
     BENCH/SCALE_PROOF_r05.md: 1.64× at 64 shards × 4096 queries).
@@ -855,7 +859,7 @@ def search_distributed(
             search_distributed(
                 index,
                 queries.filter(F.pmod(F.xxhash64("qid"), F.lit(query_chunks)) == c),
-                k=k, method=method, k1=k1, b=b, tag=tag, stats_override=stats_override,
+                k=k, method=method, k1=k1, b=b, tag=tag,
                 prune_buckets=prune_buckets, merge=merge, merge_fanin=merge_fanin,
             )
             for c in range(query_chunks)
@@ -865,64 +869,64 @@ def search_distributed(
             out = out.unionByName(p)
         return out
 
-    meta = index.meta
-    k1 = meta.k1 if k1 is None else k1
-    b = meta.b if b is None else b
-    n_override, avgdl_override, ts_override = stats_override if stats_override else (None, None, None)
-    avgdl = avgdl_override if avgdl_override is not None else meta.avgdl
-    use_block_max = (
-        method in ("wand", "auto", "wand_dat") and k1 == meta.k1 and b == meta.b and avgdl_override is None
-    )
-    n_docs = float(n_override if n_override is not None else meta.n_docs)
-
-    qt = query_terms(queries, meta.tokenizer_mode)  # (qid, term, qw) — UDF, no collect
+    indexes = index if isinstance(index, list) else [index]
+    k1, b, n_docs, avgdl, scales = _plan_params(indexes, method, k1, b)
+    spark = queries.sparkSession
+    qt = query_terms(queries, indexes[0].meta.tokenizer_mode)  # (qid, term, qw) — UDF, no collect
     terms_df = qt.select("term").distinct()
-    # static pruning costs one pass over the batch's terms; at 10^6 queries
-    # the batch touches every bucket anyway — let callers turn it off
-    postings = _prune_buckets(index.postings, meta, terms_df) if prune_buckets else index.postings
-    cand = postings.join(terms_df, "term", "left_semi")
-    df_in_rows = getattr(meta, "layout_version", 1) >= 3 and ts_override is None
+    buckets: dict[int, list] = {}
+
+    def open_terms(ix: InvertedIndex) -> DataFrame:
+        # static pruning costs one pass over the batch's terms (a
+        # metadata-sized collect, once per bucket count); at 10^6 queries
+        # the batch touches every bucket anyway — let callers turn it off
+        nb = ix.meta.num_buckets
+        if not prune_buckets or ix.meta.layout_version < 2:
+            return ix.postings.join(terms_df, "term", "left_semi")
+        if nb not in buckets:
+            buckets[nb] = [r[0] for r in terms_df.select(F.pmod(F.xxhash64("term"), F.lit(nb))).distinct().collect()]
+        return ix.postings_in_buckets(buckets[nb]).join(terms_df, "term", "left_semi")
+
+    df_in_rows = len(indexes) == 1 and indexes[0].meta.layout_version >= 3
+    cand = _tagged_union(indexes, open_terms, _SCORE_COLS + (("df",) if df_in_rows else ()))
     if df_in_rows:
         # layout v3: idf computed in-task from the per-row global df — the
         # query plan is just the raw (qid, term, qw) multiplicities
         qw = qt.select("qid", "term", F.col("qw").cast("double").alias("w"))
     else:
-        if ts_override is not None:
-            ts = ts_override.select("term", "df")
-        else:
-            # df from the pruned candidate rows (Σn over a term's shards =
-            # its global df) — never a full term_stats scan
-            ts = cand.groupBy("term").agg(F.sum("n").alias("df"))
-        qw = qt.join(ts, "term").select(
-            "qid",
-            "term",
-            (F.col("qw") * _idf(int(n_docs))(F.col("df").cast("double"))).alias("w"),
+        # df from the candidate rows (Σn over a term's shards and segments =
+        # its global df) — never a full term_stats scan
+        ts = cand.groupBy("term").agg(F.sum("n").alias("df"))
+        qw = qt.join(F.broadcast(ts), "term").select(
+            "qid", "term", (F.col("qw") * _idf(n_docs)(F.col("df").cast("double"))).alias("w")
         )
 
-    # replicate the (small) per-query weights to every shard and cogroup:
-    # each task sees (shard's postings, full query plan) — no closures.
-    # num_shards is metadata, so the shard-id list never touches the data.
-    shard_ids = queries.sparkSession.createDataFrame(
-        [(s,) for s in range(meta.num_shards)], "shard int"
+    # replicate the (small) per-query weights to every (segment, shard) and
+    # cogroup: each task sees (shard's postings, full query plan) — no
+    # closures. Shard counts are metadata, so the id list never touches data.
+    groups = spark.createDataFrame(
+        [(i, s) for i, ix in enumerate(indexes) for s in range(ix.meta.num_shards)], "seg int, shard int"
     )
-    qw_rep = qw.crossJoin(F.broadcast(shard_ids))
-
+    qw_rep = qw.crossJoin(F.broadcast(groups))
     score_n_docs = n_docs if df_in_rows else None
 
-    def scorer(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+    def scorer(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         qplan: dict[str, list[tuple[str, float]]] = {}
         for qid, term, w in zip(rpdf["qid"], rpdf["term"], rpdf["w"]):
             qplan.setdefault(qid, []).append((term, float(w)))
         return _score_shard(
-            lpdf, qplan, k, method, k1, b, avgdl, use_block_max, n_docs=score_n_docs
-        )
+            lpdf, qplan, k, method, k1, b, avgdl, scales[key[0]], n_docs=score_n_docs
+        ).assign(seg=key[0])
 
     partial = (
-        cand.groupBy("shard")
-        .cogroup(qw_rep.groupBy("shard"))
-        .applyInPandas(lambda key, lp, rp: scorer(lp, rp), schema=RESULT_SCHEMA)
+        cand.groupBy("seg", "shard")
+        .cogroup(qw_rep.groupBy("seg", "shard"))
+        .applyInPandas(scorer, schema=RESULT_SCHEMA + ", seg int")
     )
+    if len(indexes) > 1:
+        return _docid_topk(indexes, partial, k, tag, small=False)
 
+    meta = indexes[0].meta
     if merge == "auto":
         # measured cutover (BENCH/SCALE_PROOF_r05.md §3): at 64 shards x
         # 4096 queries the fanin-8 tree merged 1.64x faster than the single
@@ -945,8 +949,7 @@ def search_distributed(
     # force-broadcasting that ships up to ~10^7 rows to every executor. AQE
     # picks broadcast at runtime when the actual size is small.
     return (
-        index.doc_map.select("ord", "docid")
-        .join(topk, "ord", "inner")
+        indexes[0].doc_ords.join(topk, "ord", "inner")
         .select("qid", "docid", "rank", "score", F.lit(tag).alias("tag"))
     )
 

@@ -31,10 +31,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from llm_rankers_spark import fsio
 from llm_rankers_spark.functions import codec
 from llm_rankers_spark.functions.tokenize import term_counts_col
+from llm_rankers_spark.functions.xxh64 import spark_term_bucket
 
 POSTINGS_SCHEMA = (
     "term string, shard int, bucket int, n long, docs_blob binary, tfs_blob binary, dls_blob binary, "
@@ -75,8 +77,44 @@ class InvertedIndex:
         return self.spark.read.parquet(os.path.join(self.path, "postings"))
 
     @property
+    def postings_schema(self) -> StructType:
+        """The layout's declared postings schema in the column order a
+        parquet read yields: the file columns (``df`` from layout v3 on),
+        then the ``bucket`` partition column."""
+        s = StructType.fromDDL(POSTINGS_SCHEMA + (", df long" if self.meta.layout_version >= 3 else ""))
+        return StructType([f for f in s.fields if f.name != "bucket"] + [s["bucket"]])
+
+    def postings_for(self, terms) -> DataFrame:
+        """The postings of the buckets that can hold ``terms`` — the
+        query-time open. Bucket ids are a pure function of the term,
+        computed in-process."""
+        nb = self.meta.num_buckets
+        return self.postings_in_buckets({spark_term_bucket(t, nb) for t in terms})
+
+    def postings_in_buckets(self, buckets) -> DataFrame:
+        """Read only the ``bucket=<b>`` directories of ``buckets`` that exist,
+        with the declared schema: one listing of the postings directory and
+        no schema-inference or partition-discovery job. A bucket without a
+        directory holds no postings. Layout v1 has no buckets and reads
+        whole."""
+        if self.meta.layout_version < 2:
+            return self.postings
+        root = os.path.join(self.path, "postings")
+        want = {int(b) for b in buckets}
+        dirs = [d for d in fsio.list_files(os.path.join(root, "bucket=*")) if int(d.rsplit("=", 1)[1]) in want]
+        if not dirs:
+            return self.spark.createDataFrame([], self.postings_schema)
+        return self.spark.read.schema(self.postings_schema).option("basePath", root).parquet(*dirs)
+
+    @property
     def doc_map(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, "doc_map"))
+
+    @property
+    def doc_ords(self) -> DataFrame:
+        """(ord, docid) of the doc map, read with the declared types of those
+        two columns — no schema-inference job."""
+        return self.spark.read.schema("ord long, docid string").parquet(os.path.join(self.path, "doc_map"))
 
     @property
     def forward(self) -> DataFrame:

@@ -122,6 +122,17 @@ def _warm_session(spark: SparkSession) -> None:
         sc.setJobDescription(None)
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: min(32g, half of
+    physical RAM). A local-mode driver is the whole engine, and a heap sized
+    above physical RAM lets the JVM grow until a swapless host runs out."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 * 1024 * 1024)
+    except (AttributeError, OSError, ValueError):
+        return "32g"  # no sysconf (non-POSIX host)
+    return f"{min(32 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "llm_rankers_spark",
     master: str | None = None,
@@ -188,7 +199,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if os.environ.get("LLMRS_UDS", "1") != "0":

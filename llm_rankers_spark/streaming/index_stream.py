@@ -7,10 +7,12 @@ re-expressed): its own doc_map/term_stats/postings built by the exact same
 ``build_index`` job, registered in a segments manifest by ``foreachBatch``
 (exactly-once per epoch via the manifest's epoch guard).
 
-Query-time: per-segment partial top-k with GLOBAL (cross-segment) df/N/
-avgdl — the same statistics Lucene's IndexSearcher computes across
-segments — then a disjoint-docid top-k merge. A compaction job can fold
-segments back through ``build_index`` offline.
+Query-time: one pass over all live segments with GLOBAL (cross-segment)
+df/N/avgdl — the same statistics Lucene's IndexSearcher computes across
+segments. Each segment opens only the query batch's bucket directories,
+with the layout's declared schema; the segments' candidate rows are scored
+together in one grouped UDF and merged by (score desc, docid asc). A
+compaction job can fold segments back through ``build_index`` offline.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ import os
 
 from llm_rankers_spark import fsio
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from llm_rankers_spark.operators.bm25 import search
@@ -80,88 +82,23 @@ def start_index_stream(
     )
 
 
-def segment_stats(
-    spark: SparkSession, root: str, terms: list[str] | None = None
-) -> tuple[int, float, DataFrame]:
-    """Global (N, avgdl, df-table) across all registered segments.
-
-    With ``terms`` (the query batch's term list), each segment's df scan is
-    bucket-pruned and term-filtered BEFORE the aggregate — per-term sums
-    are unchanged, but the full-vocabulary union+groupBy (a per-batch scan
-    of every segment's whole term space — the round-6 audit's scale
-    finding) never runs."""
-    from llm_rankers_spark.operators.bm25 import _bucket_pruned
-
-    segs = [load_index(spark, os.path.join(root, s)) for s in list_segments(root)]
-    n = sum(s.meta.n_docs for s in segs)
-    total_len = sum(s.meta.avgdl * s.meta.n_docs for s in segs)
-    avgdl = total_len / n if n else 0.0
-    df_all = None
-    for s in segs:
-        p = s.postings
-        if terms is not None:
-            p = _bucket_pruned(p, s.meta, terms)
-            if len(terms) <= 512:
-                p = p.filter(F.col("term").isin(terms))
-            else:
-                t_df = spark.createDataFrame([(t,) for t in terms], "term string")
-                p = p.join(F.broadcast(t_df), "term", "left_semi")
-        d = p.groupBy("term").agg(F.sum("n").alias("df"))
-        df_all = d if df_all is None else df_all.unionByName(d)
-    merged_df = df_all.groupBy("term").agg(F.sum("df").alias("df")) if df_all is not None else None
-    return n, avgdl, merged_df
-
-
 def search_segments(spark: SparkSession, root: str, queries: DataFrame, k: int = 10) -> DataFrame:
-    """BM25 top-k across all segments with global statistics.
+    """BM25 top-k across all live segments with global statistics.
 
-    Each segment is searched with the shared search() operator but with a
-    global-stats override (idf/avgdl must be cross-segment — Lucene
-    semantics); per-segment docids are disjoint so the merge is a plain
-    window top-k.
-
-    Round-6: for reranking-sized batches (the bounded ``limit(N+1)``
-    probe shared with search()) the batch's terms are tokenized
-    driver-side, the cross-segment df table is computed over exactly those
-    terms (see :func:`segment_stats`) and COLLECTED into a local relation
-    — so the per-segment searches reuse it with no recompute and no
-    persisted intermediate left behind (the round-5 version persisted a
-    full-vocabulary table it could never unpersist)."""
-    from collections import Counter
-
-    from llm_rankers_spark.functions.tokenize import tokenize
-    from llm_rankers_spark.operators.bm25 import DRIVER_QUERY_PLAN_MAX
-
-    seg_names = list_segments(root)
-    if not seg_names:
+    idf/avgdl must be cross-segment (Lucene IndexSearcher semantics): N and
+    avgdl come from the segments' metadata and df is Σn per term over every
+    segment's candidate rows. All segments are scored in ONE pass of the
+    shared :func:`search` operator: each segment opens only the batch's
+    bucket directories with the layout's declared schema, the segments'
+    candidate rows are unioned with a segment tag and scored by one grouped
+    UDF per (segment, shard), and docids attach by (segment, ordinal) before
+    the (score desc, docid asc) top-k. Batches above the driver-plan cutoff
+    take the distributed plan, whose df table is an aggregate inside the
+    plan — nothing is persisted."""
+    segs = [load_index(spark, os.path.join(root, s)) for s in list_segments(root)]
+    if not segs:
         return spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
-    mode = load_index(spark, os.path.join(root, seg_names[0])).meta.tokenizer_mode
-    qrows = queries.select("qid", "query").limit(DRIVER_QUERY_PLAN_MAX + 1).collect()
-    terms = None
-    if len(qrows) <= DRIVER_QUERY_PLAN_MAX:
-        counts = [Counter(tokenize(r["query"] or "", mode)) for r in qrows]
-        terms = sorted({t for c in counts for t in c})
-    n, avgdl, merged_df = segment_stats(spark, root, terms=terms)
-    if merged_df is None or (terms is not None and not terms):
-        return spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
-    if terms is not None:
-        rows = [(r["term"], int(r["df"])) for r in merged_df.collect()]
-        merged_df = spark.createDataFrame(rows, "term string, df long") if rows else None
-        if merged_df is None:
-            return spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
-    else:
-        merged_df = merged_df.persist()
-    out = None
-    for seg_name in seg_names:
-        idx = load_index(spark, os.path.join(root, seg_name))
-        part = search(idx, queries, k=k, method="wand", stats_override=(n, avgdl, merged_df))
-        out = part if out is None else out.unionByName(part)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "docid", "rank", "score", "tag")
-    )
+    return search(segs, queries, k=k, method="wand")
 
 
 def _decode_postings_forward(idx) -> DataFrame:
@@ -212,7 +149,7 @@ def compact_segments(spark: SparkSession, root: str, num_shards: int = 4, name: 
     kept so stream replay stays exactly-once); old segment dirs are removed.
 
     Search results are rank-identical pre/post compaction because df/N/avgdl
-    were already computed globally at query time (segment_stats) and tf/dl
+    were already computed globally at query time (search_segments) and tf/dl
     per (doc, term) are preserved exactly (tested in test_streaming.py)."""
     segs = list_segments(root)
     if len(segs) <= 1:

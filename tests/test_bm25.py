@@ -459,6 +459,7 @@ def test_bake_df_false_layout_v2_searches_equal(spark, corpus, queries, tmp_path
     )
     assert idx2.meta.layout_version == 2
     assert "df" not in idx2.postings.columns
+    assert idx2.postings_schema == idx2.postings.schema
     got = _collect_runs(search(idx2, queries, k=10, method="wand"))
     idx3 = build_index(
         corpus.select("docid", "content", "content_sha256"),
@@ -470,3 +471,30 @@ def test_bake_df_false_layout_v2_searches_equal(spark, corpus, queries, tmp_path
         assert [d for d, _ in got[qid]] == [d for d, _ in want[qid]]
         for (_, a), (_, b) in zip(got[qid], want[qid]):
             assert a == pytest.approx(b, abs=1e-9)
+
+
+def test_declared_postings_schema_equals_inferred(spark, index):
+    # the query-time open reads with the layout's declared schema instead of
+    # inferring it; both must agree on a freshly built (layout v3) index
+    inferred = spark.read.parquet(os.path.join(index.path, "postings")).schema
+    assert index.postings_schema == inferred
+    assert index.postings_for(["parse", "query"]).schema == inferred
+
+
+def test_absent_bucket_directory_returns_no_rows(spark, tmp_path):
+    from llm_rankers_spark.functions.xxh64 import spark_term_bucket
+
+    # a 2-doc index fills only a few of its 64 bucket directories
+    docs = spark.createDataFrame([("d1", "alpha beta"), ("d2", "beta gamma")], "docid string, content string")
+    idx = build_index(docs, str(tmp_path / "tiny"), tokenizer_mode="simple", num_shards=2)
+    present = {int(d.split("=")[1]) for d in os.listdir(os.path.join(idx.path, "postings")) if d.startswith("bucket=")}
+    term = next(
+        t for t in (f"zzz_absent{i}" for i in range(1000)) if spark_term_bucket(t, idx.meta.num_buckets) not in present
+    )
+    assert idx.postings_for([term]).count() == 0
+    qs = spark.createDataFrame([("q1", term)], "qid string, query string")
+    for method in ("wand", "exhaustive"):
+        assert search(idx, qs, k=5, method=method).collect() == []
+    # a batch mixing it with a present term still ranks the present one
+    qs2 = spark.createDataFrame([("q1", term), ("q2", f"beta {term}")], "qid string, query string")
+    assert sorted(r["docid"] for r in search(idx, qs2, k=5).collect()) == ["d1", "d2"]

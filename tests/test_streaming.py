@@ -116,6 +116,79 @@ def test_segment_replay_is_idempotent(spark, doc_batches, tmp_path):
 
 
 @pytest.fixture(scope="module")
+def two_segments(spark, doc_batches, tmp_path_factory):
+    """A stream root holding two segments built directly (no stream run)."""
+    import json
+
+    _base, d1, d2, _docs = doc_batches
+    root = str(tmp_path_factory.mktemp("two_segs"))
+    for i, part in enumerate((d1, d2)):
+        build_index(part, os.path.join(root, f"segment_{i:05d}"), num_shards=2)
+    with open(os.path.join(root, "_segments.json"), "w") as f:
+        json.dump({"segments": ["segment_00000", "segment_00001"], "epochs": [0, 1]}, f)
+    return root
+
+
+def _runs(df):
+    return [(r["qid"], r["docid"], r["rank"], r["score"]) for r in df.orderBy("qid", "rank").collect()]
+
+
+def test_segment_search_is_one_pass(spark, two_segments):
+    """A 16-query batch over two segments: each segment opens only its
+    batch buckets with the declared schema, and all segments score in one
+    grouped pass — a bounded number of Spark jobs (31 when each segment was
+    searched separately)."""
+    from llm_rankers_spark.corpus import VOCAB, generate_queries
+
+    queries = generate_queries(spark, VOCAB, n_queries=16, seed=3)
+    queries = spark.createDataFrame(queries.collect(), queries.schema)  # a local relation
+    search_segments(spark, two_segments, queries, k=10).collect()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("one_pass", "one_pass")
+    try:
+        rows = search_segments(spark, two_segments, queries, k=10).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 16 * 10
+    assert len(sc.statusTracker().getJobIdsForGroup("one_pass")) <= 10
+
+
+def test_single_segment_root_equals_search(spark, doc_batches, tmp_path):
+    import json
+
+    _base, _d1, _d2, docs = doc_batches
+    root = str(tmp_path / "one_seg")
+    idx = build_index(docs, os.path.join(root, "segment_00000"), num_shards=2)
+    with open(os.path.join(root, "_segments.json"), "w") as f:
+        json.dump({"segments": ["segment_00000"], "epochs": [0]}, f)
+    queries = spark.createDataFrame(
+        [("s1", "parse query"), ("s2", "passage_7"), ("s3", "import def return")], "qid string, query string"
+    )
+    got, want = _runs(search_segments(spark, root, queries, k=5)), _runs(search(idx, queries, k=5))
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    for a, b in zip(got, want):
+        assert a[3] == pytest.approx(b[3], abs=1e-12)
+
+
+def test_large_batch_segment_search_persists_nothing(spark, two_segments, monkeypatch):
+    """Above the driver-plan cutoff the global df table is an aggregate
+    inside the distributed plan: same results, nothing left persisted."""
+    from llm_rankers_spark.operators import bm25
+
+    queries = spark.createDataFrame(
+        [("s1", "parse query"), ("s2", "passage_7"), ("s3", "request handler")], "qid string, query string"
+    )
+    small = _runs(search_segments(spark, two_segments, queries, k=5))
+    monkeypatch.setattr(bm25, "DRIVER_QUERY_PLAN_MAX", 2)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    large = _runs(search_segments(spark, two_segments, queries, k=5))
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert [r[:3] for r in large] == [r[:3] for r in small]
+    for a, b in zip(large, small):
+        assert a[3] == pytest.approx(b[3], abs=1e-12)
+
+
+@pytest.fixture(scope="module")
 def events_dir(tmp_path_factory):
     """The file stream source needs a DIRECTORY of matching-schema files —
     the sf dir also holds the other tables, so isolate events.parquet."""
