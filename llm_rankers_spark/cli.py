@@ -75,7 +75,8 @@ def build_parser() -> argparse.ArgumentParser:
     p_idx.add_argument("--resume", action="store_true")
     p_idx.add_argument("--num-buckets", type=int, default=None,
                        help="term-hash buckets the postings are hive-partitioned "
-                            "by (pruning granularity; default 64)")
+                            "by (pruning granularity; default: sized from the "
+                            "postings-row count, at most 64)")
     p_idx.add_argument("--pack-group", choices=["auto", "bucket", "shard_bucket"], default="auto",
                        help="pack-task grouping: 'auto' (default) picks by the "
                             "measured rows-per-bucket cutover; 'bucket' counts df "
@@ -159,13 +160,13 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(master=args.master)
 
     if args.cmd == "index":
-        from llm_rankers_spark.operators.index_build import NUM_BUCKETS, build_index
+        from llm_rankers_spark.operators.index_build import build_index
 
         idx = build_index(
             _load_corpus(spark, args.docs), args.out,
             tokenizer_mode=args.tokenizer_mode, num_shards=args.num_shards, resume=args.resume,
             pack_group=args.pack_group,
-            num_buckets=args.num_buckets if args.num_buckets is not None else NUM_BUCKETS,
+            num_buckets=args.num_buckets,
         )
         print(json.dumps({
             "n_docs": idx.meta.n_docs, "avgdl": idx.meta.avgdl, "path": args.out,

@@ -16,9 +16,13 @@ Design for 10^12 files:
   so the BM25 tie-break (score desc, docid asc) is an integer compare.
 - **dl stored inline in the postings** (like Lucene norms): scoring is a
   sequential columnar read, never a join against a doc-length table.
-- **Per-shard manifest** (rows, terms, checksum) written after the build:
-  resume = skip the build when the manifest matches the input fingerprint
-  (count + docid checksum) — per-partition lineage per the north rule.
+- **Per-shard manifest** (lists, postings, term checksum) observed on the
+  postings write itself, never read back: resume = skip the build when the
+  manifest matches the input fingerprint (count + docid checksum) —
+  per-partition lineage per the north rule.
+- **Layout sized to the data**: the term-bucket count follows the
+  postings-row count (:func:`pack_layout`), so a small segment is one or
+  two bucket directories and its opens run no file-listing job.
 """
 
 from __future__ import annotations
@@ -44,6 +48,12 @@ POSTINGS_SCHEMA = (
     "doc_offs array<long>, tf_offs array<long>, dl_offs array<long>"
 )
 
+# doc_map columns as every build writes them (dl cast to long: the
+# tokenizer counts tf as int, compaction carries dl as long)
+DOC_MAP_SCHEMA = "ord long, docid string, dl long, content_sha256 string"
+
+# the bucket-count cap; an index's own count is sized from its postings
+# (:func:`pack_layout`) and recorded in its meta
 NUM_BUCKETS = 64
 # v3: per-term global df stored on every posting row — query batches need no
 # separate df-lookup job (it was ~30-90% of a small batch's latency)
@@ -74,7 +84,12 @@ class InvertedIndex:
 
     @property
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "postings"))
+        """All postings. From layout v2 on the read uses the declared schema
+        (no schema-inference job); layout v1 infers."""
+        root = os.path.join(self.path, "postings")
+        if self.meta.layout_version < 2:
+            return self.spark.read.parquet(root)
+        return self.spark.read.schema(self.postings_schema).parquet(root)
 
     @property
     def postings_schema(self) -> StructType:
@@ -108,7 +123,9 @@ class InvertedIndex:
 
     @property
     def doc_map(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doc_map"))
+        """(ord, docid, dl, content_sha256), read with ``DOC_MAP_SCHEMA`` —
+        no schema-inference job."""
+        return self.spark.read.schema(DOC_MAP_SCHEMA).parquet(os.path.join(self.path, "doc_map"))
 
     @property
     def doc_ords(self) -> DataFrame:
@@ -142,6 +159,12 @@ class InvertedIndex:
             .filter(F.col("tf") > 0)
             .select("ord", "term", "tf", "dl")
         )
+
+    @property
+    def manifest(self) -> dict:
+        """The build's manifest: per-shard (lists, postings, term_crc)
+        lineage, the input fingerprint and the build metrics."""
+        return fsio.read_json(_manifest_path(self.path))
 
     @property
     def term_stats(self) -> DataFrame:
@@ -271,30 +294,61 @@ def _slim_ordinals(
 PACK_BUCKET_MAX_GROUP_ROWS = 150_000
 
 
+def pack_layout(postings_rows: int, num_buckets: int | None = None, pack_group: str = "auto") -> tuple[int, str]:
+    """Resolve an index's (num_buckets, pack_group) from its postings-row
+    count; explicit values win.
+
+    ``num_buckets=None`` → the fewest term buckets that keep each at most
+    ``PACK_BUCKET_MAX_GROUP_ROWS`` rows, clamped to [1, ``NUM_BUCKETS``].
+    Every bucket is a directory and at least one parquet file, so a small
+    index written as 64 buckets pays 64 of each at write and at every open.
+    ``pack_group='auto'`` → ``'bucket'`` while rows per bucket stay within
+    the budget, which the default count guarantees below the cap, and
+    ``'shard_bucket'`` above it (measured cutover,
+    BENCH/SCALE_PROOF_r05.md: a whole-bucket pack task anti-scales)."""
+    if pack_group not in ("auto", "bucket", "shard_bucket"):
+        raise ValueError(f"unknown pack_group {pack_group!r}")
+    if num_buckets is None:
+        num_buckets = min(NUM_BUCKETS, max(1, -(-postings_rows // max(PACK_BUCKET_MAX_GROUP_ROWS, 1))))
+    if pack_group == "auto":
+        pack_group = "bucket" if postings_rows / num_buckets <= PACK_BUCKET_MAX_GROUP_ROWS else "shard_bucket"
+    return num_buckets, pack_group
+
+
 def _pack_and_write(
     spark: SparkSession, td: DataFrame, path: str, avgdl: float, k1: float, b: float,
-    bake_df: bool = True, pack_group: str = "auto", num_buckets: int = NUM_BUCKETS,
+    num_shards: int, bake_df: bool = True, pack_group: str = "auto", num_buckets: int | None = None,
     n_docs: int | None = None, explain_out: dict | None = None,
     postings_rows: int | None = None,
-) -> None:
+) -> tuple[int, list[dict]]:
     """Pack posting lists per (term, shard) and write hive-partitioned by
     term bucket. ``td``: (ord, dl, term, tf, shard) real postings only.
+
+    Returns ``(num_buckets, shards)``: the resolved bucket count and the
+    per-shard manifest entries (shard, lists, postings, term_crc), observed
+    on the packed rows as the write runs — nothing is read back. Shards
+    without lists are omitted.
+
+    ``num_buckets=None`` and ``pack_group='auto'`` resolve by
+    :func:`pack_layout` from ``postings_rows`` — the exact postings-row
+    count when the caller has it, else the n_docs × avgdl upper bound
+    (avgdl counts token occurrences, rows are distinct terms per doc).
 
     ``pack_group`` picks the pack-task grouping — a task-memory vs
     build-cost trade-off with a hot-term skew bound:
 
-    - ``'bucket'`` (default): group by bucket alone (bucket =
-      hash(term) % num_buckets is a pure function of the term), so every
-      shard-chunk of a term lands in one group and layout v3's global
-      per-term df is a row count INSIDE the pack UDF — no second scan, no
-      broadcast, no vocabulary bound. Task-size bound: one pack task
-      materializes a WHOLE bucket (≈ total postings / num_buckets — not
-      just its hottest term's list) and pack parallelism is capped at
-      num_buckets, so size ``num_buckets`` ≈ total_postings × ~24 B /
-      executor task budget (it is per-index meta; query-time bucket
-      pruning adapts automatically). Right for segment-scoped builds (the
+    - ``'bucket'``: group by bucket alone (bucket = hash(term) %
+      num_buckets is a pure function of the term), so every shard-chunk of
+      a term lands in one group and layout v3's global per-term df is a row
+      count INSIDE the pack UDF — no second scan, no broadcast, no
+      vocabulary bound. Task-size bound: one pack task materializes a WHOLE
+      bucket (≈ total postings / num_buckets — not just its hottest term's
+      list) and pack parallelism is capped at num_buckets; the default
+      bucket count is sized so a bucket holds at most
+      ``PACK_BUCKET_MAX_GROUP_ROWS`` rows (query-time bucket pruning reads
+      the count from the meta). Right for segment-scoped builds (the
       10^12-file architecture builds bounded document-partitioned
-      segments) and small-to-mid corpora at the default 64 buckets.
+      segments) and small-to-mid corpora.
     - ``'shard_bucket'``: group by (shard, bucket) — a hot term splits
       across all shards, so per-task rows are bounded by the SHARD's
       bucket share regardless of term skew (the doc-range salting story).
@@ -303,24 +357,13 @@ def _pack_and_write(
       onto the packed rows (one extra columnar scan; broadcast bounds the
       vocabulary at ~10^7 terms — beyond that use bake_df=False/layout v2).
       Pick this for monolithic builds where one term's postings exceed a
-      task (df ≳ 10^9)."""
+      task (df ≳ 10^9).
+    - ``'auto'`` picks bucket while rows per bucket stay within
+      ``PACK_BUCKET_MAX_GROUP_ROWS`` and shard_bucket above it."""
 
-    if pack_group not in ("auto", "bucket", "shard_bucket"):
-        raise ValueError(f"unknown pack_group {pack_group!r}")
-    if pack_group == "auto":
-        # rows-per-bucket from the EXACT postings-row count when the caller
-        # has it (round-5 verdict #5: build_index observes the tf>0 row
-        # count on the checkpoint write — no extra job, and the cutover no
-        # longer overshoots by the corpus's tf ratio). Fallback: the
-        # n_docs × avgdl estimate (avgdl counts token occurrences, actual
-        # rows are distinct terms per doc, so it overestimates — the
-        # conservative direction: flips to shard_bucket early). Unknown
-        # n_docs (direct internal callers) keeps the small-corpus default.
-        if postings_rows is not None:
-            est = postings_rows / num_buckets
-        else:
-            est = (n_docs * max(avgdl, 1.0) / num_buckets) if n_docs else 0.0
-        pack_group = "bucket" if est <= PACK_BUCKET_MAX_GROUP_ROWS else "shard_bucket"
+    if postings_rows is None:
+        postings_rows = int(n_docs * max(avgdl, 1.0)) if n_docs else 0
+    num_buckets, pack_group = pack_layout(postings_rows, num_buckets, pack_group)
     in_group_df = bake_df and pack_group == "bucket"
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -406,6 +449,21 @@ def _pack_and_write(
         # count == df), broadcast onto the packed rows
         df_tbl = td.groupBy("term").agg(F.count("*").alias("df"))
         postings = postings.join(F.broadcast(df_tbl), "term")
+    # per-shard manifest triples ride the write (one Observation) instead
+    # of a second read + aggregate over the written postings
+    from pyspark.sql import Observation
+
+    obs = Observation("shard_manifest")
+    shard = F.col("shard")
+    postings = postings.observe(obs, *[
+        agg.alias(f"{name}_{s}")
+        for s in range(num_shards)
+        for name, agg in (
+            ("lists", F.count(F.when(shard == s, F.lit(1)))),
+            ("postings", F.sum(F.when(shard == s, F.col("n")))),
+            ("term_crc", F.sum(F.when(shard == s, F.crc32(F.col("term"))))),
+        )
+    ])
     if explain_out is not None:
         # plan-audit hook (BENCH/capture_plans.py): the packed frame's
         # physical plan, captured exactly as it will execute in the write
@@ -413,16 +471,25 @@ def _pack_and_write(
             postings._jdf.queryExecution(), "formatted"
         )
     # hive-partitioned by term bucket: a selective query computes its terms'
-    # buckets and statically prunes 63/64 of the files at the scan. Each pack
-    # task holds whole (shard, bucket) groups → bounded file fan-out. shard
-    # stays a plain column (query-time grouping shuffles on it regardless; a
-    # production deployment would ALSO bucketBy(shard) into a table).
+    # buckets and statically prunes all other bucket files at the scan. Each
+    # pack task holds whole (shard, bucket) groups → bounded file fan-out.
+    # shard stays a plain column (query-time grouping shuffles on it
+    # regardless; a production deployment would ALSO bucketBy(shard) into a
+    # table).
     postings.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(path, "postings"))
+    got = obs.get
+    shards = [
+        {"shard": s, "lists": got[f"lists_{s}"], "postings": got[f"postings_{s}"], "term_crc": got[f"term_crc_{s}"]}
+        for s in range(num_shards)
+        if got[f"lists_{s}"]
+    ]
+    return num_buckets, shards
 
 
 def _manifest_and_meta(
     spark: SparkSession,
     path: str,
+    shards: list[dict],
     n_docs: int,
     avgdl: float,
     fp: str,
@@ -431,28 +498,13 @@ def _manifest_and_meta(
     tokenizer_mode: str,
     k1: float,
     b: float,
+    num_buckets: int,
     layout_version: int = LAYOUT_VERSION,
     build_metrics: dict | None = None,
-    num_buckets: int = NUM_BUCKETS,
 ) -> InvertedIndex:
-    shard_stats = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("lists"),
-            F.sum("n").alias("postings"),
-            F.sum(F.crc32(F.col("term"))).alias("term_crc"),
-        )
-        .orderBy("shard")
-        .collect()
-    )
-    manifest = {
-        "shards": [
-            {"shard": r["shard"], "lists": r["lists"], "postings": r["postings"], "term_crc": r["term_crc"]}
-            for r in shard_stats
-        ],
-        "input_fingerprint": fp,
-    }
+    """Write the manifest (the per-shard triples ``_pack_and_write``
+    observed, plus the input fingerprint) and the meta."""
+    manifest = {"shards": shards, "input_fingerprint": fp}
     if build_metrics:
         # north-rule "per-partition lineage + metrics": phase wall-clocks
         # and throughput ride the same manifest the per-shard lineage
@@ -482,8 +534,7 @@ def verify_index(index: InvertedIndex) -> dict:
     per-shard (lists, postings, term crc) triples and the doc count, compare
     with what the build recorded. Returns {"ok": bool, "mismatches": [...]}
     — the check a resume/migration job runs before trusting an index dir."""
-    manifest = fsio.read_json(_manifest_path(index.path))
-    recorded = {s["shard"]: (s["lists"], s["postings"], s["term_crc"]) for s in manifest["shards"]}
+    recorded = {s["shard"]: (s["lists"], s["postings"], s["term_crc"]) for s in index.manifest["shards"]}
     fresh = {
         r["shard"]: (r["lists"], r["postings"], r["term_crc"])
         for r in index.postings.groupBy("shard")
@@ -515,7 +566,7 @@ def build_index_from_forward(
     b: float = codec.DEFAULT_B,
     bake_df: bool = True,
     pack_group: str = "auto",
-    num_buckets: int = NUM_BUCKETS,
+    num_buckets: int | None = None,
 ) -> InvertedIndex:
     """Build an index from an already-tokenized forward table — the entry
     point for segment COMPACTION (streaming/index_stream.py): merging
@@ -526,7 +577,13 @@ def build_index_from_forward(
     ``docs_meta``: (docid, dl, content_sha256) — exactly one row per doc,
     INCLUDING token-less docs (they carry dl=0 and appear only in doc_map).
     Docids must be unique across the input (streaming segments are
-    append-only, so cross-segment duplicates indicate an upstream bug)."""
+    append-only, so cross-segment duplicates indicate an upstream bug).
+
+    ``num_buckets=None`` and ``pack_group='auto'`` resolve by
+    :func:`pack_layout` from Σ dl, an upper bound on the postings rows;
+    compaction resolves both from the exact count the segments' manifests
+    give. The manifest comes from the write itself: the postings are not
+    read back."""
     spark = fwd.sparkSession
     ords, n_docs, slim = _ordinals_auto(
         docs_meta.select("docid", "dl", "content_sha256"),
@@ -545,7 +602,7 @@ def build_index_from_forward(
     doc_map_out.write.mode("overwrite").parquet(os.path.join(path, "doc_map"))
     if slim is not None:
         slim.unpersist()  # ords fully materialized by the doc_map write
-    doc_map_df = spark.read.parquet(os.path.join(path, "doc_map"))
+    doc_map_df = spark.read.schema(DOC_MAP_SCHEMA).parquet(os.path.join(path, "doc_map"))
     stats = obs.get
     avgdl = float(stats["sum_dl"] or 0) / n_docs if n_docs else 0.0
     fp = f"{n_docs}:{stats['crc']}"
@@ -558,13 +615,13 @@ def build_index_from_forward(
         .withColumn("shard", (F.col("ord") / F.lit(shard_size)).cast("int"))
         .select("ord", "dl", "term", "tf", "shard")
     )
-    _pack_and_write(
-        spark, td, path, avgdl, k1, b, bake_df=bake_df, pack_group=pack_group,
+    num_buckets, shards = _pack_and_write(
+        spark, td, path, avgdl, k1, b, num_shards, bake_df=bake_df, pack_group=pack_group,
         num_buckets=num_buckets, n_docs=n_docs,
     )
     return _manifest_and_meta(
-        spark, path, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
-        layout_version=LAYOUT_VERSION if bake_df else 2, num_buckets=num_buckets,
+        spark, path, shards, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
+        num_buckets, layout_version=LAYOUT_VERSION if bake_df else 2,
     )
 
 
@@ -579,7 +636,7 @@ def build_index(
     keep_forward: bool = False,
     bake_df: bool = True,
     pack_group: str = "auto",
-    num_buckets: int = NUM_BUCKETS,
+    num_buckets: int | None = None,
     explain_out: dict | None = None,
 ) -> InvertedIndex:
     """Build the index from ``docs(docid, content[, content_sha256])``.
@@ -594,13 +651,18 @@ def build_index(
     10^6-doc builds were 4.3× slower in bucket mode —
     BENCH/SCALE_PROOF_r05.md). ``'shard_bucket'`` bounds pack-task memory
     under scale and extreme hot-term skew (see :func:`_pack_and_write`) at
-    the cost of one extra slim scan for the df bake.
+    the cost of one extra slim scan for the df bake. ``num_buckets=None``
+    (default) sizes the term buckets from the exact postings-row count the
+    checkpoint write observes (:func:`pack_layout`: the fewest buckets of
+    at most ``PACK_BUCKET_MAX_GROUP_ROWS`` rows, at most ``NUM_BUCKETS``);
+    an explicit count wins.
 
     Plan shape (all shuffles are on keys we immediately exploit):
       tokenize (Arrow UDF) → ordinal assignment (range shuffle on docid)
       → explode → partial-agg tf per (term, ord) (map-side combine)
       → shard by ord range → pack per (term, shard) (applyInPandas)
-      → write parquet partitioned by shard.
+      → write parquet partitioned by term bucket, with the per-shard
+      manifest observed on the same write (nothing is read back).
     """
     spark = docs.sparkSession
 
@@ -656,12 +718,14 @@ def build_index(
     # on a real cluster, where the 10^12-file architecture builds bounded
     # document-partitioned segments and input splits are plentiful) — then
     # no shuffle is added.
+    # A frame of at most 2 × docs_per_task docs never repartitions, so it
+    # skips the logical → RDD conversion that reads the partition count.
     docs_per_task = int(os.environ.get("LLMRS_BUILD_DOCS_PER_TASK", "2000"))
-    parallelism = spark.sparkContext.defaultParallelism
-    n_parts = docs.rdd.getNumPartitions()
-    target_parts = min(max(parallelism, -(-n_docs // docs_per_task)), 65536)
-    if n_parts < target_parts and n_docs / max(n_parts, 1) > 2 * docs_per_task:
-        docs = docs.repartition(target_parts)
+    if n_docs > 2 * docs_per_task:
+        n_parts = docs.rdd.getNumPartitions()
+        target_parts = min(max(spark.sparkContext.defaultParallelism, -(-n_docs // docs_per_task)), 65536)
+        if n_parts < target_parts and n_docs / max(n_parts, 1) > 2 * docs_per_task:
+            docs = docs.repartition(target_parts)
 
     # tf is counted inside the tokenizer UDF (term_counts_col): one row per
     # (doc, distinct term) comes out of the explode, so no corpus-sized
@@ -699,7 +763,7 @@ def build_index(
     obs = Observation("build_stats")
     is_first = F.col("pos") == 0
     td_path = os.path.join(path, "_td_checkpoint")
-    (
+    ckpt = (
         with_ord.select(
             "ord", "docid", "content_sha256", "dl", F.posexplode("counts").alias("pos", "tc")
         )
@@ -728,16 +792,14 @@ def build_index(
             # same write — feeds the pack-mode cutover with actual rows
             F.sum(F.when(F.col("tf") > 0, F.lit(1)).otherwise(F.lit(0))).alias("postings_rows"),
         )
-        .write.mode("overwrite")
-        .option("compression", os.environ.get("LLMRS_CKPT_CODEC", "zstd"))
-        .parquet(td_path)
     )
+    ckpt.write.mode("overwrite").option("compression", os.environ.get("LLMRS_CKPT_CODEC", "zstd")).parquet(td_path)
     if slim is not None:
         slim.unpersist()  # ords fully materialized into the checkpoint write
     stats = obs.get
     avgdl = float(stats["sum_dl"] or 0) / n_docs if n_docs else 0.0
     fp = f"{n_docs}:{stats['crc']}"
-    td_full = spark.read.parquet(td_path)
+    td_full = spark.read.schema(ckpt.schema).parquet(td_path)  # declared: no inference job
     # tf=0 sentinel rows exist only to carry empty docs into doc_map;
     # shard is recomputed from ord (not stored)
     td = (
@@ -747,9 +809,9 @@ def build_index(
     )
 
     # one row per doc, no shuffle: scan the checkpoint pruned to first rows
-    td_full.filter(F.col("first")).select("ord", "docid", "dl", "content_sha256").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "doc_map"))
+    td_full.filter(F.col("first")).select(
+        "ord", "docid", F.col("dl").cast("long").alias("dl"), "content_sha256"
+    ).write.mode("overwrite").parquet(os.path.join(path, "doc_map"))
     _phase("doc_map_write_stats")
 
     # --- pack posting lists per (term, shard) ------------------------------
@@ -757,8 +819,8 @@ def build_index(
     # corpus has millions of rare identifier terms, and per-group Arrow
     # overhead on millions of tiny groups dominates; bucketing amortizes it
     # while each term still packs independently inside the group.
-    _pack_and_write(
-        spark, td, path, avgdl, k1, b, bake_df=bake_df, pack_group=pack_group,
+    num_buckets, shards = _pack_and_write(
+        spark, td, path, avgdl, k1, b, num_shards, bake_df=bake_df, pack_group=pack_group,
         num_buckets=num_buckets, n_docs=n_docs, explain_out=explain_out,
         postings_rows=int(stats["postings_rows"] or 0),
     )
@@ -766,8 +828,8 @@ def build_index(
 
     wall = time.perf_counter() - _build_start
     idx = _manifest_and_meta(
-        spark, path, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
-        layout_version=expected_layout, num_buckets=num_buckets,
+        spark, path, shards, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
+        num_buckets, layout_version=expected_layout,
         build_metrics={
             "phase_seconds": _phase_seconds,
             "wall_seconds": round(wall, 3),

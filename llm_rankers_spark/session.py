@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import warnings
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -57,8 +58,11 @@ def _warm_session(spark: SparkSession) -> None:
 
     No input data is touched and nothing is cached — this is process
     warm-up, not precomputation. ``LLMRS_WARM_SESSION=0`` disables (e.g.
-    for cold-start measurements)."""
+    for cold-start measurements). Warm-up is best-effort: a failing step
+    ends it with one warning naming the step and the exception, and the
+    session is still returned."""
     import pandas as pd
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     sc = spark.sparkContext
@@ -71,30 +75,23 @@ def _warm_session(spark: SparkSession) -> None:
     _warm_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
     _warm = F.pandas_udf(_warm_fn, "long")
 
-    try:
-        sc.setJobDescription("session warm-up: python workers + parquet writer")
+    def python_workers():
         n = max(sc.defaultParallelism, 1)
         spark.range(0, n, 1, n).select(_warm("id").alias("x")).write.format(
             "noop"
         ).mode("overwrite").save()
+
+    def plan_machinery():
         # one tiny query through each heavyweight plan machinery the
         # engine's operators use — grouped/cogrouped Arrow UDF runners,
         # WindowExec, broadcast hash join — so their first-use class
         # loading/JIT happens here, not inside the first real operator
-        from pyspark.sql import Window
-
-        def _ident(pdf):
-            return pdf
-
-        def _co(lp, rp):
-            return lp
-
         g = spark.range(0, 8, 1, 2).withColumn("g", F.col("id") % 2)
-        g.groupBy("g").applyInPandas(_ident, schema="id long, g long").write.format(
+        g.groupBy("g").applyInPandas(lambda pdf: pdf, schema="id long, g long").write.format(
             "noop"
         ).mode("overwrite").save()
         g.groupBy("g").cogroup(g.groupBy("g")).applyInPandas(
-            lambda lp, rp: _co(lp, rp), schema="id long, g long"
+            lambda lp, rp: lp, schema="id long, g long"
         ).write.format("noop").mode("overwrite").save()
         w = Window.partitionBy("g").orderBy("id")
         small = spark.range(0, 2).withColumnRenamed("id", "g")
@@ -104,6 +101,10 @@ def _warm_session(spark: SparkSession) -> None:
         cached = g.persist()
         cached.count()  # InMemoryRelation build/scan machinery
         cached.unpersist()
+
+    def parquet_writer():
+        import shutil
+
         d = tempfile.mkdtemp(prefix="llmrs_warm_")
         try:
             # zstd: the codec the build's checkpoint writes use — its
@@ -113,11 +114,16 @@ def _warm_session(spark: SparkSession) -> None:
             ).parquet(d)
             spark.read.parquet(d).count()
         finally:
-            import shutil
-
             shutil.rmtree(d, ignore_errors=True)
-    except Exception:
-        pass  # warm-up is best-effort; never fail session creation
+
+    sc.setJobDescription("session warm-up: python workers + parquet writer")
+    try:
+        for step in (python_workers, plan_machinery, parquet_writer):
+            try:
+                step()
+            except Exception as e:  # best-effort: never fail session creation
+                warnings.warn(f"session warm-up step {step.__name__!r} failed: {e!r}", stacklevel=3)
+                return
     finally:
         sc.setJobDescription(None)
 

@@ -29,6 +29,7 @@ from llm_rankers_spark.operators.index_build import (
     build_index,
     build_index_from_forward,
     load_index,
+    pack_layout,
 )
 
 
@@ -144,8 +145,12 @@ def compact_segments(spark: SparkSession, root: str, num_shards: int = 4, name: 
     """Fold all registered segments into ONE (the Lucene merge): decode each
     segment's postings (no re-tokenization), union the doc_maps, and rebuild
     through :func:`build_index_from_forward` — fresh global docid-ordered
-    ordinals, global avgdl-baked block-max bounds, one manifest. The
-    segments manifest is rewritten to the compacted segment (epoch history
+    ordinals, global avgdl-baked block-max bounds, one manifest, and the
+    bucket count and pack grouping resolved from Σ postings over the
+    segments' manifests (the exact postings-row count of the merged
+    index). Each segment opens with its declared schemas: no
+    schema-inference job, and no file-listing job while it holds few
+    bucket directories. The segments manifest is rewritten to the compacted segment (epoch history
     kept so stream replay stays exactly-once); old segment dirs are removed.
 
     Search results are rank-identical pre/post compaction because df/N/avgdl
@@ -164,11 +169,12 @@ def compact_segments(spark: SparkSession, root: str, num_shards: int = 4, name: 
         fwd = f if fwd is None else fwd.unionByName(f)
         docs_meta = m if docs_meta is None else docs_meta.unionByName(m)
 
+    num_buckets, pack_group = pack_layout(sum(s["postings"] for idx in idxs for s in idx.manifest["shards"]))
     tmp_name = f"_{name}_building"
     build_index_from_forward(
         fwd, docs_meta, os.path.join(root, tmp_name),
         tokenizer_mode=tokenizer_mode, num_shards=num_shards,
-        k1=idxs[0].meta.k1, b=idxs[0].meta.b,
+        k1=idxs[0].meta.k1, b=idxs[0].meta.b, num_buckets=num_buckets, pack_group=pack_group,
     )
     final_path = os.path.join(root, name)
     if fsio.exists(final_path):

@@ -54,3 +54,25 @@ def bm25_oracle(
         ranked = sorted(scores.items(), key=lambda t: (-t[1], t[0]))[:k]
         out[qid] = ranked
     return out
+
+
+def fresh_shard_manifest(spark, index_path: str) -> list[dict]:
+    """Per-shard (lists, postings, term_crc) of an index's postings, computed
+    by a fresh read and ``groupBy("shard")`` — the oracle for the manifest a
+    build records from its own write."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    rows = (
+        spark.read.parquet(os.path.join(index_path, "postings"))
+        .groupBy("shard")
+        .agg(
+            F.count("*").alias("lists"),
+            F.sum("n").alias("postings"),
+            F.sum(F.crc32(F.col("term"))).alias("term_crc"),
+        )
+        .orderBy("shard")
+        .collect()
+    )
+    return [r.asDict() for r in rows]

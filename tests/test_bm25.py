@@ -14,7 +14,7 @@ from llm_rankers_spark.corpus import generate_corpus, generate_queries, with_doc
 from llm_rankers_spark.operators.bm25 import bm25_dataframe, search, search_distributed
 from llm_rankers_spark.operators.index_build import build_index, load_index, verify_index
 
-from .oracle_bm25 import bm25_oracle
+from .oracle_bm25 import bm25_oracle, fresh_shard_manifest
 
 N_DOCS = 300
 
@@ -484,9 +484,10 @@ def test_declared_postings_schema_equals_inferred(spark, index):
 def test_absent_bucket_directory_returns_no_rows(spark, tmp_path):
     from llm_rankers_spark.functions.xxh64 import spark_term_bucket
 
-    # a 2-doc index fills only a few of its 64 bucket directories
+    # a 2-doc index fills only a few of its 64 bucket directories (the
+    # sparse layout is pinned: sized from its postings it would hold one)
     docs = spark.createDataFrame([("d1", "alpha beta"), ("d2", "beta gamma")], "docid string, content string")
-    idx = build_index(docs, str(tmp_path / "tiny"), tokenizer_mode="simple", num_shards=2)
+    idx = build_index(docs, str(tmp_path / "tiny"), tokenizer_mode="simple", num_shards=2, num_buckets=64)
     present = {int(d.split("=")[1]) for d in os.listdir(os.path.join(idx.path, "postings")) if d.startswith("bucket=")}
     term = next(
         t for t in (f"zzz_absent{i}" for i in range(1000)) if spark_term_bucket(t, idx.meta.num_buckets) not in present
@@ -498,3 +499,122 @@ def test_absent_bucket_directory_returns_no_rows(spark, tmp_path):
     # a batch mixing it with a present term still ranks the present one
     qs2 = spark.createDataFrame([("q1", term), ("q2", f"beta {term}")], "qid string, query string")
     assert sorted(r["docid"] for r in search(idx, qs2, k=5).collect()) == ["d1", "d2"]
+
+
+def _job_descriptions(sc, group):
+    """Descriptions of the Spark jobs run under ``group`` (the job name when
+    a job has no description)."""
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for j in sc.statusTracker().getJobIdsForGroup(group):
+        jd = store.job(j)
+        out.append(jd.description().get() if jd.description().isDefined() else jd.name())
+    return out
+
+
+@pytest.mark.parametrize("pack_group", ["bucket", "shard_bucket"])
+def test_recorded_manifest_equals_fresh_read(spark, corpus, pack_group, tmp_path):
+    # the build records its per-shard triples from the write itself; they
+    # must equal a fresh groupBy over what was written
+    idx = build_index(
+        corpus.select("docid", "content", "content_sha256"), str(tmp_path / pack_group),
+        num_shards=4, pack_group=pack_group,
+    )
+    recorded = idx.manifest["shards"]
+    assert [s["shard"] for s in recorded] == [0, 1, 2, 3]
+    assert recorded == fresh_shard_manifest(spark, idx.path)
+    assert verify_index(idx)["ok"]
+
+
+def test_recorded_manifest_omits_empty_shards(spark, tmp_path):
+    # more shards than documents, and a token-less doc: shards without
+    # posting lists are absent from the manifest, as from a groupBy
+    docs = spark.createDataFrame(
+        [("d1", "alpha beta"), ("d2", ""), ("d3", "beta gamma")], "docid string, content string"
+    )
+    idx = build_index(docs, str(tmp_path / "sparse"), tokenizer_mode="simple", num_shards=8)
+    recorded = idx.manifest["shards"]
+    assert [s["shard"] for s in recorded] == [0, 2]
+    assert recorded == fresh_shard_manifest(spark, idx.path)
+    assert verify_index(idx)["ok"]
+
+
+def test_auto_bucket_count_follows_postings(spark, corpus, queries, index, tmp_path):
+    from llm_rankers_spark.operators.index_build import NUM_BUCKETS, pack_layout
+
+    rows = sum(s["postings"] for s in index.manifest["shards"])
+    assert index.meta.num_buckets == pack_layout(rows)[0] < NUM_BUCKETS
+    dirs = [d for d in os.listdir(os.path.join(index.path, "postings")) if d.startswith("bucket=")]
+    assert 0 < len(dirs) <= index.meta.num_buckets
+    # an explicit count is honoured, and the layout does not move a result
+    idx64 = build_index(
+        corpus.select("docid", "content", "content_sha256"), str(tmp_path / "b64"), num_shards=4, num_buckets=64
+    )
+    assert idx64.meta.num_buckets == 64
+    for method in ("wand", "exhaustive"):
+        a = _collect_runs(search(index, queries, k=10, method=method))
+        b = _collect_runs(search(idx64, queries, k=10, method=method))
+        assert set(a) == set(b)
+        for qid in a:
+            assert [d for d, _ in a[qid]] == [d for d, _ in b[qid]]
+            for (_, x), (_, y) in zip(a[qid], b[qid]):
+                assert x == pytest.approx(y, abs=1e-12)
+
+
+def test_pack_layout_rule(monkeypatch):
+    from llm_rankers_spark.operators import index_build as ib
+
+    cap = ib.PACK_BUCKET_MAX_GROUP_ROWS
+    assert ib.pack_layout(0) == (1, "bucket")
+    assert ib.pack_layout(cap) == (1, "bucket")
+    assert ib.pack_layout(cap + 1) == (2, "bucket")
+    assert ib.pack_layout(ib.NUM_BUCKETS * cap) == (ib.NUM_BUCKETS, "bucket")
+    assert ib.pack_layout(ib.NUM_BUCKETS * cap + 1) == (ib.NUM_BUCKETS, "shard_bucket")
+    # explicit values win
+    assert ib.pack_layout(10 * cap, num_buckets=4) == (4, "shard_bucket")
+    assert ib.pack_layout(10, num_buckets=64, pack_group="shard_bucket") == (64, "shard_bucket")
+    with pytest.raises(ValueError):
+        ib.pack_layout(10, pack_group="nope")
+
+
+def test_small_build_lists_no_leaf_files(spark, corpus, tmp_path):
+    # a small build opens what it wrote with declared schemas over a few
+    # bucket directories: no parallel "Listing leaf files" job
+    docs = corpus.select("docid", "content", "content_sha256")
+    sc = spark.sparkContext
+    sc.setJobGroup("small_build", "small_build")
+    try:
+        build_index(docs, str(tmp_path / "idx"), num_shards=4)
+    finally:
+        sc._jsc.clearJobGroup()
+    descs = _job_descriptions(sc, "small_build")
+    assert descs and not [d for d in descs if d.startswith("Listing leaf files")]
+
+
+def test_small_build_needs_no_rdd(spark, corpus, queries, index, tmp_path, monkeypatch):
+    # a frame at most 2 x docs-per-task never repartitions, so the build
+    # skips the logical -> RDD conversion that reads its partition count
+    from pyspark.sql import DataFrame
+
+    docs = corpus.select("docid", "content", "content_sha256")
+
+    def no_rdd(self):
+        raise AssertionError("DataFrame.rdd used by a small build")
+
+    monkeypatch.setattr(DataFrame, "rdd", property(no_rdd))
+    idx = build_index(docs, str(tmp_path / "idx"), num_shards=4)
+    monkeypatch.undo()
+    for method in ("wand", "exhaustive"):
+        assert _collect_runs(search(idx, queries, k=10, method=method)) == _collect_runs(
+            search(index, queries, k=10, method=method)
+        )
+
+
+def test_doc_map_schema_is_declared(spark, index):
+    from pyspark.sql.types import StructType
+
+    from llm_rankers_spark.operators.index_build import DOC_MAP_SCHEMA
+
+    inferred = spark.read.parquet(os.path.join(index.path, "doc_map")).schema
+    assert inferred == StructType.fromDDL(DOC_MAP_SCHEMA)
+    assert index.doc_map.schema == inferred

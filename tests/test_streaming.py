@@ -153,6 +153,42 @@ def test_segment_search_is_one_pass(spark, two_segments):
     assert len(sc.statusTracker().getJobIdsForGroup("one_pass")) <= 10
 
 
+def test_compaction_is_few_jobs_and_records_its_manifest(spark, two_segments, tmp_path):
+    """Compaction opens each segment with declared schemas, sizes the merged
+    index's buckets from the segments' manifests and records its own
+    manifest from the write: a bounded number of Spark jobs (23 when every
+    open listed 64 bucket directories and the manifest was read back)."""
+    import shutil
+
+    from pyspark.sql.types import StructType
+
+    from llm_rankers_spark.operators.index_build import DOC_MAP_SCHEMA, load_index, pack_layout, verify_index
+
+    from .oracle_bm25 import fresh_shard_manifest
+
+    root = str(tmp_path / "segs")
+    shutil.copytree(two_segments, root)
+    segs = [load_index(spark, os.path.join(root, seg)) for seg in list_segments(root)]
+    rows = sum(s["postings"] for seg in segs for s in seg.manifest["shards"])
+    sc = spark.sparkContext
+    sc.setJobGroup("compact", "compact")
+    try:
+        compact_segments(spark, root, num_shards=4)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("compact")) <= 10
+
+    idx = load_index(spark, os.path.join(root, "segment_compacted"))
+    assert idx.meta.num_buckets == pack_layout(rows)[0]
+    recorded = idx.manifest["shards"]
+    assert sum(s["postings"] for s in recorded) == rows
+    assert recorded == fresh_shard_manifest(spark, idx.path)
+    assert verify_index(idx)["ok"]
+    # one doc-map schema for built and compacted indexes
+    inferred = spark.read.parquet(os.path.join(idx.path, "doc_map")).schema
+    assert inferred == StructType.fromDDL(DOC_MAP_SCHEMA)
+
+
 def test_single_segment_root_equals_search(spark, doc_batches, tmp_path):
     import json
 
