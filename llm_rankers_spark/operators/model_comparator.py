@@ -10,20 +10,20 @@ plugging such a model into the engine's rerank loops:
   workers across tasks; the factory runs ONCE per worker, not once per
   task or per compare (the analogue of loading the HF checkpoint once in
   the reference's ``__init__``, setwise.py:83-101).
-- :class:`ModelComparator` — the comparator protocol (best_of / pair /
-  permutation) driven by relevance scores from a batch-scoring model. One
-  comparator call = ONE model batch (all texts of a setwise window, both
-  passages of a pair, the whole listwise window).
-- :class:`_BatchEngine` + :func:`rerank_batched` — the cross-QUERY batch
-  aggregator: each Spark task owns a shard of queries, runs every query's
-  sequential sort loop in a lockstep thread, and pools their concurrent
-  compare requests into large model batches. A single query's heapsort
-  can only expose ~1 compare at a time (data dependency); pooling across
-  the queries in a task is what keeps a GPU saturated — the same reason
-  the reference shards queries across jobs (Rank-R1/run_setwise.py:90-92)
-  and batches within allpair (pairwise.py:176-204).
+- :class:`ModelComparator` and its protocol variants — the comparator
+  protocol (``rerank.Comparator``: prompt / model / decide) over a cached
+  model. One compare's inputs always travel in ONE model call (all texts
+  of a setwise window, both passages of a pair, the whole listwise window).
+- :func:`rerank_batched` — the cross-QUERY layout: each Spark task owns a
+  shard of queries and ``rerank.run_lockstep`` advances every query's sort
+  loop in one thread, pooling the round's pending compares into large
+  model batches. A single query's heapsort can only expose ~1 compare at a
+  time (data dependency); pooling across the queries in a task is what
+  keeps a GPU saturated — the same reason the reference shards queries
+  across jobs (Rank-R1/run_setwise.py:90-92) and batches within allpair
+  (pairwise.py:176-204).
 
-The model contract is one method::
+The scoring-model contract is one method::
 
     score_batch(pairs: list[tuple[str, str]]) -> list[float]
     # pairs are (query, passage); scores are independent per pair
@@ -38,13 +38,21 @@ single-call ``permutation`` path instead.
 from __future__ import annotations
 
 import hashlib
+import re
 import threading
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from llm_rankers_spark.operators.rerank import RERANK_SCHEMA, rerank_local
+from llm_rankers_spark.operators.rerank import (
+    BATCH_SIZE,
+    RERANK_SCHEMA,
+    Comparator,
+    majority,
+    rerank_pandas,
+    vote_orders,
+)
 
 # ---------------------------------------------------------------------------
 # per-worker model cache
@@ -64,6 +72,11 @@ def get_model(name: str, factory):
         return _MODEL_REGISTRY[name]
 
 
+def md5_relevance(query: str, text: str) -> float:
+    """The fake models' shared relevance: md5 of (query, text) in [0, 1)."""
+    return int(hashlib.md5(f"{query}\x1f{text}".encode()).hexdigest()[:7], 16) / float(1 << 28)
+
+
 class FakeRelevanceModel:
     """Deterministic stand-in for a cross-encoder: md5-derived relevance,
     plus instrumentation (load/batch/item counters) so tests can prove the
@@ -79,10 +92,7 @@ class FakeRelevanceModel:
     def score_batch(self, pairs: list[tuple[str, str]]) -> list[float]:
         self.batches += 1
         self.items += len(pairs)
-        return [
-            int(hashlib.md5(f"{q}\x1f{t}".encode()).hexdigest()[:7], 16) / float(1 << 28)
-            for q, t in pairs
-        ]
+        return [md5_relevance(q, t) for q, t in pairs]
 
 
 def fake_model_factory():
@@ -125,119 +135,81 @@ class HFCrossEncoderModel:
 
 
 # ---------------------------------------------------------------------------
-# comparator over a scoring model
+# comparators over a cached model
 # ---------------------------------------------------------------------------
 
 
-class ModelComparator:
-    """The comparator protocol backed by ``score_batch``. Decision rules
-    match MockComparator (argmax with first-wins ties / score >= / score-
-    sorted permutation) so every loop-semantics test applies unchanged.
-
-    ``dispatch`` is injected by :class:`_BatchEngine` to reroute score
-    requests into the cross-query pool; standalone use scores directly
-    through the per-worker cached model."""
+class ModelComparator(Comparator):
+    """The comparator protocol over the per-worker cached model:
+    ``model()`` is its ``MODEL_METHOD`` batch method. Decisions are the
+    default scoring rules of ``rerank.Comparator`` — the same as
+    MockComparator's — so every loop-semantics test applies unchanged."""
 
     MODEL_METHOD = "score_batch"
 
-    def __init__(self, model_name: str, model_factory, dispatch=None):
+    def __init__(self, model_name: str, model_factory):
         self.model_name = model_name
         self.model_factory = model_factory
-        self._dispatch = dispatch
-        self.calls = 0
-        self.prompt_items = 0
 
-    def _scores(self, query: str, texts: list[str]) -> list[float]:
-        self.calls += 1
-        self.prompt_items += len(texts)
-        if self._dispatch is not None:
-            return self._dispatch([(query, t) for t in texts])
-        model = get_model(self.model_name, self.model_factory)
-        return model.score_batch([(query, t) for t in texts])
-
-    def best_of(self, query: str, texts: list[str]) -> int:
-        s = self._scores(query, texts)
-        return max(range(len(texts)), key=lambda i: (s[i], -i))
-
-    def pair(self, query: str, a: str, b: str) -> tuple[bool, bool]:
-        # a scoring model is order-consistent by construction; both prompt
-        # orders of the reference (pairwise.py:84-90) collapse to one batch
-        sa, sb = self._scores(query, [a, b])
-        win = sa >= sb
-        return win, win
-
-    def permutation(self, query: str, texts: list[str]) -> str:
-        s = self._scores(query, texts)
-        order = sorted(range(len(texts)), key=lambda i: (-s[i], i))
-        return " > ".join(f"[{i + 1}]" for i in order)
+    def model(self):
+        return getattr(get_model(self.model_name, self.model_factory), self.MODEL_METHOD)
 
 
-class GenerativeModelComparator:
+class GenerativeModelComparator(ModelComparator):
     """Generation-mode comparator — the reference's actual P4/P6/P8 protocol:
     build a prompt, ``generate_batch`` a label string, parse it
     (pairwise.py:84-131 'Passage A'/'Passage B'; setwise.py:86-101 label
     letter; listwise.py:91-110 '[2] > [1]' permutation).
 
     The model contract is ``generate_batch(prompts: list[str]) ->
-    list[str]``; prompts within one comparator call go out as ONE batch, and
-    ``dispatch`` (from :class:`_BatchEngine`, via ``rerank_batched(...,
-    comparator_cls=GenerativeModelComparator)``) pools prompts across
-    queries. Malformed outputs degrade the same way the reference does:
-    unparseable setwise label → keep current best (index 0 is the parent
-    slot); inconsistent pairwise orders → a wins only if both agree;
-    permutation repair happens downstream in receive_permutation."""
+    list[str]``; :func:`rerank_batched` (``comparator_cls=
+    GenerativeModelComparator``) pools prompts across queries. Malformed
+    outputs degrade the same way the reference does: unparseable setwise
+    label → keep current best (index 0 is the parent slot); inconsistent
+    pairwise orders → a wins only if both agree; permutation repair happens
+    downstream in receive_permutation."""
 
     LABELS = "ABCDEFGHIJKLMNOPQRSTUVW"  # setwise.py:22-23 label alphabet
     MODEL_METHOD = "generate_batch"
 
-    def __init__(self, model_name: str, model_factory, dispatch=None):
-        self.model_name = model_name
-        self.model_factory = model_factory
-        self._dispatch = dispatch
-        self.calls = 0
-        self.prompt_items = 0
-
-    def _generate(self, prompts: list[str]) -> list[str]:
-        self.calls += 1
-        self.prompt_items += len(prompts)
-        if self._dispatch is not None:
-            return self._dispatch(prompts)
-        model = get_model(self.model_name, self.model_factory)
-        return model.generate_batch(prompts)
-
-    def best_of(self, query: str, texts: list[str]) -> int:
-        labels = ", ".join(f"Passage {self.LABELS[i]}" for i in range(len(texts)))
-        body = "\n".join(f"Passage {self.LABELS[i]}: \"{t}\"" for i, t in enumerate(texts))
-        prompt = (
-            f"Given a query \"{query}\", which of the following passages is the most "
-            f"relevant one to the query?\n\n{body}\n\nOutput only the passage label of "
-            f"the most relevant passage ({labels}):"
+    @staticmethod
+    def _pair_prompt(query: str, x: str, y: str) -> str:
+        return (
+            f"Given a query \"{query}\", which of the following two passages is more "
+            f"relevant to the query?\n\nPassage A: \"{x}\"\n\nPassage B: \"{y}\"\n\n"
+            "Output Passage A or Passage B:"
         )
-        out = self._generate([prompt])[0].strip()
-        # parse: last character label (setwise.py:99-101 output[-1])
-        label = out[-1] if out else ""
-        return self.LABELS.index(label) if label in self.LABELS[: len(texts)] else 0
 
-    def pair(self, query: str, a: str, b: str) -> tuple[bool, bool]:
-        def prompt(x, y):
-            return (
-                f"Given a query \"{query}\", which of the following two passages is more "
-                f"relevant to the query?\n\nPassage A: \"{x}\"\n\nPassage B: \"{y}\"\n\n"
-                "Output Passage A or Passage B:"
-            )
-
-        # both document orders in ONE batch (pairwise.py:84-131)
-        o1, o2 = self._generate([prompt(a, b), prompt(b, a)])
-        return o1.strip().endswith("Passage A"), o2.strip().endswith("Passage B")
-
-    def permutation(self, query: str, texts: list[str]) -> str:
+    def prompt(self, req) -> list[str]:
+        query, texts = req.query, req.texts
+        if req.kind == "best_of":
+            labels = ", ".join(f"Passage {self.LABELS[i]}" for i in range(len(texts)))
+            body = "\n".join(f"Passage {self.LABELS[i]}: \"{t}\"" for i, t in enumerate(texts))
+            return [
+                f"Given a query \"{query}\", which of the following passages is the most "
+                f"relevant one to the query?\n\n{body}\n\nOutput only the passage label of "
+                f"the most relevant passage ({labels}):"
+            ]
+        if req.kind == "pair":
+            # both document orders in ONE batch (pairwise.py:84-131)
+            a, b = texts
+            return [self._pair_prompt(query, a, b), self._pair_prompt(query, b, a)]
         body = "\n".join(f"[{i + 1}] {t}" for i, t in enumerate(texts))
-        prompt = (
+        return [
             f"Rank the {len(texts)} passages based on their relevance to query "
             f"\"{query}\".\n\n{body}\n\nThe output format should be [] > [], "
             "e.g., [2] > [1]:"
-        )
-        return self._generate([prompt])[0]
+        ]
+
+    def decide(self, req, outs: list[str]):
+        if req.kind == "best_of":
+            out = outs[0].strip()
+            # parse: last character label (setwise.py:99-101 output[-1])
+            label = out[-1] if out else ""
+            return self.LABELS.index(label) if label in self.LABELS[: len(req.texts)] else 0
+        if req.kind == "pair":
+            return outs[0].strip().endswith("Passage A"), outs[1].strip().endswith("Passage B")
+        return outs[0]
 
 
 class OpenAIGenerativeModel:
@@ -245,9 +217,10 @@ class OpenAIGenerativeModel:
     OpenAiSetwiseLlmRanker): truncate each prompt to a token budget, send a
     chat completion per prompt, retry transient API errors. Satisfies the
     ``generate_batch`` contract, so it plugs into
-    :class:`GenerativeModelComparator` / :class:`RankR1Comparator` and the
-    cross-query :class:`_BatchEngine` unchanged — one worker process keeps
-    ONE client (via :func:`get_model`), and batching happens above it.
+    :class:`GenerativeModelComparator` / :class:`RankR1Comparator` and
+    :func:`rerank_batched`'s cross-query pooling unchanged — one worker
+    process keeps ONE client (via :func:`get_model`), and batching happens
+    above it.
 
     Divergences from the reference, both deliberate: retries are BOUNDED
     (the reference loops forever with sleep(5) — an infinite retry inside an
@@ -323,7 +296,7 @@ class OpenAIGenerativeModel:
         return outs
 
 
-class DuoProbPairComparator:
+class DuoProbPairComparator(ModelComparator):
     """P5 — the DuoT5 protocol (llmrankers/pairwise.py:296-318): one joint
     prompt ``'Query: {q} Document0: {a} Document1: {b} Relevant:'`` per
     order, the model returns P(true) for each, and document A wins iff
@@ -332,43 +305,26 @@ class DuoProbPairComparator:
 
     Model contract: ``score_batch(items)`` where each item is a
     ``(query, duo_prompt)`` pair and the score is P(true) of that prompt —
-    so the same per-worker cache and :class:`_BatchEngine` pooling apply
-    (both orders always travel in ONE batch, like the reference's 2-row
-    tensor). DuoT5 defines only the pairwise compare; the reference wires
-    it to heapsort only (pairwise.py:320-335) — best_of/permutation are
-    therefore protocol errors here."""
+    so the same per-worker cache and cross-query pooling apply (both orders
+    always travel in ONE batch, like the reference's 2-row tensor). DuoT5
+    defines only the pairwise compare; the reference wires it to heapsort
+    only (pairwise.py:320-335) — best_of/permutation are therefore protocol
+    errors here."""
 
-    MODEL_METHOD = "score_batch"
     PROMPT = "Query: {query} Document0: {doc1} Document1: {doc2} Relevant:"
 
-    def __init__(self, model_name: str, model_factory, dispatch=None):
-        self.model_name = model_name
-        self.model_factory = model_factory
-        self._dispatch = dispatch
-        self.calls = 0
-        self.prompt_items = 0
+    def prompt(self, req) -> list[tuple[str, str]]:
+        if req.kind != "pair":
+            raise NotImplementedError("DuoT5 defines only the pairwise compare")
+        q, (a, b) = req.query, req.texts
+        return [
+            (q, self.PROMPT.format(query=q, doc1=a, doc2=b)),
+            (q, self.PROMPT.format(query=q, doc1=b, doc2=a)),
+        ]
 
-    def _scores(self, items: list[tuple[str, str]]) -> list[float]:
-        self.calls += 1
-        self.prompt_items += len(items)
-        if self._dispatch is not None:
-            return self._dispatch(items)
-        model = get_model(self.model_name, self.model_factory)
-        return model.score_batch(items)
-
-    def pair(self, query: str, a: str, b: str) -> tuple[bool, bool]:
-        p_ab, p_ba = self._scores([
-            (query, self.PROMPT.format(query=query, doc1=a, doc2=b)),
-            (query, self.PROMPT.format(query=query, doc1=b, doc2=a)),
-        ])
-        win = p_ab > p_ba  # strict, per the reference's batch_probs[0] > [1]
+    def decide(self, req, scores: list[float]) -> tuple[bool, bool]:
+        win = scores[0] > scores[1]  # strict, per the reference's batch_probs[0] > [1]
         return win, win
-
-    def best_of(self, query: str, texts: list[str]) -> int:
-        raise NotImplementedError("DuoT5 defines only the pairwise compare")
-
-    def permutation(self, query: str, texts: list[str]) -> str:
-        raise NotImplementedError("DuoT5 defines only the pairwise compare")
 
 
 class FakeDuoModel:
@@ -387,7 +343,6 @@ class FakeDuoModel:
 
     def score_batch(self, items: list[tuple[str, str]]) -> list[float]:
         import math
-        import re
 
         self.batches += 1
         self.items += len(items)
@@ -413,12 +368,13 @@ class RankR1Comparator(GenerativeModelComparator):
     through the shuffle, majority wins.
 
     Divergences (documented, deterministic): the reference shuffles with the
-    global RNG and breaks vote ties with random.choice — here both derive
-    from (seed, call index) so results are partition-order independent; the
-    chat template is rendered as plain ``system\\n\\nuser`` text (the real
-    template is tokenizer-specific and lives in the model payload). Parse
-    failures fall back to index 0 = parent keeps its slot, the same
-    degradation as the reference's unexpected-output path (setwise.py:546)."""
+    global RNG and breaks vote ties with random.choice — here the shuffles
+    derive from (seed, the query's compare index) and ties go to the first
+    vote, so results depend on the query alone; the chat template is
+    rendered as plain ``system\\n\\nuser`` text (the real template is
+    tokenizer-specific and lives in the model payload). Parse failures fall
+    back to index 0 = parent keeps its slot, the same degradation as the
+    reference's unexpected-output path (setwise.py:546)."""
 
     # prompt text mirrors Rank-R1/prompts/prompt_setwise-R1.toml
     PROMPT_SYSTEM = (
@@ -441,50 +397,37 @@ class RankR1Comparator(GenerativeModelComparator):
     DOC_PREFIX = "[{num}]: "
     DOC_SEPARATOR = "\n"
 
-    def __init__(self, model_name: str, model_factory, dispatch=None,
-                 num_permutation: int = 1, seed: int = 929):
-        super().__init__(model_name, model_factory, dispatch)
+    def __init__(self, model_name: str, model_factory, num_permutation: int = 1, seed: int = 929):
+        super().__init__(model_name, model_factory)
         self.num_permutation = num_permutation
         self.seed = seed
-        self.compares = 0
 
-    def best_of(self, query: str, texts: list[str]) -> int:
-        import random as _random
-        import re
+    def _orders(self, req) -> list[list[int]]:
+        return vote_orders(len(req.texts), self.seed, req.seq, self.num_permutation)
 
-        self.compares += 1  # seeds the per-compare shuffle RNGs
-        labels = [f"[{i + 1}]" for i in range(len(texts))]
-        batch_ref: list[list[int]] = []
-        prompts: list[str] = []
-        for p in range(self.num_permutation):
-            rng = _random.Random((self.seed, self.compares, p).__hash__())
-            order = list(range(len(texts)))
-            rng.shuffle(order)
-            batch_ref.append(order)
-            docs = self.DOC_SEPARATOR.join(
-                self.DOC_PREFIX.format(num=i + 1) + texts[order[i]] for i in range(len(order))
+    def prompt(self, req) -> list[str]:
+        if req.kind != "best_of":
+            return super().prompt(req)
+        return [
+            self.PROMPT_SYSTEM + "\n\n" + self.PROMPT_USER.format(
+                query=req.query,
+                docs=self.DOC_SEPARATOR.join(
+                    self.DOC_PREFIX.format(num=i + 1) + req.texts[j] for i, j in enumerate(order)
+                ),
             )
-            prompts.append(
-                self.PROMPT_SYSTEM + "\n\n" + self.PROMPT_USER.format(query=query, docs=docs)
-            )
-        outs = self._generate(prompts)
+            for order in self._orders(req)
+        ]
+
+    def decide(self, req, outs: list[str]):
+        if req.kind != "best_of":
+            return super().decide(req, outs)
+        labels = [f"[{i + 1}]" for i in range(len(req.texts))]
         votes: list[int] = []
-        for order, completion in zip(batch_ref, outs):
+        for order, completion in zip(self._orders(req), outs):
             m = re.search(self.ANSWER_PATTERN, (completion or "").lower(), re.DOTALL)
-            if not m:
-                continue
-            result = m.group(1).strip()
-            if result not in labels:
-                continue
-            votes.append(order[labels.index(result)])
-        if not votes:
-            return 0  # parent keeps its slot (unexpected-output fallback)
-        counts: dict[int, int] = {}
-        first_seen: dict[int, int] = {}
-        for i, v in enumerate(votes):
-            counts[v] = counts.get(v, 0) + 1
-            first_seen.setdefault(v, i)
-        return max(counts, key=lambda c: (counts[c], -first_seen[c]))
+            if m and m.group(1).strip() in labels:
+                votes.append(order[labels.index(m.group(1).strip())])
+        return majority(votes) if votes else 0  # parent keeps its slot (unexpected-output fallback)
 
 
 class RankZephyrComparator(GenerativeModelComparator):
@@ -500,7 +443,7 @@ class RankZephyrComparator(GenerativeModelComparator):
     wires this ranker to the sliding-window loop exclusively); best_of /
     pair are protocol errors. Plugs into :func:`rerank_batched` with
     ``method='listwise.sliding'`` — windows across queries pool into one
-    ``generate_batch`` via :class:`_BatchEngine`.
+    ``generate_batch``.
 
     Divergence (documented, same as RankR1Comparator): the chat template is
     rendered as plain ``system\\n\\nuser`` text — the real template is
@@ -523,22 +466,15 @@ class RankZephyrComparator(GenerativeModelComparator):
     )
     PATTERN = r"\s*([\d+\s*>*\[\]]+)\s*"
 
-    def permutation(self, query: str, texts: list[str]) -> str:
-        import re
+    def prompt(self, req) -> list[str]:
+        if req.kind != "permutation":
+            raise NotImplementedError("RankZephyr defines only the listwise permutation")
+        docs = "\n".join(f"[{i + 1}] {t}" for i, t in enumerate(req.texts))
+        return [self.PROMPT_SYSTEM + "\n\n" + self.PROMPT_USER.format(num=len(req.texts), query=req.query, docs=docs)]
 
-        docs = "\n".join(f"[{i + 1}] {t}" for i, t in enumerate(texts))
-        prompt = self.PROMPT_SYSTEM + "\n\n" + self.PROMPT_USER.format(
-            num=len(texts), query=query, docs=docs
-        )
-        completion = self._generate([prompt])[0]
-        m = re.search(self.PATTERN, (completion or "").lower(), re.DOTALL)
+    def decide(self, req, outs: list[str]) -> str:
+        m = re.search(self.PATTERN, (outs[0] or "").lower(), re.DOTALL)
         return m.group(1).strip() if m else "None"
-
-    def best_of(self, query: str, texts: list[str]) -> int:
-        raise NotImplementedError("RankZephyr defines only the listwise permutation")
-
-    def pair(self, query: str, a: str, b: str) -> tuple[bool, bool]:
-        raise NotImplementedError("RankZephyr defines only the listwise permutation")
 
 
 class FakeZephyrModel:
@@ -551,13 +487,7 @@ class FakeZephyrModel:
         self.batches = 0
         self.items = 0
 
-    @staticmethod
-    def _rel(query: str, text: str) -> float:
-        return int(hashlib.md5(f"{query}\x1f{text}".encode()).hexdigest()[:7], 16) / float(1 << 28)
-
     def generate_batch(self, prompts: list[str]) -> list[str]:
-        import re
-
         self.batches += 1
         self.items += len(prompts)
         outs = []
@@ -566,7 +496,7 @@ class FakeZephyrModel:
             # anchor to line starts: the instruction tail contains a literal
             # "e.g., [2] > [1]," that an unanchored pattern would pick up
             texts = re.findall(r"^\[\d+\] (.*)$", p, re.MULTILINE)
-            order = sorted(range(len(texts)), key=lambda i: (-self._rel(q, texts[i]), i))
+            order = sorted(range(len(texts)), key=lambda i: (-md5_relevance(q, texts[i]), i))
             outs.append(" > ".join(f"[{i + 1}]" for i in order))
         return outs
 
@@ -616,13 +546,7 @@ class FakeReasoningModel:
         self.batches = 0
         self.items = 0
 
-    @staticmethod
-    def _rel(query: str, text: str) -> float:
-        return int(hashlib.md5(f"{query}\x1f{text}".encode()).hexdigest()[:7], 16) / float(1 << 28)
-
     def generate_batch(self, prompts: list[str]) -> list[str]:
-        import re
-
         self.batches += 1
         self.items += len(prompts)
         outs = []
@@ -632,7 +556,7 @@ class FakeReasoningModel:
                 m = re.search(r"Here is the query: (.*?)\n\nHere are the documents:", p, re.DOTALL)
             q = m.group(1)
             texts = re.findall(r"\[\d+\]: (.*)", p)
-            best = max(range(len(texts)), key=lambda i: (self._rel(q, texts[i]), -i))
+            best = max(range(len(texts)), key=lambda i: (md5_relevance(q, texts[i]), -i))
             outs.append(f"<think> scored {len(texts)} docs </think> <answer>[{best + 1}]</answer>")
         return outs
 
@@ -651,13 +575,7 @@ class FakeGenerativeModel:
         self.batches = 0
         self.items = 0
 
-    @staticmethod
-    def _rel(query: str, text: str) -> float:
-        return int(hashlib.md5(f"{query}\x1f{text}".encode()).hexdigest()[:7], 16) / float(1 << 28)
-
     def generate_batch(self, prompts: list[str]) -> list[str]:
-        import re
-
         self.batches += 1
         self.items += len(prompts)
         outs = []
@@ -666,14 +584,14 @@ class FakeGenerativeModel:
             if "Output Passage A or Passage B" in p:
                 a = re.search(r'Passage A: "(.*?)"\n', p, re.DOTALL).group(1)
                 b = re.search(r'Passage B: "(.*?)"\n', p, re.DOTALL).group(1)
-                outs.append("Passage A" if self._rel(q, a) >= self._rel(q, b) else "Passage B")
+                outs.append("Passage A" if md5_relevance(q, a) >= md5_relevance(q, b) else "Passage B")
             elif "Output only the passage label" in p:
                 texts = re.findall(r'Passage [A-W]: "(.*?)"\n?', p, re.DOTALL)
-                best = max(range(len(texts)), key=lambda i: (self._rel(q, texts[i]), -i))
+                best = max(range(len(texts)), key=lambda i: (md5_relevance(q, texts[i]), -i))
                 outs.append(f"Passage {GenerativeModelComparator.LABELS[best]}")
             else:
                 texts = re.findall(r"\[\d+\] (.*)", p)
-                order = sorted(range(len(texts)), key=lambda i: (-self._rel(q, texts[i]), i))
+                order = sorted(range(len(texts)), key=lambda i: (-md5_relevance(q, texts[i]), i))
                 outs.append(" > ".join(f"[{i + 1}]" for i in order))
         return outs
 
@@ -683,93 +601,8 @@ def fake_generative_factory():
 
 
 # ---------------------------------------------------------------------------
-# cross-query batch engine
+# cross-query layout: a shard of qids per task, one stepper per shard
 # ---------------------------------------------------------------------------
-
-
-class _BatchEngine:
-    """Pools concurrent score requests from many per-query loop threads
-    into large model batches.
-
-    Each query's sort loop runs in its own thread and blocks inside
-    :meth:`request`. A flush happens when every live thread is waiting
-    (nothing more can join the batch) or the pool reached ``batch_size``
-    items. Because scores are independent per (query, passage) pair, batch
-    composition cannot change any result — only the number of model calls.
-    """
-
-    def __init__(self, model, batch_size: int = 64, method: str = "score_batch"):
-        self.model = model
-        self.call = getattr(model, method)
-        self.batch_size = batch_size
-        self.cond = threading.Condition()
-        self.pending: list[tuple[list, dict]] = []  # (pairs, slot)
-        self.pending_items = 0
-        self.live = 0
-        self.flushes = 0
-
-    def request(self, pairs: list[tuple[str, str]]) -> list[float]:
-        slot: dict = {}
-        with self.cond:
-            self.pending.append((pairs, slot))
-            self.pending_items += len(pairs)
-            if self.pending_items >= self.batch_size or len(self.pending) >= self.live:
-                self._flush_locked()
-            while "res" not in slot and "err" not in slot:
-                self.cond.wait()
-        if "err" in slot:
-            raise slot["err"]
-        return slot["res"]
-
-    def _thread_done(self) -> None:
-        with self.cond:
-            self.live -= 1
-            # remaining waiters may now constitute "everyone"
-            if self.pending and len(self.pending) >= self.live:
-                self._flush_locked()
-
-    def _flush_locked(self) -> None:
-        batch, self.pending, self.pending_items = self.pending, [], 0
-        if not batch:
-            return
-        flat = [p for pairs, _ in batch for p in pairs]
-        try:
-            scores = self.call(flat)
-        except BaseException as e:  # noqa: BLE001 — must wake every waiter
-            for _pairs, slot in batch:
-                slot["err"] = e
-            self.cond.notify_all()
-            raise
-        self.flushes += 1
-        i = 0
-        for pairs, slot in batch:
-            slot["res"] = scores[i : i + len(pairs)]
-            i += len(pairs)
-        self.cond.notify_all()
-
-    def run(self, tasks: list) -> list:
-        """Run ``tasks`` (zero-arg callables, one per query) to completion
-        with pooled batching; returns their results in input order."""
-        results: list = [None] * len(tasks)
-        errors: list = []
-
-        def wrap(i, fn):
-            try:
-                results[i] = fn()
-            except BaseException as e:  # noqa: BLE001 - propagate to caller
-                errors.append(e)
-            finally:
-                self._thread_done()
-
-        self.live = len(tasks)
-        threads = [threading.Thread(target=wrap, args=(i, fn), daemon=True) for i, fn in enumerate(tasks)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errors:
-            raise errors[0]
-        return results
 
 
 def rerank_batched(
@@ -782,18 +615,21 @@ def rerank_batched(
     window_size: int = 4,
     step_size: int = 2,
     num_repeat: int = 1,
-    batch_size: int = 64,
+    batch_size: int = BATCH_SIZE,
     queries_per_task: int = 64,
     num_tasks: int | None = None,
     comparator_cls: type = ModelComparator,
 ) -> DataFrame:
     """Rerank with a real (lazily-loaded, batch-scoring) model.
 
-    Unlike :func:`rerank` (one qid per Arrow group), this shards qids so
-    each task owns ``queries_per_task`` of them and the batch engine can
-    pool their compare requests — the GPU-scale layout. Results are
-    identical to the per-qid path for any per-pair-independent model
-    (tested batched ≡ sequential in test_model_comparator.py).
+    Unlike :func:`~llm_rankers_spark.operators.rerank.rerank` (one qid per
+    Arrow group), this shards qids so each task owns ``queries_per_task``
+    of them, and one ``comparator_cls(model_name, model_factory)`` answers
+    all their compares through ``rerank.run_lockstep``: each round, every
+    unfinished query's pending compare is pooled, one model call per
+    ``batch_size`` inputs — the GPU-scale layout. Results are identical to
+    the per-qid path for any per-pair-independent model (tested batched ≡
+    sequential in test_model_comparator.py).
 
     At 100 TB / 10^6-query scale: tasks = n_queries / queries_per_task,
     each holding ``queries_per_task × hits`` candidate texts in one Arrow
@@ -805,35 +641,8 @@ def rerank_batched(
     )
 
     def run_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        model = get_model(model_name, model_factory)
-        engine = _BatchEngine(model, batch_size=batch_size, method=comparator_cls.MODEL_METHOD)
-
-        tasks = []
-        qids = []
-        for qid, g in pdf.sort_values(["qid", "rank"]).groupby("qid", sort=True):
-            items = list(zip(g["docid"], g["text"]))
-            query = g["query"].iloc[0]
-
-            def mk(items=items, query=query):
-                cmp = comparator_cls(model_name, model_factory, dispatch=engine.request)
-                return rerank_local(method, items, query, cmp, **params)
-
-            tasks.append(mk)
-            qids.append(qid)
-
-        ranked_all = engine.run(tasks)
-        frames = [
-            pd.DataFrame(
-                {
-                    "qid": qid,
-                    "docid": [d for d, _ in ranked],
-                    "rank": range(1, len(ranked) + 1),
-                    "score": [s for _, s in ranked],
-                }
-            )
-            for qid, ranked in zip(qids, ranked_all)
-        ]
-        return pd.concat(frames, ignore_index=True)
+        cmp = comparator_cls(model_name, model_factory)
+        return rerank_pandas(pdf, method, cmp, params, batch_size=batch_size)
 
     # deterministic qid->shard spread: ~queries_per_task qids per task. The
     # distinct count is a distributed aggregate (no data collected); pass

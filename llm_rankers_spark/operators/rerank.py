@@ -4,11 +4,19 @@ The reference runs one Python loop per query, calling an LLM comparator at
 each step (llmrankers/setwise.py, pairwise.py, listwise.py). The sequential
 dependency is per-query, so the scalable axis is ACROSS queries (the
 reference itself only parallelizes by sharding queries across jobs,
-Rank-R1/run_setwise.py:90-92). We therefore run each query's whole sort
-loop inside one ``applyInPandas`` group (SURVEY.md §3 E2 chosen design):
-10^6 queries → 10^6 independent groups, Arrow-batched, no driver round
-trips. The comparator sees whole batches of prompts at once (analogue of
-the reference's DataLoader batching, pairwise.py:176-204).
+Rank-R1/run_setwise.py:90-92).
+
+Each sort loop is a generator: it yields one compare request at a time —
+``("best_of", texts)``, ``("pair", (a, b))`` or ``("permutation", texts)``
+— and receives the comparator's answer. :func:`run_lockstep` drives any
+number of loops in one thread: each round takes the pending request of
+every unfinished query and answers the round with one model call per
+``batch_size`` pooled inputs (the analogue of the reference's DataLoader
+batching, pairwise.py:176-204). :func:`rerank` runs one qid per
+``applyInPandas`` group (SURVEY.md §3 E2 chosen design: 10^6 queries →
+10^6 independent groups, Arrow-batched, no driver round trips);
+``model_comparator.rerank_batched`` runs a shard of qids per group over the
+same stepper.
 
 Loop semantics are preserved operation-for-operation (same compare sets,
 same swaps, same early stops) from:
@@ -29,14 +37,19 @@ semantics; no reference code is copied.
 
 from __future__ import annotations
 
+import random
+import re
 import zlib
-from dataclasses import dataclass, field
+from collections import Counter
+from dataclasses import dataclass
+from typing import NamedTuple, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RERANK_SCHEMA = "qid string, docid string, rank int, score double"
+BATCH_SIZE = 64
 
 
 # ---------------------------------------------------------------------------
@@ -47,69 +60,124 @@ RERANK_SCHEMA = "qid string, docid string, rank int, score double"
 # ---------------------------------------------------------------------------
 
 
+class Compare(NamedTuple):
+    """One compare request of a sort loop. ``kind`` is ``best_of``,
+    ``pair`` (texts are (a, b)) or ``permutation``; ``seq`` numbers the
+    query's own compares from 1, so a comparator that shuffles seeds from
+    the query alone, whichever queries share its task."""
+
+    kind: str
+    query: str
+    texts: Sequence[str]
+    seq: int = 1
+
+
+def majority(votes: list) -> object:
+    """Most frequent vote; a tie goes to the vote seen first."""
+    counts = Counter(votes)
+    return max(counts, key=counts.__getitem__)
+
+
+def vote_orders(n: int, seed: int, seq: int, votes: int) -> list[list[int]]:
+    """One shuffle of ``range(n)`` per vote, seeded by (seed, the query's
+    compare index, vote)."""
+    orders = []
+    for p in range(votes):
+        order = list(range(n))
+        random.Random((seed, seq, p).__hash__()).shuffle(order)
+        orders.append(order)
+    return orders
+
+
+class Comparator:
+    """The comparator protocol. ``prompt`` turns a request into model
+    inputs, ``model`` returns the batch callable that answers a list of
+    inputs (many requests' inputs in one call), and ``decide`` turns one
+    request's outputs into its answer.
+
+    The default rules decide from one relevance score per passage: argmax
+    with first-wins ties (best_of); a wins iff score(a) >= score(b), for
+    both prompt orders at once (pair — a scoring model is order-consistent
+    by construction); score-sorted permutation.
+
+    ``calls``/``prompt_items`` mirror the reference's per-query cost
+    counters (run.py:198-201; setwise.py:80)."""
+
+    calls = 0
+    prompt_items = 0
+
+    def model(self):
+        raise NotImplementedError
+
+    def prompt(self, req: Compare) -> list:
+        return [(req.query, t) for t in req.texts]
+
+    def decide(self, req: Compare, scores: list):
+        if req.kind == "best_of":
+            return max(range(len(scores)), key=lambda i: (scores[i], -i))
+        if req.kind == "pair":
+            win = scores[0] >= scores[1]
+            return win, win
+        order = sorted(range(len(scores)), key=lambda i: (-scores[i], i))
+        return " > ".join(f"[{i + 1}]" for i in order)
+
+    def encode(self, req: Compare) -> list:
+        """``prompt``, counted in ``calls`` and ``prompt_items``."""
+        inputs = self.prompt(req)
+        self.calls += 1
+        self.prompt_items += len(inputs)
+        return inputs
+
+    def answer(self, req: Compare):
+        """Answer one request with a model call of its own."""
+        return self.decide(req, self.model()(self.encode(req)))
+
+    def best_of(self, query: str, texts: list[str]) -> int:
+        """Setwise payload: index of the most relevant passage."""
+        return self.answer(Compare("best_of", query, texts))
+
+    def pair(self, query: str, a: str, b: str) -> tuple[bool, bool]:
+        """Pairwise payload: (a_wins_order1, a_wins_order2) for the two
+        prompt orders of pairwise.py:84-90 (the reference's
+        output1=="Passage A" and output2=="Passage B" both mean doc1 wins —
+        here both booleans refer to ``a``). Real LLMs are often not
+        order-consistent, which is why the reference demands agreement."""
+        return self.answer(Compare("pair", query, (a, b)))
+
+    def permutation(self, query: str, texts: list[str]) -> str:
+        """Listwise payload: a RankGPT-style '[2] > [1] > ...' string."""
+        return self.answer(Compare("permutation", query, texts))
+
+
 def _crc_relevance(query: str, text: str) -> int:
     """Deterministic pseudo-relevance; stable across processes/partitions."""
     return zlib.crc32(f"{query}\x1f{text}".encode())
 
 
 @dataclass
-class MockComparator:
-    """Selects argmax of a hidden deterministic relevance (FIXTURES.md §6).
-
-    ``calls``/``prompt_items`` mirror the reference's per-query cost
-    counters (run.py:198-201; setwise.py:80).
-    """
+class MockComparator(Comparator):
+    """Decides by the default rules over a hidden deterministic relevance
+    (FIXTURES.md §6): ``relevance(query, text) -> number``, crc32 by
+    default, is its model."""
 
     relevance: object = None  # callable (query, text) -> number
     calls: int = 0
     prompt_items: int = 0
-    trace: list = field(default_factory=list)
 
-    def _rel(self, query: str, text: str):
-        fn = self.relevance or _crc_relevance
-        return fn(query, text)
-
-    def best_of(self, query: str, texts: list[str]) -> int:
-        """Setwise payload: index of the most relevant passage."""
-        self.calls += 1
-        self.prompt_items += len(texts)
-        scores = [self._rel(query, t) for t in texts]
-        win = max(range(len(texts)), key=lambda i: (scores[i], -i))
-        self.trace.append(("best_of", len(texts), win))
-        return win
-
-    def pair(self, query: str, a: str, b: str) -> tuple[bool, bool]:
-        """Pairwise payload: (a_wins_order1, a_wins_order2) for the two
-        prompt orders of pairwise.py:84-90 (the reference's
-        output1=="Passage A" and output2=="Passage B" both mean doc1 wins —
-        here both booleans refer to ``a``). The mock is order-consistent;
-        real LLMs often aren't, which is why the reference demands agreement.
-        """
-        self.calls += 1
-        self.prompt_items += 2
-        first = self._rel(query, a) >= self._rel(query, b)
-        self.trace.append(("pair", first))
-        return first, first
-
-    def permutation(self, query: str, texts: list[str]) -> str:
-        """Listwise payload: a RankGPT-style '[2] > [1] > ...' string."""
-        self.calls += 1
-        self.prompt_items += len(texts)
-        order = sorted(range(len(texts)), key=lambda i: (-self._rel(query, texts[i]), i))
-        return " > ".join(f"[{i + 1}]" for i in order)
-
-
-import re as _re
+    def model(self):
+        rel = self.relevance or _crc_relevance
+        return lambda pairs: [rel(q, t) for q, t in pairs]
 
 
 @dataclass
-class VotingComparator:
+class VotingComparator(Comparator):
     """A2 (setwise.py:102-157): wrap a base comparator with
-    ``num_permutation`` shuffled-prompt votes and a majority decision.
+    ``num_permutation`` shuffled-prompt votes and a majority decision. All
+    votes of one compare go out in one model call.
 
     The reference shuffles with a global seeded RNG and breaks ties with
-    ``random.choice``; we derive a per-call RNG from (seed, call index) so
-    results are partition-order independent, and break ties
+    ``random.choice``; we seed each vote from (seed, the query's compare
+    index, vote) so results depend on the query alone, and break ties
     (count desc, first-seen asc) — documented intentional divergence
     (SURVEY.md §2.4 A2)."""
 
@@ -118,67 +186,61 @@ class VotingComparator:
     seed: int = 929
     calls: int = 0
 
-    @property
-    def trace(self):
-        return self.base.trace
+    def model(self):
+        return self.base.model()
 
-    def best_of(self, query: str, texts: list[str]) -> int:
-        import random as _random
+    def _votes(self, req: Compare):
+        for order in vote_orders(len(req.texts), self.seed, req.seq, self.num_permutation):
+            yield order, req._replace(texts=[req.texts[i] for i in order])
 
-        self.calls += 1
-        votes: list[int] = []
-        for p in range(self.num_permutation):
-            rng = _random.Random((self.seed, self.calls, p).__hash__())
-            order = list(range(len(texts)))
-            rng.shuffle(order)
-            win_shuffled = self.base.best_of(query, [texts[i] for i in order])
-            votes.append(order[win_shuffled])
-        counts: dict[int, int] = {}
-        first_seen: dict[int, int] = {}
-        for i, v in enumerate(votes):
-            counts[v] = counts.get(v, 0) + 1
-            first_seen.setdefault(v, i)
-        return max(counts, key=lambda c: (counts[c], -first_seen[c]))
+    def prompt(self, req: Compare) -> list:
+        if req.kind != "best_of":
+            return self.base.encode(req)
+        return [x for _, sub in self._votes(req) for x in self.base.encode(sub)]
 
-    def pair(self, query: str, a: str, b: str):
-        return self.base.pair(query, a, b)
-
-    def permutation(self, query: str, texts: list[str]) -> str:
-        return self.base.permutation(query, texts)
+    def decide(self, req: Compare, outputs: list):
+        if req.kind != "best_of":
+            return self.base.decide(req, outputs)
+        n = len(outputs) // self.num_permutation  # every vote prompts the same texts
+        return majority([
+            order[self.base.decide(sub, outputs[p * n : (p + 1) * n])]
+            for p, (order, sub) in enumerate(self._votes(req))
+        ])
 
 
 @dataclass
-class RetryingComparator:
-    """M3 (setwise.py:338-399): retry-on-error wrapper. The reference loops
-    forever with sleep(5); ours is bounded (max_retries) and surfaces the
-    retry count in metrics — an infinite retry inside an executor task would
-    turn one bad record into a hung stage at cluster scale."""
+class RetryingComparator(Comparator):
+    """M3 (setwise.py:338-399): retry a failed model call. The reference
+    loops forever with sleep(5); ours is bounded (max_retries) and surfaces
+    the retry count in metrics — an infinite retry inside an executor task
+    would turn one bad record into a hung stage at cluster scale."""
 
     base: object
     max_retries: int = 3
     retries: int = 0
 
-    def _with_retry(self, fn, *args):
-        last = None
-        for _ in range(self.max_retries + 1):
-            try:
-                return fn(*args)
-            except Exception as e:  # noqa: BLE001 — comparator payloads are opaque
-                last = e
-                self.retries += 1
-        raise last
+    def model(self):
+        call = self.base.model()
 
-    def best_of(self, query, texts):
-        return self._with_retry(self.base.best_of, query, texts)
+        def retried(inputs):
+            for attempt in range(self.max_retries + 1):
+                try:
+                    return call(inputs)
+                except Exception:  # noqa: BLE001 — model payloads are opaque
+                    self.retries += 1
+                    if attempt == self.max_retries:
+                        raise
 
-    def pair(self, query, a, b):
-        return self._with_retry(self.base.pair, query, a, b)
+        return retried
 
-    def permutation(self, query, texts):
-        return self._with_retry(self.base.permutation, query, texts)
+    def prompt(self, req: Compare) -> list:
+        return self.base.encode(req)
+
+    def decide(self, req: Compare, outputs: list):
+        return self.base.decide(req, outputs)
 
 
-_REASONING_ANSWER_RE = _re.compile(r"<answer>.*?\[(\d+)\].*?</answer>", _re.DOTALL)
+_REASONING_ANSWER_RE = re.compile(r"<answer>.*?\[(\d+)\].*?</answer>", re.DOTALL)
 
 
 def parse_reasoning_answer(response: str, n_docs: int) -> int | None:
@@ -193,39 +255,42 @@ def parse_reasoning_answer(response: str, n_docs: int) -> int | None:
 
 
 # ---------------------------------------------------------------------------
-# Pure loop implementations (run per query inside the grouped UDF).
-# Items are (docid, text) tuples; loops permute a list in place.
+# Sort loops. Each is a generator over (docid, text) items: it yields
+# (kind, texts) compare requests, receives each answer, and returns the
+# reordered items.
 # ---------------------------------------------------------------------------
 
 
-def _setwise_heapify(arr: list, n: int, i: int, num_child: int, query: str, cmp) -> None:
-    # semantics of setwise.py:200-217
-    if num_child * i + 1 < n:
+def _setwise_heapify(arr: list, n: int, i: int, num_child: int):
+    # semantics of setwise.py:200-217; the recursion into the swapped child
+    # is a loop
+    while num_child * i + 1 < n:
         inds = [i] + list(range(num_child * i + 1, min(num_child * (i + 1) + 1, n)))
-        w = cmp.best_of(query, [arr[j][1] for j in inds])
+        w = yield "best_of", [arr[j][1] for j in inds]
         largest = inds[w] if 0 <= w < len(inds) else i
-        if largest != i:
-            arr[i], arr[largest] = arr[largest], arr[i]
-            _setwise_heapify(arr, n, largest, num_child, query, cmp)
+        if largest == i:
+            return
+        arr[i], arr[largest] = arr[largest], arr[i]
+        i = largest
 
 
-def setwise_heapsort(items: list, query: str, cmp, num_child: int, k: int) -> list:
+def setwise_heapsort(items: list, num_child: int, k: int):
     # semantics of setwise.py:219-232 + the reversed() at 240-242
     arr = list(items)
     n = len(arr)
     ranked = 0
     for i in range(n // num_child, -1, -1):
-        _setwise_heapify(arr, n, i, num_child, query, cmp)
+        yield from _setwise_heapify(arr, n, i, num_child)
     for i in range(n - 1, 0, -1):
         arr[i], arr[0] = arr[0], arr[i]
         ranked += 1
         if ranked == k:
             break
-        _setwise_heapify(arr, i, 0, num_child, query, cmp)
+        yield from _setwise_heapify(arr, i, 0, num_child)
     return list(reversed(arr))
 
 
-def setwise_bubblesort(items: list, query: str, cmp, num_child: int, k: int) -> list:
+def setwise_bubblesort(items: list, num_child: int, k: int):
     # semantics of setwise.py:243-273 (window of num_child+1 sliding
     # bottom→top by num_child, with the last_start skip optimization)
     arr = list(items)
@@ -241,7 +306,7 @@ def setwise_bubblesort(items: list, query: str, cmp, num_child: int, k: int) -> 
             # relies on the invalid-label fallback (best_ind=0 → no swap,
             # setwise.py:250-253); we skip the degenerate call — same
             # ranking, marginally lower compare counter (documented divergence)
-            w = cmp.best_of(query, [t for _, t in arr[start:end]]) if end - start > 1 else 0
+            w = (yield "best_of", [t for _, t in arr[start:end]]) if end - start > 1 else 0
             if not (0 <= w < max(end - start, 1)):
                 w = 0
             if w != 0:
@@ -259,7 +324,7 @@ def setwise_bubblesort(items: list, query: str, cmp, num_child: int, k: int) -> 
     return arr
 
 
-def pairwise_allpair(items: list, query: str, cmp, k: int) -> list:
+def pairwise_allpair(items: list):
     # semantics of pairwise.py:169-219: every unordered pair asked in both
     # prompt orders; +1 to the winner only when consistent, else +0.5 each;
     # final sort score desc with stable (original-order) ties.
@@ -269,7 +334,7 @@ def pairwise_allpair(items: list, query: str, cmp, k: int) -> list:
         for j in range(i + 1, len(items)):
             d1, t1 = items[i]
             d2, t2 = items[j]
-            o1, o2 = cmp.pair(query, t1, t2)
+            o1, o2 = yield "pair", (t1, t2)
             if o1 and o2:  # both orders agree doc1 wins (pairwise.py:206-211)
                 scores[d1] = scores.get(d1, 0.0) + 1.0
             elif (not o1) and (not o2):
@@ -282,41 +347,44 @@ def pairwise_allpair(items: list, query: str, cmp, k: int) -> list:
     return [(d, text[d]) for d, _ in ranked]
 
 
-def _pair_gt(query: str, a, b, cmp) -> bool:
+def _pair_gt(a, b):
     # pairwise.py:221-237: a > b iff both prompt orders agree a wins
-    o1, o2 = cmp.pair(query, a[1], b[1])
+    o1, o2 = yield "pair", (a[1], b[1])
     return o1 and o2
 
 
-def pairwise_heapsort(items: list, query: str, cmp, k: int) -> list:
+def pairwise_heapsort(items: list, k: int):
     # semantics of pairwise.py:133-162 (binary max-heap, k pops)
     arr = list(items)
 
-    def heapify(n: int, i: int) -> None:
-        largest = i
-        l, r = 2 * i + 1, 2 * i + 2
-        if l < n and _pair_gt(query, arr[l], arr[largest], cmp):
-            largest = l
-        if r < n and _pair_gt(query, arr[r], arr[largest], cmp):
-            largest = r
-        if largest != i:
+    def heapify(n: int, i: int):
+        # the recursion into the swapped child is a loop
+        while True:
+            largest = i
+            l, r = 2 * i + 1, 2 * i + 2
+            if l < n and (yield from _pair_gt(arr[l], arr[largest])):
+                largest = l
+            if r < n and (yield from _pair_gt(arr[r], arr[largest])):
+                largest = r
+            if largest == i:
+                return
             arr[i], arr[largest] = arr[largest], arr[i]
-            heapify(n, largest)
+            i = largest
 
     n = len(arr)
     ranked = 0
     for i in range(n // 2, -1, -1):
-        heapify(n, i)
+        yield from heapify(n, i)
     for i in range(n - 1, 0, -1):
         arr[i], arr[0] = arr[0], arr[i]
         ranked += 1
         if ranked == k:
             break
-        heapify(i, 0)
+        yield from heapify(i, 0)
     return list(reversed(arr))
 
 
-def pairwise_bubblesort(items: list, query: str, cmp, k: int) -> list:
+def pairwise_bubblesort(items: list, k: int):
     # semantics of pairwise.py:253-275 (bottom-up adjacent swaps with the
     # last_end never-swapped-tail skip)
     arr = list(items)
@@ -328,7 +396,7 @@ def pairwise_bubblesort(items: list, query: str, cmp, k: int) -> list:
         while True:
             if cur <= i:
                 break
-            if _pair_gt(query, arr[cur], arr[cur - 1], cmp):
+            if (yield from _pair_gt(arr[cur], arr[cur - 1])):
                 arr[cur - 1], arr[cur] = arr[cur], arr[cur - 1]
                 if not changed:
                     changed = True
@@ -411,13 +479,12 @@ def shrink_window_words(
 def listwise_slide(
     items: list,
     query: str,
-    cmp,
     window_size: int,
     step_size: int,
     num_repeat: int,
     token_budget: int | None = None,
     start_words: int = 300,
-) -> list:
+):
     # semantics of listwise.py:178-196: window [start, end) moves end→start
     # by step, repeated num_repeat times; with a token_budget each window's
     # passages pass through the budget-shrink loop first (listwise.py:63-88)
@@ -430,7 +497,7 @@ def listwise_slide(
             texts = [t for _, t in arr[start:end]]
             if token_budget is not None:
                 texts, _ = shrink_window_words(query, texts, token_budget, start_words)
-            resp = cmp.permutation(query, texts)
+            resp = yield "permutation", texts
             arr = receive_permutation(arr, resp, start, end)
             end -= step_size
             start -= step_size
@@ -456,32 +523,100 @@ def assemble(original: list, reordered: list, k: int) -> list[tuple[str, float]]
 
 
 _METHODS = {
-    "setwise.heapsort": lambda it, q, c, p: setwise_heapsort(it, q, c, p["num_child"], p["k"]),
-    "setwise.bubblesort": lambda it, q, c, p: setwise_bubblesort(it, q, c, p["num_child"], p["k"]),
-    "pairwise.allpair": lambda it, q, c, p: pairwise_allpair(it, q, c, p["k"]),
-    "pairwise.heapsort": lambda it, q, c, p: pairwise_heapsort(it, q, c, p["k"]),
-    "pairwise.bubblesort": lambda it, q, c, p: pairwise_bubblesort(it, q, c, p["k"]),
-    "listwise.sliding": lambda it, q, c, p: listwise_slide(
-        it, q, c, p["window_size"], p["step_size"], p["num_repeat"],
-        p.get("token_budget"), p.get("start_words", 300),
+    "setwise.heapsort": lambda it, q, p: setwise_heapsort(it, p["num_child"], p["k"]),
+    "setwise.bubblesort": lambda it, q, p: setwise_bubblesort(it, p["num_child"], p["k"]),
+    "pairwise.allpair": lambda it, q, p: pairwise_allpair(it),
+    "pairwise.heapsort": lambda it, q, p: pairwise_heapsort(it, p["k"]),
+    "pairwise.bubblesort": lambda it, q, p: pairwise_bubblesort(it, p["k"]),
+    "listwise.sliding": lambda it, q, p: listwise_slide(
+        it, q, p["window_size"], p["step_size"], p["num_repeat"], p["token_budget"], p["start_words"],
     ),
 }
+_DEFAULTS = dict(k=10, num_child=3, window_size=4, step_size=2, num_repeat=1, token_budget=None, start_words=300)
+
+
+# ---------------------------------------------------------------------------
+# The stepper: every loop of a task in one thread, compares pooled per round.
+# ---------------------------------------------------------------------------
+
+
+def run_lockstep(loops: list, cmp, batch_size: int = BATCH_SIZE) -> list:
+    """Drive ``loops`` — (query, sort-loop generator) pairs — to completion
+    and return their results in input order.
+
+    Each round takes the pending request of every unfinished loop and pools
+    their model inputs: a model call as soon as the pool holds
+    ``batch_size`` inputs, and one for the rest at the end of the round (a
+    request's inputs never split across calls). A single query's loop
+    exposes one compare at a time (data dependency); pooling across the
+    queries of a task is what keeps a model batch full — the same reason
+    the reference shards queries across jobs."""
+    model = cmp.model()
+    results: list = [None] * len(loops)
+    seqs = [0] * len(loops)
+    answers: list = [(i, None) for i in range(len(loops))]
+    while answers:
+        asked = []
+        for i, answer in answers:
+            query, loop = loops[i]
+            try:
+                kind, texts = loop.send(answer)
+            except StopIteration as done:
+                results[i] = done.value
+                continue
+            seqs[i] += 1
+            req = Compare(kind, query, texts, seqs[i])
+            asked.append((i, req, cmp.encode(req)))
+        answers = []
+        pool: list = []
+        inputs: list = []
+        for n, (i, req, x) in enumerate(asked, 1):
+            pool.append((i, req, len(x)))
+            inputs += x
+            if len(inputs) >= batch_size or n == len(asked):
+                outputs = model(inputs)
+                at = 0
+                for j, r, size in pool:
+                    answers.append((j, cmp.decide(r, outputs[at : at + size])))
+                    at += size
+                pool, inputs = [], []
+    return results
+
+
+def rerank_many(method: str, queries: list, cmp, batch_size: int = BATCH_SIZE, **params) -> list:
+    """Rerank (items, query) pairs in lockstep; one [(docid, score)]
+    ranking per query."""
+    p = {**_DEFAULTS, **params}
+    reordered = run_lockstep([(q, _METHODS[method](items, q, p)) for items, q in queries], cmp, batch_size)
+    if method == "listwise.sliding":
+        # listwise assigns score=-i to the whole list (listwise.py:194-195)
+        return [[(d, float(-i)) for i, (d, _) in enumerate(r)] for r in reordered]
+    return [assemble(items, r, p["k"]) for (items, _), r in zip(queries, reordered)]
 
 
 def rerank_local(method: str, items: list, query: str, cmp, **params) -> list[tuple[str, float]]:
-    """Run one query's rerank loop locally (used by tests and by the UDF)."""
-    params.setdefault("k", 10)
-    params.setdefault("num_child", 3)
-    params.setdefault("window_size", 4)
-    params.setdefault("step_size", 2)
-    params.setdefault("num_repeat", 1)
-    params.setdefault("token_budget", None)
-    params.setdefault("start_words", 300)
-    reordered = _METHODS[method](items, query, cmp, params)
-    if method == "listwise.sliding":
-        # listwise assigns score=-i to the whole list (listwise.py:194-195)
-        return [(d, float(-i)) for i, (d, _) in enumerate(reordered)]
-    return assemble(items, reordered, params["k"])
+    """Run one query's rerank loop locally (used by tests and gates)."""
+    return rerank_many(method, [(items, query)], cmp, **params)[0]
+
+
+def rerank_pandas(pdf: pd.DataFrame, method: str, cmp, params: dict, hits: int | None = None,
+                  batch_size: int = BATCH_SIZE) -> pd.DataFrame:
+    """Rerank one Spark group of candidates (qid, query, docid, rank, text),
+    all its qids in lockstep; rows follow RERANK_SCHEMA."""
+    groups = [
+        (qid, g if hits is None else g.head(hits))  # per-query cap, run.py:163-164
+        for qid, g in pdf.sort_values("rank", kind="stable").groupby("qid", sort=True)
+    ]
+    queries = [(list(zip(g["docid"], g["text"])), g["query"].iloc[0]) for _, g in groups]
+    ranked = rerank_many(method, queries, cmp, batch_size, **params)
+    return pd.DataFrame(
+        {
+            "qid": [qid for (qid, _), r in zip(groups, ranked) for _ in r],
+            "docid": [d for r in ranked for d, _ in r],
+            "rank": [i for r in ranked for i in range(1, len(r) + 1)],
+            "score": [s for r in ranked for _, s in r],
+        }
+    )
 
 
 def rerank(
@@ -502,31 +637,18 @@ def rerank(
     ``candidates``: (qid, query, docid, rank, text). Each qid group runs its
     full sort loop in one Arrow-batched task; the comparator is shipped in
     the closure (must be picklable — MockComparator is; a real-model
-    comparator would hold lazy per-executor model state).
+    comparator holds lazy per-executor model state, see
+    ``model_comparator``). One comparator serves every qid of a task: its
+    decisions depend on the query alone.
     """
     comparator = comparator or MockComparator()
     params = dict(
         k=k, num_child=num_child, window_size=window_size, step_size=step_size,
         num_repeat=num_repeat, token_budget=token_budget, start_words=start_words,
     )
-
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rank")
-        if hits is not None:
-            pdf = pdf.head(hits)  # per-query cap, run.py:163-164
-        items = list(zip(pdf["docid"], pdf["text"]))
-        query = pdf["query"].iloc[0]
-        ranked = rerank_local(method, items, query, comparator, **params)
-        return pd.DataFrame(
-            {
-                "qid": pdf["qid"].iloc[0],
-                "docid": [d for d, _ in ranked],
-                "rank": range(1, len(ranked) + 1),
-                "score": [s for _, s in ranked],
-            }
-        )
-
-    return candidates.groupBy("qid").applyInPandas(lambda _, pdf: run_group(pdf), schema=RERANK_SCHEMA)
+    return candidates.groupBy("qid").applyInPandas(
+        lambda _, pdf: rerank_pandas(pdf, method, comparator, params, hits), schema=RERANK_SCHEMA
+    )
 
 
 def shuffle_candidates(candidates: DataFrame, how: str, seed: int = 929) -> DataFrame:

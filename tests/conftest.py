@@ -8,6 +8,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from llm_rankers_spark.session import get_spark  # noqa: E402
 
 
+def pytest_configure(config):
+    # an exception that escapes a helper thread fails the test that leaked it
+    config.addinivalue_line("filterwarnings", "error::pytest.PytestUnhandledThreadExceptionWarning")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="llm_rankers_spark_tests", master="local[4]", shuffle_partitions=4)

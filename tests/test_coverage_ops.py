@@ -21,6 +21,7 @@ from llm_rankers_spark.operators.rerank import (
     RetryingComparator,
     VotingComparator,
     parse_reasoning_answer,
+    run_lockstep,
     setwise_heapsort,
 )
 
@@ -117,25 +118,26 @@ def test_voting_comparator_deterministic():
 def test_voting_comparator_in_heapsort():
     items = [(f"d{i}", f"doc rel={r}") for i, r in enumerate([4, 7, 1, 9, 3])]
     vc = VotingComparator(MockComparator(relevance=relevance), num_permutation=3)
-    out = setwise_heapsort(items, "q", vc, num_child=2, k=3)
+    out = run_lockstep([("q", setwise_heapsort(items, num_child=2, k=3))], vc)[0]
     assert [d for d, _ in out[:3]] == ["d3", "d1", "d0"]
 
 
 def test_retrying_comparator():
-    class Flaky:
-        def __init__(self, fail_times):
-            self.left = fail_times
+    def flaky(fail_times):
+        left = [fail_times]
 
-        def best_of(self, query, texts):
-            if self.left > 0:
-                self.left -= 1
+        def rel(query, text):
+            if left[0] > 0:
+                left[0] -= 1
                 raise RuntimeError("transient")
             return 0
 
-    rc = RetryingComparator(Flaky(2), max_retries=3)
+        return rel
+
+    rc = RetryingComparator(MockComparator(relevance=flaky(2)), max_retries=3)
     assert rc.best_of("q", ["a"]) == 0
     assert rc.retries == 2
-    rc2 = RetryingComparator(Flaky(10), max_retries=2)
+    rc2 = RetryingComparator(MockComparator(relevance=flaky(10)), max_retries=2)
     with pytest.raises(RuntimeError):
         rc2.best_of("q", ["a"])
 

@@ -4,6 +4,8 @@ call scoring, cross-query pooled batching, and batched ≡ sequential parity
 Spark-shaped plug-in)."""
 
 import hashlib
+import itertools
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,13 +15,19 @@ from llm_rankers_spark.operators.model_comparator import (
     FakeRelevanceModel,
     GenerativeModelComparator,
     ModelComparator,
-    _BatchEngine,
     fake_generative_factory,
     fake_model_factory,
     get_model,
     rerank_batched,
 )
-from llm_rankers_spark.operators.rerank import MockComparator, rerank, rerank_local
+from llm_rankers_spark.operators.rerank import MockComparator, rerank, rerank_local, rerank_many
+
+_names = itertools.count()
+
+
+def _on(cls, model, **kw):
+    """``cls`` over this very model instance, under a fresh cache name."""
+    return cls(f"test-model-{next(_names)}", lambda: model, **kw)
 
 
 def _fake_rel(query: str, text: str) -> float:
@@ -40,7 +48,7 @@ def test_get_model_loads_once_per_process():
 
 def test_model_comparator_one_batch_per_call():
     model = FakeRelevanceModel()
-    cmp = ModelComparator("m", lambda: model, dispatch=model.score_batch)
+    cmp = _on(ModelComparator, model)
     win = cmp.best_of("q", ["alpha", "beta", "gamma"])
     assert model.batches == 1 and model.items == 3
     # decision parity with MockComparator on the same relevance
@@ -52,30 +60,16 @@ def test_model_comparator_one_batch_per_call():
 
 @pytest.mark.parametrize("method", ["setwise.heapsort", "pairwise.heapsort", "pairwise.allpair", "listwise.sliding"])
 def test_engine_batched_equals_sequential(method):
-    queries = [(f"q{i}", _mk_items(f"q{i}")) for i in range(6)]
-    # sequential: direct model scoring, one loop at a time
-    seq = {}
-    for qid, items in queries:
-        cmp = ModelComparator("m", fake_model_factory, dispatch=FakeRelevanceModel().score_batch)
-        seq[qid] = rerank_local(method, items, f"query {qid}", cmp, k=5)
-    # batched: all loops in lockstep threads through one engine
+    queries = [(_mk_items(f"q{i}"), f"query q{i}") for i in range(6)]
+    # sequential: one loop at a time, a fresh comparator per query
+    seq = [rerank_local(method, items, q, _on(ModelComparator, FakeRelevanceModel()), k=5) for items, q in queries]
+    # batched: every loop in lockstep, one comparator for all of them
     model = FakeRelevanceModel()
-    engine = _BatchEngine(model, batch_size=16)
-    tasks = []
-    for qid, items in queries:
-        def mk(qid=qid, items=items):
-            cmp = ModelComparator("m", fake_model_factory, dispatch=engine.request)
-            return rerank_local(method, items, f"query {qid}", cmp, k=5)
-        tasks.append(mk)
-    got = dict(zip([q for q, _ in queries], engine.run(tasks)))
-    assert got == seq
+    cmp = _on(ModelComparator, model)
+    assert rerank_many(method, queries, cmp, batch_size=16, k=5) == seq
     # pooling actually happened: fewer model batches than comparator calls
-    assert model.batches == engine.flushes
-    probe = ModelComparator("m", fake_model_factory, dispatch=FakeRelevanceModel().score_batch)
-    rerank_local(method, queries[0][1], "query q0", probe, k=5)
-    total_calls = probe.calls * len(queries)
-    assert engine.flushes < total_calls, (
-        f"no cross-query pooling: {engine.flushes} flushes for {total_calls} compare calls"
+    assert model.batches < cmp.calls, (
+        f"no cross-query pooling: {model.batches} batches for {cmp.calls} compare calls"
     )
 
 
@@ -84,10 +78,8 @@ def test_generative_comparator_matches_scoring(method):
     # generation-mode protocol (prompt -> label string -> parse) must reach
     # the same rankings as scoring-mode on the same hidden relevance
     items = _mk_items("g0")
-    gen = GenerativeModelComparator("g", fake_generative_factory,
-                                    dispatch=FakeGenerativeModel().generate_batch)
-    score = ModelComparator("m", fake_model_factory,
-                            dispatch=FakeRelevanceModel().score_batch)
+    gen = _on(GenerativeModelComparator, FakeGenerativeModel())
+    score = _on(ModelComparator, FakeRelevanceModel())
     a = rerank_local(method, items, "query g0", gen, k=5)
     b = rerank_local(method, items, "query g0", score, k=5)
     assert a == b
@@ -100,7 +92,7 @@ def test_generative_parse_fallbacks():
         def generate_batch(self, prompts):
             return ["no label here!" for _ in prompts]
 
-    cmp = GenerativeModelComparator("j", lambda: None, dispatch=Junk().generate_batch)
+    cmp = _on(GenerativeModelComparator, Junk())
     assert cmp.best_of("q", ["t1", "t2", "t3"]) == 0
     w1, w2 = cmp.pair("q", "a", "b")
     assert (w1, w2) == (False, False)
@@ -124,15 +116,30 @@ def test_engine_model_error_propagates_no_hang():
         def score_batch(self, pairs):
             raise RuntimeError("boom")
 
-    engine = _BatchEngine(BoomModel(), batch_size=4)
-    tasks = []
-    for i in range(3):
-        def mk(i=i):
-            cmp = ModelComparator("m", fake_model_factory, dispatch=engine.request)
-            return rerank_local("setwise.heapsort", _mk_items(f"q{i}", n=6), "q", cmp, k=3)
-        tasks.append(mk)
+    threads = threading.active_count()
+    queries = [(_mk_items(f"q{i}", n=6), "q") for i in range(3)]
     with pytest.raises(RuntimeError, match="boom"):
-        engine.run(tasks)  # every waiter must wake; no deadlocked join
+        rerank_many("setwise.heapsort", queries, _on(ModelComparator, BoomModel()), batch_size=4, k=3)
+    assert threading.active_count() == threads  # the stepper starts no thread
+
+
+def test_one_comparator_serves_many_queries():
+    # Rank-R1 shuffles seed from each query's own compare index: with a
+    # position-biased model (always answers [1]) the votes follow the
+    # shuffles, and one comparator over three queries in lockstep must
+    # still rank each as a fresh comparator does alone
+    from llm_rankers_spark.operators.model_comparator import RankR1Comparator
+
+    class FirstLabel:
+        def generate_batch(self, prompts):
+            return ["<think> first </think> <answer>[1]</answer>" for _ in prompts]
+
+    queries = [(_mk_items(f"q{i}", n=10), f"query q{i}") for i in range(3)]
+    shared = _on(RankR1Comparator, FirstLabel(), num_permutation=3)
+    got = rerank_many("setwise.heapsort", queries, shared, k=5, num_child=3)
+    for (items, q), ranked in zip(queries, got):
+        fresh = _on(RankR1Comparator, FirstLabel(), num_permutation=3)
+        assert ranked == rerank_local("setwise.heapsort", items, q, fresh, k=5, num_child=3), q
 
 
 def test_pointwise_model_scorer_matches_direct(spark):
@@ -184,7 +191,6 @@ def test_duo_prob_comparator_matches_scoring():
     from llm_rankers_spark.operators.model_comparator import (
         DuoProbPairComparator,
         FakeDuoModel,
-        fake_duo_factory,
     )
 
     def text_rel(_q, t):
@@ -192,14 +198,14 @@ def test_duo_prob_comparator_matches_scoring():
 
     items = _mk_items("duo")
     for method in ("pairwise.heapsort", "pairwise.bubblesort", "pairwise.allpair"):
-        duo = DuoProbPairComparator("duo", fake_duo_factory, dispatch=FakeDuoModel().score_batch)
+        duo = _on(DuoProbPairComparator, FakeDuoModel())
         mock = MockComparator(relevance=text_rel)
         got = rerank_local(method, items, "query duo", duo, k=5)
         want = rerank_local(method, items, "query duo", mock, k=5)
         assert got == want, method
     # both orders of one compare travel in ONE model batch
     m = FakeDuoModel()
-    duo = DuoProbPairComparator("duo", fake_duo_factory, dispatch=m.score_batch)
+    duo = _on(DuoProbPairComparator, m)
     duo.pair("q", "aaa", "bbb")
     assert m.batches == 1 and m.items == 2
     with pytest.raises(NotImplementedError):
@@ -213,20 +219,18 @@ def test_rank_r1_comparator_matches_scoring():
     from llm_rankers_spark.operators.model_comparator import (
         FakeReasoningModel,
         RankR1Comparator,
-        fake_reasoning_factory,
     )
 
     items = _mk_items("r1")
     for nperm in (1, 3):
         m = FakeReasoningModel()
-        r1 = RankR1Comparator("r1", fake_reasoning_factory, dispatch=m.generate_batch,
-                              num_permutation=nperm)
+        r1 = _on(RankR1Comparator, m, num_permutation=nperm)
         mock = MockComparator(relevance=_fake_rel)
         got = rerank_local("setwise.heapsort", items, "query r1", r1, k=5, num_child=3)
         want = rerank_local("setwise.heapsort", items, "query r1", mock, k=5, num_child=3)
         assert got == want, nperm
         # num_permutation prompts per compare, all in one batch per call
-        assert m.items == r1.compares * nperm
+        assert m.items == r1.calls * nperm
 
 
 def test_rank_r1_v02_comparator_matches_scoring():
@@ -235,18 +239,18 @@ def test_rank_r1_v02_comparator_matches_scoring():
     from llm_rankers_spark.operators.model_comparator import (
         FakeReasoningModel,
         RankR1V02Comparator,
-        fake_reasoning_factory,
     )
 
     items = _mk_items("r1v2")
     m = FakeReasoningModel()
     seen = {}
 
-    def spy(prompts):
-        seen.setdefault("p", prompts[0])
-        return m.generate_batch(prompts)
+    class Spy:
+        def generate_batch(self, prompts):
+            seen.setdefault("p", prompts[0])
+            return m.generate_batch(prompts)
 
-    r1 = RankR1V02Comparator("r1v2", fake_reasoning_factory, dispatch=spy, num_permutation=3)
+    r1 = _on(RankR1V02Comparator, Spy(), num_permutation=3)
     mock = MockComparator(relevance=_fake_rel)
     got = rerank_local("setwise.heapsort", items, "query r1v2", r1, k=5, num_child=3)
     want = rerank_local("setwise.heapsort", items, "query r1v2", mock, k=5, num_child=3)
@@ -264,8 +268,7 @@ def test_rank_r1_parse_fallback_keeps_parent():
         def generate_batch(self, prompts):
             return ["no tags at all" for _ in prompts]
 
-    g = Garbage()
-    r1 = RankR1Comparator("g", lambda: g, dispatch=g.generate_batch)
+    r1 = _on(RankR1Comparator, Garbage())
     assert r1.best_of("q", ["a", "b", "c"]) == 0
 
 
@@ -283,7 +286,7 @@ def test_rank_r1_answer_pattern_matches_reference_trace():
 
 
 def test_rerank_batched_duo_and_r1(spark):
-    # both new protocols must run through the cross-query batch engine and
+    # both new protocols must run through the cross-query stepper and
     # match the per-qid MockComparator path
     from llm_rankers_spark.operators.model_comparator import (
         DuoProbPairComparator,
@@ -332,7 +335,7 @@ def test_openai_api_ranker_worked_example():
         return inner.generate_batch([prompt])[0]
 
     api = OpenAIGenerativeModel(transport=flaky_transport, max_retries=3, retry_sleep=0.0)
-    cmp = GenerativeModelComparator("api", lambda: api, dispatch=api.generate_batch)
+    cmp = _on(GenerativeModelComparator, api)
     items = _mk_items("api")
     got = rerank_local("setwise.heapsort", items, "query api", cmp, k=5, num_child=3)
     want = rerank_local("setwise.heapsort", items, "query api",

@@ -11,6 +11,7 @@ import pytest
 
 from llm_rankers_spark.operators.rerank import (
     MockComparator,
+    VotingComparator,
     assemble,
     build_rank_prompt,
     clean_permutation,
@@ -19,6 +20,7 @@ from llm_rankers_spark.operators.rerank import (
     receive_permutation,
     rerank,
     rerank_local,
+    run_lockstep,
     setwise_heapsort,
     shrink_window_words,
     shuffle_candidates,
@@ -86,11 +88,11 @@ def test_setwise_bubblesort_matches_reference_sim():
 def test_setwise_arity(num_child):
     items = make_items(GOLD_RELS)
     cmp = MockComparator(relevance=relevance)
-    out = setwise_heapsort(items, QUERY, cmp, num_child, k=4)
+    out = run_lockstep([(QUERY, setwise_heapsort(items, num_child, k=4))], cmp)[0]
     assert [d for d, _ in out[:4]] == gold_topk(items, 4)
     # wider fan-out → fewer comparator calls (setwise.py:200-217 rationale)
     cmp1 = MockComparator(relevance=relevance)
-    setwise_heapsort(items, QUERY, cmp1, 1, k=4)
+    run_lockstep([(QUERY, setwise_heapsort(items, 1, k=4))], cmp1)
     if num_child > 1:
         assert cmp.calls < cmp1.calls
 
@@ -104,10 +106,31 @@ def test_assembly_tail_in_original_order():
     assert [s for _, s in out] == [-1.0, -2.0, -3.0, -4.0, -5.0, -6.0]
 
 
+# MockComparator (calls, prompt_items) per method on a fixed 20-item input,
+# pinned from the recursive loops before they became generators: a rewrite
+# that issues another compare set fails here even if the ranking holds
+PINNED_COMPARES = {
+    "setwise.heapsort": (19, 72),
+    "setwise.bubblesort": (30, 115),
+    "pairwise.allpair": (190, 380),
+    "pairwise.heapsort": (58, 116),
+    "pairwise.bubblesort": (85, 170),
+    "listwise.sliding": (9, 36),
+}
+
+
+@pytest.mark.parametrize("method", list(PINNED_COMPARES))
+def test_compare_counts_pinned(method):
+    items = make_items([(i * 7 + 3) % 20 for i in range(20)])
+    cmp = MockComparator(relevance=relevance)
+    rerank_local(method, items, QUERY, cmp, k=5, num_child=3)
+    assert (cmp.calls, cmp.prompt_items) == PINNED_COMPARES[method]
+
+
 def test_allpair_win_counts():
     items = make_items([1, 3, 2])
     cmp = MockComparator(relevance=relevance)
-    out = pairwise_allpair(items, QUERY, cmp, k=3)
+    out = run_lockstep([(QUERY, pairwise_allpair(items))], cmp)[0]
     # d0 loses every pair → never enters the score dict (reference
     # defaultdict behavior); it returns via assembly
     assert [d for d, _ in out] == ["d1", "d2"]
@@ -159,16 +182,12 @@ def test_listwise_budget_clamp_preserves_loop():
     rels = [3, 1, 2]
     items = [(f"d{i}", f"padding {' x' * 30} rel={r}") for i, r in enumerate(rels)]
 
-    class FirstWordComparator(MockComparator):
-        def permutation(self, query, texts):
-            assert all(len(t.split()) <= 1 for t in texts)  # clamp reached us
-            order = sorted(range(len(texts)), key=lambda i: texts[i])
-            return " > ".join(f"[{i + 1}]" for i in order)
+    def clamped_relevance(query, text):
+        assert len(text.split()) <= 1  # clamp reached the comparator
+        return len(text)
 
-    out = listwise_slide(
-        items, QUERY, FirstWordComparator(), window_size=3, step_size=3, num_repeat=1,
-        token_budget=1, start_words=1,
-    )
+    loop = listwise_slide(items, QUERY, window_size=3, step_size=3, num_repeat=1, token_budget=1, start_words=1)
+    out = run_lockstep([(QUERY, loop)], MockComparator(relevance=clamped_relevance))[0]
     assert {d for d, _ in out} == {"d0", "d1", "d2"}
 
 
@@ -219,6 +238,33 @@ def test_spark_matches_local(spark, method):
     for qid, items in queries.items():
         want = rerank_local(method, items, QUERY, MockComparator(relevance=relevance), k=5, num_child=2)
         assert got_map[qid] == want, f"{method} mismatch for {qid}"
+
+
+def coarse_relevance(query: str, text: str) -> int:
+    # ties within a band of 4 go to the passage shown first: position bias
+    return relevance(query, text) // 4
+
+
+def test_rerank_state_is_per_query(spark):
+    # shuffled votes over a position-biased base depend on each vote's
+    # seed; one comparator serves every qid of a task (8 qids, at most 4
+    # shuffle partitions), yet each query must rank as it does alone with a
+    # fresh comparator
+    rows = []
+    queries = {}
+    for q in range(8):
+        queries[f"q{q}"] = make_items([(r * 5 + q) % 12 for r in range(10)])
+        for rank, (docid, text) in enumerate(queries[f"q{q}"], start=1):
+            rows.append((f"q{q}", QUERY, docid, rank, text))
+    cands = spark.createDataFrame(rows, "qid string, query string, docid string, rank int, text string")
+    voting = VotingComparator(MockComparator(relevance=coarse_relevance), num_permutation=3)
+    got = rerank(cands, method="setwise.heapsort", comparator=voting, k=5, num_child=2)
+    got_map = {}
+    for r in got.orderBy("qid", "rank").collect():
+        got_map.setdefault(r["qid"], []).append((r["docid"], r["score"]))
+    for qid, items in queries.items():
+        fresh = VotingComparator(MockComparator(relevance=coarse_relevance), num_permutation=3)
+        assert got_map[qid] == rerank_local("setwise.heapsort", items, QUERY, fresh, k=5, num_child=2), qid
 
 
 def test_shuffle_candidates(spark):

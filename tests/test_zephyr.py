@@ -2,6 +2,8 @@
 protocol of Rank-R1/run_listwise.py:92-158 + the rankzephyr toml, asserted
 gen ≡ scoring through listwise_slide and batched through rerank_batched."""
 
+import itertools
+
 import pandas as pd
 import pytest
 
@@ -13,7 +15,14 @@ from llm_rankers_spark.operators.model_comparator import (
     fake_zephyr_factory,
     rerank_batched,
 )
-from llm_rankers_spark.operators.rerank import listwise_slide, rerank_local
+from llm_rankers_spark.operators.rerank import listwise_slide, rerank_local, run_lockstep
+
+_names = itertools.count()
+
+
+def _on(cls, model):
+    """``cls`` over this very model instance, under a fresh cache name."""
+    return cls(f"zephyr-test-{next(_names)}", lambda: model)
 
 
 def _items(n, tag=""):
@@ -22,7 +31,7 @@ def _items(n, tag=""):
 
 def test_permutation_prompt_and_parse():
     model = FakeZephyrModel()
-    cmp = RankZephyrComparator("z", lambda: model, dispatch=model.generate_batch)
+    cmp = _on(RankZephyrComparator, model)
     texts = [t for _, t in _items(4)]
     out = cmp.permutation("the query", texts)
     # FakeZephyrModel ranks by the shared md5 relevance; the comparator's
@@ -40,7 +49,7 @@ def test_prompt_contains_toml_protocol():
             seen["p"] = prompts[0]
             return ["[2] > [1] > [3]"]
 
-    cmp = RankZephyrComparator("spy", Spy, dispatch=Spy().generate_batch)
+    cmp = _on(RankZephyrComparator, Spy())
     cmp.permutation("my query", ["t1", "t2", "t3"])
     p = seen["p"]
     assert p.startswith("You are RankLLM")
@@ -54,7 +63,7 @@ def test_unparseable_completion_is_identity():
         def generate_batch(self, prompts):
             return ["!!!"]
 
-    cmp = RankZephyrComparator("mute", Mute, dispatch=Mute().generate_batch)
+    cmp = _on(RankZephyrComparator, Mute())
     out = cmp.permutation("q", ["a", "b"])
     # 'None' (run_listwise.py:150-156) → clean_permutation finds no digits
     from llm_rankers_spark.operators.rerank import receive_permutation
@@ -73,10 +82,10 @@ def test_only_listwise_defined():
 def test_listwise_slide_gen_equals_scoring():
     items = _items(8, "win")
     model = FakeZephyrModel()
-    zcmp = RankZephyrComparator("z", lambda: model, dispatch=model.generate_batch)
+    zcmp = _on(RankZephyrComparator, model)
     scmp = ModelComparator("m", fake_model_factory)
-    z = listwise_slide(items, "q77", zcmp, window_size=4, step_size=2, num_repeat=1)
-    s = listwise_slide(items, "q77", scmp, window_size=4, step_size=2, num_repeat=1)
+    z = run_lockstep([("q77", listwise_slide(items, "q77", window_size=4, step_size=2, num_repeat=1))], zcmp)[0]
+    s = run_lockstep([("q77", listwise_slide(items, "q77", window_size=4, step_size=2, num_repeat=1))], scmp)[0]
     assert [d for d, _ in z] == [d for d, _ in s]
 
 
