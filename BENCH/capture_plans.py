@@ -6,7 +6,7 @@ Captures three hot-path physical plans on a small sf0.001 build:
 1. IN-pushdown postings scan — `search()` with a <=512-term batch must
    show the literal In(term, ...) predicate in PushedFilters (row-group
    pruning at the parquet scan).
-2. Tree top-k merge — `search_distributed(merge='tree', merge_fanin=2)`
+2. Tree top-k merge — `search(plan='distributed', merge='tree', merge_fanin=2)`
    over 8 shards must show the stacked per-level ranking windows
    (bounded fanin*k rows per task per level).
 3. shard_bucket pack — the build's packed frame must show the
@@ -55,7 +55,7 @@ def excerpt(plan: str, node_patterns: list[str], detail_patterns: list[str]) -> 
 
 def main() -> None:
     from llm_rankers_spark.corpus import driver_documents
-    from llm_rankers_spark.operators.bm25 import search, search_distributed
+    from llm_rankers_spark.operators.bm25 import search
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.session import get_spark
 
@@ -84,7 +84,7 @@ def main() -> None:
     )
 
     # --- IN-pushdown scan (driver-planned search, small batch) ------------
-    run = search(idx, qs, k=5, method="wand", plan="driver")
+    run = search(idx, qs, k=5, plan="driver")
     in_ex = excerpt(
         explain_formatted(run),
         [r"Scan parquet", r"Filter", r"FlatMapGroupsInPandas", r"WindowGroupLimit"],
@@ -92,7 +92,7 @@ def main() -> None:
     )
 
     # --- tree merge levels ------------------------------------------------
-    tree = search_distributed(idx, qs, k=5, method="wand", merge="tree", merge_fanin=2)
+    tree = search(idx, qs, k=5, plan="distributed", merge="tree", merge_fanin=2)
     tree_ex = excerpt(
         explain_formatted(tree),
         [r"Window", r"WindowGroupLimit", r"FlatMapCoGroupsInPandas", r"Filter"],

@@ -126,7 +126,7 @@ def worker(role: str, i: int, n: int, input_path: str, sync_dir: str) -> None:
 
     def run():
         if role == "engine":
-            search(idx, qs, k=10, method="wand", plan="distributed").count()
+            search(idx, qs, k=10, plan="distributed").count()
         else:
             _noop_scored_plan(idx, qs, k=10).count()
 
@@ -134,7 +134,7 @@ def worker(role: str, i: int, n: int, input_path: str, sync_dir: str) -> None:
     # on a 16-query slice — a long-lived serving executor is past its first
     # batch (same argument as bench.emu_worker)
     if role == "engine":
-        search(idx, qs_all.limit(16), k=10, method="wand", plan="distributed").count()
+        search(idx, qs_all.limit(16), k=10, plan="distributed").count()
     else:
         _noop_scored_plan(idx, qs_all.limit(16), k=10).count()
 

@@ -77,7 +77,7 @@ def big_build_and_search() -> dict:
     from pyspark.sql import functions as F
 
     from llm_rankers_spark.corpus import generate_corpus, with_docid
-    from llm_rankers_spark.operators.bm25 import search, search_distributed
+    from llm_rankers_spark.operators.bm25 import search
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.session import get_spark
 
@@ -125,10 +125,10 @@ def big_build_and_search() -> dict:
             [(f"b{i}", qrows[i % len(qrows)][1]) for i in range(4096)], "qid string, query string"
         )
         t0 = time.perf_counter()
-        w_rows = search_distributed(idx_a, big_qs, k=10, merge="window").count()
+        w_rows = search(idx_a, big_qs, k=10, plan="distributed", merge="window").count()
         res["dist4096_window_sec"] = round(time.perf_counter() - t0, 2)
         t0 = time.perf_counter()
-        t_rows = search_distributed(idx_a, big_qs, k=10, merge="tree", merge_fanin=8).count()
+        t_rows = search(idx_a, big_qs, k=10, plan="distributed", merge="tree", merge_fanin=8).count()
         res["dist4096_tree_sec"] = round(time.perf_counter() - t0, 2)
         res["dist4096_rows_equal"] = w_rows == t_rows
         res["dist4096_queries_per_sec_tree"] = round(4096 / res["dist4096_tree_sec"], 1)

@@ -35,7 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
     docs = driver_documents(spark, sf_dir)
     idx = _entry_index(spark, sf_dir)
     qs = _queries_df(spark)
-    first_stage = search(idx, qs, k=20, method="wand")
+    first_stage = search(idx, qs, k=20)
     cands = attach_text(first_stage, docs).join(qs, "qid").select("qid", "query", "docid", "rank", "text")
     out = rerank(cands, method="setwise.heapsort", comparator=MockComparator(), k=10, num_child=2)
     return out.select("qid", "docid", F.col("rank").cast("long").alias("rank"), "score")

@@ -88,7 +88,7 @@ def run_scaling_workload(master: str, n_docs: int, n_queries: int = 256) -> dict
             qrows.append((f"s{i}", " ".join(terms)))
         qs = spark.createDataFrame(qrows, "qid string, query string")
         t0 = time.perf_counter()
-        search(idx, qs, k=10, method="wand").count()
+        search(idx, qs, k=10).count()
         times["bm25_wand"] = time.perf_counter() - t0
 
         shutil.rmtree(idx_path, ignore_errors=True)
@@ -203,7 +203,7 @@ def emu_worker(role: str, worker_id: int, n_workers: int, input_path: str, sync_
         # kernel JIT, Arrow UDF pipeline): a long-lived serving executor is
         # past its first batch, and round-4 raw pairs showed the first
         # timed batch paying ~6 s of this one-time cost at the 4-JVM point
-        search(idx, bench_queries(spark, n=16), k=10, method="wand").count()
+        search(idx, bench_queries(spark, n=16), k=10).count()
         # batch sized so per-JVM work dominates the fixed per-batch cost
         # (plan + job scheduling ≈ 2 s): round 3's vectorized WAND doubled
         # single-JVM throughput, which at 1024 queries made the emulation
@@ -240,7 +240,7 @@ def emu_worker(role: str, worker_id: int, n_workers: int, input_path: str, sync_
             pack_group=os.environ.get("LLMRS_EMU_PACK_GROUP", "auto"),
         )
     else:
-        search(idx, qs, k=10, method="wand").count()
+        search(idx, qs, k=10).count()
     wall = time.perf_counter() - t0
     if role == "build":
         shutil.rmtree(out_dir, ignore_errors=True)  # outside the timed wall
@@ -370,7 +370,7 @@ def run_workload(master: str, sf_dir: str, scale_only: bool = False) -> dict[str
     from pyspark.sql import functions as F
 
     from llm_rankers_spark.corpus import driver_documents
-    from llm_rankers_spark.operators.bm25 import bm25_dataframe_from_index, search, search_distributed
+    from llm_rankers_spark.operators.bm25 import bm25_dataframe_from_index, search
     from llm_rankers_spark.operators.dedup import minhash_lsh_candidates, minhash_signatures
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.operators.rerank import MockComparator, rerank
@@ -402,7 +402,7 @@ def run_workload(master: str, sf_dir: str, scale_only: bool = False) -> dict[str
         # counting ~3.5 s of first-stage work the real pipeline pays once).
         # k=20 because that IS the pipeline's hits budget for the reranker.
         t0 = time.perf_counter()
-        first = search(idx, qs, k=20, method="wand")
+        first = search(idx, qs, k=20)
         if not scale_only:
             first = first.persist()
         first.count()
@@ -458,7 +458,7 @@ def run_workload(master: str, sf_dir: str, scale_only: bool = False) -> dict[str
             # queries.collect(), query weights cogrouped with shard postings
             big_qs = bench_queries(spark, n=4096)
             t0 = time.perf_counter()
-            search_distributed(idx, big_qs, k=10, method="auto").count()
+            search(idx, big_qs, k=10, plan="distributed").count()
             times["_extra_bm25_dist4096"] = time.perf_counter() - t0
 
         shutil.rmtree(idx_path, ignore_errors=True)

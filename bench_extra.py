@@ -46,11 +46,7 @@ def stages(n_reps: int = 3) -> None:
 
     from bench import bench_queries
     from llm_rankers_spark.corpus import driver_documents
-    from llm_rankers_spark.operators.bm25 import (
-        bm25_dataframe_from_index,
-        search,
-        search_distributed,
-    )
+    from llm_rankers_spark.operators.bm25 import bm25_dataframe_from_index, search
     from llm_rankers_spark.operators.dedup import minhash_lsh_candidates, minhash_signatures
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.operators.rerank import MockComparator, rerank
@@ -90,9 +86,9 @@ def stages(n_reps: int = 3) -> None:
     from llm_rankers_spark.operators.index_build import load_index
 
     idx = load_index(spark, first_dir)
-    timed("bm25_wand", lambda: _noop(search(idx, qs, k=20, method="wand")))
+    timed("bm25_wand", lambda: _noop(search(idx, qs, k=20)))
     timed("bm25_sql", lambda: _noop(bm25_dataframe_from_index(idx, qs, k=10)))
-    first = search(idx, qs, k=20, method="wand").persist()
+    first = search(idx, qs, k=20).persist()
     first.count()
     cands = (
         attach_text(first, docs).join(qs, "qid")
@@ -119,7 +115,7 @@ def stages(n_reps: int = 3) -> None:
     )
     timed("cosine", lambda: _noop(cosine_topk(emb, qv, k=10)))
     big_qs = bench_queries(spark, n=4096)
-    timed("bm25_dist4096", lambda: _noop(search_distributed(idx, big_qs, k=10, method="auto")))
+    timed("bm25_dist4096", lambda: _noop(search(idx, big_qs, k=10, plan="distributed")))
     shutil.rmtree(idx_path, ignore_errors=True)
     out = {
         "mode": "stages_noop",
@@ -165,10 +161,10 @@ def wand_skip() -> None:
         B.reset_wand_stats()
         t0 = time.perf_counter()
         for _sid, spdf in pdf_all.groupby("shard"):
-            # method='wand' forces the block-max interval path for every
-            # query (the 'auto' dispatch sends short candidate sets to the
+            # a zero cutover forces the block-max interval path for every
+            # query (the default sends short candidate sets to the
             # exhaustive kernel, which never skips by design)
-            B._score_shard(spdf, qplan, 10, "wand", meta.k1, meta.b, meta.avgdl, 1.0,
+            B._score_shard(spdf, qplan, 10, 0, meta.k1, meta.b, meta.avgdl, 1.0,
                            n_docs=float(meta.n_docs))
         wall = time.perf_counter() - t0
         s = B.wand_stats()
@@ -242,7 +238,7 @@ def wand_skip_big(n_docs: int = 1_000_000) -> None:
         B.reset_wand_stats()
         t0 = time.perf_counter()
         for _sid, spdf in pdf_all.groupby("shard"):
-            B._score_shard(spdf, qplan, 10, "wand", meta.k1, meta.b, meta.avgdl, 1.0,
+            B._score_shard(spdf, qplan, 10, 0, meta.k1, meta.b, meta.avgdl, 1.0,
                            n_docs=float(meta.n_docs))
         wall = time.perf_counter() - t0
         s = B.wand_stats()

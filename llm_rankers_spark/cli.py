@@ -84,12 +84,16 @@ def build_parser() -> argparse.ArgumentParser:
                             "bounds task memory under scale/hot-term skew")
     _add_common(p_idx)
 
-    p_s = sub.add_parser("search", help="BM25 top-k over a built index")
+    p_s = sub.add_parser(
+        "search",
+        help="BM25 top-k over a built index; each query is scored by the "
+             "numpy-exhaustive or the block-max kernel, picked from its "
+             "candidate-posting count",
+    )
     p_s.add_argument("--index", required=True)
     p_s.add_argument("--queries", required=True)
     p_s.add_argument("--out", required=True, help="TREC run output dir")
     p_s.add_argument("--hits", type=int, default=100)
-    p_s.add_argument("--method", default="auto", choices=["auto", "wand", "exhaustive"])
     p_s.add_argument("--plan", default="auto", choices=["auto", "driver", "distributed"],
                      help="physical query plan; 'auto' (default) probes the batch "
                           "size and picks driver-planned vs fully-distributed — "
@@ -180,8 +184,7 @@ def main(argv: list[str] | None = None) -> int:
         from llm_rankers_spark.operators.runs import write_trec_run
 
         idx = load_index(spark, args.index)
-        run = search(idx, _load_queries(spark, args.queries), k=args.hits,
-                     method=args.method, plan=args.plan)
+        run = search(idx, _load_queries(spark, args.queries), k=args.hits, plan=args.plan)
         write_trec_run(run, args.out, single_file=args.single_file)
         print(json.dumps({"trec_path": args.out}))
         return 0

@@ -123,9 +123,10 @@ def _entry_index(spark: SparkSession, sf_dir: str):
 
 
 def q_bm25_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S5+S6: packed-index build + block-max WAND top-10."""
+    """S5+S6: packed-index build + BM25 top-10 (numpy-exhaustive or
+    block-max kernel, picked per query from its candidate postings)."""
     idx = _entry_index(spark, sf_dir)
-    res = bm25_ops.search(idx, _queries_df(spark), k=10, method="wand")
+    res = bm25_ops.search(idx, _queries_df(spark), k=10)
     return res.select(
         "qid", "docid", F.col("rank").cast("long").alias("rank"), F.round("score", 4).alias("score")
     )
@@ -217,7 +218,8 @@ SQL_VERIFY_INDEX = "SELECT true AS ok, 0::BIGINT AS n_mismatches"
 
 def q_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 large-batch twin: the fully-distributed query plan (cogrouped
-    (qid, term, w) DataFrame, no queries.collect — bm25.search_distributed);
+    (qid, term, w) DataFrame, no queries.collect — bm25.search with
+    plan='distributed');
     must match the same oracle as the driver-planned paths.
 
     Round-6 (round-5 verdict #8): this entry now builds ITS index through
@@ -234,9 +236,7 @@ def q_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("docid", "content", "content_sha256"), path,
         tokenizer_mode="simple", num_shards=4, resume=True, pack_group="shard_bucket",
     )
-    res = bm25_ops.search_distributed(
-        idx, _queries_df(spark), k=10, method="wand", merge="tree", merge_fanin=2
-    )
+    res = bm25_ops.search(idx, _queries_df(spark), k=10, plan="distributed", merge="tree", merge_fanin=2)
     return res.select(
         "qid", "docid", F.col("rank").cast("long").alias("rank"), F.round("score", 4).alias("score")
     )

@@ -1,20 +1,24 @@
 """BM25 top-k search — native replacement for the reference's Lucene search
 step (Rank-R1/bright/search.sh:4-9; k1=0.9, b=0.4 per README.md:70).
 
-Three scoring paths over the same semantics:
+One search entry point, :func:`search`, over the packed index. Inside it,
+per (segment, shard) group of an ``applyInPandas``, each query's candidate
+postings are scored by one of two vectorized kernels, picked from the
+input size (``EXHAUSTIVE_MAX_POSTINGS``):
 
-- ``method='wand'``    : block-max WAND posting traversal with a bounded
-  min-heap, per (query, shard) group inside ``applyInPandas`` — the scale
-  path. Shards are disjoint doc ranges, so per-shard top-k merge to global
-  top-k is exact.
-- ``method='exhaustive'``: decode-everything numpy scoring in the same
-  grouping — the in-UDF correctness reference for WAND.
-- :func:`bm25_dataframe` : pure built-in-functions DataFrame plan straight
-  from the corpus (no packed index) — Catalyst-visible end to end; this is
-  the form mirrored by the DuckDB oracle SQL in ``__spark_entry__.py``.
+- numpy-exhaustive (:func:`_exhaustive_arrays`): decode every candidate
+  list and accumulate — cheapest for short candidate sets;
+- block-max (:func:`_block_max_arrays`): interval-pruned scoring with a
+  bounded min-heap — the hot-term path.
+
+Shards are disjoint doc ranges, so per-shard top-k merge to the exact
+global top-k. :func:`bm25_dataframe` is the pure built-in-functions
+DataFrame plan straight from the corpus (no packed index) — Catalyst-visible
+end to end; it is the form mirrored by the DuckDB oracle SQL in
+``__spark_entry__.py``.
 
 Determinism: contributions for one doc are always summed in sorted-term
-order (same float64 op order in all three paths and in the pytest oracle),
+order (same float64 op order in both kernels and in the pytest oracle),
 tie-break is (score desc, docid asc) — ordinals are docid-ordered so the
 in-UDF compare is an integer compare (SURVEY.md §7.4 hard part #1).
 
@@ -28,6 +32,7 @@ Repeated query terms contribute with multiplicity ``qw``.
 from __future__ import annotations
 
 import heapq
+import math
 
 import numpy as np
 import pandas as pd
@@ -44,9 +49,9 @@ RESULT_SCHEMA = "qid string, ord long, score double"
 #: actually skips). Accumulated by _block_max_arrays in whatever process
 #: runs it: inside Spark tasks they live in the python worker (invisible
 #: driver-side), so measurement drives the scorer in-process on collected
-#: posting rows — BENCH/wand_skip_r06.py does exactly that; the pytest in
-#: tests/test_wand_property.py asserts pruning engages on a constructed
-#: hot+rare corpus.
+#: posting rows — ``bench_extra.py``'s ``wand-skip`` and ``wand-skip-big``
+#: modes do exactly that; the pytest in tests/test_wand_property.py asserts
+#: pruning engages on a constructed hot+rare corpus.
 WAND_STATS = {"calls": 0, "intervals_total": 0, "intervals_scored": 0, "blocks_decoded": 0}
 
 #: Lists at most this long get whole-list decoded for presence-exact
@@ -73,86 +78,6 @@ def query_terms(queries: DataFrame, mode: str) -> DataFrame:
         .groupBy("qid", "term")
         .agg(F.count("*").alias("qw"))
     )
-
-
-def _idf(n_docs: int):
-    def f(df_col):
-        return F.log(F.lit(1.0) + (F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5))
-
-    return f
-
-
-class _ListIter:
-    """Cursor over one packed posting list with block-aligned skipping."""
-
-    __slots__ = (
-        "weight", "nblocks", "blk", "pos", "docs", "tfs", "dls", "cur", "exhausted", "ub", "n",
-        "docs_blob", "tfs_blob", "dls_blob", "doc_offs", "tf_offs", "dl_offs", "block_last", "block_max_tfn",
-    )
-
-    def __init__(self, row, weight: float):
-        self.weight = weight  # qw * idf
-        self.n = int(row["n"])
-        self.docs_blob, self.tfs_blob, self.dls_blob = row["docs_blob"], row["tfs_blob"], row["dls_blob"]
-        self.doc_offs = np.asarray(row["doc_offs"], dtype=np.int64)
-        self.tf_offs = np.asarray(row["tf_offs"], dtype=np.int64)
-        self.dl_offs = np.asarray(row["dl_offs"], dtype=np.int64)
-        self.block_last = np.asarray(row["block_last"], dtype=np.int64)
-        self.block_max_tfn = np.asarray(row["block_max_tfn"], dtype=np.float64)
-        self.nblocks = self.doc_offs.shape[0]
-        self.ub = self.weight * float(self.block_max_tfn.max())  # term upper bound
-        self.blk = -1
-        self.exhausted = False
-        self._load_block(0)
-
-    def _load_block(self, i: int):
-        if i >= self.nblocks:
-            self.exhausted = True
-            self.cur = np.iinfo(np.int64).max
-            return
-        self.docs, self.tfs, self.dls = codec.unpack_block(
-            self.docs_blob, self.tfs_blob, self.dls_blob,
-            self.doc_offs, self.tf_offs, self.dl_offs, self.block_last,
-            self.n, i,
-        )
-        self.blk = i
-        self.pos = 0
-        self.cur = int(self.docs[0])
-
-    def block_max_contrib(self) -> float:
-        return self.weight * float(self.block_max_tfn[self.blk])
-
-    def block_last_doc(self) -> int:
-        return int(self.block_last[self.blk])
-
-    def advance_to(self, target: int):
-        """Move cursor to first doc >= target (block skip + binary search)."""
-        if self.exhausted or self.cur >= target:
-            return
-        if self.block_last[self.blk] < target:
-            # skip whole blocks using the block_last skip pointers
-            j = int(np.searchsorted(self.block_last, target, side="left"))
-            self._load_block(j)
-            if self.exhausted:
-                return
-        p = int(np.searchsorted(self.docs[self.pos :], target, side="left")) + self.pos
-        if p >= self.docs.size:
-            self._load_block(self.blk + 1)
-        else:
-            self.pos = p
-            self.cur = int(self.docs[p])
-
-    def next(self):
-        self.pos += 1
-        if self.pos >= self.docs.size:
-            self._load_block(self.blk + 1)
-        else:
-            self.cur = int(self.docs[self.pos])
-
-    def contrib(self, k1: float, b: float, avgdl: float) -> float:
-        tf = float(self.tfs[self.pos])
-        dl = float(self.dls[self.pos])
-        return self.weight * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def _decode_list(row: dict, k1: float, b: float, avgdl: float, cache: dict) -> tuple:
@@ -201,86 +126,6 @@ def _exhaustive_arrays(
     return uniq[order], scores[order]
 
 
-def _score_rows_exhaustive(qid: str, rows: list, k: int, k1: float, b: float, avgdl: float) -> pd.DataFrame:
-    uniq, scores = _exhaustive_arrays(rows, k, k1, b, avgdl, {})
-    return pd.DataFrame({"qid": qid, "ord": uniq, "score": scores})
-
-
-def _score_rows_wand(
-    qid: str, rows: list, k: int, k1: float, b: float, avgdl: float
-) -> pd.DataFrame:
-    """Block-max WAND with a bounded min-heap over one query's shard lists —
-    the doc-at-a-time reference traversal (``method='wand_dat'``). ``rows`` =
-    [(posting_row, weight)] already sorted by term; the baked bounds must
-    hold, i.e. (k1, b, avgdl) are the index's own."""
-    iters = [_ListIter(row, w) for row, w in rows if int(row["n"]) > 0]
-    heap: list[tuple[float, int]] = []  # (score, -ord): kth best at heap[0]
-    theta = -np.inf
-    while True:
-        live = [it for it in iters if not it.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda it: it.cur)
-        # pivot: first prefix whose ub sum reaches theta
-        acc = 0.0
-        pivot_idx = -1
-        for i, it in enumerate(live):
-            acc += it.ub
-            if acc >= theta or len(heap) < k:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # no doc can make the heap
-        pivot_doc = live[pivot_idx].cur
-        if live[0].cur == pivot_doc:
-            involved = [it for it in live if it.cur == pivot_doc]
-            if len(heap) >= k:
-                bm_ub = sum(it.block_max_contrib() for it in involved)
-                if bm_ub < theta or (bm_ub == theta and heap and -heap[0][1] <= pivot_doc):
-                    # The block-max bound only covers the lists at the pivot;
-                    # a doc past the pivot may also appear in a later list, so
-                    # cap the jump at the earliest other cursor (BMW d'+1 rule,
-                    # Ding & Suel 2011) as well as the nearest block boundary.
-                    nxt = min(it.block_last_doc() for it in involved) + 1
-                    others = [it.cur for it in live if it.cur > pivot_doc]
-                    if others:
-                        nxt = min(nxt, min(others))
-                    for it in involved:
-                        it.advance_to(nxt)
-                    continue
-            # full score, summed in sorted-term order (involved is term-sorted)
-            s = 0.0
-            for it in involved:
-                s += it.contrib(k1, b, avgdl)
-            entry = (s, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, entry)
-                if len(heap) == k:
-                    theta = heap[0][0]
-            elif entry > heap[0]:
-                heapq.heapreplace(heap, entry)
-                theta = heap[0][0]
-            for it in involved:
-                it.next()
-        else:
-            # advance all lists before the pivot up to the pivot doc
-            for it in live[:pivot_idx]:
-                it.advance_to(pivot_doc)
-    ranked = sorted(((s, -negord) for s, negord in heap), key=lambda t: (-t[0], t[1]))
-    return pd.DataFrame(
-        {"qid": qid,
-         "ord": [o for _, o in ranked],
-         "score": [s for s, _ in ranked]}
-    )
-
-
-def _score_rows_block_max(
-    qid: str, rows: list, k: int, k1: float, b: float, avgdl: float, bound_scale: float | None = 1.0
-) -> pd.DataFrame:
-    uniq, scores = _block_max_arrays(rows, k, k1, b, avgdl, {}, bound_scale)
-    return pd.DataFrame({"qid": qid, "ord": uniq, "score": scores})
-
-
 def _bound_scale(meta, k1: float, b: float, avgdl: float) -> float | None:
     """How a segment's baked block bounds carry over to scoring with
     (k1, b, avgdl): ``r = min(1, a/a′)`` for the baked avgdl a, or None when
@@ -306,9 +151,10 @@ def _block_max_arrays(
     sorted-term order, identical float op order to the exhaustive path), and
     the traversal stops when the next interval's bound is strictly below the
     running k-th score. Hot-term queries therefore do O(total_blocks) Python
-    iterations with numpy block work inside, instead of O(total_postings)
-    interpreter steps (the ``wand_dat`` path; both verified equal to
-    exhaustive scoring in test_wand_property.py).
+    iterations with numpy block work inside, instead of the O(total_postings)
+    interpreter steps of a doc-at-a-time WAND (tests/oracle_bm25.py keeps one
+    as a reference; both are verified equal to exhaustive scoring in
+    test_wand_property.py).
 
     Block decodes (and the weight-independent BM25 denominator — see
     :func:`_decode_list`) are shared ACROSS queries via ``shared_cache``,
@@ -449,31 +295,35 @@ def _block_max_arrays(
     )
 
 
+#: Candidate postings per query plan below which the numpy-exhaustive
+#: kernel scores it (decode cost beats pruning on short candidate sets);
+#: at or above it the block-max kernel runs. Both are exact and
+#: rank-identical. Plan builders read it on the driver and pass it to the
+#: task closure, so a monkeypatched value reaches the Spark workers.
+EXHAUSTIVE_MAX_POSTINGS = 65536
+
+
 def _score_shard(
     pdf: pd.DataFrame,
     qplan: dict,
     k: int,
-    method: str,
+    exhaustive_max: int,
     k1: float,
     b: float,
     avgdl: float,
     bound_scale: float | None,
     n_docs: float | None = None,
 ) -> pd.DataFrame:
-    """Run every query's traversal over one shard's posting rows.
+    """Run every query's scoring over one shard's posting rows.
     ``qplan``: {qid: [(term, weight)]} — shared by the driver-planned and
     the distributed (cogrouped) batch paths. With ``n_docs`` set, qplan
     carries RAW qw multiplicities and the idf factor is computed here from
     the per-row global ``df`` (layout v3) — no df-lookup job ever ran.
 
-    Methods: 'exhaustive' (decode everything), 'wand' (vectorized block-max
-    interval scoring; ``bound_scale`` carries the baked bounds over to the
-    scoring statistics — see :func:`_block_max_arrays`), 'wand_dat' (the
-    doc-at-a-time reference traversal; baked statistics only), 'auto'
-    (numpy-exhaustive under 64k postings — decode cost beats pruning there —
-    else same as 'wand')."""
-    import math
-
+    A plan with fewer than ``exhaustive_max`` candidate postings is scored
+    by :func:`_exhaustive_arrays`, any other by :func:`_block_max_arrays`
+    (``bound_scale`` carries the baked bounds over to the scoring
+    statistics)."""
     pdf = pdf.sort_values("term")
     cols = [c for c in pdf.columns if c != "shard"]
     by_term: dict[str, list[dict]] = {}
@@ -508,22 +358,10 @@ def _score_shard(
                     rows.append((row, w))
             if not rows:
                 res = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
-            elif method == "exhaustive":
+            elif sum(int(r["n"]) for r, _ in rows) < exhaustive_max:
                 res = _exhaustive_arrays(rows, k, k1, b, avgdl, decode_cache)
-            elif method == "auto" and sum(int(r["n"]) for r, _ in rows) < 65536:
-                # short candidate sets: vectorized numpy scoring beats any
-                # pruned traversal; results are identical (same formula, same
-                # sorted-term accumulation, same tie-break) — tested in
-                # test_bm25 / test_wand_property.
-                res = _exhaustive_arrays(rows, k, k1, b, avgdl, decode_cache)
-            elif method in ("wand", "auto"):
-                res = _block_max_arrays(rows, k, k1, b, avgdl, block_cache, bound_scale)
             else:
-                df_one = _score_rows_wand(qid, rows, k, k1, b, avgdl)
-                res = (
-                    df_one["ord"].to_numpy(np.int64),
-                    df_one["score"].to_numpy(np.float64),
-                )
+                res = _block_max_arrays(rows, k, k1, b, avgdl, block_cache, bound_scale)
             plan_results[plan_key] = res
         ords, scores = res
         if ords.size:
@@ -544,7 +382,7 @@ _SCORE_COLS = (
 )
 
 
-def _plan_params(indexes: list[InvertedIndex], method: str, k1, b) -> tuple:
+def _plan_params(indexes: list[InvertedIndex], k1, b) -> tuple:
     """(k1, b, N, avgdl, per-segment bound scales) for scoring ``indexes``
     as one index: N and avgdl come from the segments' metadata — the
     statistics Lucene's IndexSearcher computes across segments."""
@@ -553,10 +391,7 @@ def _plan_params(indexes: list[InvertedIndex], method: str, k1, b) -> tuple:
     b = metas[0].b if b is None else b
     n = sum(m.n_docs for m in metas)
     avgdl = metas[0].avgdl if len(metas) == 1 else (sum(m.avgdl * m.n_docs for m in metas) / n if n else 0.0)
-    scales = [_bound_scale(m, k1, b, avgdl) for m in metas]
-    if method == "wand_dat" and any(s != 1.0 for s in scales):
-        raise ValueError("method='wand_dat' prunes with the baked bounds: it needs the index's own k1, b and avgdl")
-    return k1, b, float(n), avgdl, scales
+    return k1, b, float(n), avgdl, [_bound_scale(m, k1, b, avgdl) for m in metas]
 
 
 def _tagged_union(indexes: list[InvertedIndex], frame, cols) -> DataFrame:
@@ -596,7 +431,6 @@ def search(
     index: InvertedIndex | list[InvertedIndex],
     queries: DataFrame,
     k: int = 10,
-    method: str = "wand",
     k1: float | None = None,
     b: float | None = None,
     tag: str = "llm_rankers_spark",
@@ -604,24 +438,26 @@ def search(
     plan: str = "auto",
     merge: str = "auto",
     merge_fanin: int = 64,
-    query_chunks: int = 1,
-    prune_buckets: bool = True,
     plan_out: dict | None = None,
-    approx_n: int | None = None,
 ) -> DataFrame:
-    """BM25 top-k — ONE entry point that picks the physical strategy.
+    """BM25 top-k → TREC-shaped DataFrame (qid, docid, rank, score, tag) —
+    the ONE search entry point, which picks the physical strategy.
 
     The reference exposes a single search command (``search.sh:4-9``,
     Pyserini ``LuceneSearcher.batch_search``); mirroring that, this
-    dispatcher probes the query-batch size with a bounded
-    ``limit(N+1).count()`` (the ``_ordinals_auto`` pattern — never a full
+    dispatcher probes the query-batch size with ONE bounded
+    ``limit(N+1).collect()`` (the ``_ordinals_auto`` pattern — never a full
     count) and routes:
 
     - ``≤ DRIVER_QUERY_PLAN_MAX`` queries → :func:`_search_driver_planned`
       (tokenize + weight on the driver, plan rides in the task closure —
-      the reranking-batch shape, fewest jobs);
-    - larger batches → :func:`search_distributed` (the plan stays a
+      the reranking-batch shape, fewest jobs; the probe's rows are handed
+      straight to it, so a small batch is not collected twice);
+    - larger batches → :func:`_search_distributed` (the plan stays a
       DataFrame cogrouped with shard postings — no collect anywhere).
+
+    The scoring kernel is picked per query plan from its candidate-posting
+    count (``EXHAUSTIVE_MAX_POSTINGS``, see :func:`_score_shard`).
 
     ``index`` may also be a list of segment indexes (the live segments of
     :func:`...streaming.index_stream.search_segments`): they are searched
@@ -630,17 +466,10 @@ def search(
     ``plan`` overrides: ``'driver'`` / ``'distributed'`` force a path
     (``'auto'`` default). ``shards`` (serving a shard subset) implies the
     driver path — per-subset calls are the sharded-serving unit and are
-    reranking-sized by construction. ``merge``/``merge_fanin``/
-    ``query_chunks``/``prune_buckets`` apply to the distributed plan only.
-    ``plan_out``, when a dict, receives ``{'plan': ..., 'probe_n': ...}``
-    so callers/tests can observe the dispatch without re-probing.
-
-    ``approx_n`` is the round-5-verdict #6 caller hint: the approximate
-    batch size, trusted for dispatch — no probe job runs, and an expensive
-    upstream query frame is never recomputed just to be sized. Without it
-    the probe is ONE bounded ``limit(N+1).collect()`` whose rows are handed
-    straight to the driver-planned path (which previously re-collected the
-    batch in a second job).
+    reranking-sized by construction. ``merge``/``merge_fanin`` apply to the
+    distributed plan only. ``plan_out``, when a dict, receives
+    ``{'plan': ..., 'probe_n': ...}`` so callers/tests can observe the
+    dispatch without re-probing.
     """
     if plan not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown plan {plan!r}")
@@ -651,13 +480,7 @@ def search(
     if plan == "auto":
         if shards is not None:
             chosen = "driver"
-        elif approx_n is not None:
-            probe_n = int(approx_n)
-            chosen = "driver" if probe_n <= DRIVER_QUERY_PLAN_MAX else "distributed"
         else:
-            # bounded probe AND the driver path's collect, fused into one
-            # job: ≤ N+1 rows ever reach the driver (the _ordinals_auto
-            # small-side pattern), and a small batch is not scanned twice
             qrows = queries.select("qid", "query").limit(DRIVER_QUERY_PLAN_MAX + 1).collect()
             probe_n = len(qrows)
             if probe_n <= DRIVER_QUERY_PLAN_MAX:
@@ -670,33 +493,28 @@ def search(
     if chosen == "distributed":
         if shards is not None:
             raise ValueError("shards= is a driver-planned serving knob; use plan='driver'")
-        return search_distributed(
-            indexes, queries, k=k, method=method, k1=k1, b=b, tag=tag, query_chunks=query_chunks,
-            prune_buckets=prune_buckets, merge=merge, merge_fanin=merge_fanin,
-        )
-    return _search_driver_planned(
-        indexes, queries, k=k, method=method, k1=k1, b=b, tag=tag, shards=shards, _qrows=qrows,
-    )
+        return _search_distributed(indexes, queries, k, k1, b, tag, merge, merge_fanin)
+    return _search_driver_planned(indexes, queries, k, k1, b, tag, shards, qrows)
 
 
 def _search_driver_planned(
     indexes: list[InvertedIndex],
     queries: DataFrame,
-    k: int = 10,
-    method: str = "wand",
-    k1: float | None = None,
-    b: float | None = None,
-    tag: str = "llm_rankers_spark",
-    shards: list[int] | None = None,
-    _qrows: list | None = None,
+    k: int,
+    k1: float | None,
+    b: float | None,
+    tag: str,
+    shards: list[int] | None,
+    qrows: list | None,
 ) -> DataFrame:
-    """BM25 top-k over one index, or over several segments in one pass →
-    TREC-shaped DataFrame (qid, docid, rank, score, tag).
+    """The reranking-batch plan of :func:`search`: BM25 top-k over one
+    index, or over several segments in one pass. ``qrows`` are the batch's
+    already-collected (qid, query) rows, if the dispatcher probed them.
 
     ``shards`` restricts the traversal to a shard subset — the unit of
     shard-parallel serving across jobs/executors: shards hold disjoint doc
     ranges, so per-subset top-k results union+re-rank to the exact global
-    top-k (the same merge search() already does across its shard groups).
+    top-k (the same merge this plan already does across its shard groups).
 
     Several ``indexes`` are scored under GLOBAL statistics (Lucene
     IndexSearcher semantics) while postings stay segment-local: N and
@@ -713,14 +531,14 @@ def _search_driver_planned(
     traversal. The per-query term weights are tiny and ride along in the
     closure.
     """
-    import math
     from collections import Counter
 
     from llm_rankers_spark.functions.tokenize import tokenize
 
-    k1, b, n_docs, avgdl, scales = _plan_params(indexes, method, k1, b)
+    k1, b, n_docs, avgdl, scales = _plan_params(indexes, k1, b)
     spark = queries.sparkSession
-    qrows = _qrows if _qrows is not None else queries.select("qid", "query").collect()
+    if qrows is None:
+        qrows = queries.select("qid", "query").collect()
     mode = indexes[0].meta.tokenizer_mode
     qcounts = {r["qid"]: Counter(tokenize(r["query"] or "", mode)) for r in qrows}
     terms = sorted({t for c in qcounts.values() for t in c})
@@ -765,9 +583,10 @@ def _search_driver_planned(
         cand = cand.filter(F.col("shard").isin([int(s) for s in shards]))
 
     score_n_docs = n_docs if df_in_rows else None
+    exhaustive_max = EXHAUSTIVE_MAX_POSTINGS
     partial = cand.groupBy("seg", "shard").applyInPandas(
         lambda key, pdf: _score_shard(
-            pdf, qplan, k, method, k1, b, avgdl, scales[key[0]], n_docs=score_n_docs
+            pdf, qplan, k, exhaustive_max, k1, b, avgdl, scales[key[0]], n_docs=score_n_docs
         ).assign(seg=key[0]),
         schema=RESULT_SCHEMA + ", seg int",
     )
@@ -806,31 +625,29 @@ def _tree_topk(
     )
 
 
-def search_distributed(
-    index: InvertedIndex | list[InvertedIndex],
+def _search_distributed(
+    indexes: list[InvertedIndex],
     queries: DataFrame,
-    k: int = 10,
-    method: str = "auto",
-    k1: float | None = None,
-    b: float | None = None,
-    tag: str = "llm_rankers_spark",
-    query_chunks: int = 1,
-    prune_buckets: bool = True,
-    merge: str = "auto",
-    merge_fanin: int = 64,
+    k: int,
+    k1: float | None,
+    b: float | None,
+    tag: str,
+    merge: str,
+    merge_fanin: int,
 ) -> DataFrame:
-    """BM25 top-k with the query plan kept distributed end to end — the
-    10^5–10^6-query batch path.
+    """The large-batch plan of :func:`search`: BM25 top-k with the query
+    plan kept distributed end to end — the 10^5–10^6-query batch path.
 
-    :func:`search` tokenizes + weights the batch driver-side and ships a
-    dict in every task closure: right for reranking-sized batches, wrong at
-    100× (driver serialization + closure bloat — round-1 verdict). Here the
-    (qid, term, w=qw·idf) plan is a DataFrame: tokenized by the vectorized
-    UDF, joined with the batch's df table, replicated once per shard (a join
-    with the shard-id list, ≲ num_shards × Σ|q| rows — the same volume a
-    broadcast would ship per executor), and cogrouped with the shard's
-    posting rows. ``queries`` is never collected; chunk a 10^6-query batch
-    by qid range upstream if the replicated plan outgrows executor memory.
+    :func:`_search_driver_planned` tokenizes + weights the batch driver-side
+    and ships a dict in every task closure: right for reranking-sized
+    batches, wrong at 100× (driver serialization + closure bloat — round-1
+    verdict). Here the (qid, term, w=qw·idf) plan is a DataFrame: tokenized
+    by the vectorized UDF, joined with the batch's df table, replicated once
+    per shard (a join with the shard-id list, ≲ num_shards × Σ|q| rows — the
+    same volume a broadcast would ship per executor), and cogrouped with the
+    shard's posting rows. ``queries`` is never collected; chunk a
+    10^6-query batch by qid range upstream if the replicated plan outgrows
+    executor memory.
 
     A list of segment indexes is searched as one index under global
     statistics, as in :func:`_search_driver_planned`: df is an aggregate
@@ -850,27 +667,7 @@ def search_distributed(
     task at fanin×k rows. Results are exactly equal (shards hold disjoint
     doc ranges, so the global top-k survives every per-group cut; tested).
     """
-    if query_chunks > 1:
-        # beyond ~10^6 queries the per-shard cogrouped query plan outgrows a
-        # task's Arrow batch: hash-split the batch and union the top-k's
-        # (each chunk is an independent plan; results are per-qid, so the
-        # union is exact)
-        parts = [
-            search_distributed(
-                index,
-                queries.filter(F.pmod(F.xxhash64("qid"), F.lit(query_chunks)) == c),
-                k=k, method=method, k1=k1, b=b, tag=tag,
-                prune_buckets=prune_buckets, merge=merge, merge_fanin=merge_fanin,
-            )
-            for c in range(query_chunks)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    indexes = index if isinstance(index, list) else [index]
-    k1, b, n_docs, avgdl, scales = _plan_params(indexes, method, k1, b)
+    k1, b, n_docs, avgdl, scales = _plan_params(indexes, k1, b)
     spark = queries.sparkSession
     qt = query_terms(queries, indexes[0].meta.tokenizer_mode)  # (qid, term, qw) — UDF, no collect
     terms_df = qt.select("term").distinct()
@@ -878,11 +675,8 @@ def search_distributed(
 
     def open_terms(ix: InvertedIndex) -> DataFrame:
         # static pruning costs one pass over the batch's terms (a
-        # metadata-sized collect, once per bucket count); at 10^6 queries
-        # the batch touches every bucket anyway — let callers turn it off
+        # metadata-sized collect, once per bucket count)
         nb = ix.meta.num_buckets
-        if not prune_buckets or ix.meta.layout_version < 2:
-            return ix.postings.join(terms_df, "term", "left_semi")
         if nb not in buckets:
             buckets[nb] = [r[0] for r in terms_df.select(F.pmod(F.xxhash64("term"), F.lit(nb))).distinct().collect()]
         return ix.postings_in_buckets(buckets[nb]).join(terms_df, "term", "left_semi")
@@ -895,11 +689,10 @@ def search_distributed(
         qw = qt.select("qid", "term", F.col("qw").cast("double").alias("w"))
     else:
         # df from the candidate rows (Σn over a term's shards and segments =
-        # its global df) — never a full term_stats scan
-        ts = cand.groupBy("term").agg(F.sum("n").alias("df"))
-        qw = qt.join(F.broadcast(ts), "term").select(
-            "qid", "term", (F.col("qw") * _idf(n_docs)(F.col("df").cast("double"))).alias("w")
-        )
+        # its global df) — never a full postings scan
+        ts = cand.groupBy("term").agg(F.sum("n").cast("double").alias("df"))
+        idf = F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
+        qw = qt.join(F.broadcast(ts), "term").select("qid", "term", (F.col("qw") * idf).alias("w"))
 
     # replicate the (small) per-query weights to every (segment, shard) and
     # cogroup: each task sees (shard's postings, full query plan) — no
@@ -909,13 +702,14 @@ def search_distributed(
     )
     qw_rep = qw.crossJoin(F.broadcast(groups))
     score_n_docs = n_docs if df_in_rows else None
+    exhaustive_max = EXHAUSTIVE_MAX_POSTINGS
 
     def scorer(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         qplan: dict[str, list[tuple[str, float]]] = {}
         for qid, term, w in zip(rpdf["qid"], rpdf["term"], rpdf["w"]):
             qplan.setdefault(qid, []).append((term, float(w)))
         return _score_shard(
-            lpdf, qplan, k, method, k1, b, avgdl, scales[key[0]], n_docs=score_n_docs
+            lpdf, qplan, k, exhaustive_max, k1, b, avgdl, scales[key[0]], n_docs=score_n_docs
         ).assign(seg=key[0])
 
     partial = (
@@ -952,6 +746,31 @@ def search_distributed(
         indexes[0].doc_ords.join(topk, "ord", "inner")
         .select("qid", "docid", "rank", "score", F.lit(tag).alias("tag"))
     )
+
+
+def _ranked_contribs(scored_rows: DataFrame, n_docs, avgdl, k1: float, b: float, key: str, k: int,
+                     round_digits: int | None) -> DataFrame:
+    """The declarative plans' shared tail: sum each (qid, ``key``) row's
+    BM25 contributions ``qw · idf · tf / (tf + k1·(1 - b + b·dl/avgdl))``
+    (``n_docs``/``avgdl`` are literal or per-row columns), then keep the
+    top-k per qid by (score desc, ``key`` asc). With ``round_digits`` the
+    window orders by the rounded score and the score is returned rounded,
+    so an ANSI-SQL oracle computing the same rounding is order-identical
+    despite float summation differences."""
+    df = F.col("df")
+    contrib = (
+        F.col("qw")
+        * F.log(F.lit(1.0) + (n_docs - df + 0.5) / (df + 0.5))
+        * F.col("tf")
+        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl))
+    )
+    scored = scored_rows.withColumn("contrib", contrib).groupBy("qid", key).agg(F.sum("contrib").alias("score"))
+    score_key = F.round(F.col("score"), round_digits) if round_digits is not None else F.col("score")
+    w = Window.partitionBy("qid").orderBy(score_key.desc(), F.asc(key))
+    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    if round_digits is not None:
+        out = out.withColumn("score", F.round(F.col("score"), round_digits))
+    return out
 
 
 def bm25_dataframe_from_index(index: InvertedIndex, queries: DataFrame, k: int = 10, round_digits: int | None = None) -> DataFrame:
@@ -1016,23 +835,7 @@ def bm25_dataframe_from_index(index: InvertedIndex, queries: DataFrame, k: int =
     # BENCH/BM25_SQL_ATTRIBUTION_r05.md), so the scale-right plan wins.
     df_tbl = td_f.groupBy("term").agg(F.count("*").alias("df"))
     td_fd = td_f.join(F.broadcast(df_tbl), "term")
-    scored = (
-        qt.join(td_fd, "term")
-        .withColumn(
-            "contrib",
-            F.col("qw")
-            * F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * F.col("tf")
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))),
-        )
-        .groupBy("qid", "ord")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    score_key = F.round(F.col("score"), round_digits) if round_digits is not None else F.col("score")
-    w = Window.partitionBy("qid").orderBy(score_key.desc(), F.asc("ord"))
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if round_digits is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_digits))
+    out = _ranked_contribs(qt.join(td_fd, "term"), F.lit(n_docs), F.lit(avgdl), k1, b, "ord", k, round_digits)
     return (
         index.doc_map.select("ord", "docid")
         .join(F.broadcast(out), "ord")
@@ -1041,64 +844,20 @@ def bm25_dataframe_from_index(index: InvertedIndex, queries: DataFrame, k: int =
 
 
 def bm25_dataframe(
-    docs: DataFrame | None,
+    docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
     k1: float = codec.DEFAULT_K1,
     b: float = codec.DEFAULT_B,
     mode: str = "simple",
     round_digits: int | None = None,
-    forward: DataFrame | None = None,
-    n_docs: int | None = None,
-    avgdl: float | None = None,
 ) -> DataFrame:
     """BM25 straight from the corpus with built-in DataFrame ops only
     (tokenizer UDF aside) — the Catalyst-native plan used for oracle parity.
 
-    Returns (qid, docid, rank, score); if ``round_digits`` is set the rank
-    window orders by the rounded score so an ANSI-SQL oracle computing the
-    same rounding is order-identical despite float summation differences.
-
-    With ``forward`` (a (docid, term, tf, dl) table, e.g.
-    ``InvertedIndex.forward``) plus ``n_docs``/``avgdl``, the corpus
-    tokenize + tf + dl + stats jobs are all skipped — every call reuses the
-    one tokenizer pass the index build already paid for. Results are
-    identical to the from-corpus path (same double stats, same contrib
-    expression; tested in test_bm25)."""
+    Returns (qid, docid, rank, score), ranked as in
+    :func:`_ranked_contribs`."""
     qt = query_terms(queries, mode)
-    if forward is not None:
-        if n_docs is None or avgdl is None:
-            raise ValueError("forward reuse requires explicit n_docs and avgdl "
-                             "(token-less docs are absent from the forward table)")
-        td = forward  # (docid, term, tf, dl) — dl rides each row, no dl join
-        # semi-join on the batch's terms BEFORE computing df: df(term) over
-        # the filtered rows equals the global df for exactly those terms,
-        # and the full-vocabulary aggregate (one corpus-wide shuffle) never
-        # runs. df comes from a slim term-only count broadcast back — the
-        # old per-term window shuffled every matched row just to learn df
-        # (see bm25_dataframe_from_index).
-        td_f = td.join(F.broadcast(qt.select("term").distinct()), "term", "left_semi")
-        df_tbl = td_f.groupBy("term").agg(F.count("*").alias("df"))
-        td_fd = td_f.join(F.broadcast(df_tbl), "term")
-        scored = (
-            qt.join(td_fd, "term")
-            .withColumn(
-                "contrib",
-                F.col("qw")
-                * F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-                * F.col("tf")
-                / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(float(avgdl)))),
-            )
-            .groupBy("qid", "docid")
-            .agg(F.sum("contrib").alias("score"))
-        )
-        score_key = F.round(F.col("score"), round_digits) if round_digits is not None else F.col("score")
-        w = Window.partitionBy("qid").orderBy(score_key.desc(), F.asc("docid"))
-        out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-        if round_digits is not None:
-            out = out.withColumn("score", F.round(F.col("score"), round_digits))
-        return out.select("qid", "docid", "rank", "score")
-
     toks = docs.select("docid", F.explode(tokens_col("content", mode=mode)).alias("term"))
     td = toks.groupBy("docid", "term").agg(F.count("*").alias("tf"))
     dl = td.groupBy("docid").agg(F.sum("tf").alias("dl"))
@@ -1116,25 +875,6 @@ def bm25_dataframe(
         td.join(F.broadcast(qt.select("term").distinct()), "term", "left_semi")
         .groupBy("term").agg(F.count("*").alias("df"))
     )
-
-    scored = (
-        qt.join(td, "term")
-        .join(F.broadcast(dft), "term")
-        .join(dl, "docid")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "contrib",
-            F.col("qw")
-            * F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * F.col("tf")
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("qid", "docid")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    score_key = F.round(F.col("score"), round_digits) if round_digits is not None else F.col("score")
-    w = Window.partitionBy("qid").orderBy(score_key.desc(), F.asc("docid"))
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if round_digits is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_digits))
+    rows = qt.join(td, "term").join(F.broadcast(dft), "term").join(dl, "docid").crossJoin(F.broadcast(stats))
+    out = _ranked_contribs(rows, F.col("n"), F.col("avgdl"), k1, b, "docid", k, round_digits)
     return out.select("qid", "docid", "rank", "score")

@@ -17,6 +17,8 @@ DataFrame plans:
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -445,13 +447,13 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     produce one checkpoint per round, so without an explicit release the
     dead rounds' blocks pile up proportionally to graph size (round-4
     ADVICE). Reach the checkpointed RDD through the analyzed ``LogicalRDD``
-    and unpersist it directly; best-effort — if the internal surface ever
-    shifts, this degrades to the old wait-for-GC behavior rather than
-    failing the job."""
+    and unpersist it directly; best-effort — if that fails (the frame is not
+    a local checkpoint, or the internal surface shifted), one warning names
+    the exception and the blocks wait for GC rather than failing the job."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    except Exception as e:
+        warnings.warn(f"could not release a local checkpoint's blocks: {e!r}", stacklevel=2)
 
 
 def _cc_two_phase_star(und: DataFrame, max_iter: int, stats: dict | None = None) -> DataFrame:

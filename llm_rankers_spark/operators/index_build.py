@@ -75,7 +75,7 @@ class IndexMeta:
 
 
 class InvertedIndex:
-    """Handle over the on-disk index (postings / doc_map / term_stats / meta)."""
+    """Handle over the on-disk index (postings / doc_map / meta)."""
 
     def __init__(self, spark: SparkSession, path: str, meta: IndexMeta):
         self.spark = spark
@@ -134,20 +134,11 @@ class InvertedIndex:
         return self.spark.read.schema("ord long, docid string").parquet(os.path.join(self.path, "doc_map"))
 
     @property
-    def forward(self) -> DataFrame:
-        """(docid, term, tf, dl) forward table — the retained tokenization
-        checkpoint (build with ``keep_forward=True``) joined with doc_map
-        for the ord→docid mapping. Lets downstream consumers (e.g.
-        :func:`llm_rankers_spark.operators.bm25.bm25_dataframe`) reuse the
-        build's one tokenizer pass instead of re-tokenizing the corpus."""
-        td = self.forward_ords
-        return td.join(self.doc_map.select("ord", "docid"), "ord").select("docid", "term", "tf", "dl")
-
-    @property
     def forward_ords(self) -> DataFrame:
         """(ord, term, tf, dl) forward table keyed by doc ORDINAL — the
-        docid-free variant consumers use when they only attach docids to a
-        final top-k (ordinal order == docid order, so tie-breaks agree)."""
+        retained tokenization checkpoint (build with ``keep_forward=True``).
+        Consumers attach docids only to a final top-k (ordinal order ==
+        docid order, so tie-breaks agree)."""
         td_path = os.path.join(self.path, "_td_checkpoint")
         if not fsio.exists(td_path):
             raise FileNotFoundError(
@@ -165,14 +156,6 @@ class InvertedIndex:
         """The build's manifest: per-shard (lists, postings, term_crc)
         lineage, the input fingerprint and the build metrics."""
         return fsio.read_json(_manifest_path(self.path))
-
-    @property
-    def term_stats(self) -> DataFrame:
-        """(term, df) derived from the postings themselves: df = Σ over
-        shards of the per-shard posting count ``n``. No separate table —
-        one less build job, and the query path only reads the (term, n)
-        columns of the rows its semi-join selects anyway."""
-        return self.postings.groupBy("term").agg(F.sum("n").alias("df"))
 
 
 def _meta_path(path: str) -> str:
@@ -642,8 +625,8 @@ def build_index(
     """Build the index from ``docs(docid, content[, content_sha256])``.
 
     ``keep_forward=True`` retains the tokenization checkpoint
-    (``_td_checkpoint``) so :attr:`InvertedIndex.forward` can serve the
-    (docid, term, tf, dl) table without re-tokenizing. ``bake_df=False``
+    (``_td_checkpoint``) so :attr:`InvertedIndex.forward_ords` can serve the
+    (ord, term, tf, dl) table without re-tokenizing. ``bake_df=False``
     writes layout v2 (no per-row global df — for vocabularies too large to
     broadcast at build; query paths then run a per-batch df job).
     ``pack_group='auto'`` (default) resolves bucket vs shard_bucket from

@@ -118,7 +118,7 @@ def run_pipeline(
     st_first = Stage(work_dir, "first_stage")
     t0 = time.time()
     if not (resume and st_first.is_done(q_fp)):
-        first = search(idx, queries, k=hits, method="wand")
+        first = search(idx, queries, k=hits)
         first.write.mode("overwrite").parquet(st_first.path)
         st_first.mark(q_fp)
     first = spark.read.parquet(st_first.path)

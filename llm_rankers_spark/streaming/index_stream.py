@@ -3,7 +3,7 @@
 The reference has no streaming surface (SURVEY.md §2.8) — this is the
 optional extension from §7.1: new documents arrive as files, each
 micro-batch becomes an immutable index SEGMENT (the Lucene segment model,
-re-expressed): its own doc_map/term_stats/postings built by the exact same
+re-expressed): its own doc_map/postings built by the exact same
 ``build_index`` job, registered in a segments manifest by ``foreachBatch``
 (exactly-once per epoch via the manifest's epoch guard).
 
@@ -99,7 +99,7 @@ def search_segments(spark: SparkSession, root: str, queries: DataFrame, k: int =
     segs = [load_index(spark, os.path.join(root, s)) for s in list_segments(root)]
     if not segs:
         return spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
-    return search(segs, queries, k=k, method="wand")
+    return search(segs, queries, k=k)
 
 
 def _decode_postings_forward(idx) -> DataFrame:

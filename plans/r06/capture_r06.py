@@ -31,11 +31,7 @@ def main() -> None:
     sys.path.insert(0, args.repo)
 
     from llm_rankers_spark.corpus import driver_documents
-    from llm_rankers_spark.operators.bm25 import (
-        bm25_dataframe_from_index,
-        search,
-        search_distributed,
-    )
+    from llm_rankers_spark.operators.bm25 import bm25_dataframe_from_index, search
     from llm_rankers_spark.operators.dedup import minhash_lsh_candidates, minhash_signatures
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.operators.similarity import cosine_topk
@@ -73,9 +69,9 @@ def main() -> None:
     )
 
     captures = {
-        "bm25_wand": search(idx, qs, k=20, method="wand"),
+        "bm25_wand": search(idx, qs, k=20),
         "bm25_sql": bm25_dataframe_from_index(idx, qs, k=10),
-        "bm25_dist": search_distributed(idx, qs, k=10, method="auto"),
+        "bm25_dist": search(idx, qs, k=10, plan="distributed"),
         "minhash_lsh": minhash_lsh_candidates(
             minhash_signatures(docs, id_col="docid", num_hashes=32, shingle_k=3),
             num_hashes=32, bands=16,

@@ -11,7 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_rankers_spark.corpus import generate_corpus, generate_queries, with_docid
-from llm_rankers_spark.operators.bm25 import bm25_dataframe, search, search_distributed
+from llm_rankers_spark.operators import bm25
+from llm_rankers_spark.operators.bm25 import bm25_dataframe, search
 from llm_rankers_spark.operators.index_build import build_index, load_index, verify_index
 
 from .oracle_bm25 import bm25_oracle, fresh_shard_manifest
@@ -50,9 +51,21 @@ def _collect_runs(df):
     return out
 
 
-@pytest.mark.parametrize("method", ["exhaustive", "wand", "auto", "wand_dat"])
-def test_rank_identical_to_oracle(index, queries, oracle, method):
-    got = _collect_runs(search(index, queries, k=10, method=method))
+#: bm25.EXHAUSTIVE_MAX_POSTINGS per scoring kernel: 'exhaustive' sends every
+#: query plan to the numpy-exhaustive kernel, 'wand' every one to block-max,
+#: 'auto' keeps the default cutover.
+KERNEL_CUTOVER = {"exhaustive": 1 << 62, "wand": 0}
+
+
+def _use_kernel(monkeypatch, kernel: str) -> None:
+    if kernel != "auto":
+        monkeypatch.setattr(bm25, "EXHAUSTIVE_MAX_POSTINGS", KERNEL_CUTOVER[kernel])
+
+
+@pytest.mark.parametrize("kernel", ["exhaustive", "wand", "auto"])
+def test_rank_identical_to_oracle(index, queries, oracle, kernel, monkeypatch):
+    _use_kernel(monkeypatch, kernel)
+    got = _collect_runs(search(index, queries, k=10))
     qids_with_hits = {q for q, hits in oracle.items() if hits}
     assert set(got.keys()) == qids_with_hits
     for qid in qids_with_hits:
@@ -62,11 +75,12 @@ def test_rank_identical_to_oracle(index, queries, oracle, method):
             assert gs == pytest.approx(ws, abs=1e-6)
 
 
-@pytest.mark.parametrize("method", ["exhaustive", "wand"])
-def test_search_distributed_equals_driver_planned(index, queries, oracle, method):
+@pytest.mark.parametrize("kernel", ["exhaustive", "wand"])
+def test_search_distributed_equals_driver_planned(index, queries, oracle, kernel, monkeypatch):
     # the fully-distributed batch path (no queries.collect, cogrouped query
     # plan) must be result-identical to the driver-planned path and the oracle
-    got = _collect_runs(search_distributed(index, queries, k=10, method=method))
+    _use_kernel(monkeypatch, kernel)
+    got = _collect_runs(search(index, queries, k=10, plan="distributed"))
     qids_with_hits = {q for q, hits in oracle.items() if hits}
     assert set(got.keys()) == qids_with_hits
     for qid in qids_with_hits:
@@ -81,9 +95,9 @@ def test_shard_subset_union_equals_full_search(spark, index, queries):
     # top-k (disjoint doc ranges per shard)
     from pyspark.sql import Window
 
-    full = _collect_runs(search(index, queries, k=10, method="wand"))
-    parts = [search(index, queries, k=10, method="wand", shards=[0, 2]),
-             search(index, queries, k=10, method="wand", shards=[1, 3])]
+    full = _collect_runs(search(index, queries, k=10))
+    parts = [search(index, queries, k=10, shards=[0, 2]),
+             search(index, queries, k=10, shards=[1, 3])]
     u = parts[0].unionByName(parts[1])
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
     merged = (
@@ -91,12 +105,6 @@ def test_shard_subset_union_equals_full_search(spark, index, queries):
     )
     got = _collect_runs(merged)
     assert got == full
-
-
-def test_search_distributed_chunked_equals_unchunked(index, queries):
-    a = _collect_runs(search_distributed(index, queries, k=10, method="exhaustive"))
-    b = _collect_runs(search_distributed(index, queries, k=10, method="exhaustive", query_chunks=3))
-    assert a == b
 
 
 def test_auto_dispatch_small_batch_takes_driver_plan(index, queries):
@@ -157,8 +165,8 @@ def test_driver_ordinals_equal_distributed(spark, corpus, queries, index, tmp_pa
     monkeypatch.setattr(ib, "DRIVER_ORDINALS_MAX", 0)  # force the slim path
     path = str(tmp_path_factory.mktemp("idx_slimpath"))
     idx_slim = build_index(corpus.select("docid", "content", "content_sha256"), path, num_shards=4)
-    a = _collect_runs(search(index, queries, k=10, method="wand"))  # driver path (fixture)
-    b = _collect_runs(search(idx_slim, queries, k=10, method="wand"))
+    a = _collect_runs(search(index, queries, k=10))  # driver path (fixture)
+    b = _collect_runs(search(idx_slim, queries, k=10))
     assert a == b
 
 
@@ -183,8 +191,8 @@ def test_pack_group_modes_rank_identical(spark, corpus, queries, index, tmp_path
         num_shards=4, pack_group="shard_bucket",
     )
     assert idx_sb.meta.layout_version == 3  # df baked via slim agg + broadcast
-    a = _collect_runs(search(index, queries, k=10, method="wand"))
-    b = _collect_runs(search(idx_sb, queries, k=10, method="wand"))
+    a = _collect_runs(search(index, queries, k=10))
+    b = _collect_runs(search(idx_sb, queries, k=10))
     assert a == b
     with pytest.raises(ValueError):
         build_index(
@@ -218,8 +226,8 @@ def test_pack_group_auto_resolves_by_scale(spark, corpus, queries, tmp_path_fact
     )
     # shard_bucket mode: the slim df count arrives via the broadcast join
     assert "BroadcastHashJoin" in eo_big["pack_plan"]
-    a = _collect_runs(search(idx_small, queries, k=10, method="wand"))
-    b = _collect_runs(search(idx_big, queries, k=10, method="wand"))
+    a = _collect_runs(search(idx_small, queries, k=10))
+    b = _collect_runs(search(idx_big, queries, k=10))
     assert a == b and len(a) > 0
 
 
@@ -253,15 +261,15 @@ def test_merge_auto_resolves_by_shard_count(spark, corpus, queries, index, tmp_p
     def n_windows(df):
         return df._jdf.queryExecution().optimizedPlan().toString().count("Window [row_number()")
 
-    small = search_distributed(index, queries, k=5, merge="auto")  # 4 shards
+    small = search(index, queries, k=5, plan="distributed", merge="auto")  # 4 shards
     assert n_windows(small) == 1
 
     path = str(tmp_path_factory.mktemp("idx64"))
     idx64 = build_index(corpus.select("docid", "content", "content_sha256"), path, num_shards=64)
-    big = search_distributed(idx64, queries, k=5, merge="auto")
+    big = search(idx64, queries, k=5, plan="distributed", merge="auto")
     assert n_windows(big) == 2  # 64 shards -> one fanin-8 fold + final rank
     a = sorted(map(tuple, big.collect()))
-    b = sorted(map(tuple, search_distributed(idx64, queries, k=5, merge="window").collect()))
+    b = sorted(map(tuple, search(idx64, queries, k=5, plan="distributed", merge="window").collect()))
     assert a == b and len(a) > 0
 
 
@@ -271,23 +279,21 @@ def test_tree_merge_equals_single_window(spark, corpus, queries, tmp_path_factor
     # with fanin=4 exercises a real 2-level fold (16 -> 4 -> final).
     path = str(tmp_path_factory.mktemp("idx_tree"))
     idx16 = build_index(corpus.select("docid", "content", "content_sha256"), path, num_shards=16)
-    a = _collect_runs(search_distributed(idx16, queries, k=10, method="auto"))
-    b = _collect_runs(
-        search_distributed(idx16, queries, k=10, method="auto", merge="tree", merge_fanin=4)
-    )
+    a = _collect_runs(search(idx16, queries, k=10, plan="distributed"))
+    b = _collect_runs(search(idx16, queries, k=10, plan="distributed", merge="tree", merge_fanin=4))
     assert a == b
     # degenerate case: fanin >= num_shards is exactly the single window
-    c = _collect_runs(
-        search_distributed(idx16, queries, k=10, method="auto", merge="tree", merge_fanin=64)
-    )
+    c = _collect_runs(search(idx16, queries, k=10, plan="distributed", merge="tree", merge_fanin=64))
     assert a == c
     with pytest.raises(ValueError):
-        search_distributed(idx16, queries, k=10, merge="nope")
+        search(idx16, queries, k=10, plan="distributed", merge="nope")
 
 
-def test_wand_equals_exhaustive_large_k(index, queries):
-    a = _collect_runs(search(index, queries, k=50, method="exhaustive"))
-    b = _collect_runs(search(index, queries, k=50, method="wand"))
+def test_wand_equals_exhaustive_large_k(index, queries, monkeypatch):
+    _use_kernel(monkeypatch, "exhaustive")
+    a = _collect_runs(search(index, queries, k=50))
+    _use_kernel(monkeypatch, "wand")
+    b = _collect_runs(search(index, queries, k=50))
     assert a == b
 
 
@@ -295,7 +301,7 @@ def test_known_item_smoke(spark, index):
     # FIXTURES.md §7 / reference README.md:42-53: query "passage_34" → that
     # doc at rank 1 (every doc embeds a unique marker).
     q = spark.createDataFrame([("known", "passage_34")], "qid string, query string")
-    top = search(index, q, k=5, method="wand").orderBy("rank").collect()
+    top = search(index, q, k=5).orderBy("rank").collect()
     assert top, "no hits for known-item query"
     assert "passage" in top[0]["docid"] or top[0]["rank"] == 1
     # the marker doc is the only one containing token passage_34 → rank 1
@@ -349,7 +355,7 @@ def test_hot_term_spreads_across_all_shards(spark, tmp_path):
     from .oracle_bm25 import bm25_oracle
 
     want = bm25_oracle(rows, [("h1", "common unique42")], k=5)
-    got = _collect_runs(search(idx, qs, k=5, method="wand"))
+    got = _collect_runs(search(idx, qs, k=5))
     assert [d for d, _ in got["h1"]] == [d for d, _ in want["h1"]]
     for (_, gs), (_, ws) in zip(got["h1"], want["h1"]):
         assert gs == pytest.approx(ws, abs=1e-9)
@@ -399,7 +405,7 @@ def test_bm25_dataframe_counts_tokenless_docs(spark, tmp_path):
     qs = spark.createDataFrame([("q1", "alpha beta")], "qid string, query string")
     idx = build_index(docs, str(tmp_path / "idx_empty"), num_shards=2)
     assert idx.meta.n_docs == 4
-    a = _collect_runs(search(idx, qs, k=4, method="exhaustive"))
+    a = _collect_runs(search(idx, qs, k=4))
     b = _collect_runs(
         bm25_dataframe(docs.select("docid", "content"), qs, k=4, mode="code").withColumn(
             "tag", F.lit("x")
@@ -418,7 +424,7 @@ def test_bm25_dataframe_matches_index_path(spark, corpus, queries, index):
         corpus.select("docid", "content"), queries, k=10, mode="code"
     )
     got = _collect_runs(df_path.withColumn("tag", F.lit("x")))
-    idx_path = _collect_runs(search(index, queries, k=10, method="wand"))
+    idx_path = _collect_runs(search(index, queries, k=10))
     assert set(got) == set(idx_path)
     for qid in got:
         assert [d for d, _ in got[qid]] == [d for d, _ in idx_path[qid]]
@@ -460,12 +466,12 @@ def test_bake_df_false_layout_v2_searches_equal(spark, corpus, queries, tmp_path
     assert idx2.meta.layout_version == 2
     assert "df" not in idx2.postings.columns
     assert idx2.postings_schema == idx2.postings.schema
-    got = _collect_runs(search(idx2, queries, k=10, method="wand"))
+    got = _collect_runs(search(idx2, queries, k=10))
     idx3 = build_index(
         corpus.select("docid", "content", "content_sha256"),
         str(tmp_path / "v3_idx"), num_shards=4,
     )
-    want = _collect_runs(search(idx3, queries, k=10, method="wand"))
+    want = _collect_runs(search(idx3, queries, k=10))
     assert set(got) == set(want)
     for qid in got:
         assert [d for d, _ in got[qid]] == [d for d, _ in want[qid]]
@@ -494,8 +500,7 @@ def test_absent_bucket_directory_returns_no_rows(spark, tmp_path):
     )
     assert idx.postings_for([term]).count() == 0
     qs = spark.createDataFrame([("q1", term)], "qid string, query string")
-    for method in ("wand", "exhaustive"):
-        assert search(idx, qs, k=5, method=method).collect() == []
+    assert search(idx, qs, k=5).collect() == []
     # a batch mixing it with a present term still ranks the present one
     qs2 = spark.createDataFrame([("q1", term), ("q2", f"beta {term}")], "qid string, query string")
     assert sorted(r["docid"] for r in search(idx, qs2, k=5).collect()) == ["d1", "d2"]
@@ -551,14 +556,13 @@ def test_auto_bucket_count_follows_postings(spark, corpus, queries, index, tmp_p
         corpus.select("docid", "content", "content_sha256"), str(tmp_path / "b64"), num_shards=4, num_buckets=64
     )
     assert idx64.meta.num_buckets == 64
-    for method in ("wand", "exhaustive"):
-        a = _collect_runs(search(index, queries, k=10, method=method))
-        b = _collect_runs(search(idx64, queries, k=10, method=method))
-        assert set(a) == set(b)
-        for qid in a:
-            assert [d for d, _ in a[qid]] == [d for d, _ in b[qid]]
-            for (_, x), (_, y) in zip(a[qid], b[qid]):
-                assert x == pytest.approx(y, abs=1e-12)
+    a = _collect_runs(search(index, queries, k=10))
+    b = _collect_runs(search(idx64, queries, k=10))
+    assert set(a) == set(b)
+    for qid in a:
+        assert [d for d, _ in a[qid]] == [d for d, _ in b[qid]]
+        for (_, x), (_, y) in zip(a[qid], b[qid]):
+            assert x == pytest.approx(y, abs=1e-12)
 
 
 def test_pack_layout_rule(monkeypatch):
@@ -604,10 +608,7 @@ def test_small_build_needs_no_rdd(spark, corpus, queries, index, tmp_path, monke
     monkeypatch.setattr(DataFrame, "rdd", property(no_rdd))
     idx = build_index(docs, str(tmp_path / "idx"), num_shards=4)
     monkeypatch.undo()
-    for method in ("wand", "exhaustive"):
-        assert _collect_runs(search(idx, queries, k=10, method=method)) == _collect_runs(
-            search(index, queries, k=10, method=method)
-        )
+    assert _collect_runs(search(idx, queries, k=10)) == _collect_runs(search(index, queries, k=10))
 
 
 def test_doc_map_schema_is_declared(spark, index):

@@ -87,3 +87,26 @@ def test_cc_releases_dead_checkpoint_blocks(spark):
         # leak would add one persistent RDD per round
         grown = n_persistent() - base
         assert grown <= 2, f"{method}: {grown} persistent RDDs accumulated"
+
+
+def test_release_of_non_checkpoint_warns(spark):
+    # a frame without a checkpointed RDD cannot be released: the failure is
+    # named in one warning instead of being swallowed
+    from llm_rankers_spark.operators.dedup import _release_local_checkpoint
+
+    with pytest.warns(UserWarning, match="could not release a local checkpoint"):
+        _release_local_checkpoint(spark.range(1))
+
+
+@pytest.mark.parametrize("method", ["label", "star"])
+def test_cc_releases_without_warning(spark, method):
+    # every per-round release of a real run succeeds (py4j's unclosed
+    # socket ResourceWarnings are not the engine's)
+    import warnings
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")]
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        roots = _roots(connected_components(_pairs_df(spark, pairs), method=method))
+    assert roots == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
+    assert [str(w.message) for w in caught if not issubclass(w.category, ResourceWarning)] == []

@@ -59,7 +59,7 @@ def test_cli_index_build_knobs_roundtrip(spark, tmp_path):
     idx = load_index(spark, idx_dir)
     assert idx.meta.num_buckets == 8
     qs = spark.createDataFrame([("q1", "spark query join")], "qid string, query string")
-    assert search(idx, qs, k=5, method="wand").count() == 5
+    assert search(idx, qs, k=5).count() == 5
 
 
 def test_cli_full_run(spark, tmp_path):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_rankers_spark.corpus import generate_corpus, with_docid
+from llm_rankers_spark.operators import bm25
 from llm_rankers_spark.operators.bm25 import search
 from llm_rankers_spark.operators.index_build import build_index
 from llm_rankers_spark.streaming.index_stream import (
@@ -16,6 +17,8 @@ from llm_rankers_spark.streaming.index_stream import (
     streaming_event_counts,
     streaming_sessionize,
 )
+
+from .oracle_bm25 import bm25_oracle
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +32,7 @@ def doc_batches(spark, tmp_path_factory):
     return base, d1, d2, docs
 
 
-def test_incremental_segments_match_batch_index(spark, doc_batches, tmp_path):
+def test_incremental_segments_match_batch_index(spark, doc_batches, tmp_path, monkeypatch):
     base, d1, d2, docs = doc_batches
     root = str(tmp_path / "segroot")
 
@@ -52,12 +55,25 @@ def test_incremental_segments_match_batch_index(spark, doc_batches, tmp_path):
 
     # oracle: one monolithic index over the full corpus
     mono = build_index(docs, str(tmp_path / "mono"), num_shards=2)
-    want = search(mono, queries, k=5, method="wand")
+    want = search(mono, queries, k=5)
 
     g = [(r["qid"], r["docid"], r["rank"], round(r["score"], 9)) for r in got.orderBy("qid", "rank").collect()]
     w = [(r["qid"], r["docid"], r["rank"], round(r["score"], 9)) for r in want.orderBy("qid", "rank").collect()]
     assert [x[:3] for x in g] == [x[:3] for x in w]  # rank-identical
     for a, b in zip(g, w):
+        assert a[3] == pytest.approx(b[3], abs=1e-6)
+
+    # a zero cutover sends every query plan to the block-max kernel, which
+    # scores the segments under global statistics with rescaled bounds
+    monkeypatch.setattr(bm25, "EXHAUSTIVE_MAX_POSTINGS", 0)
+    bm = [(r["qid"], r["docid"], r["rank"], r["score"]) for r in
+          search_segments(spark, root, queries, k=5).orderBy("qid", "rank").collect()]
+    oracle = bm25_oracle(
+        [(r["docid"], r["content"]) for r in docs.collect()], [(r["qid"], r["query"]) for r in queries.collect()], k=5
+    )
+    want_bm = [(q, d, i + 1, sc) for q in sorted(oracle) for i, (d, sc) in enumerate(oracle[q])]
+    assert [x[:3] for x in bm] == [x[:3] for x in want_bm]
+    for a, b in zip(bm, want_bm):
         assert a[3] == pytest.approx(b[3], abs=1e-6)
 
 

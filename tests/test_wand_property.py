@@ -10,14 +10,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from llm_rankers_spark.functions.codec import DEFAULT_B, DEFAULT_K1, pack_postings
-from llm_rankers_spark.operators.bm25 import (
-    _bound_scale,
-    _score_rows_block_max,
-    _score_rows_exhaustive,
-    _score_rows_wand,
-    reset_wand_stats,
-    wand_stats,
-)
+from llm_rankers_spark.operators.bm25 import _bound_scale, reset_wand_stats, wand_stats
+
+from .oracle_bm25 import score_rows_block_max, score_rows_exhaustive, score_rows_wand
 
 
 def _row(p):
@@ -59,8 +54,8 @@ def test_wand_equals_exhaustive_random_corpora(args):
         weight = rng.uniform(0.01, 5.0)
         rows.append((_row(p), weight))
 
-    ex = _score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
-    wd = _score_rows_wand("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
+    ex = score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
+    wd = score_rows_wand("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
     assert wd["ord"].tolist() == ex["ord"].tolist(), (
         f"docids diverge (n={n_docs}, terms={n_terms}, k={k})"
     )
@@ -69,21 +64,21 @@ def test_wand_equals_exhaustive_random_corpora(args):
     # the vectorized kernel with rescaled block bounds, and stays exact
     avgdl2 = avgdl * rng.uniform(0.25, 4.0)
     baked = SimpleNamespace(k1=DEFAULT_K1, b=DEFAULT_B, avgdl=avgdl)
-    ex2 = _score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl2)
-    bm2 = _score_rows_block_max(
+    ex2 = score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl2)
+    bm2 = score_rows_block_max(
         "q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl2, _bound_scale(baked, DEFAULT_K1, DEFAULT_B, avgdl2)
     )
     assert bm2["ord"].tolist() == ex2["ord"].tolist()
     np.testing.assert_array_equal(bm2["score"].to_numpy(), ex2["score"].to_numpy())
     # other k1/b than the baked ones: the kernel falls back to tf-norm <= 1
     assert _bound_scale(baked, 1.2, 0.75, avgdl) is None
-    ex3 = _score_rows_exhaustive("q", rows, k, 1.2, 0.75, avgdl2)
-    bm3 = _score_rows_block_max("q", rows, k, 1.2, 0.75, avgdl2, None)
+    ex3 = score_rows_exhaustive("q", rows, k, 1.2, 0.75, avgdl2)
+    bm3 = score_rows_block_max("q", rows, k, 1.2, 0.75, avgdl2, None)
     assert bm3["ord"].tolist() == ex3["ord"].tolist()
     np.testing.assert_array_equal(bm3["score"].to_numpy(), ex3["score"].to_numpy())
     # the vectorized interval-pruned kernel (round-3 hot-list path) must be
     # bit-identical too — same sorted-term accumulation order
-    bm = _score_rows_block_max("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
+    bm = score_rows_block_max("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
     assert bm["ord"].tolist() == ex["ord"].tolist()
     np.testing.assert_array_equal(bm["score"].to_numpy(), ex["score"].to_numpy())
 
@@ -119,9 +114,9 @@ def test_block_max_skipping_engages_on_hot_plus_rare():
     rows = [(_row(hot), idf(n_docs)), (_row(rare), idf(12))]
     k = 10
     reset_wand_stats()
-    bm = _score_rows_block_max("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
+    bm = score_rows_block_max("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
     stats = wand_stats()
-    ex = _score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
+    ex = score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
     assert bm["ord"].tolist() == ex["ord"].tolist()
     np.testing.assert_array_equal(bm["score"].to_numpy(), ex["score"].to_numpy())
     assert stats["calls"] == 1
@@ -155,9 +150,9 @@ def test_block_max_skipping_engages_under_global_avgdl():
     scale = _bound_scale(SimpleNamespace(k1=DEFAULT_K1, b=DEFAULT_B, avgdl=avgdl), DEFAULT_K1, DEFAULT_B, global_avgdl)
     assert 0.0 < scale < 1.0
     reset_wand_stats()
-    bm = _score_rows_block_max("q", rows, 10, DEFAULT_K1, DEFAULT_B, global_avgdl, scale)
+    bm = score_rows_block_max("q", rows, 10, DEFAULT_K1, DEFAULT_B, global_avgdl, scale)
     stats = wand_stats()
-    ex = _score_rows_exhaustive("q", rows, 10, DEFAULT_K1, DEFAULT_B, global_avgdl)
+    ex = score_rows_exhaustive("q", rows, 10, DEFAULT_K1, DEFAULT_B, global_avgdl)
     assert bm["ord"].tolist() == ex["ord"].tolist()
     np.testing.assert_array_equal(bm["score"].to_numpy(), ex["score"].to_numpy())
     assert stats["intervals_total"] - stats["intervals_scored"] > 0.5 * stats["intervals_total"], stats
@@ -168,3 +163,37 @@ def test_wand_stats_reset():
     assert wand_stats() == {
         "calls": 0, "intervals_total": 0, "intervals_scored": 0, "blocks_decoded": 0
     }
+
+
+def test_score_shard_picks_kernel_by_candidate_postings():
+    """A query plan with fewer candidate postings than the cutover is scored
+    by the numpy-exhaustive kernel, any other by block-max (the only one
+    that counts WAND_STATS calls); the two give the same frame."""
+    import pandas as pd
+
+    from llm_rankers_spark.operators.bm25 import EXHAUSTIVE_MAX_POSTINGS, _score_shard
+
+    rng = np.random.default_rng(3)
+    n_docs = 500
+    dls = rng.integers(5, 50, size=n_docs).astype(np.int64)
+    avgdl = float(dls.mean())
+    recs = []
+    for term, df in (("hot", n_docs), ("rare", 9)):
+        ords = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(np.int64)
+        p = pack_postings(ords, rng.integers(1, 5, size=df).astype(np.int64), dls[ords],
+                          avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B)
+        recs.append({"term": term, "shard": 0, **_row(p)})
+    pdf = pd.DataFrame(recs)
+    qplan = {"q1": [("hot", 0.2), ("rare", 3.0)], "q2": [("rare", 1.0)]}
+
+    def run(cutover):
+        reset_wand_stats()
+        out = _score_shard(pdf, qplan, 5, cutover, DEFAULT_K1, DEFAULT_B, avgdl, 1.0)
+        return out, wand_stats()["calls"]
+
+    ex, ex_calls = run(EXHAUSTIVE_MAX_POSTINGS)
+    bm, bm_calls = run(0)
+    assert (ex_calls, bm_calls) == (0, 2)
+    pd.testing.assert_frame_equal(ex, bm)
+    # the cutover is strict: q1's n_docs + 9 postings reach it, q2's 9 do not
+    assert run(n_docs + 9)[1] == 1
