@@ -6,8 +6,9 @@ Captures three hot-path physical plans on a small sf0.001 build:
 1. IN-pushdown postings scan — `search()` with a <=512-term batch must
    show the literal In(term, ...) predicate in PushedFilters (row-group
    pruning at the parquet scan).
-2. Tree top-k merge — `search(plan='distributed', merge='tree', merge_fanin=2)`
-   over 8 shards must show the stacked per-level ranking windows
+2. Tree top-k merge — `search(plan='distributed')` over 8 shards with
+   `bm25.TREE_MERGE_MIN_SHARDS = 0` and `bm25.TREE_MERGE_FANIN = 2` must
+   show the stacked per-level ranking windows
    (bounded fanin*k rows per task per level).
 3. shard_bucket pack — the build's packed frame must show the
    (shard, bucket) grouping into FlatMapGroupsInPandas plus the
@@ -55,6 +56,7 @@ def excerpt(plan: str, node_patterns: list[str], detail_patterns: list[str]) -> 
 
 def main() -> None:
     from llm_rankers_spark.corpus import driver_documents
+    from llm_rankers_spark.operators import bm25
     from llm_rankers_spark.operators.bm25 import search
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.session import get_spark
@@ -92,7 +94,10 @@ def main() -> None:
     )
 
     # --- tree merge levels ------------------------------------------------
-    tree = search(idx, qs, k=5, plan="distributed", merge="tree", merge_fanin=2)
+    # the tree runs above TREE_MERGE_MIN_SHARDS; lower it and the fan-in so
+    # 8 shards fold in three levels
+    bm25.TREE_MERGE_MIN_SHARDS, bm25.TREE_MERGE_FANIN = 0, 2
+    tree = search(idx, qs, k=5, plan="distributed")
     tree_ex = excerpt(
         explain_formatted(tree),
         [r"Window", r"WindowGroupLimit", r"FlatMapCoGroupsInPandas", r"Filter"],

@@ -77,6 +77,7 @@ def big_build_and_search() -> dict:
     from pyspark.sql import functions as F
 
     from llm_rankers_spark.corpus import generate_corpus, with_docid
+    from llm_rankers_spark.operators import bm25
     from llm_rankers_spark.operators.bm25 import search
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.session import get_spark
@@ -124,11 +125,17 @@ def big_build_and_search() -> dict:
         big_qs = spark.createDataFrame(
             [(f"b{i}", qrows[i % len(qrows)][1]) for i in range(4096)], "qid string, query string"
         )
+        # the merge is picked from the shard count: raise the cutover above
+        # 64 shards for the single window, then restore the defaults (the
+        # fan-in-8 tree at 64 shards)
+        saved = bm25.TREE_MERGE_MIN_SHARDS, bm25.TREE_MERGE_FANIN
+        bm25.TREE_MERGE_MIN_SHARDS = 1 << 30
         t0 = time.perf_counter()
-        w_rows = search(idx_a, big_qs, k=10, plan="distributed", merge="window").count()
+        w_rows = search(idx_a, big_qs, k=10, plan="distributed").count()
         res["dist4096_window_sec"] = round(time.perf_counter() - t0, 2)
+        bm25.TREE_MERGE_MIN_SHARDS, bm25.TREE_MERGE_FANIN = saved
         t0 = time.perf_counter()
-        t_rows = search(idx_a, big_qs, k=10, plan="distributed", merge="tree", merge_fanin=8).count()
+        t_rows = search(idx_a, big_qs, k=10, plan="distributed").count()
         res["dist4096_tree_sec"] = round(time.perf_counter() - t0, 2)
         res["dist4096_rows_equal"] = w_rows == t_rows
         res["dist4096_queries_per_sec_tree"] = round(4096 / res["dist4096_tree_sec"], 1)

@@ -222,13 +222,12 @@ def q_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan='distributed');
     must match the same oracle as the driver-planned paths.
 
-    Round-6 (round-5 verdict #8): this entry now builds ITS index through
-    the NON-default resolutions — ``pack_group='shard_bucket'`` (slim-df
-    broadcast bake) and searches with the ``merge='tree'`` fold — so the
-    scale-side branches of both autos are driver-oracled, not only
-    pytest-covered. Results are identical to the defaults by construction
-    (pack modes pack the same lists; the tree merge is row-identical —
-    both pinned in test_bm25) against the unchanged oracle SQL."""
+    Round-6 (round-5 verdict #8): this entry builds ITS index through the
+    NON-default ``pack_group='shard_bucket'`` resolution (slim-df broadcast
+    bake), so the scale-side branch of the pack auto is driver-oracled, not
+    only pytest-covered. Results are identical to the defaults by
+    construction (pack modes pack the same lists — pinned in test_bm25)
+    against the unchanged oracle SQL."""
     docs = driver_documents(spark, sf_dir)
     tag = os.path.basename(os.path.normpath(sf_dir))
     path = os.path.join(tempfile.gettempdir(), f"llmrs_entry_idx_sb_{tag}")
@@ -236,7 +235,7 @@ def q_bm25_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("docid", "content", "content_sha256"), path,
         tokenizer_mode="simple", num_shards=4, resume=True, pack_group="shard_bucket",
     )
-    res = bm25_ops.search(idx, _queries_df(spark), k=10, plan="distributed", merge="tree", merge_fanin=2)
+    res = bm25_ops.search(idx, _queries_df(spark), k=10, plan="distributed")
     return res.select(
         "qid", "docid", F.col("rank").cast("long").alias("rank"), F.round("score", 4).alias("score")
     )

@@ -26,13 +26,15 @@ BM25 formula (Lucene-style, exact dl instead of Lucene's quantized norms —
 documented deviation, SURVEY.md §7.1 step 4):
   idf = ln(1 + (N - df + 0.5)/(df + 0.5))
   score(q, d) = Σ_t qw_t · idf_t · tf / (tf + k1·(1 - b + b·dl/avgdl))
-Repeated query terms contribute with multiplicity ``qw``.
+Repeated query terms contribute with multiplicity ``qw``. k1 and b are the
+ones the index was built with (its block-max bounds are baked with them).
 """
 
 from __future__ import annotations
 
 import heapq
 import math
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -40,7 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from llm_rankers_spark.functions import codec
-from llm_rankers_spark.functions.tokenize import tokens_col
+from llm_rankers_spark.functions.tokenize import tokenize, tokens_col
 from llm_rankers_spark.operators.index_build import InvertedIndex
 
 RESULT_SCHEMA = "qid string, ord long, score double"
@@ -126,18 +128,16 @@ def _exhaustive_arrays(
     return uniq[order], scores[order]
 
 
-def _bound_scale(meta, k1: float, b: float, avgdl: float) -> float | None:
-    """How a segment's baked block bounds carry over to scoring with
-    (k1, b, avgdl): ``r = min(1, a/a′)`` for the baked avgdl a, or None when
-    k1/b differ from the baked ones (then only tf-norm ≤ 1 holds)."""
-    if k1 != meta.k1 or b != meta.b:
-        return None
+def _bound_scale(meta, avgdl: float) -> float:
+    """How a segment's baked block bounds carry over to scoring under the
+    avgdl a′ of a whole search: ``r = min(1, a/a′)`` for the baked avgdl a
+    (k1 and b are always the baked ones)."""
     return min(1.0, meta.avgdl / avgdl) if avgdl > 0 else 1.0
 
 
 def _block_max_arrays(
     rows: list, k: int, k1: float, b: float, avgdl: float, shared_cache: dict,
-    bound_scale: float | None = 1.0,
+    bound_scale: float = 1.0,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized block-max pruned scoring (round-2 verdict #3): exact top-k
     without a doc-at-a-time Python loop.
@@ -176,8 +176,7 @@ def _block_max_arrays(
     across segments) keeps the kernel: with ``bound_scale`` r = min(1, a/a′),
     k1·(1−b+b·dl/a′) ≥ r·k1·(1−b+b·dl/a), so each baked block bound ub
     becomes 1/(1 + r·(1/ub − 1)), padded up by a relative 1e-12 because
-    pruning is a strict ``<``. ``bound_scale=None`` (k1/b differ from the
-    baked ones) uses tf-norm ≤ 1."""
+    pruning is a strict ``<``."""
     lists = []
     for row, w in rows:
         n = int(row["n"])
@@ -185,9 +184,7 @@ def _block_max_arrays(
             continue
         bl = np.asarray(row["block_last"], dtype=np.int64)
         tfn = np.asarray(row["block_max_tfn"], dtype=np.float64)
-        if bound_scale is None:
-            tfn = np.ones_like(tfn)
-        elif bound_scale < 1.0:
+        if bound_scale < 1.0:
             tfn = (1.0 + 1e-12) / (1.0 + bound_scale * (1.0 / tfn - 1.0))
         ub = w * tfn
         lists.append((row, w, n, bl, ub, n <= SMALL_LIST_DECODE_MAX))
@@ -311,14 +308,14 @@ def _score_shard(
     k1: float,
     b: float,
     avgdl: float,
-    bound_scale: float | None,
+    bound_scale: float,
     n_docs: float | None = None,
 ) -> pd.DataFrame:
     """Run every query's scoring over one shard's posting rows.
     ``qplan``: {qid: [(term, weight)]} — shared by the driver-planned and
     the distributed (cogrouped) batch paths. With ``n_docs`` set, qplan
     carries RAW qw multiplicities and the idf factor is computed here from
-    the per-row global ``df`` (layout v3) — no df-lookup job ever ran.
+    the per-row global ``df`` of one index — no df-lookup job ever ran.
 
     A plan with fewer than ``exhaustive_max`` candidate postings is scored
     by :func:`_exhaustive_arrays`, any other by :func:`_block_max_arrays`
@@ -375,23 +372,32 @@ def _score_shard(
     )
 
 
-#: posting columns the scorers read (layout v3 adds the per-row global df)
+#: posting columns the scorers read (one index adds its per-row global df)
 _SCORE_COLS = (
     "term", "shard", "n", "docs_blob", "tfs_blob", "dls_blob",
     "block_last", "block_max_tfn", "doc_offs", "tf_offs", "dl_offs",
 )
 
 
-def _plan_params(indexes: list[InvertedIndex], k1, b) -> tuple:
+def _plan_params(indexes: list[InvertedIndex]) -> tuple:
     """(k1, b, N, avgdl, per-segment bound scales) for scoring ``indexes``
-    as one index: N and avgdl come from the segments' metadata — the
-    statistics Lucene's IndexSearcher computes across segments."""
+    as one index: k1 and b are the ones the segments were built with, N and
+    avgdl come from the segments' metadata — the statistics Lucene's
+    IndexSearcher computes across segments. Segments that disagree on k1,
+    b or the tokenizer mode have incomparable block bounds or terms:
+    ``ValueError``."""
     metas = [ix.meta for ix in indexes]
-    k1 = metas[0].k1 if k1 is None else k1
-    b = metas[0].b if b is None else b
+    m0 = metas[0]
+    for ix in indexes[1:]:
+        got, want = (ix.meta.k1, ix.meta.b, ix.meta.tokenizer_mode), (m0.k1, m0.b, m0.tokenizer_mode)
+        if got != want:
+            raise ValueError(
+                f"segment {ix.path} has (k1, b, tokenizer_mode) {got}, segment {indexes[0].path} has {want}: "
+                "segments searched together must share them"
+            )
     n = sum(m.n_docs for m in metas)
-    avgdl = metas[0].avgdl if len(metas) == 1 else (sum(m.avgdl * m.n_docs for m in metas) / n if n else 0.0)
-    return k1, b, float(n), avgdl, [_bound_scale(m, k1, b, avgdl) for m in metas]
+    avgdl = m0.avgdl if len(metas) == 1 else (sum(m.avgdl * m.n_docs for m in metas) / n if n else 0.0)
+    return m0.k1, m0.b, float(n), avgdl, [_bound_scale(m, avgdl) for m in metas]
 
 
 def _tagged_union(indexes: list[InvertedIndex], frame, cols) -> DataFrame:
@@ -420,24 +426,27 @@ def _docid_topk(indexes: list[InvertedIndex], partial: DataFrame, k: int, tag: s
 
 
 # above this many queries the driver-planned path's collect + per-task
-# closure dict stop being "small data" and the batch belongs on the
-# cogrouped distributed plan. The same small-side cutoff logic as
-# DRIVER_ORDINALS_MAX: decided by a short-circuiting limit probe, so the
-# dispatcher never pays a full count of a large computed query frame.
+# closure dict stop being "small data": the batch goes to the cogrouped
+# distributed plan. Decided by a short-circuiting limit probe, never a count.
 DRIVER_QUERY_PLAN_MAX = 1024
+
+#: The distributed plan merges one index's per-shard top-k's in one ranking
+#: window per qid up to this many shards; above it, it folds
+#: ``TREE_MERGE_FANIN`` shard groups at a time (measured cutover,
+#: BENCH/SCALE_PROOF_r05.md §3: at 64 shards × 4096 queries the fan-in-8
+#: tree merged 1.64× faster than the single window, 186 s vs 304 s,
+#: row-identical). Read on the driver when the plan is built.
+TREE_MERGE_MIN_SHARDS = 32
+TREE_MERGE_FANIN = 8
 
 
 def search(
     index: InvertedIndex | list[InvertedIndex],
     queries: DataFrame,
     k: int = 10,
-    k1: float | None = None,
-    b: float | None = None,
     tag: str = "llm_rankers_spark",
     shards: list[int] | None = None,
     plan: str = "auto",
-    merge: str = "auto",
-    merge_fanin: int = 64,
     plan_out: dict | None = None,
 ) -> DataFrame:
     """BM25 top-k → TREC-shaped DataFrame (qid, docid, rank, score, tag) —
@@ -461,55 +470,49 @@ def search(
 
     ``index`` may also be a list of segment indexes (the live segments of
     :func:`...streaming.index_stream.search_segments`): they are searched
-    as one index under global statistics, all segments in one pass.
+    as one index under global statistics, all segments in one pass; they
+    must share k1, b and the tokenizer mode (``ValueError`` otherwise).
 
     ``plan`` overrides: ``'driver'`` / ``'distributed'`` force a path
     (``'auto'`` default). ``shards`` (serving a shard subset) implies the
     driver path — per-subset calls are the sharded-serving unit and are
-    reranking-sized by construction. ``merge``/``merge_fanin`` apply to the
-    distributed plan only. ``plan_out``, when a dict, receives
+    reranking-sized by construction. ``plan_out``, when a dict, receives
     ``{'plan': ..., 'probe_n': ...}`` so callers/tests can observe the
     dispatch without re-probing.
     """
     if plan not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown plan {plan!r}")
     indexes = index if isinstance(index, list) else [index]
-    chosen = plan
-    probe_n = None
-    qrows = None
-    if plan == "auto":
-        if shards is not None:
-            chosen = "driver"
-        else:
-            qrows = queries.select("qid", "query").limit(DRIVER_QUERY_PLAN_MAX + 1).collect()
-            probe_n = len(qrows)
-            if probe_n <= DRIVER_QUERY_PLAN_MAX:
-                chosen = "driver"
-            else:
-                chosen, qrows = "distributed", None
+    params = _plan_params(indexes)
+    chosen, probe_n, qrows = plan, None, None
+    if plan == "auto" and shards is not None:
+        chosen = "driver"
+    elif plan == "auto":
+        qrows = queries.select("qid", "query").limit(DRIVER_QUERY_PLAN_MAX + 1).collect()
+        probe_n = len(qrows)
+        chosen = "driver" if probe_n <= DRIVER_QUERY_PLAN_MAX else "distributed"
     if plan_out is not None:
-        plan_out["plan"] = chosen
-        plan_out["probe_n"] = probe_n
+        plan_out.update(plan=chosen, probe_n=probe_n)
     if chosen == "distributed":
         if shards is not None:
             raise ValueError("shards= is a driver-planned serving knob; use plan='driver'")
-        return _search_distributed(indexes, queries, k, k1, b, tag, merge, merge_fanin)
-    return _search_driver_planned(indexes, queries, k, k1, b, tag, shards, qrows)
+        return _search_distributed(indexes, queries, k, tag, params)
+    return _search_driver_planned(indexes, queries, k, tag, shards, qrows, params)
 
 
 def _search_driver_planned(
     indexes: list[InvertedIndex],
     queries: DataFrame,
     k: int,
-    k1: float | None,
-    b: float | None,
     tag: str,
     shards: list[int] | None,
     qrows: list | None,
+    params: tuple,
 ) -> DataFrame:
     """The reranking-batch plan of :func:`search`: BM25 top-k over one
     index, or over several segments in one pass. ``qrows`` are the batch's
-    already-collected (qid, query) rows, if the dispatcher probed them.
+    already-collected (qid, query) rows, if the dispatcher probed them;
+    ``params`` are :func:`_plan_params` of ``indexes``.
 
     ``shards`` restricts the traversal to a shard subset — the unit of
     shard-parallel serving across jobs/executors: shards hold disjoint doc
@@ -519,8 +522,8 @@ def _search_driver_planned(
     Several ``indexes`` are scored under GLOBAL statistics (Lucene
     IndexSearcher semantics) while postings stay segment-local: N and
     avgdl from the segments' metadata, df = Σn per term over all segments'
-    candidate rows in ONE collect. A single layout-v3 index keeps its
-    in-row global df and runs no df job.
+    candidate rows in ONE collect. A single index keeps its in-row global
+    df and runs no df job.
 
     Batch-query plan: each index opens only its batch's bucket directories
     (:meth:`InvertedIndex.postings_for`), filtered to the batch's *distinct*
@@ -531,11 +534,7 @@ def _search_driver_planned(
     traversal. The per-query term weights are tiny and ride along in the
     closure.
     """
-    from collections import Counter
-
-    from llm_rankers_spark.functions.tokenize import tokenize
-
-    k1, b, n_docs, avgdl, scales = _plan_params(indexes, k1, b)
+    k1, b, n_docs, avgdl, scales = params
     spark = queries.sparkSession
     if qrows is None:
         qrows = queries.select("qid", "query").collect()
@@ -558,10 +557,10 @@ def _search_driver_planned(
             return p.filter(F.col("term").isin(terms))
         return p.join(F.broadcast(spark.createDataFrame([(t,) for t in terms], "term string")), "term", "left_semi")
 
-    df_in_rows = len(indexes) == 1 and indexes[0].meta.layout_version >= 3
+    df_in_rows = len(indexes) == 1
     cand = _tagged_union(indexes, open_terms, _SCORE_COLS + (("df",) if df_in_rows else ()))
     if df_in_rows:
-        # layout v3: global df rides on every posting row, so the scorer
+        # one index: global df rides on every posting row, so the scorer
         # computes idf in-task. qplan carries the raw qw multiplicities;
         # absent terms simply match no rows.
         qplan = {qid: [(t, float(qw)) for t, qw in c.items()] for qid, c in qcounts.items()}
@@ -604,11 +603,10 @@ def _tree_topk(
     each level, until one group remains — then the final per-qid ranking
     window assigns ranks. Every level is one window shuffle whose per-task
     input is bounded by fanin×k rows per qid, independent of shard count;
-    the single-window merge is the degenerate one-level case. Exactness:
-    shards are disjoint doc ranges, so the global top-k is contained in
-    the union of per-group top-k's at every level."""
-    if fanin < 2:
-        raise ValueError("merge_fanin must be >= 2")
+    the single-window merge is the degenerate one-level case (``fanin`` ≥
+    ``num_shards``). Exactness: shards are disjoint doc ranges, so the
+    global top-k is contained in the union of per-group top-k's at every
+    level."""
     # shard id is derivable from the ordinal — partials don't carry it
     cur = partial.withColumn("_g", (F.col("ord") / F.lit(shard_size)).cast("long"))
     width = num_shards
@@ -629,11 +627,8 @@ def _search_distributed(
     indexes: list[InvertedIndex],
     queries: DataFrame,
     k: int,
-    k1: float | None,
-    b: float | None,
     tag: str,
-    merge: str,
-    merge_fanin: int,
+    params: tuple,
 ) -> DataFrame:
     """The large-batch plan of :func:`search`: BM25 top-k with the query
     plan kept distributed end to end — the 10^5–10^6-query batch path.
@@ -654,37 +649,39 @@ def _search_distributed(
     over the segments' candidate rows broadcast back by term — part of the
     plan, nothing persisted — and the merge ranks by docid.
 
-    ``merge`` (one index): how per-shard partial top-k's become the global
-    top-k.
-    ``'auto'`` (default) resolves window vs tree on the shard count
-    (cutover at 32 shards with the measured fanin 8 —
-    BENCH/SCALE_PROOF_r05.md: 1.64× at 64 shards × 4096 queries).
-    ``'window'`` is one ranking window per qid — right up to
-    ~10^3 shards. ``'tree'`` folds shards in ``merge_fanin``-ary groups
-    (each level one window shuffle keeping k per (qid, group)) until one
-    group remains — at 10^5 shards the single-window merge funnels
+    One index merges its per-shard partial top-k's by shard count: up to
+    ``TREE_MERGE_MIN_SHARDS`` shards in one ranking window per qid, above
+    it in a tree that folds ``TREE_MERGE_FANIN`` shard groups per level
+    (:func:`_tree_topk`) — at 10^5 shards the single window funnels
     shards×k rows through ONE task per qid, while the tree bounds every
     task at fanin×k rows. Results are exactly equal (shards hold disjoint
     doc ranges, so the global top-k survives every per-group cut; tested).
+
+    The postings open is the batch's term buckets semi-joined on its
+    terms; a multi-bucket index first collects which buckets those are.
     """
-    k1, b, n_docs, avgdl, scales = _plan_params(indexes, k1, b)
+    k1, b, n_docs, avgdl, scales = params
     spark = queries.sparkSession
     qt = query_terms(queries, indexes[0].meta.tokenizer_mode)  # (qid, term, qw) — UDF, no collect
     terms_df = qt.select("term").distinct()
-    buckets: dict[int, list] = {}
+
+    reps: dict[int, list] = {}
 
     def open_terms(ix: InvertedIndex) -> DataFrame:
-        # static pruning costs one pass over the batch's terms (a
-        # metadata-sized collect, once per bucket count)
         nb = ix.meta.num_buckets
-        if nb not in buckets:
-            buckets[nb] = [r[0] for r in terms_df.select(F.pmod(F.xxhash64("term"), F.lit(nb))).distinct().collect()]
-        return ix.postings_in_buckets(buckets[nb]).join(terms_df, "term", "left_semi")
+        if nb == 1:  # nothing to prune, so no job
+            return ix.postings.join(terms_df, "term", "left_semi")
+        if nb not in reps:
+            # one term per bucket the batch hits (a batch's query count says
+            # nothing of its distinct terms): postings_for maps them back
+            hit = terms_df.groupBy(F.pmod(F.xxhash64("term"), F.lit(nb))).agg(F.min("term"))
+            reps[nb] = [r[1] for r in hit.collect()]
+        return ix.postings_for(reps[nb]).join(terms_df, "term", "left_semi")
 
-    df_in_rows = len(indexes) == 1 and indexes[0].meta.layout_version >= 3
+    df_in_rows = len(indexes) == 1
     cand = _tagged_union(indexes, open_terms, _SCORE_COLS + (("df",) if df_in_rows else ()))
     if df_in_rows:
-        # layout v3: idf computed in-task from the per-row global df — the
+        # one index: idf computed in-task from the per-row global df — the
         # query plan is just the raw (qid, term, qw) multiplicities
         qw = qt.select("qid", "term", F.col("qw").cast("double").alias("w"))
     else:
@@ -721,23 +718,10 @@ def _search_distributed(
         return _docid_topk(indexes, partial, k, tag, small=False)
 
     meta = indexes[0].meta
-    if merge == "auto":
-        # measured cutover (BENCH/SCALE_PROOF_r05.md §3): at 64 shards x
-        # 4096 queries the fanin-8 tree merged 1.64x faster than the single
-        # window (186 s vs 304 s, row-identical); at the bench's 16 shards
-        # the window is fine. Resolve tree above 32 shards with the
-        # measured fanin; explicit merge= values honor the caller's fanin.
-        if meta.num_shards > 32:
-            merge, merge_fanin = "tree", 8
-        else:
-            merge = "window"
-    if merge == "tree":
-        topk = _tree_topk(partial, k, meta.shard_size, meta.num_shards, merge_fanin)
-    elif merge == "window":
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("ord"))
-        topk = partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    else:
-        raise ValueError(f"unknown merge strategy {merge!r}")
+    fanin = TREE_MERGE_FANIN if meta.num_shards > TREE_MERGE_MIN_SHARDS else meta.num_shards
+    if fanin < 2 and meta.num_shards > 1:  # it would never shrink the tree
+        raise ValueError(f"TREE_MERGE_FANIN must be at least 2, got {TREE_MERGE_FANIN}")
+    topk = _tree_topk(partial, k, meta.shard_size, meta.num_shards, fanin)
     # docid attach WITHOUT a broadcast hint (round-2 ADVICE): this path is
     # built for 10^5–10^6-query batches, where topk is n_queries × k rows —
     # force-broadcasting that ships up to ~10^7 rows to every executor. AQE
@@ -788,9 +772,7 @@ def bm25_dataframe_from_index(index: InvertedIndex, queries: DataFrame, k: int =
     Query-side plan (round-6): a reranking-sized batch (bounded
     ``limit(N+1).collect()`` probe, the same small-side cutoff as
     :func:`search`) is tokenized DRIVER-side with the shared tokenizer into
-    a (qid, term, qw) local relation — the round-5 plan re-tokenized the
-    batch through THREE separate ArrowEvalPython+explode+aggregate subtrees
-    (qt join, term semi-join, df semi-join), each with its own exchanges.
+    a (qid, term, qw) local relation, tokenized once for the whole plan.
     The batch's term list then reaches the forward-table scan as an IN
     PushedFilter instead of a broadcast semi-join. qw values and every
     scoring expression are unchanged, so scores are identical. Larger
@@ -799,40 +781,26 @@ def bm25_dataframe_from_index(index: InvertedIndex, queries: DataFrame, k: int =
     k1, b, n_docs, avgdl = m.k1, m.b, float(m.n_docs), float(m.avgdl)
     qrows = queries.select("qid", "query").limit(DRIVER_QUERY_PLAN_MAX + 1).collect()
     if len(qrows) <= DRIVER_QUERY_PLAN_MAX:
-        from collections import Counter
-
-        from llm_rankers_spark.functions.tokenize import tokenize
-
         data = [
             (r["qid"], t, int(c))
             for r in qrows
             for t, c in sorted(Counter(tokenize(r["query"] or "", m.tokenizer_mode)).items())
         ]
         if not data:
-            return queries.sparkSession.createDataFrame(
-                [], "qid string, docid string, rank int, score double"
-            )
-        qt = F.broadcast(
-            queries.sparkSession.createDataFrame(data, "qid string, term string, qw long")
-        )
+            return queries.sparkSession.createDataFrame([], "qid string, docid string, rank int, score double")
+        qt = F.broadcast(queries.sparkSession.createDataFrame(data, "qid string, term string, qw long"))
         terms = sorted({t for _, t, _ in data})
         if len(terms) <= 512:
             td_f = index.forward_ords.filter(F.col("term").isin(terms))
         else:
-            td_f = index.forward_ords.join(
-                F.broadcast(qt.select("term").distinct()), "term", "left_semi"
-            )
+            td_f = index.forward_ords.join(F.broadcast(qt.select("term").distinct()), "term", "left_semi")
     else:
         qt = query_terms(queries, m.tokenizer_mode)
         td_f = index.forward_ords.join(F.broadcast(qt.select("term").distinct()), "term", "left_semi")
     # per-term df via a SLIM second scan (term column only, map-side
-    # combined to <= batch-terms rows) broadcast back onto the scoring rows.
-    # The round-3/4 window (count() OVER (PARTITION BY term)) shuffled every
-    # matched forward row — (ord, term, tf, dl) — just to learn df: at 100 TB
-    # that is a full matched-postings exchange. Locally the two are within
-    # noise of each other (interleaved warm medians 2.68 s groupBy vs
-    # 2.79 s window; full A/B incl. a slower postings-df variant in
-    # BENCH/BM25_SQL_ATTRIBUTION_r05.md), so the scale-right plan wins.
+    # combined to <= batch-terms rows) broadcast back onto the scoring rows;
+    # a count() OVER (PARTITION BY term) window would shuffle every matched
+    # forward row just to learn df (A/B: BENCH/BM25_SQL_ATTRIBUTION_r05.md).
     df_tbl = td_f.groupBy("term").agg(F.count("*").alias("df"))
     td_fd = td_f.join(F.broadcast(df_tbl), "term")
     out = _ranked_contribs(qt.join(td_fd, "term"), F.lit(n_docs), F.lit(avgdl), k1, b, "ord", k, round_digits)

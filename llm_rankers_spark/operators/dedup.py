@@ -91,12 +91,8 @@ def _with_shingles(docs: DataFrame, id_col: str, content_col: str, k: int, mode:
     # Repartition only when the inherited shape is coarser than the
     # cluster's parallelism — a real corpus scan has plentiful splits and
     # never pays this shuffle.
-    try:
-        n_parts = docs.rdd.getNumPartitions()
-    except Exception:
-        n_parts = None
     par = docs.sparkSession.sparkContext.defaultParallelism
-    if n_parts is not None and n_parts < par:
+    if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
     return (
         docs.select(F.col(id_col).alias("id"), tokens_col(content_col, mode=mode).alias("_toks"))
@@ -447,11 +443,15 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     produce one checkpoint per round, so without an explicit release the
     dead rounds' blocks pile up proportionally to graph size (round-4
     ADVICE). Reach the checkpointed RDD through the analyzed ``LogicalRDD``
-    and unpersist it directly; best-effort — if that fails (the frame is not
-    a local checkpoint, or the internal surface shifted), one warning names
-    the exception and the blocks wait for GC rather than failing the job."""
+    and drop its blocks through ``SparkContext.unpersistRDD`` — the same
+    release ``RDD.unpersist`` makes, without the WARN line that method logs
+    for every locally checkpointed RDD. Best-effort — if that fails (the
+    frame is not a local checkpoint, or the internal surface shifted), one
+    warning names the exception and the blocks wait for GC rather than
+    failing the job."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
     except Exception as e:
         warnings.warn(f"could not release a local checkpoint's blocks: {e!r}", stacklevel=2)
 

@@ -23,6 +23,10 @@ Design for 10^12 files:
 - **Layout sized to the data**: the term-bucket count follows the
   postings-row count (:func:`pack_layout`), so a small segment is one or
   two bucket directories and its opens run no file-listing job.
+- **One postings layout** (``LAYOUT_VERSION``): block-packed lists with
+  their block-max bounds and the term's global df on every row, so a query
+  batch computes idf in-task. :func:`load_index` refuses any other layout;
+  ``build_index(resume=True)`` rebuilds it.
 """
 
 from __future__ import annotations
@@ -55,8 +59,9 @@ DOC_MAP_SCHEMA = "ord long, docid string, dl long, content_sha256 string"
 # the bucket-count cap; an index's own count is sized from its postings
 # (:func:`pack_layout`) and recorded in its meta
 NUM_BUCKETS = 64
-# v3: per-term global df stored on every posting row — query batches need no
-# separate df-lookup job (it was ~30-90% of a small batch's latency)
+# the one postings layout: block-packed lists hive-partitioned by term
+# bucket, with the per-term global df stored on every posting row (query
+# batches need no separate df-lookup job). Older layouts are rebuilt.
 LAYOUT_VERSION = 3
 
 
@@ -71,7 +76,7 @@ class IndexMeta:
     b: float
     input_fingerprint: str
     num_buckets: int = NUM_BUCKETS
-    layout_version: int = 1
+    layout_version: int = 1  # metas without the field predate layout 2
 
 
 class InvertedIndex:
@@ -84,38 +89,28 @@ class InvertedIndex:
 
     @property
     def postings(self) -> DataFrame:
-        """All postings. From layout v2 on the read uses the declared schema
-        (no schema-inference job); layout v1 infers."""
-        root = os.path.join(self.path, "postings")
-        if self.meta.layout_version < 2:
-            return self.spark.read.parquet(root)
-        return self.spark.read.schema(self.postings_schema).parquet(root)
+        """All postings, read with the declared schema (no schema-inference
+        job)."""
+        return self.spark.read.schema(self.postings_schema).parquet(os.path.join(self.path, "postings"))
 
     @property
     def postings_schema(self) -> StructType:
-        """The layout's declared postings schema in the column order a
-        parquet read yields: the file columns (``df`` from layout v3 on),
-        then the ``bucket`` partition column."""
-        s = StructType.fromDDL(POSTINGS_SCHEMA + (", df long" if self.meta.layout_version >= 3 else ""))
+        """The declared postings schema in the column order a parquet read
+        yields: the file columns (``df`` last), then the ``bucket``
+        partition column."""
+        s = StructType.fromDDL(POSTINGS_SCHEMA + ", df long")
         return StructType([f for f in s.fields if f.name != "bucket"] + [s["bucket"]])
 
     def postings_for(self, terms) -> DataFrame:
         """The postings of the buckets that can hold ``terms`` — the
         query-time open. Bucket ids are a pure function of the term,
-        computed in-process."""
+        computed in-process; only the ``bucket=<b>`` directories among them
+        that exist are read, with the declared schema: one listing of the
+        postings directory and no schema-inference or partition-discovery
+        job. A bucket without a directory holds no postings."""
         nb = self.meta.num_buckets
-        return self.postings_in_buckets({spark_term_bucket(t, nb) for t in terms})
-
-    def postings_in_buckets(self, buckets) -> DataFrame:
-        """Read only the ``bucket=<b>`` directories of ``buckets`` that exist,
-        with the declared schema: one listing of the postings directory and
-        no schema-inference or partition-discovery job. A bucket without a
-        directory holds no postings. Layout v1 has no buckets and reads
-        whole."""
-        if self.meta.layout_version < 2:
-            return self.postings
+        want = {spark_term_bucket(t, nb) for t in terms}
         root = os.path.join(self.path, "postings")
-        want = {int(b) for b in buckets}
         dirs = [d for d in fsio.list_files(os.path.join(root, "bucket=*")) if int(d.rsplit("=", 1)[1]) in want]
         if not dirs:
             return self.spark.createDataFrame([], self.postings_schema)
@@ -176,7 +171,14 @@ def input_fingerprint(docs: DataFrame) -> str:
 
 
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:
+    """Open the index at ``path``; an index in another postings layout than
+    ``LAYOUT_VERSION`` raises ``ValueError`` (rebuild it)."""
     meta = IndexMeta(**fsio.read_json(_meta_path(path)))
+    if meta.layout_version != LAYOUT_VERSION:
+        raise ValueError(
+            f"index at {path} has postings layout {meta.layout_version}, this engine reads only "
+            f"layout {LAYOUT_VERSION}: rebuild it with build_index"
+        )
     return InvertedIndex(spark, path, meta)
 
 
@@ -187,6 +189,10 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
 # distributed waves win — and the scaling benches stay on the
 # scale-shaped path)
 DRIVER_ORDINALS_MAX = 65_536
+
+# tokenize-task size target: build_index repartitions an input whose
+# partitions each hold more than twice this many documents
+BUILD_DOCS_PER_TASK = 2000
 
 
 def _ordinals_auto(
@@ -300,7 +306,7 @@ def pack_layout(postings_rows: int, num_buckets: int | None = None, pack_group: 
 
 def _pack_and_write(
     spark: SparkSession, td: DataFrame, path: str, avgdl: float, k1: float, b: float,
-    num_shards: int, bake_df: bool = True, pack_group: str = "auto", num_buckets: int | None = None,
+    num_shards: int, pack_group: str = "auto", num_buckets: int | None = None,
     n_docs: int | None = None, explain_out: dict | None = None,
     postings_rows: int | None = None,
 ) -> tuple[int, list[dict]]:
@@ -337,17 +343,16 @@ def _pack_and_write(
       bucket share regardless of term skew (the doc-range salting story).
       Global df then cannot be counted in-group; it comes from a slim
       (term)-projection count over the pre-pack rows, broadcast-joined
-      onto the packed rows (one extra columnar scan; broadcast bounds the
-      vocabulary at ~10^7 terms — beyond that use bake_df=False/layout v2).
-      Pick this for monolithic builds where one term's postings exceed a
-      task (df ≳ 10^9).
+      onto the packed rows (one extra columnar scan; the broadcast bounds
+      the vocabulary at ~10^7 terms). Pick this for monolithic builds
+      where one term's postings exceed a task (df ≳ 10^9).
     - ``'auto'`` picks bucket while rows per bucket stay within
       ``PACK_BUCKET_MAX_GROUP_ROWS`` and shard_bucket above it."""
 
     if postings_rows is None:
         postings_rows = int(n_docs * max(avgdl, 1.0)) if n_docs else 0
     num_buckets, pack_group = pack_layout(postings_rows, num_buckets, pack_group)
-    in_group_df = bake_df and pack_group == "bucket"
+    in_group_df = pack_group == "bucket"
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["term", "ord"])
@@ -371,13 +376,7 @@ def _pack_and_write(
         # Rare identifier terms (the vast majority in a code corpus) pack
         # single-block lists — one vectorized pass over all of them; only
         # multi-block lists (hot terms) take the per-list path.
-        # LLMRS_PACK_BATCHED=0 forces the per-list path everywhere — a
-        # measurement escape hatch for the shared-bus scaling A/B in
-        # BENCH/BASELINE.md, not a production knob.
-        if os.environ.get("LLMRS_PACK_BATCHED", "1") == "0":
-            small = np.zeros_like(counts, dtype=bool)
-        else:
-            small = counts <= codec.BLOCK
+        small = counts <= codec.BLOCK
         frames = []
         if small.any():
             s_starts, s_counts = starts[small], counts[small]
@@ -426,7 +425,7 @@ def _pack_and_write(
     td_b = td.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)))
     group_cols = ["bucket"] if pack_group == "bucket" else ["shard", "bucket"]
     postings = td_b.groupBy(*group_cols).applyInPandas(lambda key, pdf: pack(pdf), schema=schema)
-    if bake_df and not in_group_df:
+    if not in_group_df:
         # shard_bucket mode: global df from a slim (term) count over the
         # pre-pack rows (map-side combinable; one row per (doc, term) so
         # count == df), broadcast onto the packed rows
@@ -470,19 +469,8 @@ def _pack_and_write(
 
 
 def _manifest_and_meta(
-    spark: SparkSession,
-    path: str,
-    shards: list[dict],
-    n_docs: int,
-    avgdl: float,
-    fp: str,
-    num_shards: int,
-    shard_size: int,
-    tokenizer_mode: str,
-    k1: float,
-    b: float,
-    num_buckets: int,
-    layout_version: int = LAYOUT_VERSION,
+    spark: SparkSession, path: str, shards: list[dict], n_docs: int, avgdl: float, fp: str,
+    num_shards: int, shard_size: int, tokenizer_mode: str, k1: float, b: float, num_buckets: int,
     build_metrics: dict | None = None,
 ) -> InvertedIndex:
     """Write the manifest (the per-shard triples ``_pack_and_write``
@@ -506,7 +494,7 @@ def _manifest_and_meta(
         b=b,
         input_fingerprint=fp,
         num_buckets=num_buckets,
-        layout_version=layout_version,
+        layout_version=LAYOUT_VERSION,
     )
     fsio.write_json(_meta_path(path), meta.__dict__)
     return InvertedIndex(spark, path, meta)
@@ -547,7 +535,6 @@ def build_index_from_forward(
     num_shards: int = 8,
     k1: float = codec.DEFAULT_K1,
     b: float = codec.DEFAULT_B,
-    bake_df: bool = True,
     pack_group: str = "auto",
     num_buckets: int | None = None,
 ) -> InvertedIndex:
@@ -599,12 +586,11 @@ def build_index_from_forward(
         .select("ord", "dl", "term", "tf", "shard")
     )
     num_buckets, shards = _pack_and_write(
-        spark, td, path, avgdl, k1, b, num_shards, bake_df=bake_df, pack_group=pack_group,
+        spark, td, path, avgdl, k1, b, num_shards, pack_group=pack_group,
         num_buckets=num_buckets, n_docs=n_docs,
     )
     return _manifest_and_meta(
-        spark, path, shards, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
-        num_buckets, layout_version=LAYOUT_VERSION if bake_df else 2,
+        spark, path, shards, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b, num_buckets,
     )
 
 
@@ -617,7 +603,6 @@ def build_index(
     b: float = codec.DEFAULT_B,
     resume: bool = False,
     keep_forward: bool = False,
-    bake_df: bool = True,
     pack_group: str = "auto",
     num_buckets: int | None = None,
     explain_out: dict | None = None,
@@ -626,10 +611,9 @@ def build_index(
 
     ``keep_forward=True`` retains the tokenization checkpoint
     (``_td_checkpoint``) so :attr:`InvertedIndex.forward_ords` can serve the
-    (ord, term, tf, dl) table without re-tokenizing. ``bake_df=False``
-    writes layout v2 (no per-row global df — for vocabularies too large to
-    broadcast at build; query paths then run a per-batch df job).
-    ``pack_group='auto'`` (default) resolves bucket vs shard_bucket from
+    (ord, term, tf, dl) table without re-tokenizing. ``resume=True`` skips
+    the build when ``path`` holds an index of the same input, tokenizer mode
+    and layout; any other index there is rebuilt. ``pack_group='auto'`` (default) resolves bucket vs shard_bucket from
     the measured rows-per-bucket cutover (``PACK_BUCKET_MAX_GROUP_ROWS``;
     10^6-doc builds were 4.3× slower in bucket mode —
     BENCH/SCALE_PROOF_r05.md). ``'shard_bucket'`` bounds pack-task memory
@@ -649,13 +633,12 @@ def build_index(
     """
     spark = docs.sparkSession
 
-    expected_layout = LAYOUT_VERSION if bake_df else 2
     if resume and fsio.exists(_meta_path(path)) and fsio.exists(_manifest_path(path)):
-        meta = load_index(spark, path).meta
+        meta = IndexMeta(**fsio.read_json(_meta_path(path)))  # any layout: a stale one is rebuilt
         if (
-            meta.input_fingerprint == input_fingerprint(docs)
+            meta.layout_version == LAYOUT_VERSION
+            and meta.input_fingerprint == input_fingerprint(docs)
             and meta.tokenizer_mode == tokenizer_mode
-            and meta.layout_version == expected_layout
             and (not keep_forward or fsio.exists(os.path.join(path, "_td_checkpoint")))
         ):
             return InvertedIndex(spark, path, meta)
@@ -663,7 +646,6 @@ def build_index(
     if "content_sha256" not in docs.columns:
         docs = docs.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
-    _phase_log = os.environ.get("LLMRS_BUILD_PHASE_LOG") == "1"
     _t0 = time.perf_counter()
     _build_start = _t0
     _phase_seconds: dict[str, float] = {}
@@ -672,8 +654,6 @@ def build_index(
         nonlocal _t0
         now = time.perf_counter()
         _phase_seconds[name] = round(now - _t0, 3)
-        if _phase_log:
-            print(f"[build-phase] {name}: {now - _t0:.1f}s", flush=True)
         _t0 = now
 
     # --- dense ordinals by docid order (deterministic, distributed) -------
@@ -701,13 +681,12 @@ def build_index(
     # on a real cluster, where the 10^12-file architecture builds bounded
     # document-partitioned segments and input splits are plentiful) — then
     # no shuffle is added.
-    # A frame of at most 2 × docs_per_task docs never repartitions, so it
-    # skips the logical → RDD conversion that reads the partition count.
-    docs_per_task = int(os.environ.get("LLMRS_BUILD_DOCS_PER_TASK", "2000"))
-    if n_docs > 2 * docs_per_task:
+    # A frame of at most 2 × BUILD_DOCS_PER_TASK docs never repartitions, so
+    # it skips the logical → RDD conversion that reads the partition count.
+    if n_docs > 2 * BUILD_DOCS_PER_TASK:
         n_parts = docs.rdd.getNumPartitions()
-        target_parts = min(max(spark.sparkContext.defaultParallelism, -(-n_docs // docs_per_task)), 65536)
-        if n_parts < target_parts and n_docs / max(n_parts, 1) > 2 * docs_per_task:
+        target_parts = min(max(spark.sparkContext.defaultParallelism, -(-n_docs // BUILD_DOCS_PER_TASK)), 65536)
+        if n_parts < target_parts and n_docs / max(n_parts, 1) > 2 * BUILD_DOCS_PER_TASK:
             docs = docs.repartition(target_parts)
 
     # tf is counted inside the tokenizer UDF (term_counts_col): one row per
@@ -776,7 +755,7 @@ def build_index(
             F.sum(F.when(F.col("tf") > 0, F.lit(1)).otherwise(F.lit(0))).alias("postings_rows"),
         )
     )
-    ckpt.write.mode("overwrite").option("compression", os.environ.get("LLMRS_CKPT_CODEC", "zstd")).parquet(td_path)
+    ckpt.write.mode("overwrite").option("compression", "zstd").parquet(td_path)
     if slim is not None:
         slim.unpersist()  # ords fully materialized into the checkpoint write
     stats = obs.get
@@ -803,7 +782,7 @@ def build_index(
     # overhead on millions of tiny groups dominates; bucketing amortizes it
     # while each term still packs independently inside the group.
     num_buckets, shards = _pack_and_write(
-        spark, td, path, avgdl, k1, b, num_shards, bake_df=bake_df, pack_group=pack_group,
+        spark, td, path, avgdl, k1, b, num_shards, pack_group=pack_group,
         num_buckets=num_buckets, n_docs=n_docs, explain_out=explain_out,
         postings_rows=int(stats["postings_rows"] or 0),
     )
@@ -812,7 +791,7 @@ def build_index(
     wall = time.perf_counter() - _build_start
     idx = _manifest_and_meta(
         spark, path, shards, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
-        num_buckets, layout_version=expected_layout,
+        num_buckets,
         build_metrics={
             "phase_seconds": _phase_seconds,
             "wall_seconds": round(wall, 3),

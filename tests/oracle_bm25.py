@@ -238,7 +238,7 @@ def score_rows_exhaustive(qid: str, rows: list, k: int, k1: float, b: float, avg
 
 
 def score_rows_block_max(
-    qid: str, rows: list, k: int, k1: float, b: float, avgdl: float, bound_scale: float | None = 1.0
+    qid: str, rows: list, k: int, k1: float, b: float, avgdl: float, bound_scale: float = 1.0
 ) -> pd.DataFrame:
     """One query through the engine's block-max kernel."""
     uniq, scores = _block_max_arrays(rows, k, k1, b, avgdl, {}, bound_scale)

@@ -254,39 +254,50 @@ def test_pack_auto_uses_exact_postings_rows(spark, corpus, tmp_path_factory, mon
     assert seen["postings_rows"] == actual and actual > 0
 
 
-def test_merge_auto_resolves_by_shard_count(spark, corpus, queries, index, tmp_path_factory):
-    # merge='auto' (now the default): <=32 shards -> single window; >32
-    # shards -> fanin-8 tree (extra fold level visible as a second Window),
-    # results identical to the explicit window merge either way
-    def n_windows(df):
-        return df._jdf.queryExecution().optimizedPlan().toString().count("Window [row_number()")
+def _n_windows(df):
+    return df._jdf.queryExecution().optimizedPlan().toString().count("Window [row_number()")
 
-    small = search(index, queries, k=5, plan="distributed", merge="auto")  # 4 shards
-    assert n_windows(small) == 1
+
+def test_merge_auto_resolves_by_shard_count(spark, corpus, queries, index, tmp_path_factory, monkeypatch):
+    # the distributed merge follows the shard count: up to
+    # TREE_MERGE_MIN_SHARDS (32) one window; above it a fanin-8 tree (an
+    # extra fold level, visible as a second Window), results identical to
+    # the single window either way
+    small = search(index, queries, k=5, plan="distributed")  # 4 shards
+    assert _n_windows(small) == 1
 
     path = str(tmp_path_factory.mktemp("idx64"))
     idx64 = build_index(corpus.select("docid", "content", "content_sha256"), path, num_shards=64)
-    big = search(idx64, queries, k=5, plan="distributed", merge="auto")
-    assert n_windows(big) == 2  # 64 shards -> one fanin-8 fold + final rank
+    big = search(idx64, queries, k=5, plan="distributed")
+    assert _n_windows(big) == 2  # 64 shards -> one fanin-8 fold + final rank
     a = sorted(map(tuple, big.collect()))
-    b = sorted(map(tuple, search(idx64, queries, k=5, plan="distributed", merge="window").collect()))
-    assert a == b and len(a) > 0
+    monkeypatch.setattr(bm25, "TREE_MERGE_MIN_SHARDS", 64)
+    window = search(idx64, queries, k=5, plan="distributed")
+    assert _n_windows(window) == 1
+    assert sorted(map(tuple, window.collect())) == a and len(a) > 0
 
 
-def test_tree_merge_equals_single_window(spark, corpus, queries, tmp_path_factory):
+def test_tree_merge_equals_single_window(spark, corpus, queries, tmp_path_factory, monkeypatch):
     # round-3 verdict #8: the fanin-ary tree merge (the 10^5-shard serving
     # path) must be result-identical to the one-window merge. 16 shards
     # with fanin=4 exercises a real 2-level fold (16 -> 4 -> final).
     path = str(tmp_path_factory.mktemp("idx_tree"))
     idx16 = build_index(corpus.select("docid", "content", "content_sha256"), path, num_shards=16)
     a = _collect_runs(search(idx16, queries, k=10, plan="distributed"))
-    b = _collect_runs(search(idx16, queries, k=10, plan="distributed", merge="tree", merge_fanin=4))
-    assert a == b
+    monkeypatch.setattr(bm25, "TREE_MERGE_MIN_SHARDS", 0)
+    monkeypatch.setattr(bm25, "TREE_MERGE_FANIN", 4)
+    tree = search(idx16, queries, k=10, plan="distributed")
+    assert _n_windows(tree) == 2
+    assert _collect_runs(tree) == a
     # degenerate case: fanin >= num_shards is exactly the single window
-    c = _collect_runs(search(idx16, queries, k=10, plan="distributed", merge="tree", merge_fanin=64))
-    assert a == c
-    with pytest.raises(ValueError):
-        search(idx16, queries, k=10, plan="distributed", merge="nope")
+    monkeypatch.setattr(bm25, "TREE_MERGE_FANIN", 64)
+    one = search(idx16, queries, k=10, plan="distributed")
+    assert _n_windows(one) == 1
+    assert _collect_runs(one) == a
+    # a fan-in below 2 never shrinks the tree: refused when the plan is built
+    monkeypatch.setattr(bm25, "TREE_MERGE_FANIN", 1)
+    with pytest.raises(ValueError, match="TREE_MERGE_FANIN"):
+        search(idx16, queries, k=10, plan="distributed")
 
 
 def test_wand_equals_exhaustive_large_k(index, queries, monkeypatch):
@@ -456,27 +467,76 @@ def test_bm25_dataframe_forward_reuse_identical(spark, corpus, queries, tmp_path
             assert a == pytest.approx(b, abs=1e-12)
 
 
-def test_bake_df_false_layout_v2_searches_equal(spark, corpus, queries, tmp_path):
-    # bake_df=False writes layout v2 (no per-row df); search falls back to
-    # the per-batch df job and must produce identical rankings
-    idx2 = build_index(
-        corpus.select("docid", "content", "content_sha256"),
-        str(tmp_path / "v2_idx"), num_shards=4, bake_df=False,
-    )
-    assert idx2.meta.layout_version == 2
-    assert "df" not in idx2.postings.columns
-    assert idx2.postings_schema == idx2.postings.schema
-    got = _collect_runs(search(idx2, queries, k=10))
-    idx3 = build_index(
-        corpus.select("docid", "content", "content_sha256"),
-        str(tmp_path / "v3_idx"), num_shards=4,
-    )
-    want = _collect_runs(search(idx3, queries, k=10))
-    assert set(got) == set(want)
-    for qid in got:
-        assert [d for d, _ in got[qid]] == [d for d, _ in want[qid]]
-        for (_, a), (_, b) in zip(got[qid], want[qid]):
-            assert a == pytest.approx(b, abs=1e-9)
+def test_older_layout_is_refused_and_rebuilt_on_resume(spark, tmp_path):
+    # one postings layout: an index whose meta records another layout does
+    # not load, and a resumed build over it rebuilds instead of raising
+    import json
+
+    from llm_rankers_spark.operators.index_build import LAYOUT_VERSION
+
+    docs = spark.createDataFrame([("d1", "alpha beta"), ("d2", "beta gamma")], "docid string, content string")
+    path = str(tmp_path / "old")
+    build_index(docs, path, tokenizer_mode="simple", num_shards=2)
+    meta_path = os.path.join(path, "_index_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["layout_version"] = 2
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild") as err:
+        load_index(spark, path)
+    assert path in str(err.value)
+    idx = build_index(docs, path, tokenizer_mode="simple", num_shards=2, resume=True)
+    assert idx.meta.layout_version == LAYOUT_VERSION == load_index(spark, path).meta.layout_version
+    assert verify_index(idx)["ok"]
+    qs = spark.createDataFrame([("q1", "beta")], "qid string, query string")
+    assert sorted(r["docid"] for r in search(idx, qs, k=5).collect()) == ["d1", "d2"]
+
+
+@pytest.mark.parametrize("field,value", [("k1", 1.2), ("b", 0.75), ("tokenizer_mode", "simple")])
+def test_segments_must_share_scoring_params(spark, index, queries, field, value):
+    # segments searched together are scored with one k1/b and one query
+    # tokenization; a segment built with others is refused before any job
+    from dataclasses import replace
+
+    from llm_rankers_spark.operators.index_build import InvertedIndex
+
+    other = InvertedIndex(spark, index.path + "_other", replace(index.meta, **{field: value}))
+    for plan in ("driver", "distributed"):
+        with pytest.raises(ValueError, match="must share"):
+            search([index, other], queries, k=10, plan=plan)
+
+
+def test_distributed_search_runs_no_bucket_collect(spark, index, queries):
+    # the distributed plan opens a one-bucket index's postings as a
+    # semi-join on the batch's terms: no job collects the batch's bucket
+    # ids first (12 jobs with that collect, 10 without)
+    assert index.meta.num_buckets == 1
+    search(index, queries, k=10, plan="distributed").collect()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("dist_one_index", "dist_one_index")
+    try:
+        rows = search(index, queries, k=10, plan="distributed").collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) > 0
+    assert len(sc.statusTracker().getJobIdsForGroup("dist_one_index")) <= 10
+
+
+def test_distributed_search_prunes_term_buckets(spark, corpus, index, tmp_path):
+    from llm_rankers_spark.functions.xxh64 import spark_term_bucket
+
+    # a large batch over few distinct terms reads only those terms' bucket
+    # directories of a 64-bucket index: the batch's query count says
+    # nothing about how many buckets its terms hit
+    idx = build_index(corpus.select("docid", "content", "content_sha256"), str(tmp_path / "b64"), num_shards=4, num_buckets=64)
+    texts = ["parse query", "import self", "helper"]
+    qs = spark.createDataFrame([(f"q{i}", texts[i % 3]) for i in range(60)], "qid string, query string")
+    out = search(idx, qs, k=10, plan="distributed")
+    want = {spark_term_bucket(t, 64) for t in ("parse", "query", "import", "self", "helper")}
+    read = {int(f.split("bucket=")[1].split("/")[0]) for f in out.inputFiles() if "/postings/" in f}
+    assert read and read <= want < set(range(64))
+    assert _collect_runs(out) == _collect_runs(search(index, qs, k=10, plan="distributed"))
 
 
 def test_declared_postings_schema_equals_inferred(spark, index):

@@ -63,19 +63,13 @@ def test_wand_equals_exhaustive_random_corpora(args):
     # scoring under another avgdl (global statistics across segments) keeps
     # the vectorized kernel with rescaled block bounds, and stays exact
     avgdl2 = avgdl * rng.uniform(0.25, 4.0)
-    baked = SimpleNamespace(k1=DEFAULT_K1, b=DEFAULT_B, avgdl=avgdl)
+    baked = SimpleNamespace(avgdl=avgdl)
     ex2 = score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl2)
     bm2 = score_rows_block_max(
-        "q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl2, _bound_scale(baked, DEFAULT_K1, DEFAULT_B, avgdl2)
+        "q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl2, _bound_scale(baked, avgdl2)
     )
     assert bm2["ord"].tolist() == ex2["ord"].tolist()
     np.testing.assert_array_equal(bm2["score"].to_numpy(), ex2["score"].to_numpy())
-    # other k1/b than the baked ones: the kernel falls back to tf-norm <= 1
-    assert _bound_scale(baked, 1.2, 0.75, avgdl) is None
-    ex3 = score_rows_exhaustive("q", rows, k, 1.2, 0.75, avgdl2)
-    bm3 = score_rows_block_max("q", rows, k, 1.2, 0.75, avgdl2, None)
-    assert bm3["ord"].tolist() == ex3["ord"].tolist()
-    np.testing.assert_array_equal(bm3["score"].to_numpy(), ex3["score"].to_numpy())
     # the vectorized interval-pruned kernel (round-3 hot-list path) must be
     # bit-identical too — same sorted-term accumulation order
     bm = score_rows_block_max("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
@@ -147,7 +141,7 @@ def test_block_max_skipping_engages_under_global_avgdl():
     )
     rows = [(_row(hot), 0.05), (_row(rare), 8.0)]
     global_avgdl = 1.7 * avgdl
-    scale = _bound_scale(SimpleNamespace(k1=DEFAULT_K1, b=DEFAULT_B, avgdl=avgdl), DEFAULT_K1, DEFAULT_B, global_avgdl)
+    scale = _bound_scale(SimpleNamespace(avgdl=avgdl), global_avgdl)
     assert 0.0 < scale < 1.0
     reset_wand_stats()
     bm = score_rows_block_max("q", rows, 10, DEFAULT_K1, DEFAULT_B, global_avgdl, scale)
