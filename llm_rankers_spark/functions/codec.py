@@ -18,16 +18,17 @@ Layout of one packed posting list (one (term, shard) row):
   10^12 docs.
 - ``block_last`` : last doc ordinal of each 128-entry block (skip pointers).
 - ``block_max_tfn``: per-block max of tf/(tf + k1*(1-b+b*dl/avgdl)) at the
-  index-default (k1=0.9, b=0.4) — the block-max WAND upper bound is
-  ``idf * block_max_tfn``. Valid only for the baked parameters; the scorer
-  falls back to ``idf * 1.0`` bounds (plain WAND) when queried with others.
+  index's k1, b and avgdl — the block-max WAND upper bound is
+  ``idf * block_max_tfn``. A search always scores with the baked k1 and b;
+  under another avgdl (global statistics across segments) the scorer
+  rescales the bounds (``bm25._bound_scale``).
 - ``doc_offs``/``tf_offs``/``dl_offs``: byte offset of each block's start in
   the corresponding blob, enabling block-aligned decode after a skip.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections.abc import Sequence
 
 import numpy as np
 
@@ -36,17 +37,17 @@ DEFAULT_K1 = 0.9  # reference README.md:70 (pyserini --k1 0.9 --b 0.4)
 DEFAULT_B = 0.4
 
 _U64 = np.uint64
-_SEVEN = _U64(7)
 _MASK7 = _U64(0x7F)
 
 
-def encode_varint(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array (vectorized, no per-value Python loop)."""
+def encode_varint(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """LEB128-encode a uint64 array (vectorized, no per-value Python loop)
+    → (stream, each value's encoded length in bytes)."""
     v = np.ascontiguousarray(values, dtype=_U64)
-    if v.size == 0:
-        return b""
     # number of 7-bit groups per value (1..10)
     nbytes = np.ones(v.shape, dtype=np.int64)
+    if v.size == 0:
+        return b"", nbytes
     for k in range(1, 10):
         nbytes += (v >= (_U64(1) << _U64(7 * k))).astype(np.int64)
     offs = np.zeros(v.size, dtype=np.int64)
@@ -59,18 +60,7 @@ def encode_varint(values: np.ndarray) -> bytes:
         byte = ((v[mask] >> _U64(7 * j)) & _MASK7).astype(np.uint8)
         cont = ((nbytes[mask] - 1) > j).astype(np.uint8) << 7
         out[offs[mask] + j] = byte | cont
-    return out.tobytes()
-
-
-def encode_varint_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Like :func:`encode_varint` but also return per-value byte lengths."""
-    v = np.ascontiguousarray(values, dtype=_U64)
-    if v.size == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += (v >= (_U64(1) << _U64(7 * k))).astype(np.int64)
-    return encode_varint(v), nbytes
+    return out.tobytes(), nbytes
 
 
 def decode_varint(buf: bytes | memoryview, count: int | None = None) -> np.ndarray:
@@ -93,74 +83,7 @@ def decode_varint(buf: bytes | memoryview, count: int | None = None) -> np.ndarr
     return out
 
 
-@dataclass
-class PackedPostings:
-    n: int
-    docs_blob: bytes
-    tfs_blob: bytes
-    dls_blob: bytes
-    block_last: np.ndarray  # int64, per block
-    block_max_tfn: np.ndarray  # float64, per block
-    doc_offs: np.ndarray  # int64 byte offsets, per block
-    tf_offs: np.ndarray
-    dl_offs: np.ndarray
-
-
-def _block_offsets(lengths: np.ndarray, n: int) -> np.ndarray:
-    """Byte offset of each BLOCK-aligned block start given per-value lengths."""
-    cum = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=cum[1:])
-    return cum[0:n:BLOCK].copy()
-
-
 def pack_postings(
-    doc_ords: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    avgdl: float,
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
-) -> PackedPostings:
-    """Pack one posting list (doc ordinals must be strictly increasing)."""
-    doc_ords = np.ascontiguousarray(doc_ords, dtype=np.int64)
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    dls = np.ascontiguousarray(dls, dtype=np.int64)
-    n = doc_ords.size
-    if n == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return PackedPostings(0, b"", b"", b"", z, z.astype(np.float64), z, z, z)
-
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = doc_ords[0]
-    np.subtract(doc_ords[1:], doc_ords[:-1], out=deltas[1:])
-    if n > 1 and (deltas[1:] <= 0).any():
-        raise ValueError("doc ordinals must be strictly increasing")
-
-    docs_blob, dlen = encode_varint_with_lengths(deltas)
-    tfs_blob, tlen = encode_varint_with_lengths(tfs)
-    dls_blob, llen = encode_varint_with_lengths(dls)
-
-    nblocks = (n + BLOCK - 1) // BLOCK
-    block_last = doc_ords[np.minimum(np.arange(1, nblocks + 1) * BLOCK, n) - 1]
-    tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-    block_max_tfn = np.array(
-        [tfn[i * BLOCK : (i + 1) * BLOCK].max() for i in range(nblocks)],
-        dtype=np.float64,
-    )
-    return PackedPostings(
-        n=n,
-        docs_blob=docs_blob,
-        tfs_blob=tfs_blob,
-        dls_blob=dls_blob,
-        block_last=block_last.astype(np.int64),
-        block_max_tfn=block_max_tfn,
-        doc_offs=_block_offsets(dlen, n),
-        tf_offs=_block_offsets(tlen, n),
-        dl_offs=_block_offsets(llen, n),
-    )
-
-
-def pack_postings_batched(
     doc_ords: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
@@ -169,20 +92,22 @@ def pack_postings_batched(
     k1: float = DEFAULT_K1,
     b: float = DEFAULT_B,
 ) -> dict[str, list]:
-    """Pack MANY single-block posting lists (each ≤ BLOCK entries) in one
-    vectorized pass — byte-identical to per-list :func:`pack_postings`.
-
-    A code corpus has millions of rare identifier terms whose posting lists
-    hold a handful of entries; per-list numpy-call overhead (not the
-    encoding itself) dominates the index build there. LEB128 encodes each
-    value independently, so the concatenation of per-list blobs equals the
-    per-list slices of one whole-array encoding — three encodes per Arrow
-    batch instead of three per term.
+    """Pack MANY posting lists of any length in one vectorized pass.
 
     ``doc_ords``/``tfs``/``dls`` are the concatenated lists; ``starts`` the
-    group start indices (groups contiguous, each strictly increasing).
-    Returns columns keyed like the postings schema, one list element per
-    group.
+    list start indices (lists contiguous and non-empty, ordinals strictly
+    increasing within each). Returns columns keyed like the postings
+    schema, one element per list.
+
+    A code corpus has millions of rare identifier terms whose lists hold a
+    handful of entries, so per-list numpy-call overhead (not the encoding
+    itself) would dominate a build. LEB128 encodes each value
+    independently, so the concatenation of per-list blobs equals the
+    per-list slices of one whole-array encoding: three encodes per Arrow
+    batch, whatever the list lengths. Blocks partition each list and the
+    lists partition the arrays, so one ``maximum.reduceat`` over all block
+    starts gives every block's bound, and the cumulative byte counts give
+    every list's blob range and every block's offset in its list's blob.
     """
     n_total = int(doc_ords.size)
     if n_total == 0:
@@ -206,49 +131,63 @@ def pack_postings_batched(
     if (deltas[interior] <= 0).any():
         raise ValueError("doc ordinals must be strictly increasing")
 
-    docs_blob, dlen = encode_varint_with_lengths(deltas)
-    tfs_blob, tlen = encode_varint_with_lengths(tfs)
-    dls_blob, llen = encode_varint_with_lengths(dls)
-
-    def byte_ranges(lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        cum = np.zeros(n_total + 1, dtype=np.int64)
-        np.cumsum(lengths, out=cum[1:])
-        return cum[starts], cum[ends]
-
-    d_lo, d_hi = byte_ranges(dlen)
-    t_lo, t_hi = byte_ranges(tlen)
-    l_lo, l_hi = byte_ranges(llen)
+    # block starts: list start + j*BLOCK for each of the list's blocks
+    counts = ends - starts
+    nblocks = (counts + BLOCK - 1) // BLOCK
+    first_block = np.zeros(starts.size + 1, dtype=np.int64)
+    np.cumsum(nblocks, out=first_block[1:])
+    block_list = np.repeat(np.arange(starts.size), nblocks)
+    block_lo = starts[block_list] + (np.arange(first_block[-1]) - first_block[block_list]) * BLOCK
+    block_hi = np.minimum(block_lo + BLOCK, ends[block_list])
 
     tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-    bmax = np.maximum.reduceat(tfn, starts)
-    last = doc_ords[ends - 1]
-    counts = ends - starts
+    bmax = np.maximum.reduceat(tfn, block_lo).tolist()
+    last = doc_ords[block_hi - 1].tolist()
+    fb = first_block.tolist()
 
-    g = starts.size
-    zero = [0]
+    def split(flat: list) -> list[list]:
+        return [flat[lo:hi] for lo, hi in zip(fb[:-1], fb[1:])]
+
+    blobs, offs = {}, {}
+    for name, vals in (("doc", deltas), ("tf", tfs), ("dl", dls)):
+        blob, nbytes = encode_varint(vals)
+        cum = np.zeros(n_total + 1, dtype=np.int64)
+        np.cumsum(nbytes, out=cum[1:])
+        lo = cum[starts]
+        blobs[name] = [blob[a:z] for a, z in zip(lo.tolist(), cum[ends].tolist())]
+        offs[name] = split((cum[block_lo] - lo[block_list]).tolist())
     return {
-        "n": [int(c) for c in counts],
-        "docs_blob": [docs_blob[d_lo[i] : d_hi[i]] for i in range(g)],
-        "tfs_blob": [tfs_blob[t_lo[i] : t_hi[i]] for i in range(g)],
-        "dls_blob": [dls_blob[l_lo[i] : l_hi[i]] for i in range(g)],
-        "block_last": [[int(last[i])] for i in range(g)],
-        "block_max_tfn": [[float(bmax[i])] for i in range(g)],
-        "doc_offs": [zero] * g,
-        "tf_offs": [zero] * g,
-        "dl_offs": [zero] * g,
+        "n": counts.tolist(),
+        "docs_blob": blobs["doc"],
+        "tfs_blob": blobs["tf"],
+        "dls_blob": blobs["dl"],
+        "block_last": split(last),
+        "block_max_tfn": split(bmax),
+        "doc_offs": offs["doc"],
+        "tf_offs": offs["tf"],
+        "dl_offs": offs["dl"],
     }
 
 
-def unpack_all(p: "PackedPostings | dict") -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a whole posting list → (doc_ords, tfs, dls)."""
-    if isinstance(p, dict):
-        n, docs_blob, tfs_blob, dls_blob = p["n"], p["docs_blob"], p["tfs_blob"], p["dls_blob"]
-    else:
-        n, docs_blob, tfs_blob, dls_blob = p.n, p.docs_blob, p.tfs_blob, p.dls_blob
-    deltas = decode_varint(docs_blob, n).astype(np.int64)
-    doc_ords = np.cumsum(deltas)
-    tfs = decode_varint(tfs_blob, n).astype(np.int64)
-    dls = decode_varint(dls_blob, n).astype(np.int64)
+def unpack_lists(
+    n: Sequence[int], docs_blob: Sequence[bytes], tfs_blob: Sequence[bytes], dls_blob: Sequence[bytes]
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode many whole posting lists → concatenated (doc_ords, tfs, dls).
+
+    One varint decode per blob column over the joined blobs, then a
+    segmented cumsum restores each list's ordinals from its deltas (the
+    first delta of a list is its first ordinal). The cumsum runs in
+    uint64, whose wrap-around is exact modulo 2^64, so every list's
+    ordinals come out exact however large the running sum gets."""
+    counts = np.asarray(n, dtype=np.int64)
+    total = int(counts.sum())
+    deltas = decode_varint(b"".join(docs_blob), total)
+    run = np.cumsum(deltas)
+    # minus the running sum before each list, spread over its entries
+    first = np.cumsum(counts) - counts
+    doc_ords = (run - np.repeat(run[first] - deltas[first], counts)).view(np.int64)
+    tfs = decode_varint(b"".join(tfs_blob), total).astype(np.int64)
+    dls = decode_varint(b"".join(dls_blob), total).astype(np.int64)
     return doc_ords, tfs, dls
 
 

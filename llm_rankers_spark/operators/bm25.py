@@ -96,9 +96,7 @@ def _decode_list(row: dict, k1: float, b: float, avgdl: float, cache: dict) -> t
     key = id(row)
     dc = cache.get(key)
     if dc is None:
-        ords, tfs, dls = codec.unpack_all(
-            {"n": int(row["n"]), "docs_blob": row["docs_blob"], "tfs_blob": row["tfs_blob"], "dls_blob": row["dls_blob"]}
-        )
+        ords, tfs, dls = codec.unpack_lists([row["n"]], [row["docs_blob"]], [row["tfs_blob"]], [row["dls_blob"]])
         tf = tfs.astype(np.float64)
         denom = tf + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl)
         dc = (ords, tf, denom)

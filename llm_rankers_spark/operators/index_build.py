@@ -367,59 +367,14 @@ def _pack_and_write(
         # yields both boundaries
         t_change = terms[1:] != terms[:-1]
         starts = np.flatnonzero(np.r_[True, t_change | (shards_arr[1:] != shards_arr[:-1])])
-        counts = np.diff(np.r_[starts, terms.size])
-        # global df per term (all its rows are in this group), spread to chunks
-        t_starts = np.flatnonzero(np.r_[True, t_change])
-        t_counts = np.diff(np.r_[t_starts, terms.size])
-        chunk_df = t_counts[np.searchsorted(t_starts, starts, side="right") - 1]
-
-        # Rare identifier terms (the vast majority in a code corpus) pack
-        # single-block lists — one vectorized pass over all of them; only
-        # multi-block lists (hot terms) take the per-list path.
-        small = counts <= codec.BLOCK
-        frames = []
-        if small.any():
-            s_starts, s_counts = starts[small], counts[small]
-            row_mask = small[np.repeat(np.arange(starts.size), counts)]
-            sub_starts = np.r_[0, np.cumsum(s_counts[:-1])]
-            cols = codec.pack_postings_batched(
-                ords[row_mask], tfs[row_mask], dls[row_mask], sub_starts,
-                avgdl=avgdl, k1=k1, b=b,
-            )
-            frame = pd.DataFrame({
-                "term": terms[s_starts], "shard": shards_arr[s_starts], "bucket": bucket, **cols,
-            })
-            if in_group_df:
-                frame["df"] = chunk_df[small]
-            frames.append(frame)
-        if (~small).any():
-            out = {c: [] for c in (
-                "term", "shard", "bucket", "n", "docs_blob", "tfs_blob", "dls_blob",
-                "block_last", "block_max_tfn", "doc_offs", "tf_offs", "dl_offs",
-            )}
-            if in_group_df:
-                out["df"] = []
-            for st, c, cdf in zip(starts[~small], counts[~small], chunk_df[~small]):
-                p = codec.pack_postings(
-                    ords[st : st + c], tfs[st : st + c], dls[st : st + c],
-                    avgdl=avgdl, k1=k1, b=b,
-                )
-                out["term"].append(terms[st])
-                out["shard"].append(int(shards_arr[st]))
-                out["bucket"].append(bucket)
-                out["n"].append(p.n)
-                out["docs_blob"].append(p.docs_blob)
-                out["tfs_blob"].append(p.tfs_blob)
-                out["dls_blob"].append(p.dls_blob)
-                out["block_last"].append(p.block_last.tolist())
-                out["block_max_tfn"].append(p.block_max_tfn.tolist())
-                out["doc_offs"].append(p.doc_offs.tolist())
-                out["tf_offs"].append(p.tf_offs.tolist())
-                out["dl_offs"].append(p.dl_offs.tolist())
-                if in_group_df:
-                    out["df"].append(int(cdf))
-            frames.append(pd.DataFrame(out))
-        return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+        cols = codec.pack_postings(ords, tfs, dls, starts, avgdl=avgdl, k1=k1, b=b)
+        frame = pd.DataFrame({"term": terms[starts], "shard": shards_arr[starts], "bucket": bucket, **cols})
+        if in_group_df:
+            # global df per term (all its rows are in this group), spread to chunks
+            t_starts = np.flatnonzero(np.r_[True, t_change])
+            t_counts = np.diff(np.r_[t_starts, terms.size])
+            frame["df"] = t_counts[np.searchsorted(t_starts, starts, side="right") - 1]
+        return frame
 
     schema = POSTINGS_SCHEMA + (", df long" if in_group_df else "")
     td_b = td.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)))

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import time
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -172,8 +173,10 @@ def run_pipeline(
         if resume and fsio.exists(partial_path):
             try:
                 partial_ok = fsio.read_json(partial_path).get("fingerprint") == cfg_fp
-            except Exception:
-                partial_ok = False
+            except Exception as e:  # an unreadable marker only costs a full rerank
+                warnings.warn(
+                    f"rerank resume marker {partial_path} unreadable, reranking all queries: {e!r}", stacklevel=2
+                )
         valid_qids = None
         if partial_ok and fsio.exists(st_rr.path) and fsio.exists(qids_path):
             try:
@@ -185,7 +188,11 @@ def run_pipeline(
                     .join(qh, ["qid", "qhash"], "left_semi")
                     .select("qid")
                 )
-            except Exception:
+            except Exception as e:  # unreadable partial output only costs a full rerank
+                warnings.warn(
+                    f"partial rerank output {st_rr.path} (qids {qids_path}) unreadable, reranking all queries: {e!r}",
+                    stacklevel=2,
+                )
                 existing, valid_qids = None, None
         elif fsio.exists(st_rr.path):
             # stale partial output from a different config: drop it

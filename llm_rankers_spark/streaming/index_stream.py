@@ -104,7 +104,7 @@ def search_segments(spark: SparkSession, root: str, queries: DataFrame, k: int =
 
 def _decode_postings_forward(idx) -> DataFrame:
     """Decode one segment's packed postings back to (docid, term, tf) rows —
-    a mapInPandas unpack per posting row joined with the segment doc_map for
+    a mapInPandas unpack per Arrow batch joined with the segment doc_map for
     the ord→docid mapping. No tokenization; one join per segment."""
     import numpy as np
     import pandas as pd
@@ -112,28 +112,13 @@ def _decode_postings_forward(idx) -> DataFrame:
     from llm_rankers_spark.functions import codec
 
     def unpack_rows(batches):
-        # one output frame per ARROW BATCH, not per posting list (round-6:
-        # the per-list `iterrows` + tiny-DataFrame-per-row version allocated
-        # millions of pandas frames on a code corpus — guide §4.2, hand the
-        # batch to vectorized code once). Decoded values are identical.
+        # one decode and one output frame per ARROW BATCH, not per posting
+        # list (guide §4.2: hand the batch to vectorized code once)
         for pdf in batches:
             if not len(pdf):
                 continue
-            ords_l, tfs_l, counts = [], [], []
-            for n, db, tb, lb in zip(pdf["n"], pdf["docs_blob"], pdf["tfs_blob"], pdf["dls_blob"]):
-                ords, tfs, _dls = codec.unpack_all(
-                    {"n": int(n), "docs_blob": db, "tfs_blob": tb, "dls_blob": lb}
-                )
-                ords_l.append(ords)
-                tfs_l.append(tfs)
-                counts.append(len(ords))
-            yield pd.DataFrame(
-                {
-                    "ord": np.concatenate(ords_l) if ords_l else np.zeros(0, dtype=np.int64),
-                    "term": np.repeat(pdf["term"].to_numpy(), counts),
-                    "tf": np.concatenate(tfs_l) if tfs_l else np.zeros(0, dtype=np.int64),
-                }
-            )
+            ords, tfs, _dls = codec.unpack_lists(pdf["n"], pdf["docs_blob"], pdf["tfs_blob"], pdf["dls_blob"])
+            yield pd.DataFrame({"ord": ords, "term": np.repeat(pdf["term"].to_numpy(), pdf["n"]), "tf": tfs})
 
     decoded = idx.postings.select("term", "n", "docs_blob", "tfs_blob", "dls_blob").mapInPandas(
         unpack_rows, schema="ord long, term string, tf long"

@@ -4,11 +4,12 @@ This is the rank-identity reference of BASELINE.md: same formula, same
 tokenizer, same (score desc, docid asc) tie-break, contributions summed in
 sorted-term order so even float64 op order matches the engine.
 
-It also holds the kernel-level references of tests/test_wand_property.py:
-a doc-at-a-time block-max WAND over packed posting rows
-(:func:`score_rows_wand`), and one-query frames of the engine's two
-vectorized kernels (:func:`score_rows_exhaustive`,
-:func:`score_rows_block_max`).
+It also holds the kernel-level references: a per-list posting packer
+(:func:`pack_posting_list`, the reference of the codec's many-list
+packer) and, for tests/test_wand_property.py, a doc-at-a-time block-max
+WAND over packed posting rows (:func:`score_rows_wand`) and one-query
+frames of the engine's two vectorized kernels
+(:func:`score_rows_exhaustive`, :func:`score_rows_block_max`).
 """
 
 from __future__ import annotations
@@ -66,6 +67,39 @@ def bm25_oracle(
         ranked = sorted(scores.items(), key=lambda t: (-t[1], t[0]))[:k]
         out[qid] = ranked
     return out
+
+
+def pack_posting_list(
+    doc_ords: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    avgdl: float,
+    k1: float = codec.DEFAULT_K1,
+    b: float = codec.DEFAULT_B,
+) -> dict:
+    """Pack ONE posting list with a per-block Python loop — the reference
+    the engine's one-pass :func:`codec.pack_postings` must match byte for
+    byte. Returns one postings row keyed like the schema."""
+    doc_ords = np.ascontiguousarray(doc_ords, dtype=np.int64)
+    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
+    dls = np.ascontiguousarray(dls, dtype=np.int64)
+    n = doc_ords.size
+    deltas = np.diff(doc_ords, prepend=0)
+    if n > 1 and (deltas[1:] <= 0).any():
+        raise ValueError("doc ordinals must be strictly increasing")
+    tfn = tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+    row = {"n": n, "block_last": [], "block_max_tfn": []}
+    for blob_col, offs_col, vals in (
+        ("docs_blob", "doc_offs", deltas), ("tfs_blob", "tf_offs", tfs), ("dls_blob", "dl_offs", dls)
+    ):
+        row[blob_col], row[offs_col] = b"", []
+        for lo in range(0, n, codec.BLOCK):
+            row[offs_col].append(len(row[blob_col]))
+            row[blob_col] += codec.encode_varint(vals[lo : lo + codec.BLOCK])[0]
+    for lo in range(0, n, codec.BLOCK):
+        row["block_last"].append(int(doc_ords[min(lo + codec.BLOCK, n) - 1]))
+        row["block_max_tfn"].append(float(tfn[lo : lo + codec.BLOCK].max()))
+    return row
 
 
 def fresh_shard_manifest(spark, index_path: str) -> list[dict]:

@@ -679,3 +679,66 @@ def test_doc_map_schema_is_declared(spark, index):
     inferred = spark.read.parquet(os.path.join(index.path, "doc_map")).schema
     assert inferred == StructType.fromDDL(DOC_MAP_SCHEMA)
     assert index.doc_map.schema == inferred
+
+
+def _docids(runs: dict) -> dict:
+    return {q: [d for d, _ in hits] for q, hits in runs.items()}
+
+
+def _postings_rows(idx) -> list[dict]:
+    return [r.asDict() for r in idx.postings.drop("bucket").orderBy("term", "shard").collect()]
+
+
+def test_single_shard_build_packs_multi_block_lists(spark, corpus, queries, oracle, tmp_path, monkeypatch):
+    """At one shard the corpus's common terms hold lists of up to 300
+    entries (several codec blocks): every stored row is what the per-list
+    reference packer makes of its decoded list, block-max search equals the
+    oracle, each bucket file keeps its terms sorted (the premise of the
+    scan's term-range pruning), and compacting two halves keeps it all."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    from llm_rankers_spark.functions import codec
+    from llm_rankers_spark.streaming.index_stream import compact_segments, search_segments
+
+    from .oracle_bm25 import pack_posting_list
+
+    docs = corpus.select("docid", "content", "content_sha256")
+    idx = build_index(docs, str(tmp_path / "one"), num_shards=1)
+    rows = _postings_rows(idx)
+    assert max(r["n"] for r in rows) > 2 * codec.BLOCK
+    # (a) every row is the reference pack of its decoded list
+    for r in rows:
+        ords, tfs, dls = codec.unpack_lists([r["n"]], [r["docs_blob"]], [r["tfs_blob"]], [r["dls_blob"]])
+        want = pack_posting_list(ords, tfs, dls, idx.meta.avgdl, idx.meta.k1, idx.meta.b)
+        assert {c: r[c] for c in want} == want, r["term"]
+    # (b) the block-max kernel over multi-block lists equals the oracle
+    monkeypatch.setattr(bm25, "EXHAUSTIVE_MAX_POSTINGS", 0)
+    want_runs = {q: hits for q, hits in oracle.items() if hits}
+    got = _collect_runs(search(idx, queries, k=10))
+    assert _docids(got) == _docids(want_runs)
+    for q, hits in got.items():
+        assert [s for _, s in hits] == pytest.approx([s for _, s in want_runs[q]], abs=1e-6)
+    # (c) terms are non-decreasing within each bucket file
+    files = glob.glob(os.path.join(idx.path, "postings", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f
+    # (d) two parity halves, each a one-shard segment, compact to the same rows
+    root = str(tmp_path / "segs")
+    halves = docs.join(idx.doc_map.select("docid", "ord"), "docid")
+    for i in (0, 1):
+        half = halves.filter(F.col("ord") % 2 == i).drop("ord")
+        build_index(half, os.path.join(root, f"segment_{i:05d}"), num_shards=1)
+    with open(os.path.join(root, "_segments.json"), "w") as fh:
+        json.dump({"segments": ["segment_00000", "segment_00001"], "epochs": [0, 1]}, fh)
+    before = _collect_runs(search_segments(spark, root, queries, k=10))
+    compact_segments(spark, root, num_shards=1)
+    compacted = load_index(spark, os.path.join(root, "segment_compacted"))
+    assert sum(s["postings"] for s in compacted.manifest["shards"]) == sum(r["n"] for r in rows)
+    assert _postings_rows(compacted) == rows
+    after = _collect_runs(search_segments(spark, root, queries, k=10))
+    assert _docids(before) == _docids(after) == _docids(got)

@@ -73,6 +73,26 @@ def test_resume_from_partial_equals_single_shot(spark, corpus, queries, tmp_path
     assert _read_trec(out_a["trec_path"]) == _read_trec(out_b["trec_path"])
 
 
+def test_corrupt_partial_marker_warns_and_equals_single_shot(spark, corpus, queries, tmp_path):
+    # an unreadable per-qid resume marker falls back to a full rerank, and
+    # says so once instead of swallowing the error
+    import warnings
+
+    out_a = run_pipeline(spark, corpus, queries, str(tmp_path / "a"), hits=15, rerank_k=5, comparator=MockComparator())
+    wd = str(tmp_path / "b")
+    run_pipeline(spark, corpus, queries, wd, hits=15, rerank_k=5, comparator=MockComparator())
+    marker = os.path.join(wd, "_reranked_stage.json.partial")
+    with open(marker, "w") as f:
+        f.write("{not json")
+    os.remove(os.path.join(wd, "_reranked_stage.json"))  # re-enter the rerank stage
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out_b = run_pipeline(spark, corpus, queries, wd, hits=15, rerank_k=5, comparator=MockComparator())
+    msgs = [str(w.message) for w in caught if "unreadable" in str(w.message)]
+    assert len(msgs) == 1 and marker in msgs[0]
+    assert _read_trec(out_a["trec_path"]) == _read_trec(out_b["trec_path"])
+
+
 def test_changed_method_invalidates_partial_resume(spark, corpus, queries, tmp_path):
     # round-1 advice: per-qid resume must NOT trust parquet produced under a
     # different rerank config — rerunning with a new method in the same

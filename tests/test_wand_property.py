@@ -15,18 +15,10 @@ from llm_rankers_spark.operators.bm25 import _bound_scale, reset_wand_stats, wan
 from .oracle_bm25 import score_rows_block_max, score_rows_exhaustive, score_rows_wand
 
 
-def _row(p):
-    return {
-        "n": p.n,
-        "docs_blob": p.docs_blob,
-        "tfs_blob": p.tfs_blob,
-        "dls_blob": p.dls_blob,
-        "doc_offs": p.doc_offs,
-        "tf_offs": p.tf_offs,
-        "dl_offs": p.dl_offs,
-        "block_last": p.block_last,
-        "block_max_tfn": p.block_max_tfn,
-    }
+def _row(ords, tfs, dls, avgdl):
+    """One posting list packed at the default k1/b → its postings row."""
+    cols = pack_postings(ords, tfs, dls, np.array([0]), avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B)
+    return {c: v[0] for c, v in cols.items()}
 
 
 corpus_strategy = st.tuples(
@@ -50,9 +42,8 @@ def test_wand_equals_exhaustive_random_corpora(args):
         ords = np.array(docs, dtype=np.int64)
         tfs = np.array([rng.randint(1, max(1, dls[d])) for d in docs], dtype=np.int64)
         term_dls = np.array([dls[d] for d in docs], dtype=np.int64)
-        p = pack_postings(ords, tfs, term_dls, avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B)
         weight = rng.uniform(0.01, 5.0)
-        rows.append((_row(p), weight))
+        rows.append((_row(ords, tfs, term_dls, avgdl), weight))
 
     ex = score_rows_exhaustive("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
     wd = score_rows_wand("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
@@ -94,18 +85,18 @@ def test_block_max_skipping_engages_on_hot_plus_rare():
     # hot term: df == n_docs, tf 1..3 → 157 blocks at BLOCK=128
     hot_ords = np.arange(n_docs, dtype=np.int64)
     hot_tfs = rng.integers(1, 4, size=n_docs).astype(np.int64)
-    hot = pack_postings(hot_ords, hot_tfs, dls, avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B)
+    hot = _row(hot_ords, hot_tfs, dls, avgdl)
     # rare term: df = 12, large tf → rides high idf weight
     rare_docs = np.sort(rng.choice(n_docs, size=12, replace=False)).astype(np.int64)
     rare_tfs = rng.integers(5, 12, size=12).astype(np.int64)
-    rare = pack_postings(rare_docs, rare_tfs, dls[rare_docs], avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B)
+    rare = _row(rare_docs, rare_tfs, dls[rare_docs], avgdl)
     # weights = qw·idf with N=n_docs (the Lucene-style formula)
     import math
 
     def idf(df):
         return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
-    rows = [(_row(hot), idf(n_docs)), (_row(rare), idf(12))]
+    rows = [(hot, idf(n_docs)), (rare, idf(12))]
     k = 10
     reset_wand_stats()
     bm = score_rows_block_max("q", rows, k, DEFAULT_K1, DEFAULT_B, avgdl)
@@ -130,16 +121,10 @@ def test_block_max_skipping_engages_under_global_avgdl():
     n_docs = 20_000
     dls = rng.integers(20, 60, size=n_docs).astype(np.int64)
     avgdl = float(dls.mean())
-    hot = pack_postings(
-        np.arange(n_docs, dtype=np.int64), rng.integers(1, 4, size=n_docs).astype(np.int64), dls,
-        avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B,
-    )
+    hot = _row(np.arange(n_docs, dtype=np.int64), rng.integers(1, 4, size=n_docs).astype(np.int64), dls, avgdl)
     rare_docs = np.sort(rng.choice(n_docs, size=12, replace=False)).astype(np.int64)
-    rare = pack_postings(
-        rare_docs, rng.integers(5, 12, size=12).astype(np.int64), dls[rare_docs],
-        avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B,
-    )
-    rows = [(_row(hot), 0.05), (_row(rare), 8.0)]
+    rare = _row(rare_docs, rng.integers(5, 12, size=12).astype(np.int64), dls[rare_docs], avgdl)
+    rows = [(hot, 0.05), (rare, 8.0)]
     global_avgdl = 1.7 * avgdl
     scale = _bound_scale(SimpleNamespace(avgdl=avgdl), global_avgdl)
     assert 0.0 < scale < 1.0
@@ -174,9 +159,8 @@ def test_score_shard_picks_kernel_by_candidate_postings():
     recs = []
     for term, df in (("hot", n_docs), ("rare", 9)):
         ords = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(np.int64)
-        p = pack_postings(ords, rng.integers(1, 5, size=df).astype(np.int64), dls[ords],
-                          avgdl=avgdl, k1=DEFAULT_K1, b=DEFAULT_B)
-        recs.append({"term": term, "shard": 0, **_row(p)})
+        tfs = rng.integers(1, 5, size=df).astype(np.int64)
+        recs.append({"term": term, "shard": 0, **_row(ords, tfs, dls[ords], avgdl)})
     pdf = pd.DataFrame(recs)
     qplan = {"q1": [("hot", 0.2), ("rare", 3.0)], "q2": [("rare", 1.0)]}
 
