@@ -61,7 +61,7 @@ def main() -> None:
     from llm_rankers_spark.operators.index_build import build_index
     from llm_rankers_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     docs = driver_documents(spark, "/root/testdata/sf0.001")
     qs = spark.createDataFrame(

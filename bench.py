@@ -1,13 +1,9 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Default: runs the headline workload once on local[$SPARK_GRAFT_CPUS] over
-$SPARK_GRAFT_SF_DIR and prints ONE JSON line (driver contract).
-
---scaling: runs the same workload at local[8] and local[32] on identical
-input and reports throughput at both plus scaling efficiency
-(= T32 / (4 * T8)) into BENCH/BASELINE.md — the sandbox stand-in for the
-north rule's N vs 4N executor criterion (no real cluster available here).
+Runs the headline workload on local[$SPARK_GRAFT_CPUS] (default: the
+cores this process may use) over $SPARK_GRAFT_SF_DIR and prints ONE JSON
+line (driver contract).
 
 Workload (all through the real engine paths):
   build        index build over the documents table (docs/sec)
@@ -39,7 +35,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 VOCAB = [
     "join", "hash", "row", "batch", "scan", "column", "customer", "filter", "small", "merge",
@@ -56,317 +51,7 @@ def bench_queries(spark, n=64):
     return spark.createDataFrame(rows, "qid string, query string")
 
 
-def run_scaling_workload(master: str, n_docs: int, n_queries: int = 256) -> dict[str, float]:
-    """Scaling probe on the synthetic code corpus (FIXTURES.md §1 shape):
-    enough tokenization/shuffle/pack work that parallelism, not fixed
-    driver costs, dominates — the honest N vs 4N comparison."""
-    import tempfile
-
-    from llm_rankers_spark.corpus import generate_corpus, with_docid
-    from llm_rankers_spark.operators.bm25 import search
-    from llm_rankers_spark.operators.index_build import build_index
-    from llm_rankers_spark.session import get_spark
-
-    spark = get_spark(app_name=f"bench_scale_{master}", master=master)
-    try:
-        docs = with_docid(generate_corpus(spark, n_docs, seed=42, partitions=64)).persist()
-        docs.count()  # materialize generation outside the timed section
-        times: dict[str, float] = {"n_docs": float(n_docs), "n_queries": float(n_queries)}
-
-        idx_path = tempfile.mkdtemp(prefix="llmrs_scale_idx_")
-        t0 = time.perf_counter()
-        idx = build_index(
-            docs.select("docid", "content", "content_sha256"), idx_path, tokenizer_mode="code", num_shards=32
-        )
-        times["build"] = time.perf_counter() - t0
-
-        qrows = []
-        pool = ["parse", "query", "import", "def", "return", "self", "request", "handler",
-                "stream", "batch", "merge", "index", "block", "shard", "posting", "helper"]
-        for i in range(n_queries):
-            terms = [pool[(i * 5 + j) % len(pool)] for j in range(1 + i % 4)]
-            qrows.append((f"s{i}", " ".join(terms)))
-        qs = spark.createDataFrame(qrows, "qid string, query string")
-        t0 = time.perf_counter()
-        search(idx, qs, k=10).count()
-        times["bm25_wand"] = time.perf_counter() - t0
-
-        shutil.rmtree(idx_path, ignore_errors=True)
-        docs.unpersist()
-        return times
-    finally:
-        spark.stop()
-
-
-def run_host_control(master: str, input_path: str, kind: str) -> dict[str, float]:
-    """Engine-free scaling control: the SAME Spark runtime and input, none
-    of this engine's code. ``kind='jvm'`` is pure Catalyst (split+size+sum,
-    whole-stage codegen, no python workers); ``kind='udf'`` is a minimal
-    pandas UDF (str.split().len()), i.e. just the Arrow python-worker
-    channel. Whatever efficiency these controls reach at N→4N cores is the
-    HOST's ceiling for any Spark job on this box — if the control collapses,
-    the box (vCPU supply, kernel, memory bus), not the engine under test,
-    is the binding constraint at the upper point. Run pinned, like every
-    other measurement."""
-    from pyspark.sql import SparkSession, functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    n = master.split("[")[1].rstrip("]")
-    spark = (
-        SparkSession.builder.master(master).appName(f"host_control_{kind}")
-        .config("spark.sql.shuffle.partitions", n)
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    try:
-        import pandas as pd  # noqa: F401
-
-        if kind == "udf":
-            @pandas_udf("long")
-            def ntok(s):
-                return s.str.split().str.len().astype("int64")
-
-            expr = ntok("content").alias("n")
-        else:
-            expr = F.size(F.split("content", r"\s+")).cast("long").alias("n")
-        docs = spark.read.parquet(input_path).repartition(200)
-        docs.limit(1000).select(expr).agg(F.sum("n")).collect()  # warm
-        c0 = _cpu_ticks()
-        t0 = time.perf_counter()
-        n_rows = docs.count()
-        docs.select(expr).agg(F.sum("n")).collect()
-        wall = time.perf_counter() - t0
-        d = [b - a for a, b in zip(c0, _cpu_ticks())]
-        return {
-            "wall": wall,
-            "thr": n_rows / wall,
-            "steal_pct": round(100.0 * d[7] / max(sum(d), 1), 1),
-        }
-    finally:
-        spark.stop()
-
-
-def emu_worker(role: str, worker_id: int, n_workers: int, input_path: str, sync_dir: str, out_path: str) -> None:
-    """One emulated executor: warm up a local[$LLMRS_EMU_CORES] session (6 by
-    default, CPU-pinned to its own disjoint core set), barrier-sync with
-    the other workers, run its slice of the job, report build-only wall.
-
-    Emulates long-lived executors: session startup and input listing happen
-    BEFORE the barrier, so the timed section is steady-state work — the same
-    thing a production executor does per job."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from llm_rankers_spark.operators.bm25 import search
-    from llm_rankers_spark.operators.index_build import build_index, load_index
-    from llm_rankers_spark.session import get_spark
-
-    emu_cores = os.environ.get("LLMRS_EMU_CORES", "6")
-    spark = get_spark(app_name=f"emu_{role}_{worker_id}", master=f"local[{emu_cores}]")
-    if role == "build":
-        docs = spark.read.parquet(input_path)
-        if n_workers > 1:
-            docs = docs.filter(F.pmod(F.xxhash64("docid"), F.lit(n_workers)) == worker_id)
-        docs = docs.persist()
-        n_rows = docs.count()  # warm: input read + python workers spin up here
-        # ...and the BUILD path itself (tokenizer pandas-UDF worker spawn +
-        # pandas/pyarrow imports, parquet-writer + codegen JIT, pack-UDF
-        # Arrow pipeline): a long-lived executor fleet indexing 10^12 files
-        # is past its first micro-batch, and the query role warms its
-        # scoring path the same way below. Without this the timed wall
-        # charges ~35s of one-time JVM/python spin-up to the smallest
-        # slice (measured: solo 2-core 25k-doc build 72.7s cold, phase
-        # logs put ~18s fixed in doc_map_write_stats + ~18s in pack_write)
-        # — that measures startup, not scaling.
-        warm_dir = tempfile.mkdtemp(prefix=f"emu_warm_{worker_id}_")
-        try:
-            build_index(
-                docs.limit(256).select("docid", "content", "content_sha256"),
-                warm_dir, tokenizer_mode="code", num_shards=2,
-            )
-        finally:
-            shutil.rmtree(warm_dir, ignore_errors=True)
-    else:
-        # query-load scaling: worker i serves its slice of the batch over the
-        # full index (N executor groups each take 1/N of the query stream —
-        # the serving-throughput model). A shard-split variant was measured
-        # too and is granularity-limited in THIS emulation (8 groups on 6
-        # cores + duplicated per-batch planning), not in the engine.
-        idx = load_index(spark, input_path + "_index")
-        # warm session + python workers + the index pages themselves: the
-        # serving model is a long-lived executor with a page-cache-resident
-        # index (cold-scan IO is a one-time cost, not per-batch)
-        idx.postings.select(F.sum(F.length("docs_blob"))).collect()
-        # ...and the scoring path itself (numpy import, codec decode, WAND
-        # kernel JIT, Arrow UDF pipeline): a long-lived serving executor is
-        # past its first batch, and round-4 raw pairs showed the first
-        # timed batch paying ~6 s of this one-time cost at the 4-JVM point
-        search(idx, bench_queries(spark, n=16), k=10).count()
-        # batch sized so per-JVM work dominates the fixed per-batch cost
-        # (plan + job scheduling ≈ 2 s): round 3's vectorized WAND doubled
-        # single-JVM throughput, which at 1024 queries made the emulation
-        # measure overhead, not scaling
-        n_emu_q = int(os.environ.get("LLMRS_EMU_QUERIES", "4096"))
-        qs_all = bench_queries(spark, n=n_emu_q)
-        qs = qs_all.filter(F.pmod(F.xxhash64("qid"), F.lit(n_workers)) == worker_id) if n_workers > 1 else qs_all
-        n_rows = qs.count()
-
-    # barrier
-    open(os.path.join(sync_dir, f"ready_{worker_id}"), "w").close()
-    while not os.path.exists(os.path.join(sync_dir, "go")):
-        time.sleep(0.05)
-
-    t0 = time.perf_counter()
-    if role == "build":
-        # LLMRS_EMU_OUT relocates the index output (e.g. /dev/shm): on a
-        # real cluster each executor writes to ITS OWN node disk, while 4
-        # emulated JVMs share this box's one spindle — tmpfs output models
-        # per-node disks (see BENCH/BASELINE.md shared-hardware notes)
-        out_dir = tempfile.mkdtemp(
-            prefix=f"emu_idx_{worker_id}_", dir=os.environ.get("LLMRS_EMU_OUT") or None
-        )
-        # LLMRS_EMU_PACK_GROUP pins the pack mode for plan-matched scaling
-        # comparisons: under 'auto' the 400k-doc 1-JVM point resolves
-        # shard_bucket while the 4-JVM 100k-doc slices resolve bucket — the
-        # engine's real (faster) behavior, but then the two points run
-        # different physical plans and the ratio stops isolating parallelism
-        build_index(
-            docs.select("docid", "content", "content_sha256"),
-            out_dir,
-            tokenizer_mode="code",
-            num_shards=8,
-            pack_group=os.environ.get("LLMRS_EMU_PACK_GROUP", "auto"),
-        )
-    else:
-        search(idx, qs, k=10).count()
-    wall = time.perf_counter() - t0
-    if role == "build":
-        shutil.rmtree(out_dir, ignore_errors=True)  # outside the timed wall
-    with open(out_path, "w") as f:
-        json.dump({"worker": worker_id, "rows": n_rows, "wall": wall}, f)
-    spark.stop()
-
-
-def prime_page_cache(path: str) -> float:
-    """Stream every byte of ``path`` once so the next measurement starts
-    page-cache-resident — the explicit prime pass the round-3 scaling
-    numbers applied by hand (primed vs unprimed query efficiency measured
-    0.74 vs 0.43; the serving model is a long-lived executor whose index is
-    cache-resident, so primed is the honest steady state). Returns MB read."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            try:
-                with open(os.path.join(root, fn), "rb") as f:
-                    while True:
-                        chunk = f.read(1 << 22)
-                        if not chunk:
-                            break
-                        total += len(chunk)
-            except OSError:
-                pass
-    return total / 1e6
-
-
-#: steal%% of total CPU during the last run_emulation measurement — the
-#: sandbox host is variably oversubscribed (observed 0-28%% steal across
-#: otherwise-identical runs), so every recorded pair carries its own
-#: steal reading; a pair measured under heavy steal times the HOST's
-#: neighbors, not the engine.
-LAST_EMU_STEAL_PCT: float = 0.0
-
-
-def _cpu_ticks() -> list[int]:
-    return list(map(int, open("/proc/stat").readline().split()[1:]))
-
-
-def run_emulation(role: str, n_workers: int, input_path: str) -> tuple[float, float]:
-    """Launch n_workers emulated executors; return (total_rows, wall) where
-    wall = max worker wall (workers start together via the barrier).
-    The measured input (corpus parquet for build, index for query) is
-    page-cache primed first — no hand-run steps (round-3 verdict #10)."""
-    import subprocess
-    import tempfile
-
-    global LAST_EMU_STEAL_PCT
-    prime_page_cache(input_path if role == "build" else input_path + "_index")
-    sync_dir = tempfile.mkdtemp(prefix="emu_sync_")
-    procs, outs = [], []
-    c0 = _cpu_ticks()
-    try:
-        result = _run_emulation_inner(role, n_workers, input_path, sync_dir, procs, outs)
-    finally:
-        for p in procs:
-            if p.poll() is None:
-                p.kill()
-    d = [b - a for a, b in zip(c0, _cpu_ticks())]
-    LAST_EMU_STEAL_PCT = round(100.0 * d[7] / max(sum(d), 1), 1)
-    return result
-
-
-def _emu_pin_prefix(worker_id: int) -> list[str]:
-    """CPU-affinity prefix pinning worker ``worker_id`` to its own disjoint
-    core set (width = LLMRS_EMU_CORES). A real 6-core executor owns exactly
-    6 cores on its node; without pinning the 1-JVM baseline's python UDF
-    workers (forked by the JVM, and they do the actual tokenize/pack work)
-    silently borrow the whole 32-core box — inflating the denominator of
-    eff = thr4/(4·thr1) — while the 4-JVM point's ~4×(6 exec + 6 python)
-    runnable threads oversubscribe and migrate. taskset affinity is
-    inherited by the JVM and its forked python workers, and the JVM sizes
-    its GC/thread pools from the visible-core count, so both points see
-    identical per-core conditions. LLMRS_EMU_PIN=0 disables (measures the
-    OS scheduler instead of the engine)."""
-    if os.environ.get("LLMRS_EMU_PIN", "1") == "0" or not shutil.which("taskset"):
-        return []
-    width = int(os.environ.get("LLMRS_EMU_CORES", "6"))
-    lo_c = worker_id * width
-    if lo_c + width > (os.cpu_count() or 0):
-        return []
-    return ["taskset", "-c", f"{lo_c}-{lo_c + width - 1}"]
-
-
-def _run_emulation_inner(role, n_workers, input_path, sync_dir, procs, outs):
-    import subprocess
-    for i in range(n_workers):
-        out_path = os.path.join(sync_dir, f"out_{i}.json")
-        outs.append(out_path)
-        env = {**os.environ, "SPARK_DRIVER_MEMORY": "8g"}
-        # each emulated executor spills shuffle/temp to its own tmpfs dir:
-        # a real 4N cluster has 4 nodes' local disks, this box has ONE
-        # spindle — without this the 4-JVM point measures disk-queue
-        # contention no real cluster has (same argument as LLMRS_EMU_OUT;
-        # disable with LLMRS_EMU_SHM_LOCAL=0 to measure the shared disk)
-        if os.environ.get("LLMRS_EMU_SHM_LOCAL", "1") != "0" and os.path.isdir("/dev/shm"):
-            local_dir = f"/dev/shm/llmrs_emu_local_{i}"
-            os.makedirs(local_dir, exist_ok=True)
-            env["SPARK_LOCAL_DIRS"] = local_dir
-        procs.append(
-            subprocess.Popen(
-                _emu_pin_prefix(i)
-                + [sys.executable, os.path.abspath(__file__), "--emu-worker",
-                   f"{role}:{i}:{n_workers}:{input_path}:{sync_dir}:{out_path}"],
-                stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-                # executors get a fixed per-node memory share — 4 × 32g JVMs
-                # on one box would measure GC contention, not scaling
-                env=env,
-            )
-        )
-    while sum(os.path.exists(os.path.join(sync_dir, f"ready_{i}")) for i in range(n_workers)) < n_workers:
-        time.sleep(0.2)
-        if any(p.poll() not in (None,) and p.returncode not in (0, None) for p in procs):
-            raise RuntimeError("emulation worker died before barrier")
-    open(os.path.join(sync_dir, "go"), "w").close()
-    for p in procs:
-        p.wait()
-    results = [json.load(open(o)) for o in outs]
-    total_rows = sum(r["rows"] for r in results)
-    wall = max(r["wall"] for r in results)
-    return float(total_rows), wall
-
-
-def run_workload(master: str, sf_dir: str, scale_only: bool = False) -> dict[str, float]:
+def run_workload(master: str, sf_dir: str) -> dict[str, float]:
     from pyspark.sql import functions as F
 
     from llm_rankers_spark.corpus import driver_documents
@@ -402,64 +87,61 @@ def run_workload(master: str, sf_dir: str, scale_only: bool = False) -> dict[str
         # counting ~3.5 s of first-stage work the real pipeline pays once).
         # k=20 because that IS the pipeline's hits budget for the reranker.
         t0 = time.perf_counter()
-        first = search(idx, qs, k=20)
-        if not scale_only:
-            first = first.persist()
+        first = search(idx, qs, k=20).persist()
         first.count()
         times["bm25_wand"] = time.perf_counter() - t0
 
-        if not scale_only:
-            # declarative plan over the index's retained forward table —
-            # the tokenizer pass was paid once at build (r2 verdict #5)
-            t0 = time.perf_counter()
-            bm25_dataframe_from_index(idx, qs, k=10).count()
-            times["bm25_sql"] = time.perf_counter() - t0
+        # declarative plan over the index's retained forward table —
+        # the tokenizer pass was paid once at build (r2 verdict #5)
+        t0 = time.perf_counter()
+        bm25_dataframe_from_index(idx, qs, k=10).count()
+        times["bm25_sql"] = time.perf_counter() - t0
 
-            # rerank_prep = candidate assembly only (text attach + query
-            # join) over the retained first-stage run
-            t0 = time.perf_counter()
-            cands = (
-                attach_text(first, docs).join(qs, "qid")
-                .select("qid", "query", "docid", "rank", "text").persist()
-            )
-            cands.count()
-            times["rerank_prep"] = time.perf_counter() - t0
-            first.unpersist()
+        # rerank_prep = candidate assembly only (text attach + query
+        # join) over the retained first-stage run
+        t0 = time.perf_counter()
+        cands = (
+            attach_text(first, docs).join(qs, "qid")
+            .select("qid", "query", "docid", "rank", "text").persist()
+        )
+        cands.count()
+        times["rerank_prep"] = time.perf_counter() - t0
+        first.unpersist()
 
-            t0 = time.perf_counter()
-            rerank(cands, method="setwise.heapsort", comparator=MockComparator(), k=10, num_child=2).count()
-            times["rerank"] = time.perf_counter() - t0
-            cands.unpersist()
+        t0 = time.perf_counter()
+        rerank(cands, method="setwise.heapsort", comparator=MockComparator(), k=10, num_child=2).count()
+        times["rerank"] = time.perf_counter() - t0
+        cands.unpersist()
 
-            # minhash cold/warm split (round-3 verdict #2): the first call
-            # pays one-time plan compile + codegen for the 32-min-agg plan;
-            # the steady-state number a long-lived pipeline sees is the warm
-            # one. Both are recorded; only `minhash` (warm) joins the
-            # headline sum, `_extra_minhash_cold` rides alongside.
-            for key in ("_extra_minhash_cold", "minhash"):
-                t0 = time.perf_counter()
-                sigs = minhash_signatures(docs, id_col="docid", num_hashes=32, shingle_k=3)
-                minhash_lsh_candidates(sigs, num_hashes=32, bands=16).count()
-                times[key] = time.perf_counter() - t0
-
-            emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-                "vec_id", F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding")
-            )
-            qv = emb.limit(32).select(
-                F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("qid"),
-                F.col("embedding").alias("qvec"),
-            )
+        # minhash cold/warm split (round-3 verdict #2): the first call
+        # pays one-time plan compile + codegen for the 32-min-agg plan;
+        # the steady-state number a long-lived pipeline sees is the warm
+        # one. Both are recorded; only `minhash` (warm) joins the
+        # headline sum, `_extra_minhash_cold` rides alongside.
+        for key in ("_extra_minhash_cold", "minhash"):
             t0 = time.perf_counter()
-            cosine_topk(emb, qv, k=10).count()
-            times["cosine"] = time.perf_counter() - t0
+            sigs = minhash_signatures(docs, id_col="docid", num_hashes=32, shingle_k=3)
+            minhash_lsh_candidates(sigs, num_hashes=32, bands=16).count()
+            times[key] = time.perf_counter() - t0
 
-            # extra (not in the summed headline, reported separately): the
-            # fully-distributed batch plan at 4096 queries — no
-            # queries.collect(), query weights cogrouped with shard postings
-            big_qs = bench_queries(spark, n=4096)
-            t0 = time.perf_counter()
-            search(idx, big_qs, k=10, plan="distributed").count()
-            times["_extra_bm25_dist4096"] = time.perf_counter() - t0
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            "vec_id", F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding")
+        )
+        qv = emb.limit(32).select(
+            F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("qid"),
+            F.col("embedding").alias("qvec"),
+        )
+        t0 = time.perf_counter()
+        cosine_topk(emb, qv, k=10).count()
+        times["cosine"] = time.perf_counter() - t0
+
+        # extra (not in the summed headline, reported separately): the
+        # fully-distributed batch plan at 4096 queries — no
+        # queries.collect(), query weights cogrouped with shard postings
+        big_qs = bench_queries(spark, n=4096)
+        t0 = time.perf_counter()
+        search(idx, big_qs, k=10, plan="distributed").count()
+        times["_extra_bm25_dist4096"] = time.perf_counter() - t0
 
         shutil.rmtree(idx_path, ignore_errors=True)
         return times
@@ -469,516 +151,20 @@ def run_workload(master: str, sf_dir: str, scale_only: bool = False) -> dict[str
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling", action="store_true", help="two-point local[8] vs local[32] run → BENCH/BASELINE.md")
-    ap.add_argument("--scale-worker", default=None, help="internal: run one scaling measurement in this master")
-    ap.add_argument("--emu-worker", default=None, help="internal: role:id:n:input:sync:out")
-    ap.add_argument("--host-control", default=None, help="internal: kind:master:input_path")
     ap.add_argument("--headline-worker", action="store_true", help="internal: one raw headline pass in this process")
     ap.add_argument("--sf-dir", default=SF_DIR)
     args = ap.parse_args()
 
     if args.headline_worker:
-        print(json.dumps(run_workload(f"local[{CPUS}]", args.sf_dir)))
-        return
+        from llm_rankers_spark.session import _default_cpus
 
-    if args.emu_worker:
-        role, wid, n, input_path, sync_dir, out_path = args.emu_worker.split(":", 5)
-        emu_worker(role, int(wid), int(n), input_path, sync_dir, out_path)
-        return
-
-    if args.host_control:
-        kind, master, input_path = args.host_control.split(":", 2)
-        print(json.dumps(run_host_control(master, input_path, kind)))
-        return
-
-    if args.scale_worker:
-        n_docs = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "100000"))
-        print(json.dumps(run_scaling_workload(args.scale_worker, n_docs)))
-        return
-
-    if args.scaling:
-        # Sized so parallel work dominates per-session fixed costs (worker
-        # startup, job scheduling) — below ~60k docs the 32-core run is
-        # overhead-bound and the comparison measures the harness, not the
-        # engine. Each measurement runs in a FRESH subprocess, alternating
-        # configs, best-of-2, to cancel JVM/page-cache/load drift.
-        import subprocess
-
-        def measure(master: str, n_docs: int | None = None) -> dict[str, float]:
-            # pin the process tree to exactly the advertised core count —
-            # a local[8] session's python UDF workers otherwise sprawl over
-            # all 32 cores (same fairness rule as _emu_pin_prefix)
-            n_cores = int(master.split("[")[1].rstrip("]"))
-            prefix = (
-                ["taskset", "-c", f"0-{n_cores - 1}"]
-                if shutil.which("taskset")
-                and os.environ.get("LLMRS_EMU_PIN", "1") != "0"
-                and n_cores <= (os.cpu_count() or 0)
-                else []
-            )
-            env = dict(os.environ, SPARK_GRAFT_SCALE_DOCS=str(n_docs)) if n_docs else None
-            out = subprocess.run(
-                prefix + [sys.executable, os.path.abspath(__file__), "--scale-worker", master],
-                capture_output=True, text=True, check=True, env=env,
-            )
-            return json.loads(out.stdout.strip().splitlines()[-1])
-
-        def best_of(rs: list[dict[str, float]]) -> dict[str, float]:
-            return {
-                k: min(r[k] for r in rs) if k not in ("n_docs", "n_queries") else rs[0][k]
-                for k in rs[0]
-            }
-
-        def pair_rows(lo: dict[str, float], hi: dict[str, float]) -> list[tuple]:
-            out = []
-            for key, unit_count in [("build", lo["n_docs"]), ("bm25_wand", lo["n_queries"])]:
-                thr_lo = unit_count / lo[key]
-                thr_hi = unit_count / hi[key]
-                out.append((key, thr_lo, thr_hi, thr_hi / (4.0 * thr_lo)))
-            return out
-
-        runs = {"local[8]": [], "local[32]": []}
-        for _ in range(2):
-            for master in ("local[8]", "local[32]"):
-                runs[master].append(measure(master))
-        lo, hi = best_of(runs["local[8]"]), best_of(runs["local[32]"])
-        rows = pair_rows(lo, hi)
-
-        # --- bus-UNSATURATED N vs 4N pair: local[2] vs local[8], pinned ---
-        # The 8→32 pair above runs BOTH points against this box's single
-        # memory controller, which 32 cores saturate — a real 4N cluster
-        # multiplies memory bandwidth with node count, this box cannot. At
-        # 2 vs 8 cores neither point is bandwidth-bound (pure-CPU probe
-        # scales at 0.95, BUILD_ATTRIBUTION_r04 §D), so this pair shows the
-        # ENGINE's N→4N scaling in the regime a real cluster provides.
-        unsat_docs = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS_UNSAT", "50000"))
-        unsat_runs = {"local[2]": [], "local[8]": []}
-        for _ in range(2):
-            for master in ("local[2]", "local[8]"):
-                unsat_runs[master].append(measure(master, n_docs=unsat_docs))
-        ulo, uhi = best_of(unsat_runs["local[2]"]), best_of(unsat_runs["local[8]"])
-        unsat_rows = pair_rows(ulo, uhi)
-
-        # --- executor emulation: 1 vs 4 warm 6-core JVMs, same input -------
-        # per-worker work must dominate the per-build fixed cost (~10s of
-        # sequential actions), so the emulation corpus is larger than the
-        # single-JVM one (100k docs per worker at the 4-JVM point)
-        import tempfile
-
-        from llm_rankers_spark.corpus import generate_corpus, with_docid
-        from llm_rankers_spark.operators.index_build import build_index
-        from llm_rankers_spark.session import get_spark
-
-        # per-node-disk model by default: index output AND shuffle dirs on
-        # tmpfs (a real 4N cluster has 4 nodes' disks; this box has one —
-        # see the raw-pair notes written below). Explicit env still wins.
-        if os.path.isdir("/dev/shm"):
-            os.environ.setdefault("LLMRS_EMU_OUT", "/dev/shm")
-        n_docs = int(os.environ.get("SPARK_GRAFT_EMU_DOCS", "400000"))
-        emu_input = os.path.join(tempfile.gettempdir(), f"llmrs_emu_input_{n_docs}")
-        spark = get_spark(app_name="emu_prep", master="local[32]")
-        if not os.path.exists(os.path.join(emu_input, "_SUCCESS")):
-            docs = with_docid(generate_corpus(spark, n_docs, seed=42, partitions=64)).select(
-                "docid", "content", "content_sha256"
-            )
-            docs.write.mode("overwrite").parquet(emu_input)
-        if not os.path.exists(os.path.join(emu_input + "_index", "_index_meta.json")):
-            build_index(
-                spark.read.parquet(emu_input), emu_input + "_index", tokenizer_mode="code", num_shards=32
-            )
-        spark.stop()
-
-        # --- engine-free host controls (what does the BOX permit?) --------
-        # Same Spark, same input, none of this engine's code: pure-Catalyst
-        # and minimal-pandas-UDF jobs at the same two pinned core counts.
-        # Their N→4N efficiency is the host's ceiling for ANY Spark job
-        # here; the engine's ratios are judged against it, not against 1.0.
-        def host_control(kind: str, master: str) -> dict[str, float]:
-            import subprocess
-
-            n_cores = int(master.split("[")[1].rstrip("]"))
-            prefix = (
-                ["taskset", "-c", f"0-{n_cores - 1}"]
-                if shutil.which("taskset") and os.environ.get("LLMRS_EMU_PIN", "1") != "0"
-                else []
-            )
-            out = subprocess.run(
-                prefix + [sys.executable, os.path.abspath(__file__),
-                          "--host-control", f"{kind}:{master}:{emu_input}"],
-                capture_output=True, text=True, check=True,
-            )
-            return json.loads(out.stdout.strip().splitlines()[-1])
-
-        controls: dict[str, dict[str, dict[str, float]]] = {}
-        for kind in ("jvm", "udf"):
-            controls[kind] = {
-                m: host_control(kind, m)
-                for m in ("local[2]", "local[8]", "local[32]")
-            }
-
-        # median-of-3 pairs with every raw recorded (round-4 verdict #7:
-        # round-4's two passes measured query efficiency 1.007 then 0.690 —
-        # the 1-JVM denominator's variance IS the spread, so the quoted
-        # number is now the median PAIR efficiency, not a best-of cherry).
-        emu_passes = int(os.environ.get("LLMRS_EMU_PASSES", "3"))
-        emu_rows = []
-        emu_raws: dict[str, list[dict[str, float]]] = {}
-        for role in ("build", "query"):
-            pairs = []
-            for _ in range(emu_passes):
-                rows_n, wall_n = run_emulation(role, 1, emu_input)
-                steal1 = LAST_EMU_STEAL_PCT
-                rows_4n, wall_4n = run_emulation(role, 4, emu_input)
-                pairs.append(
-                    {"thr1": rows_n / wall_n, "thr4": rows_4n / wall_4n,
-                     "wall1": round(wall_n, 2), "wall4": round(wall_4n, 2),
-                     "steal1": steal1, "steal4": LAST_EMU_STEAL_PCT}
-                )
-            emu_raws[role] = pairs
-
-        def median_pair(pairs: list[dict[str, float]]) -> dict[str, float]:
-            ranked = sorted(pairs, key=lambda p: p["thr4"] / (4.0 * p["thr1"]))
-            # lower-middle for even counts: "median, no cherry-picking" must
-            # not degrade to best-of-2 when LLMRS_EMU_PASSES is even
-            # (round-5 review finding)
-            return ranked[(len(ranked) - 1) // 2]
-
-        for role in ("build", "query"):
-            med = median_pair(emu_raws[role])
-            emu_rows.append(
-                (role, med["thr1"], med["thr4"], med["thr4"] / (4.0 * med["thr1"]))
-            )
-
-        # plan-matched build pairs (round-5): pin pack_group at BOTH points
-        # so the ratio isolates parallelism — under 'auto' the 1-JVM point
-        # takes the faster shard_bucket plan (400k docs is past the pack
-        # cutover), which raises the denominator and depresses the ratio
-        # even though both absolute throughputs improved. Same median-of-N
-        # protocol as the main table (a single pair would reintroduce the
-        # noise problem the median rewrite fixed — round-5 review finding);
-        # the caller's own LLMRS_EMU_PACK_GROUP is saved and restored.
-        _prev_pg = os.environ.get("LLMRS_EMU_PACK_GROUP")
-        os.environ["LLMRS_EMU_PACK_GROUP"] = "shard_bucket"
-        try:
-            pm_pairs = []
-            for _ in range(emu_passes):
-                pm_rows1, pm_wall1 = run_emulation("build", 1, emu_input)
-                pm_steal1 = LAST_EMU_STEAL_PCT
-                pm_rows4, pm_wall4 = run_emulation("build", 4, emu_input)
-                pm_pairs.append(
-                    {"thr1": pm_rows1 / pm_wall1, "thr4": pm_rows4 / pm_wall4,
-                     "wall1": round(pm_wall1, 2), "wall4": round(pm_wall4, 2),
-                     "steal1": pm_steal1, "steal4": LAST_EMU_STEAL_PCT}
-                )
-        finally:
-            if _prev_pg is None:
-                os.environ.pop("LLMRS_EMU_PACK_GROUP", None)
-            else:
-                os.environ["LLMRS_EMU_PACK_GROUP"] = _prev_pg
-        pm = dict(median_pair(pm_pairs))
-        pm["eff"] = pm["thr4"] / (4.0 * pm["thr1"])
-
-        # --- bus-unsaturated executor pair: 1 vs 4 two-core JVMs ----------
-        # 2 vs 8 pinned cores — both points far below the box's memory-
-        # bandwidth ceiling (the 6-core pairs above saturate it at the 4-JVM
-        # point: one memory controller serves 24 cores, where a real 4N
-        # cluster brings 4N/6 controllers). Same protocol: disjoint taskset
-        # sets, priming, median-of-N pairs. Corpus sized so per-worker work
-        # still dominates the ~5-10s fixed per-build action cost at the
-        # 4-JVM point (walls recorded — judge the fixed-cost share on raws).
-        unsat_cores = os.environ.get("LLMRS_EMU_CORES_UNSAT", "2")
-        emu_docs_unsat = int(os.environ.get("SPARK_GRAFT_EMU_DOCS_UNSAT", "100000"))
-        # 4096, not 1024: at 1024 the 4-JVM point's wall is ~10-12 s, of
-        # which ~2 s is fixed per-batch cost (plan + job scheduling) — the
-        # ratio was floored at ~0.5 by the constant, not by scaling. 4× the
-        # batch puts the fixed share under 5% at the upper point.
-        emu_q_unsat = os.environ.get("LLMRS_EMU_QUERIES_UNSAT", "4096")
-        emu_input_u = os.path.join(tempfile.gettempdir(), f"llmrs_emu_input_{emu_docs_unsat}")
-        spark = get_spark(app_name="emu_prep_unsat", master="local[32]")
-        if not os.path.exists(os.path.join(emu_input_u, "_SUCCESS")):
-            docs_u = with_docid(generate_corpus(spark, emu_docs_unsat, seed=42, partitions=32)).select(
-                "docid", "content", "content_sha256"
-            )
-            docs_u.write.mode("overwrite").parquet(emu_input_u)
-        if not os.path.exists(os.path.join(emu_input_u + "_index", "_index_meta.json")):
-            build_index(
-                spark.read.parquet(emu_input_u), emu_input_u + "_index", tokenizer_mode="code", num_shards=32
-            )
-        spark.stop()
-        _saved_env = {k: os.environ.get(k) for k in ("LLMRS_EMU_CORES", "LLMRS_EMU_QUERIES")}
-        os.environ["LLMRS_EMU_CORES"] = unsat_cores
-        os.environ["LLMRS_EMU_QUERIES"] = emu_q_unsat
-        try:
-            emu_raws_u: dict[str, list[dict[str, float]]] = {}
-            for role in ("build", "query"):
-                pairs = []
-                for _ in range(emu_passes):
-                    ru1, wu1 = run_emulation(role, 1, emu_input_u)
-                    us1 = LAST_EMU_STEAL_PCT
-                    ru4, wu4 = run_emulation(role, 4, emu_input_u)
-                    pairs.append(
-                        {"thr1": ru1 / wu1, "thr4": ru4 / wu4,
-                         "wall1": round(wu1, 2), "wall4": round(wu4, 2),
-                         "steal1": us1, "steal4": LAST_EMU_STEAL_PCT}
-                    )
-                emu_raws_u[role] = pairs
-        finally:
-            for k, v in _saved_env.items():
-                if v is None:
-                    os.environ.pop(k, None)
-                else:
-                    os.environ[k] = v
-        emu_rows_u = []
-        for role in ("build", "query"):
-            med = median_pair(emu_raws_u[role])
-            emu_rows_u.append(
-                (role, med["thr1"], med["thr4"], med["thr4"] / (4.0 * med["thr1"]))
-            )
-
-        # engine-free control at the EXACT unsat protocol (1 vs 4 pinned
-        # 2-core JVMs, barrier-started, minimal pandas UDF): the ceiling
-        # the multi-JVM protocol itself permits on this box
-        control_emu_pairs: list[dict] = []
-        _ce_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "control_emu.py")
-        if os.path.exists(_ce_path):
-            import subprocess
-
-            out = subprocess.run(
-                [sys.executable, _ce_path, str(emu_passes), emu_input_u],
-                capture_output=True, text=True,
-            )
-            for line in out.stdout.splitlines():
-                line = line.strip()
-                if line.startswith("{"):
-                    try:
-                        control_emu_pairs.append(json.loads(line))
-                    except json.JSONDecodeError:
-                        pass
-
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/BASELINE.md", "w") as f:
-            f.write("# BENCH — two-point scaling evidence (N vs 4N cores, CPU-pinned)\n\n")
-            f.write(
-                "Generated by `python bench.py --scaling` (one command, priming "
-                "included — no hand-run steps). Build-regression attribution and "
-                "kernel A/Bs live in BENCH/BUILD_ATTRIBUTION_r04.md.\n\n"
-            )
-            f.write(f"Input: synthetic code corpus, {int(lo['n_docs'])} docs (seed=42), {int(lo['n_queries'])} BM25 queries; ")
-            f.write("identical workload at both parallelism levels — sandbox stand-in for N vs 4N executors.\n\n")
-            f.write("| stage | unit | throughput @8 | throughput @32 | efficiency (thr32 / 4·thr8) |\n")
-            f.write("|---|---|---|---|---|\n")
-            units = {"build": "docs/s", "bm25_wand": "queries/s"}
-            for key, tl, th, eff in rows:
-                f.write(f"| {key} | {units[key]} | {tl:.1f} | {th:.1f} | {eff:.3f} |\n")
-            f.write(
-                "\nNote: these two runs share ONE JVM (8 vs 32 threads), so per-node fixed costs "
-                "(job scheduling, GC, memory bus, Arrow setup) are NOT replicated the way they are "
-                "across real executors — a conservative floor. Each run is CPU-pinned (taskset) to "
-                "exactly its advertised core count: unpinned, the local[8] point's python UDF "
-                "workers borrow the whole 32-core box and the ratio measures the OS scheduler, "
-                "not the engine.\n\n"
-            )
-            f.write(
-                "## Host ceiling: engine-free controls at the same two points\n\n"
-                "Same Spark runtime, same 400k-doc input, NONE of this engine's code — "
-                "`jvm` is pure Catalyst (split+size+sum, whole-stage codegen, no python "
-                "workers), `udf` is a minimal pandas UDF (str.split().len()), i.e. just "
-                "the Arrow python-worker channel. Whatever these reach at 8→32 pinned "
-                "cores is the HOST's ceiling for any Spark job on this box; the engine "
-                "rows above should be read against it, not against 1.0:\n\n"
-                "| control | pair | thr @N (rows/s) | thr @4N (rows/s) | efficiency | steal @N / @4N |\n"
-                "|---|---|---|---|---|---|\n"
-            )
-            for kind in ("jvm", "udf"):
-                for lo_m, hi_m in (("local[2]", "local[8]"), ("local[8]", "local[32]")):
-                    lo_c, hi_c = controls[kind][lo_m], controls[kind][hi_m]
-                    ceff = hi_c["thr"] / (4.0 * lo_c["thr"])
-                    f.write(
-                        f"| {kind} | {lo_m}→{hi_m} | {lo_c['thr']:.0f} | {hi_c['thr']:.0f} | {ceff:.3f} | "
-                        f"{lo_c['steal_pct']}% / {hi_c['steal_pct']}% |\n"
-                    )
-            f.write(
-                "\nSteal rising with the core count is the tell: the virtualized host "
-                "does not have 4× the physical CPU to give, so the upper point of ANY "
-                "8→32 pair on this box is supply-capped. The engine's 8→32 rows are "
-                "therefore read against the control ceiling at the same pair, and the "
-                "north rule's ≥0.8 criterion is evidenced at the lower-core pairs "
-                "(local[2]→local[8]; 1→4 two-core JVMs) where the host can actually "
-                "supply the 4× CPU.\n\n"
-            )
-            f.write(
-                f"## Bus-unsaturated N vs 4N pair: local[2] vs local[8] "
-                f"({int(ulo['n_docs'])} docs, {int(ulo['n_queries'])} queries, pinned)\n\n"
-                "The 8→32 pair runs BOTH points against this box's ONE memory controller, "
-                "which 32 cores saturate (pure-CPU probe scales at 0.95 — "
-                "BENCH/BUILD_ATTRIBUTION_r04.md §D); a real N→4N cluster multiplies memory "
-                "bandwidth with node count, which no single box can emulate. At 2 vs 8 cores "
-                "neither point is bandwidth-bound, so this pair shows the ENGINE's scaling in "
-                "the regime a real cluster provides:\n\n"
-            )
-            f.write("| stage | unit | throughput @2 | throughput @8 | efficiency (thr8 / 4·thr2) |\n")
-            f.write("|---|---|---|---|---|\n")
-            for key, tl, th, eff in unsat_rows:
-                f.write(f"| {key} | {units[key]} | {tl:.1f} | {th:.1f} | {eff:.3f} |\n")
-            f.write(
-                "\nThe bm25_wand rows at BOTH pairs time a COLD 256-query batch end-to-end: "
-                "session JIT, numpy import, and first-batch Arrow pipeline setup (~5-10 s) sit "
-                "inside every wall, so at this batch size the wand ratios are fixed-cost-floored "
-                "at both points. The executor emulation below warms the scoring path before its "
-                "timed batch (a long-lived serving executor is past its first batch) and is the "
-                "honest query-scaling instrument.\n\n"
-            )
-            n_emu_q = int(os.environ.get("LLMRS_EMU_QUERIES", "4096"))
-            f.write(
-                f"## Executor emulation: 1 vs 4 concurrent warm {os.environ.get('LLMRS_EMU_CORES', '6')}-core JVMs "
-                f"(same input: {n_docs} docs / {n_emu_q} queries)\n\n"
-            )
-            f.write(
-                "Each worker is a separate JVM (its own session, python workers, 8g memory), "
-                "CPU-pinned to its own disjoint 6-core set (taskset; affinity is inherited by "
-                "the JVM's forked python UDF workers, which do the actual tokenize/pack work — "
-                "a real 6-core executor owns exactly 6 cores, and without pinning the 1-JVM "
-                "baseline silently borrows the whole 32-core box, inflating the denominator), "
-                "barrier-started after warm-up — the faithful N vs 4N executor model: "
-                "`build` partitions the corpus by docid hash (document-partitioned segments, "
-                f"queryable via the segment-merge search), `query` partitions the {n_emu_q}-query batch "
-                "over the SAME full index (query-load scaling).\n\n"
-            )
-            f.write("| stage | unit | throughput @1 JVM | throughput @4 JVMs | efficiency (thr4 / 4·thr1, MEDIAN pair) |\n")
-            f.write("|---|---|---|---|---|\n")
-            emu_units = {"build": "docs/s", "query": "queries/s"}
-            for role, t1, t4, eff in emu_rows:
-                f.write(f"| {role} | {emu_units[role]} | {t1:.1f} | {t4:.1f} | {eff:.3f} |\n")
-            emu_out = os.environ.get("LLMRS_EMU_OUT")
-            f.write(
-                f"\nProtocol: the measured input is page-cache primed (every byte streamed "
-                f"once) before EVERY point, each (1 JVM, 4 JVM) pair runs {emu_passes}×, the "
-                "table quotes the MEDIAN pair's efficiency (round-4 verdict #7 — the "
-                "1-JVM denominator's variance dominates the spread, so no best-of "
-                "cherry-picking). Build output goes to "
-                f"{emu_out or 'the shared /tmp spindle (set LLMRS_EMU_OUT=/dev/shm to model per-node executor disks — real 4N clusters do not share one disk; the disk-vs-tmpfs A/B is in BENCH/BUILD_ATTRIBUTION_r04.md)'}. "
-                "Raw pairs:\n\n"
-            )
-            for role, pairs in emu_raws.items():
-                for i, p in enumerate(pairs):
-                    f.write(
-                        f"- {role} pass {i + 1}: 1 JVM {p['thr1']:.1f}/s (wall {p['wall1']}s), "
-                        f"4 JVMs {p['thr4']:.1f}/s (wall {p['wall4']}s), "
-                        f"pair efficiency {p['thr4'] / (4 * p['thr1']):.3f}"
-                        f" [host steal {p.get('steal1', 0)}% / {p.get('steal4', 0)}%]\n"
-                    )
-            f.write(
-                "\nEvery pair carries the host's CPU-steal reading during each point: "
-                "this sandbox VM shares a variably-oversubscribed host (observed 0-28% "
-                "steal across otherwise-identical runs), and munmap TLB-shootdown IPIs — "
-                "the hot kernel path of the Arrow-UDF tokenize stage — stall for however "
-                "long the host deschedules the target vCPUs, so a high-steal pair times "
-                "the neighbors, not the engine. Pairs with steal ≤2% at both points are "
-                "the engine's number.\n"
-            )
-            f.write(
-                "\nProtocol lineage: round-4's recorded 0.551 (build) / 0.690 (query) were "
-                "measured UNPINNED — the 1-JVM denominator borrowed idle cores beyond its 6 and "
-                "the 4-JVM workers migrated freely, so those ratios measured the OS scheduler as "
-                "much as the engine. The pinned protocol is strictly more faithful and strictly "
-                "harder; any drop vs round-4 is the protocol correction, not an engine "
-                "regression (the engine code paths are identical — the bus-unsaturated pairs "
-                "below isolate the engine from the one-memory-controller artifact).\n"
-            )
-            f.write(
-                "\n### Plan-matched build pairs (pack_group pinned to shard_bucket at both points)\n\n"
-                "Under the round-5 `pack_group='auto'` default the 1-JVM point (400k docs) "
-                "resolves the faster shard_bucket plan while each 4-JVM worker (100k-doc "
-                "slice) resolves bucket — single-node throughput RISES (a real engine win, "
-                "see the pack cutover sweep in PLANS.md round-5 deltas), which mechanically "
-                "lowers eff = thr4/(4·thr1) without any parallel-path regression. These "
-                "pairs pin ONE physical plan at both points so the ratio isolates "
-                "parallelism (same median-of-N protocol as the main table):\n\n"
-            )
-            for i, p in enumerate(pm_pairs):
-                f.write(
-                    f"- plan-matched build pass {i + 1}: 1 JVM {p['thr1']:.1f}/s (wall {p['wall1']}s), "
-                    f"4 JVMs {p['thr4']:.1f}/s (wall {p['wall4']}s), "
-                    f"pair efficiency {p['thr4'] / (4 * p['thr1']):.3f}"
-                    f" [host steal {p.get('steal1', 0)}% / {p.get('steal4', 0)}%]\n"
-                )
-            f.write(f"\nPlan-matched MEDIAN efficiency: **{pm['eff']:.3f}**\n")
-            f.write(
-                f"\n### Bus-unsaturated executor pair: 1 vs 4 warm {unsat_cores}-core JVMs "
-                f"({emu_docs_unsat} docs / {emu_q_unsat} queries, same protocol)\n\n"
-                f"{int(unsat_cores) * 4} pinned cores at the 4-JVM point — far below the "
-                "box's memory-bandwidth ceiling (the 6-core pairs above put 24 cores on one "
-                "memory controller, where a real 4N cluster brings one controller per node). "
-                "This is the honest single-box stand-in for the north rule's N→4N criterion; "
-                "walls are recorded so the fixed per-build action cost (~5-10s) can be "
-                "judged against the 4-JVM point's wall:\n\n"
-            )
-            f.write("| stage | unit | throughput @1 JVM | throughput @4 JVMs | efficiency (thr4 / 4·thr1, MEDIAN pair) |\n")
-            f.write("|---|---|---|---|---|\n")
-            for role, t1, t4, eff in emu_rows_u:
-                f.write(f"| {role} | {emu_units[role]} | {t1:.1f} | {t4:.1f} | {eff:.3f} |\n")
-            f.write("\nRaw pairs:\n\n")
-            for role, pairs in emu_raws_u.items():
-                for i, p in enumerate(pairs):
-                    f.write(
-                        f"- unsaturated {role} pass {i + 1}: 1 JVM {p['thr1']:.1f}/s (wall {p['wall1']}s), "
-                        f"4 JVMs {p['thr4']:.1f}/s (wall {p['wall4']}s), "
-                        f"pair efficiency {p['thr4'] / (4 * p['thr1']):.3f}"
-                        f" [host steal {p.get('steal1', 0)}% / {p.get('steal4', 0)}%]\n"
-                    )
-            if control_emu_pairs:
-                f.write(
-                    "\nEngine-free control at the SAME protocol (1 vs 4 barrier-started "
-                    "pinned 2-core JVMs running a minimal pandas UDF over hash slices of "
-                    "the same corpus — BENCH/control_emu.py, zero engine code). The build "
-                    "rows above should be read against THIS ceiling — it is what the "
-                    "multi-JVM protocol itself permits on this box:\n\n"
-                )
-                for p in control_emu_pairs:
-                    f.write(
-                        f"- control pass {p['pass']}: 1 JVM {p['thr1']}/s (wall {p['wall1']}s), "
-                        f"4 JVMs {p['thr4']}/s (wall {p['wall4']}s), "
-                        f"pair efficiency {p['eff']:.3f}"
-                        f" [host steal {p['steal1']}% / {p['steal4']}%]\n"
-                    )
-        print(
-            json.dumps(
-                {
-                    "scaling": [{"stage": k, "thr8": a, "thr32": b, "eff": e} for k, a, b, e in rows],
-                    "scaling_raw_runs": {m: [{k: round(v, 2) for k, v in r.items()} for r in rs] for m, rs in runs.items()},
-                    "scaling_unsaturated": [
-                        {"stage": k, "thr2": a, "thr8": b, "eff": e} for k, a, b, e in unsat_rows
-                    ],
-                    "scaling_unsaturated_raw_runs": {
-                        m: [{k: round(v, 2) for k, v in r.items()} for r in rs] for m, rs in unsat_runs.items()
-                    },
-                    "executor_emulation": [
-                        {"stage": k, "thr1": a, "thr4": b, "eff": e} for k, a, b, e in emu_rows
-                    ],
-                    "executor_emulation_raw_runs": {
-                        role: [{k: round(v, 1) for k, v in p.items()} for p in pairs]
-                        for role, pairs in emu_raws.items()
-                    },
-                    "executor_emulation_plan_matched_build": {
-                        k: round(v, 3) for k, v in pm.items()
-                    },
-                    "executor_emulation_unsaturated": [
-                        {"stage": k, "thr1": a, "thr4": b, "eff": e} for k, a, b, e in emu_rows_u
-                    ],
-                    "executor_emulation_unsaturated_raw_runs": {
-                        role: [{k: round(v, 1) for k, v in p.items()} for p in pairs]
-                        for role, pairs in emu_raws_u.items()
-                    },
-                }
-            )
-        )
+        print(json.dumps(run_workload(f"local[{_default_cpus()}]", args.sf_dir)))
         return
 
     # Headline protocol (round-3 verdict #9): each pass runs in a FRESH
     # subprocess (its own JVM / python workers / GC state), best-of-N per
-    # segment — the same convention --scaling already uses — and every raw
-    # pass is recorded in the output so regressions are judged on raws,
-    # not on one draw from a ±15% box distribution.
+    # segment, and every raw pass is recorded in the output so regressions
+    # are judged on raws, not on one draw from a ±15% box distribution.
     import subprocess
 
     n_passes = int(os.environ.get("LLMRS_BENCH_PASSES", "2"))

@@ -1,23 +1,16 @@
 #!/usr/bin/env python
-"""Round-6 auxiliary benchmarks. bench.py is FROZEN for measurement (the
-driver times the round-start copy), so every extra measurement lives here
-and is cited from OPTIMIZATION_r06.md.
+"""Block-max WAND skip-rate measurements, the one harness that counts
+intervals skipped (``bm25.WAND_STATS``). Each mode prints one JSON line:
 
-Modes (each prints one JSON line):
-
-  python bench_extra.py stages      noop-sink isolated per-stage walls
-                                    (guide §1.4) for the headline stages,
-                                    min-of-N in one warm session — computation
-                                    time without the count()/persist sink.
-  python bench_extra.py wand-skip   block-max pruning rates: drives the
-                                    shard scorer in-process over the real
-                                    sf0.1 (and sf1 when generated) postings
-                                    with the bench query batch and reports
-                                    intervals scored vs total + blocks
-                                    decoded (WAND_STATS instrumentation).
-  python bench_extra.py sf1         the frozen bench.py headline protocol on
-                                    the 10x sf1 tables (BENCH/gen_sf1.py) —
-                                    the tracked sf1 tier (round-5 verdict #3).
+  python bench_extra.py wand-skip        drives the shard scorer in-process
+                                         over the sf0.1 (and sf1 when
+                                         generated by BENCH/gen_sf1.py)
+                                         postings with the bench query batch
+                                         and reports intervals scored vs
+                                         total + blocks decoded.
+  python bench_extra.py wand-skip-big [N]  the same over an N-doc synthetic
+                                         code corpus (default 10^6), for a
+                                         hot-term batch and a hot+rare batch.
 """
 
 from __future__ import annotations
@@ -25,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
@@ -35,97 +27,6 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF1_DIR = os.environ.get("LLMRS_SF1_DIR", "/tmp/llmrs_sf1")
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def stages(n_reps: int = 3) -> None:
-    from pyspark.sql import functions as F
-
-    from bench import bench_queries
-    from llm_rankers_spark.corpus import driver_documents
-    from llm_rankers_spark.operators.bm25 import bm25_dataframe_from_index, search
-    from llm_rankers_spark.operators.dedup import minhash_lsh_candidates, minhash_signatures
-    from llm_rankers_spark.operators.index_build import build_index
-    from llm_rankers_spark.operators.rerank import MockComparator, rerank
-    from llm_rankers_spark.operators.runs import attach_text
-    from llm_rankers_spark.operators.similarity import cosine_topk
-    from llm_rankers_spark.session import get_spark
-
-    spark = get_spark(app_name="bench_extra_stages")
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = driver_documents(spark, SF_DIR)
-    docs.count()
-    qs = bench_queries(spark)
-    idx_path = tempfile.mkdtemp(prefix="llmrs_bx_idx_")
-    walls: dict[str, list[float]] = {}
-
-    def timed(label: str, fn) -> None:
-        spark.sparkContext.setJobDescription(f"bench_extra: {label}")
-        for _ in range(n_reps):
-            t0 = time.perf_counter()
-            fn()
-            walls.setdefault(label, []).append(time.perf_counter() - t0)
-        spark.sparkContext.setJobDescription(None)
-
-    # build cannot use a noop sink (it IS a write); timed end-to-end
-    def one_build():
-        d = tempfile.mkdtemp(prefix="llmrs_bx_b_", dir=idx_path)
-        build_index(
-            docs.select("docid", "content", "content_sha256"), d,
-            tokenizer_mode="simple", num_shards=16, keep_forward=True,
-        )
-        return d
-
-    t0 = time.perf_counter()
-    first_dir = one_build()
-    walls["build_first_in_session"] = [time.perf_counter() - t0]
-    timed("build", one_build)
-    from llm_rankers_spark.operators.index_build import load_index
-
-    idx = load_index(spark, first_dir)
-    timed("bm25_wand", lambda: _noop(search(idx, qs, k=20)))
-    timed("bm25_sql", lambda: _noop(bm25_dataframe_from_index(idx, qs, k=10)))
-    first = search(idx, qs, k=20).persist()
-    first.count()
-    cands = (
-        attach_text(first, docs).join(qs, "qid")
-        .select("qid", "query", "docid", "rank", "text")
-    )
-    timed("rerank_prep", lambda: _noop(cands))
-    cands_p = cands.persist()
-    cands_p.count()
-    timed("rerank", lambda: _noop(
-        rerank(cands_p, method="setwise.heapsort", comparator=MockComparator(), k=10, num_child=2)
-    ))
-    timed("minhash", lambda: _noop(
-        minhash_lsh_candidates(
-            minhash_signatures(docs, id_col="docid", num_hashes=32, shingle_k=3),
-            num_hashes=32, bands=16,
-        )
-    ))
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding")
-    )
-    qv = emb.limit(32).select(
-        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("qid"),
-        F.col("embedding").alias("qvec"),
-    )
-    timed("cosine", lambda: _noop(cosine_topk(emb, qv, k=10)))
-    big_qs = bench_queries(spark, n=4096)
-    timed("bm25_dist4096", lambda: _noop(search(idx, big_qs, k=10, plan="distributed")))
-    shutil.rmtree(idx_path, ignore_errors=True)
-    out = {
-        "mode": "stages_noop",
-        "sf_dir": SF_DIR,
-        "reps": n_reps,
-        "min": {k: round(min(v), 3) for k, v in walls.items()},
-        "raw": {k: [round(x, 3) for x in v] for k, v in walls.items()},
-    }
-    print(json.dumps(out))
-    spark.stop()
 
 
 def wand_skip() -> None:
@@ -197,8 +98,8 @@ def wand_skip_big(n_docs: int = 1_000_000) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     corpus_dir = os.path.join(tempfile.gettempdir(), f"llmrs_bx_corpus_{n_docs}")
     if not os.path.exists(os.path.join(corpus_dir, "_SUCCESS")):
-        # materialize the synthetic INPUT once (same pattern as bench.py's
-        # emulation input) so the build times indexing, not generation
+        # materialize the synthetic INPUT once so the build times
+        # indexing, not generation
         with_docid(generate_corpus(spark, n_docs, seed=42, partitions=max(64, n_docs // 2000))).select(
             "docid", "content", "content_sha256"
         ).write.mode("overwrite").parquet(corpus_dir)
@@ -250,30 +151,12 @@ def wand_skip_big(n_docs: int = 1_000_000) -> None:
     spark.stop()
 
 
-def sf1() -> None:
-    if not os.path.exists(os.path.join(SF1_DIR, "documents.parquet")):
-        subprocess.run(
-            [sys.executable, os.path.join(REPO, "BENCH", "gen_sf1.py"), SF1_DIR], check=True
-        )
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF1_DIR, PYTHONPATH=REPO)
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        capture_output=True, text=True, env=env, check=True,
-    )
-    parsed = json.loads(out.stdout.strip().splitlines()[-1])
-    print(json.dumps({"mode": "sf1_headline", "sf1_dir": SF1_DIR, "result": parsed}))
-
-
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "stages"
-    if mode == "stages":
-        stages()
-    elif mode == "wand-skip":
+    mode = sys.argv[1] if len(sys.argv) > 1 else None
+    if mode == "wand-skip":
         wand_skip()
     elif mode == "wand-skip-big":
         wand_skip_big(int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000)
-    elif mode == "sf1":
-        sf1()
     else:
         raise SystemExit(f"unknown mode {mode!r}")
 

@@ -60,7 +60,7 @@ def _load_queries(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _add_common(p: argparse.ArgumentParser) -> None:
-    p.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
+    p.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS], else the usable cores)")
     p.add_argument("--tokenizer-mode", default="code", choices=["code", "simple"])
     p.add_argument("--num-shards", type=int, default=8)
 

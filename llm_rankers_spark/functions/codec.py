@@ -64,10 +64,22 @@ def encode_varint(values: np.ndarray) -> tuple[bytes, np.ndarray]:
 
 
 def decode_varint(buf: bytes | memoryview, count: int | None = None) -> np.ndarray:
-    """Decode a LEB128 stream to uint64 (vectorized via reduceat)."""
+    """Decode a LEB128 stream to uint64 (vectorized via reduceat). With
+    ``count`` given, a stream that does not hold exactly that many values
+    raises ``ValueError``; so does a stream ending inside a value."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
-        return np.zeros(0, dtype=_U64)
+        out = np.zeros(0, dtype=_U64)
+    elif b[-1] & 0x80:
+        raise ValueError("varint stream ends inside a value")
+    else:
+        out = _decode_nonempty(b)
+    if count is not None and out.size != count:
+        raise ValueError(f"decoded {out.size} values, expected {count}")
+    return out
+
+
+def _decode_nonempty(b: np.ndarray) -> np.ndarray:
     is_last = (b & 0x80) == 0
     ends = np.flatnonzero(is_last)
     starts = np.empty(ends.size, dtype=np.int64)
@@ -77,10 +89,7 @@ def decode_varint(buf: bytes | memoryview, count: int | None = None) -> np.ndarr
     group = np.searchsorted(ends, idx)
     shift = ((idx - starts[group]) * 7).astype(_U64)
     chunks = (b.astype(_U64) & _MASK7) << shift
-    out = np.bitwise_or.reduceat(chunks, starts)
-    if count is not None and out.size != count:
-        raise ValueError(f"decoded {out.size} values, expected {count}")
-    return out
+    return np.bitwise_or.reduceat(chunks, starts)
 
 
 def pack_postings(
@@ -170,9 +179,11 @@ def pack_postings(
 
 
 def unpack_lists(
-    n: Sequence[int], docs_blob: Sequence[bytes], tfs_blob: Sequence[bytes], dls_blob: Sequence[bytes]
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode many whole posting lists → concatenated (doc_ords, tfs, dls).
+    n: Sequence[int], docs_blob: Sequence[bytes], *value_blobs: Sequence[bytes]
+) -> tuple[np.ndarray, ...]:
+    """Decode many whole posting lists → concatenated (doc_ords, *values),
+    one int64 array per value blob column passed (``tfs_blob``,
+    ``dls_blob`` or both, in the order given).
 
     One varint decode per blob column over the joined blobs, then a
     segmented cumsum restores each list's ordinals from its deltas (the
@@ -186,9 +197,7 @@ def unpack_lists(
     # minus the running sum before each list, spread over its entries
     first = np.cumsum(counts) - counts
     doc_ords = (run - np.repeat(run[first] - deltas[first], counts)).view(np.int64)
-    tfs = decode_varint(b"".join(tfs_blob), total).astype(np.int64)
-    dls = decode_varint(b"".join(dls_blob), total).astype(np.int64)
-    return doc_ords, tfs, dls
+    return (doc_ords,) + tuple(decode_varint(b"".join(col), total).astype(np.int64) for col in value_blobs)
 
 
 def unpack_block(

@@ -15,21 +15,17 @@ TREC_SCHEMA = "qid string, q0 string, docid string, rank int, score double, tag 
 
 
 def read_trec_run(spark: SparkSession, path: str) -> DataFrame:
-    """S1 (run.py:151-176): whitespace-separated 6-column run file."""
-    df = spark.read.csv(path, sep="\t", schema=TREC_SCHEMA)
-    # fall back to arbitrary whitespace if the tab parse produced nulls
-    if df.filter(F.col("docid").isNull()).limit(1).count() > 0:
-        raw = spark.read.text(path)
-        parts = F.split(F.trim(F.col("value")), r"\s+")
-        df = raw.select(
-            parts.getItem(0).alias("qid"),
-            parts.getItem(1).alias("q0"),
-            parts.getItem(2).alias("docid"),
-            parts.getItem(3).cast("int").alias("rank"),
-            parts.getItem(4).cast("double").alias("score"),
-            parts.getItem(5).alias("tag"),
-        )
-    return df
+    """S1 (run.py:151-176): 6-column run file, fields split on any
+    whitespace — tabs as :func:`write_trec_run` writes them, spaces as the
+    reference writes them (run.py:157). Blank lines are skipped; columns
+    take ``TREC_SCHEMA``'s types. One text scan and no probe job."""
+    parts = F.split(F.trim(F.col("value")), r"\s+")
+    fields = [f.split() for f in TREC_SCHEMA.split(", ")]
+    return (
+        spark.read.text(path)
+        .filter(F.col("value").rlike(r"\S"))
+        .select(*[parts.getItem(i).cast(t).alias(c) for i, (c, t) in enumerate(fields)])
+    )
 
 
 def write_trec_run(run: DataFrame, path: str, tag: str = "llm_rankers_spark", single_file: bool = False) -> None:

@@ -51,8 +51,7 @@ def _warm_session(spark: SparkSession) -> None:
       fleet and pays its pandas/pyarrow/numpy imports + Arrow channel setup
       (~3-4 s on 32 cores) exactly once, up front — the long-lived-executor
       model: a production fleet forks and warms workers when the executor
-      starts, not inside the first query of every job (the same argument
-      bench.py's executor emulation documents for its own warm-up);
+      starts, not inside the first query of every job;
     - one 2-row parquet write+read warms the output committer and the
       parquet reader/writer codegen classes (~2 s first use).
 
@@ -139,6 +138,14 @@ def _default_driver_memory() -> str:
     return f"{min(32 * 1024, half_mb)}m"
 
 
+def _default_cpus() -> int:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` when set, otherwise the
+    cores this process may run on (``sched_getaffinity``, which, unlike
+    ``nproc``, ignores the ``OMP_NUM_THREADS=1`` that :func:`get_spark`
+    sets for the Python workers)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "llm_rankers_spark",
     master: str | None = None,
@@ -153,7 +160,7 @@ def get_spark(
     a pandas/Arrow UDF), shuffle partitions sized to parallelism instead of
     the 200 default.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _default_cpus()
     master = master or f"local[{cpus}]"
     # Python-worker process environment. Set in os.environ BEFORE the JVM
     # launches (local mode: pyspark.daemon forks from the JVM, which

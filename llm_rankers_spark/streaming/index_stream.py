@@ -117,10 +117,10 @@ def _decode_postings_forward(idx) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            ords, tfs, _dls = codec.unpack_lists(pdf["n"], pdf["docs_blob"], pdf["tfs_blob"], pdf["dls_blob"])
+            ords, tfs = codec.unpack_lists(pdf["n"], pdf["docs_blob"], pdf["tfs_blob"])
             yield pd.DataFrame({"ord": ords, "term": np.repeat(pdf["term"].to_numpy(), pdf["n"]), "tf": tfs})
 
-    decoded = idx.postings.select("term", "n", "docs_blob", "tfs_blob", "dls_blob").mapInPandas(
+    decoded = idx.postings.select("term", "n", "docs_blob", "tfs_blob").mapInPandas(
         unpack_rows, schema="ord long, term string, tf long"
     )
     return decoded.join(idx.doc_map.select("ord", "docid"), "ord").select("docid", "term", "tf")
@@ -243,104 +243,6 @@ def start_streaming_dedup(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def start_streaming_dedup_tws(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    schema: str = "docid string, content string, content_sha256 string",
-    checkpoint: str | None = None,
-):
-    """:func:`start_streaming_dedup` on Spark 4's ``transformWithStateInPandas``
-    — the successor stateful API (typed state variables on a
-    StatefulProcessor instead of one opaque GroupState tuple; supports
-    state schema evolution and multiple state variables per key). Same
-    semantics, same checkpoint-held cross-restart suppression, same
-    smallest-docid keeper; equivalence to the GroupState twin is pinned in
-    test_streaming.
-
-    Requires the RocksDB state store provider (a transformWithState
-    constraint) — set here on the session; the HDFS-backed default store
-    does not support this operator. ALSO requires the ``protobuf`` package
-    (the TWS state protocol speaks protobuf between JVM and the python
-    state server) — absent in this container, so construction raises the
-    explicit environment-stub error, same contract as the PIL/torch plug
-    points; on a cluster with protobuf installed the operator runs as
-    written."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package (absent "
-            "in this container — its state protocol is protobuf-framed). "
-            "Use start_streaming_dedup (applyInPandasWithState, same "
-            "semantics, tested) here; this variant runs where protobuf is "
-            "installed."
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # queries clone the session conf at start, so setting the provider for
-    # THIS query and restoring afterwards does not leak RocksDB onto later
-    # queries whose checkpoints were written with the default store
-    # (round-4 review finding)
-    _conf_key = "spark.sql.streaming.stateStore.providerClass"
-    _prev_provider = spark.conf.get(_conf_key, None)
-    spark.conf.set(
-        _conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class KeepFirst(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", "seen int")
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._seen.exists():
-                return iter(())
-            best = None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                cand = pdf.loc[pdf["docid"].idxmin()]
-                if best is None or cand["docid"] < best["docid"]:
-                    best = cand
-            if best is None:
-                return iter(())
-            self._seen.update((1,))
-            return iter([best.to_frame().T])
-
-        def close(self) -> None:
-            pass
-
-    # the try opens BEFORE stream construction: readStream /
-    # transformWithStateInPandas can themselves raise, and the provider
-    # override must not leak onto the shared session in that case either
-    # (round-4 ADVICE)
-    try:
-        stream = spark.readStream.schema(schema).parquet(input_dir)
-        kept = stream.groupBy("content_sha256").transformWithStateInPandas(
-            statefulProcessor=KeepFirst(),
-            outputStructType=schema,
-            outputMode="append",
-            timeMode="none",
-        )
-        return (
-            kept.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint or out_dir + "_checkpoint")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        if _prev_provider is None:
-            spark.conf.unset(_conf_key)
-        else:
-            spark.conf.set(_conf_key, _prev_provider)
 
 
 def streaming_sessionize(

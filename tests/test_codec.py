@@ -38,6 +38,18 @@ def test_varint_boundaries():
     assert nbytes.tolist() == [1, 1, 1, 2, 2, 3, 3, 4, 9]
 
 
+def test_varint_rejects_stream_without_count_values():
+    # an empty stream holds 0 values, not the 3 asked for
+    with pytest.raises(ValueError, match="expected 3"):
+        decode_varint(b"", 3)
+    assert decode_varint(b"", 0).size == 0
+    # the second value's continuation bit is set but its next byte is missing
+    with pytest.raises(ValueError, match="ends inside a value"):
+        decode_varint(b"\x05\x85", 2)
+    with pytest.raises(ValueError, match="ends inside a value"):
+        decode_varint(b"\x85")
+
+
 @given(
     st.lists(st.tuples(st.integers(0, 10**9), st.integers(1, 500), st.integers(1, 5000)), min_size=1, max_size=400)
 )
@@ -143,11 +155,14 @@ def test_batched_pack_byte_identical_to_per_list(groups):
     for i in range(len(groups)):
         want = pack_posting_list(ords_l[i], tfs_l[i], dls_l[i], avgdl=123.4)
         assert {c: v[i] for c, v in got.items()} == want
-    # one batch decode restores every list
+    # one batch decode restores every list, with or without the dl column
     o2, t2, l2 = unpack_lists(got["n"], got["docs_blob"], got["tfs_blob"], got["dls_blob"])
     assert o2.tolist() == ords.tolist()
     assert t2.tolist() == tfs.tolist()
     assert l2.tolist() == dls.tolist()
+    o3, t3 = unpack_lists(got["n"], got["docs_blob"], got["tfs_blob"])
+    assert o3.tolist() == ords.tolist()
+    assert t3.tolist() == tfs.tolist()
 
 
 def test_batched_pack_rejects_non_increasing_within_group():

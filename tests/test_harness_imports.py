@@ -1,24 +1,22 @@
-"""The benchmark and plan-capture scripts at the repo root, in BENCH/ and in
-plans/r06/ are never run by the test suite, so an engine change can break
-what they import or call without any test noticing. This parses each
-script and checks that every name it imports from ``llm_rankers_spark`` (at
-any nesting depth, e.g. inside a function) still exists, and that every
-keyword argument it passes to an imported engine function is one of that
-function's parameters. No Spark session."""
+"""The benchmark and plan-capture scripts at the repo root and in BENCH/
+are never run by the test suite, so an engine change can break what they
+import or call without any test noticing. This parses each script and
+checks that every name it imports from ``llm_rankers_spark`` (at any
+nesting depth, e.g. inside a function) still exists, that every keyword
+argument it passes to an imported engine function is one of that
+function's parameters, and that no script pins a literal ``local[N]``
+master (the session sizes itself to the box). No Spark session."""
 
 import ast
 import importlib
 import inspect
+import re
 from pathlib import Path
 
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
-SCRIPTS = sorted(
-    [REPO / "bench.py", REPO / "bench_extra.py"]
-    + list((REPO / "BENCH").glob("*.py"))
-    + list((REPO / "plans" / "r06").glob("*.py"))
-)
+SCRIPTS = sorted([REPO / "bench.py", REPO / "bench_extra.py"] + list((REPO / "BENCH").glob("*.py")))
 
 
 def _engine_imports(tree: ast.AST) -> list[tuple[str, list[ast.alias]]]:
@@ -50,7 +48,7 @@ def _resolve(module: str, name: str):
 
 
 def test_every_script_is_checked():
-    assert {"bench.py", "bench_extra.py", "scale_proof.py", "capture_r06.py"} <= {p.name for p in SCRIPTS}
+    assert {p.name for p in SCRIPTS} == {"bench.py", "bench_extra.py", "capture_plans.py", "gen_sf1.py", "scale_proof.py"}
 
 
 @pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: str(p.relative_to(REPO)))
@@ -102,3 +100,13 @@ def _bad_keywords(path: Path) -> list[str]:
 def test_engine_call_keywords_exist(path):
     bad = _bad_keywords(path)
     assert not bad, f"{path.name} passes keywords the engine no longer takes: {bad}"
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: str(p.relative_to(REPO)))
+def test_no_literal_local_master(path):
+    pinned = [
+        f"line {node.lineno}: {node.value!r}"
+        for node in ast.walk(_parse(path))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str) and re.fullmatch(r"local\[\d+\]", node.value)
+    ]
+    assert not pinned, f"{path.name} pins a local[N] master instead of the session default: {pinned}"

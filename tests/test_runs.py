@@ -35,6 +35,20 @@ def test_trec_roundtrip(spark, run, tmp_path):
     assert r["docid"] == "d0" and r["q0"] == "Q0" and r["tag"] == "test"
 
 
+def test_trec_tab_and_space_separated_read_equal(spark, tmp_path):
+    # write_trec_run writes tabs; the reference writes spaces (run.py:157)
+    rows = [("q1", "Q0", "d3", 1, 2.5, "bm25"), ("q1", "Q0", "d7", 2, 1e-05, "bm25"), ("q2", "Q0", "d1", 1, -0.5, "bm25")]
+    p_tab, p_space = tmp_path / "tab.trec", tmp_path / "space.trec"
+    p_tab.write_text("".join("\t".join(map(str, r)) + "\n" for r in rows))
+    p_space.write_text("\n" + "".join("  " + " ".join(map(str, r)) + " \n\n" for r in rows))
+    tab = read_trec_run(spark, str(p_tab))
+    space = read_trec_run(spark, str(p_space))
+    assert tab.dtypes == space.dtypes == [
+        ("qid", "string"), ("q0", "string"), ("docid", "string"), ("rank", "int"), ("score", "double"), ("tag", "string")
+    ]
+    assert sorted(tab.collect()) == sorted(space.collect()) == sorted(rows)
+
+
 def test_trec_single_file_equals_parts(spark, run, tmp_path):
     # single_file merges the range-partitioned parts driver-side: the line
     # sequence must equal the multi-part write read in sorted part order,

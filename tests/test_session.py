@@ -2,13 +2,21 @@
 
 import os
 
-from llm_rankers_spark.session import _default_driver_memory
+from llm_rankers_spark.session import _default_cpus, _default_driver_memory
 
 
 def test_default_driver_memory_fits_physical_ram():
     mb = int(_default_driver_memory().rstrip("m"))
     half_phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 * 1024 * 1024)
     assert 0 < mb == min(32 * 1024, half_phys_mb)
+
+
+def test_default_cpus_env_wins_else_affinity(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setenv("OMP_NUM_THREADS", "1")
+    assert _default_cpus() == len(os.sched_getaffinity(0))
 
 
 def test_session_driver_memory_follows_env_or_default(spark):

@@ -318,43 +318,3 @@ def test_streaming_dedup_stateful_across_restarts(spark, tmp_path):
     q2.awaitTermination(120)
     got2 = {(r["docid"], r["content"]) for r in spark.read.parquet(out).collect()}
     assert got2 == got1 | {("d5", "delta")}
-
-
-def test_streaming_dedup_tws_matches_groupstate_twin(spark, tmp_path):
-    # Spark 4 transformWithStateInPandas variant: identical semantics to
-    # the applyInPandasWithState operator, including cross-restart
-    # suppression through the RocksDB-held value state. The TWS state
-    # protocol needs protobuf; without it the operator must raise the
-    # explicit environment-stub error (and the replay is skipped).
-    pytest.importorskip("pyspark.sql.streaming.stateful_processor")
-    from llm_rankers_spark.streaming.index_stream import start_streaming_dedup_tws
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            start_streaming_dedup_tws(spark, "/nonexistent/*", "/nonexistent_out")
-        pytest.skip("protobuf absent: TWS gated as an environment plug point")
-
-    base = str(tmp_path / "tw_in")
-    out = str(tmp_path / "tw_out")
-    ck = str(tmp_path / "tw_ck")
-    rows1 = [("d1", "alpha beta"), ("d2", "alpha beta"), ("d3", "gamma")]
-    rows2 = [("d4", "alpha beta"), ("d5", "delta"), ("d0", "gamma")]
-    df1 = spark.createDataFrame(rows1, "docid string, content string").withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    df1.write.mode("overwrite").parquet(os.path.join(base, "drop1"))
-    q = start_streaming_dedup_tws(spark, os.path.join(base, "*"), out, checkpoint=ck)
-    assert q.awaitTermination(120)
-    got1 = {(r["docid"], r["content"]) for r in spark.read.parquet(out).collect()}
-    assert got1 == {("d1", "alpha beta"), ("d3", "gamma")}
-
-    df2 = spark.createDataFrame(rows2, "docid string, content string").withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    df2.write.mode("overwrite").parquet(os.path.join(base, "drop2"))
-    q2 = start_streaming_dedup_tws(spark, os.path.join(base, "*"), out, checkpoint=ck)
-    assert q2.awaitTermination(120)
-    got2 = {(r["docid"], r["content"]) for r in spark.read.parquet(out).collect()}
-    assert got2 == got1 | {("d5", "delta")}
