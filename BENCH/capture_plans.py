@@ -5,7 +5,11 @@ Captures three hot-path physical plans on a small sf0.001 build:
 
 1. IN-pushdown postings scan — `search()` with a <=512-term batch must
    show the literal In(term, ...) predicate in PushedFilters (row-group
-   pruning at the parquet scan).
+   pruning at the parquet scan), and the scan's Location must list only
+   the batch's `bucket=` directories (`postings_for` picks them before
+   the scan, so no PartitionFilters appear). sf0.001 sizes to a single
+   bucket by default, so the capture's index is built with
+   `num_buckets=NUM_BUCKETS`.
 2. Tree top-k merge — `search(plan='distributed')` over 8 shards with
    `bm25.TREE_MERGE_MIN_SHARDS = 0` and `bm25.TREE_MERGE_FANIN = 2` must
    show the stacked per-level ranking windows
@@ -58,7 +62,7 @@ def main() -> None:
     from llm_rankers_spark.corpus import driver_documents
     from llm_rankers_spark.operators import bm25
     from llm_rankers_spark.operators.bm25 import search
-    from llm_rankers_spark.operators.index_build import build_index
+    from llm_rankers_spark.operators.index_build import NUM_BUCKETS, build_index
     from llm_rankers_spark.session import get_spark
 
     spark = get_spark(shuffle_partitions=8)
@@ -75,7 +79,7 @@ def main() -> None:
     idx = build_index(
         docs.select("docid", "content", "content_sha256"), idx_dir,
         tokenizer_mode="simple", num_shards=8, pack_group="shard_bucket",
-        explain_out=eo,
+        num_buckets=NUM_BUCKETS, explain_out=eo,
     )
     pack_ex = excerpt(
         eo["pack_plan"],
@@ -90,8 +94,13 @@ def main() -> None:
     in_ex = excerpt(
         explain_formatted(run),
         [r"Scan parquet", r"Filter", r"FlatMapGroupsInPandas", r"WindowGroupLimit"],
-        [r"PushedFilters", r"PartitionFilters"],
-    )
+        [r"PushedFilters", r"Location"],
+    ).replace(idx_dir, "<index>")
+
+    loc = re.search(r"postings/bucket=\d+(?:, \.\.\. (\d+) entries)?\]", in_ex)
+    assert loc, "postings scan Location missing"
+    n_buckets_read = int(loc.group(1) or 1)
+    assert n_buckets_read < NUM_BUCKETS, "postings scan opens every bucket"
 
     # --- tree merge levels ------------------------------------------------
     # the tree runs above TREE_MERGE_MIN_SHARDS; lower it and the fan-in so
@@ -106,7 +115,8 @@ def main() -> None:
 
     block = f"""{BEGIN}
 _Regenerated by `python BENCH/capture_plans.py` on sf0.001 (8 shards,
-fanin 2) — excerpts keep only the claim-bearing nodes._
+{NUM_BUCKETS} term buckets, fanin 2) — excerpts keep only the
+claim-bearing nodes._
 
 **shard_bucket pack** — grouping key is `(shard, bucket)` (hot term split
 across shards; task rows bounded by the shard's bucket share) and the
@@ -118,7 +128,8 @@ global df arrives via the slim-count broadcast join this mode pays for:
 
 **IN-pushdown postings scan** — the <=512-term batch reaches the parquet
 scan as a literal `In(term, ...)` PushedFilter (row-group pruning below
-the join), with bucket PartitionFilters pruning files statically:
+the join), and the scan opens only the batch's term-bucket directories
+(`Location`: {n_buckets_read} of {NUM_BUCKETS}, picked before the scan):
 
 ```
 {in_ex}

@@ -21,7 +21,8 @@ SCALE_PROOF_r06.*):
    32-shard segment, and the same batch again: the two results must be
    row-identical.
 
-Measurements 2-4 share one session and the corpus directory;
+Measurements 2-4 share one session and the corpus directory
+(`bench_extra.code_corpus`, which `bench_extra.py wand-skip-big` reads too);
 LLMRS_SCALE_DOCS resizes the corpus. Run serialized — never concurrently
 with other Spark jobs on this box.
 """
@@ -76,21 +77,8 @@ def sf1_oracle_spot_check(spark) -> dict:
     }
 
 
-def big_corpus(spark):
-    """The N_BIG-doc synthetic code corpus, written to parquet once so the
-    builds time indexing, not generation."""
-    from llm_rankers_spark.corpus import generate_corpus, with_docid
-
-    corpus_dir = os.path.join(tempfile.gettempdir(), f"llmrs_scale_corpus_{N_BIG}")
-    if not os.path.exists(os.path.join(corpus_dir, "_SUCCESS")):
-        docs = with_docid(generate_corpus(spark, N_BIG, seed=42, partitions=128)).select(
-            "docid", "content", "content_sha256"
-        )
-        docs.write.mode("overwrite").parquet(corpus_dir)
-    return spark.read.parquet(corpus_dir)
-
-
 def big_build_and_search(spark) -> dict:
+    from bench_extra import code_corpus
     from llm_rankers_spark.operators import bm25
     from llm_rankers_spark.operators.bm25 import search
     from llm_rankers_spark.operators.index_build import build_index
@@ -98,7 +86,7 @@ def big_build_and_search(spark) -> dict:
     res: dict = {"n_docs": N_BIG}
     idx_dirs = {}
     try:
-        docs = big_corpus(spark)
+        docs = code_corpus(spark, N_BIG)
         for mode in ("bucket", "shard_bucket"):
             idx_dirs[mode] = tempfile.mkdtemp(prefix=f"llmrs_scale_idx_{mode}_")
             t0 = time.perf_counter()
@@ -150,6 +138,7 @@ def big_build_and_search(spark) -> dict:
 
 
 def segments_and_compaction(spark) -> dict:
+    from bench_extra import code_corpus
     from pyspark.sql import functions as F
 
     from llm_rankers_spark.operators.index_build import build_index
@@ -170,7 +159,7 @@ def segments_and_compaction(spark) -> dict:
         )
         return rows, round(time.perf_counter() - t0, 1)
 
-    docs = big_corpus(spark)
+    docs = code_corpus(spark, N_BIG)
     root = tempfile.mkdtemp(prefix="llmrs_scale_segs_")
     try:
         seg_walls = []

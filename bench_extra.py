@@ -79,6 +79,20 @@ def wand_skip() -> None:
     spark.stop()
 
 
+def code_corpus(spark, n_docs: int):
+    """The ``n_docs``-doc synthetic code corpus (seed 42), written to parquet
+    once per size in the temp dir so builds time indexing, not generation.
+    ``wand-skip-big`` and ``BENCH/scale_proof.py`` share it."""
+    from llm_rankers_spark.corpus import generate_corpus, with_docid
+
+    corpus_dir = os.path.join(tempfile.gettempdir(), f"llmrs_code_corpus_{n_docs}")
+    if not os.path.exists(os.path.join(corpus_dir, "_SUCCESS")):
+        with_docid(generate_corpus(spark, n_docs, seed=42, partitions=128)).select(
+            "docid", "content", "content_sha256"
+        ).write.mode("overwrite").parquet(corpus_dir)
+    return spark.read.parquet(corpus_dir)
+
+
 def wand_skip_big(n_docs: int = 1_000_000) -> None:
     """Skip rates on the 10^6-doc synthetic CODE corpus (round-5 verdict #2:
     sf-small tiers are all-hot by construction and prune little — the code
@@ -87,7 +101,6 @@ def wand_skip_big(n_docs: int = 1_000_000) -> None:
     before the driver collect, exactly the rows a traversal reads."""
     from collections import Counter
 
-    from llm_rankers_spark.corpus import generate_corpus, with_docid
     from llm_rankers_spark.functions.tokenize import tokenize
     from llm_rankers_spark.operators import bm25 as B
     from llm_rankers_spark.operators.index_build import build_index, load_index
@@ -96,18 +109,11 @@ def wand_skip_big(n_docs: int = 1_000_000) -> None:
 
     spark = get_spark(app_name="bench_extra_wand_skip_big")
     spark.sparkContext.setLogLevel("ERROR")
-    corpus_dir = os.path.join(tempfile.gettempdir(), f"llmrs_bx_corpus_{n_docs}")
-    if not os.path.exists(os.path.join(corpus_dir, "_SUCCESS")):
-        # materialize the synthetic INPUT once so the build times
-        # indexing, not generation
-        with_docid(generate_corpus(spark, n_docs, seed=42, partitions=max(64, n_docs // 2000))).select(
-            "docid", "content", "content_sha256"
-        ).write.mode("overwrite").parquet(corpus_dir)
     idx_dir = os.path.join(tempfile.gettempdir(), f"llmrs_bx_bigidx_{n_docs}")
     t_build = None
     if not os.path.exists(os.path.join(idx_dir, "_index_meta.json")):
         t0 = time.perf_counter()
-        build_index(spark.read.parquet(corpus_dir), idx_dir, tokenizer_mode="code", num_shards=32)
+        build_index(code_corpus(spark, n_docs), idx_dir, tokenizer_mode="code", num_shards=32)
         t_build = round(time.perf_counter() - t0, 1)
     idx = load_index(spark, idx_dir)
     pool = ["parse", "query", "import", "def", "return", "self", "request", "handler",

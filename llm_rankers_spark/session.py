@@ -146,6 +146,33 @@ def _default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def _master_cores(master: str, cpus: int) -> int:
+    """Parallelism a master names: the first field inside its brackets
+    (``local[4]``, ``local[4,2]`` and ``local-cluster[4,1,1024]`` give 4),
+    ``cpus`` for ``*`` and for a master without brackets. On a cluster
+    you would size shuffle partitions to 2-3x its total cores instead."""
+    if "[" not in master:
+        return cpus
+    n = master[master.find("[") + 1 : master.find("]")].split(",")[0].strip()
+    return cpus if n == "*" else int(n)
+
+
+# holds only llmrs_daemon.py: on PYTHONPATH it exposes no other module
+_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
+
+
+def _worker_daemon_conf(master: str) -> dict[str, str]:
+    """Confs that launch the Python workers from ``llmrs_daemon`` (see
+    :func:`get_spark`); only for ``local*`` masters, whose executors run
+    on this host and see this package's path."""
+    if not master.startswith("local"):
+        return {}
+    return {
+        "spark.python.daemon.module": "llmrs_daemon",
+        "spark.executorEnv.PYTHONPATH": _DAEMON_DIR,
+    }
+
+
 def get_spark(
     app_name: str = "llm_rankers_spark",
     master: str | None = None,
@@ -159,6 +186,22 @@ def get_spark(
     skew-join mitigation), Arrow on (every custom operator in this engine is
     a pandas/Arrow UDF), shuffle partitions sized to parallelism instead of
     the 200 default.
+
+    Python workers: every PySpark task calls ``importlib.invalidate_caches()``
+    before it reads a row. Before Python 3.12 that makes each zip importer
+    re-read its archive's whole directory, and the workers import pyspark
+    from ``pyspark.zip`` through about 20 importers, so each task re-read
+    about 27,000 entries: about 0.25 CPU s per task on a 4-core host, the
+    bulk of a trivial 4-task pandas-UDF job's 1.0-1.4 s of worker CPU. For
+    ``local*`` masters the workers therefore fork from ``llmrs_daemon``
+    (``pyworker/llmrs_daemon.py``), which installs CPython 3.12's lazy
+    invalidation, keyed on each archive's mtime, size and inode, and then
+    runs ``pyspark.daemon``'s manager; the same job then takes 0.07-0.22 s.
+    On Python 3.12 and later the module installs nothing. Other masters get
+    neither conf, as this package's path does not exist on their executors;
+    a cluster operator who ships ``llmrs_daemon.py`` to every executor sets
+    ``spark.python.daemon.module=llmrs_daemon`` and
+    ``spark.executorEnv.PYTHONPATH`` to its directory.
     """
     cpus = _default_cpus()
     master = master or f"local[{cpus}]"
@@ -198,9 +241,7 @@ def get_spark(
         for k, v in _worker_env.items():
             os.environ.setdefault(k, v)
     if shuffle_partitions is None:
-        # local[N] → N; on a cluster you'd size this to 2-3× total cores.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
-        shuffle_partitions = cpus if n == "*" else int(n)
+        shuffle_partitions = _master_cores(master, cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -227,6 +268,9 @@ def get_spark(
         builder = builder.config("spark.python.unix.domain.socket.enabled", "true")
     for k, v in _worker_env.items():
         builder = builder.config(f"spark.executorEnv.{k}", os.environ.get(k, v))
+    # workers fork from llmrs_daemon: see "Python workers" in the docstring
+    for k, v in _worker_daemon_conf(master).items():
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

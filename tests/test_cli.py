@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _run_cli(*args: str) -> str:
-    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="8")
+    env = dict(os.environ, PYTHONPATH=REPO)
     out = subprocess.run(
         [sys.executable, "-m", "llm_rankers_spark", *args],
         capture_output=True, text=True, env=env, cwd="/tmp", timeout=420,
@@ -135,7 +135,7 @@ def test_cli_compact_segments(spark, tmp_path):
     assert search(idx, qs, k=5).count() == 5
 
     # a bad root must not exit 0 with plausible JSON (round-5 review finding)
-    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="8")
+    env = dict(os.environ, PYTHONPATH=REPO)
     out = subprocess.run(
         [sys.executable, "-m", "llm_rankers_spark", "compact", "--root", str(tmp_path / "nope")],
         capture_output=True, text=True, env=env, cwd="/tmp", timeout=420,

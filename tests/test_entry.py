@@ -109,3 +109,10 @@ def test_worker_env_hygiene_defaults(spark):
     # the node-local worker channel rides Unix domain sockets (Spark 4.1)
     if _os.environ.get("LLMRS_UDS", "1") != "0":
         assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    # a local master's workers fork from llmrs_daemon (lazy zipimport
+    # invalidation), found on the executor PYTHONPATH
+    from llm_rankers_spark.session import _DAEMON_DIR
+
+    assert spark.sparkContext.master.startswith("local")
+    assert spark.conf.get("spark.python.daemon.module") == "llmrs_daemon"
+    assert spark.conf.get("spark.executorEnv.PYTHONPATH") == _DAEMON_DIR
