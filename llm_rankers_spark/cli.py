@@ -143,8 +143,6 @@ def build_parser() -> argparse.ArgumentParser:
     p_p.add_argument("--minhash-hashes", type=int, default=32)
     p_p.add_argument("--minhash-bands", type=int, default=16)
     p_p.add_argument("--shingle-k", type=int, default=3)
-    p_p.add_argument("--cc-method", choices=["label", "star"], default="label",
-                     help="connected-components solver: star = O(log n) rounds for long-path dup graphs")
     p_p.add_argument("--benchmark", default=None,
                      help="parquet of eval items (bench_id, text); adds a "
                           "decontamination stage dropping docs whose shingle "
@@ -258,7 +256,6 @@ def main(argv: list[str] | None = None) -> int:
             minhash_hashes=args.minhash_hashes,
             minhash_bands=args.minhash_bands,
             shingle_k=args.shingle_k,
-            cc_method=args.cc_method,
             benchmark=spark.read.parquet(args.benchmark) if args.benchmark else None,
             contamination_shingle_k=args.contamination_shingle_k,
             contamination_threshold=args.contamination_threshold,

@@ -1497,11 +1497,11 @@ SELECT media_id, kind, n_bytes, hx AS sha256, {", ".join(sums)} FROM h
 
 
 def q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs → keep-one clusters: min-label-propagation connected
+    """Candidate pairs → keep-one clusters: large-star/small-star connected
     components over the (oracled) MinHash-LSH pair set. The oracle computes
     the same components with a recursive-CTE transitive closure — fine at
-    oracle scale, which is exactly why the engine side uses the iterative
-    join instead."""
+    oracle scale, which is exactly why the engine side uses the O(log n)
+    round loop instead."""
     pairs = q_minhash_lsh_pairs(spark, sf_dir)
     cc = dedup_ops.connected_components(pairs)
     return (
@@ -1514,7 +1514,7 @@ def q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # transitive closure over `pairs` → roots(id, root): fine at oracle scale,
-# which is exactly why the engine side uses iterative label propagation
+# which is exactly why the engine side uses large-star/small-star rounds
 _SQL_CLOSURE_CTES = """
 edges AS (SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs),
 reach(a, b) AS (

@@ -9,10 +9,10 @@ DataFrame plans:
 - MinHash + LSH: shingle → 64-bit hash → k permutation-mins → band →
   bucket join. Candidate generation never compares all pairs: only docs
   sharing a band bucket meet, and bucket sizes are bounded by banding.
-- SimHash: 64-bit bit-majority fingerprint; near-dups share fingerprints
-  (or low Hamming distance via band rotation).
-- n-gram Jaccard: exact verification on candidate pairs from a shared
-  rare-shingle join (df-capped so hot shingles never build hot buckets).
+- SimHash: 64-bit bit-majority fingerprint; near-dups share fingerprints.
+- n-gram Jaccard: exact shingle-set verification of candidate pairs.
+- connected components (large-star/small-star): candidate pairs →
+  keep-one clusters rooted at each component's minimum id.
 """
 
 from __future__ import annotations
@@ -90,9 +90,15 @@ def _with_shingles(docs: DataFrame, id_col: str, content_col: str, k: int, mode:
     # runs the tokenizer UDF + shingle explosion serially on ONE core.
     # Repartition only when the inherited shape is coarser than the
     # cluster's parallelism — a real corpus scan has plentiful splits and
-    # never pays this shuffle.
+    # never pays this shuffle. The count is read without a job: an
+    # exchange-free plan reports its splits from the plan alone, while an
+    # adaptive (AQE) plan would have to run its shuffle to report one — and
+    # AQE's coalescing already keeps defaultParallelism reads unless each
+    # would hold under spark.sql.adaptive.coalescePartitions.minPartitionSize
+    # (1 MB), so such a plan is left as it is.
     par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
+    adaptive = docs._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan"
+    if not adaptive and docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
     return (
         docs.select(F.col(id_col).alias("id"), tokens_col(content_col, mode=mode).alias("_toks"))
@@ -232,34 +238,6 @@ def jaccard_pairs(
     return out.filter(F.col("jaccard") >= threshold)
 
 
-def ngram_jaccard_dedup(
-    docs: DataFrame,
-    id_col: str = "docid",
-    content_col: str = "content",
-    shingle_k: int = 5,
-    threshold: float = 0.8,
-    max_shingle_df: int = 50,
-) -> DataFrame:
-    """Exact near-dup pairs above ``threshold`` without LSH: candidates are
-    docs sharing ≥1 *rare* shingle (df ≤ max_shingle_df — a hot shingle like
-    'import os' would otherwise create an O(df²) bucket), verified exactly.
-
-    Completeness note: a pair whose every shared shingle is hot is missed;
-    at threshold ≥ 0.8 near-dups share many shingles, so in practice rare
-    ones exist. MinHash-LSH is the probabilistically-complete alternative."""
-    sh = _with_shingles(docs, id_col, content_col, shingle_k).select("id", F.explode("sh").alias("shingle"))
-    w = Window.partitionBy("shingle")
-    rare = sh.withColumn("df", F.count("*").over(w)).filter(F.col("df") <= max_shingle_df).drop("df")
-    cands = (
-        rare.alias("l")
-        .join(rare.alias("r"), "shingle")
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return jaccard_pairs(docs, cands, id_col, content_col, shingle_k, threshold)
-
-
 def contamination_overlap(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -340,21 +318,11 @@ def simhash(
     return bit_sums.select("id", fp.alias("simhash"))
 
 
-def simhash_duplicates(sigs: DataFrame) -> DataFrame:
-    """Docs sharing an identical simhash (fingerprint-equality near-dups)."""
-    return (
-        sigs.groupBy("simhash")
-        .agg(F.count("*").alias("group_size"), F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.col("group_size") > 1)
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    method: str = "label",
     stats: dict | None = None,
 ) -> DataFrame:
     """Duplicate-pair clustering: connected components. Turns candidate
@@ -362,104 +330,9 @@ def connected_components(
     between near-dup detection and actual removal in a training-data
     pipeline.
 
-    ``method='label'`` (default): min-label propagation. Each iteration is
-    one join + one min-aggregate, both shuffling on the node id; converges
-    in O(component diameter) rounds. Dedup duplicate graphs are
-    star-dominated (a shared near-identical text links all its copies to
-    one rep), so 2-4 iterations settle real workloads.
-
-    ``method='star'``: alternating large-star/small-star rounds (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — O(log n)
-    rounds regardless of diameter, the right tool for adversarial
-    long-path graphs (a 10^9-node chain would run min-label to its
-    iteration cap). Same per-round shuffle cost as one label iteration.
-
-    Both loops ``localCheckpoint`` to truncate the growing lineage each
-    round and exit on a metadata-sized convergence action; hitting
-    ``max_iter`` without converging raises (round-3 ADVICE: silently
-    returning split clusters corrupts the downstream dedup).
-
-    Returns (id, root) for every node appearing in ``pairs``; root = the
-    component's minimum id (deterministic keep-one rule).
-    """
-    und = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    if method == "star":
-        return _cc_two_phase_star(und, max_iter, stats)
-    if method != "label":
-        raise ValueError(f"unknown connected-components method {method!r}")
-    edges = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    edges = edges.persist()
-    labels = edges.select("a").distinct().withColumn("label", F.col("a"))
-    prev_ckpt: DataFrame | None = None
-    converged = False
-    iters = 0
-    for _ in range(max_iter):
-        iters += 1
-        nbr_min = (
-            edges.join(labels.select(F.col("a").alias("b"), "label"), "b")
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "a", "left")
-            .select("a", F.least("label", "nbr_min").alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "a")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        # the changed-count action has materialized new_labels' checkpoint,
-        # so the PREVIOUS round's blocks are now dead — release them instead
-        # of letting cached RDD blocks accumulate one per round until the
-        # session GCs (round-4 ADVICE; bounded by rounds, unbounded by graph)
-        if prev_ckpt is not None:
-            _release_local_checkpoint(prev_ckpt)
-        prev_ckpt = new_labels
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if stats is not None:
-        stats["iterations"] = iters
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(method='label') did not converge in {max_iter} "
-            "iterations (component diameter exceeds the cap) — rerun with "
-            "method='star', which needs only O(log n) rounds"
-        )
-    return labels.select(F.col("a").alias("id"), F.col("label").alias("root"))
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the cached blocks behind a ``localCheckpoint()``-ed frame.
-
-    Spark's cache manager only tracks ``persist()`` registrations, so
-    ``Dataset.unpersist()`` is a no-op for local checkpoints; the blocks
-    live until the backing RDD is garbage-collected. The iterative CC loops
-    produce one checkpoint per round, so without an explicit release the
-    dead rounds' blocks pile up proportionally to graph size (round-4
-    ADVICE). Reach the checkpointed RDD through the analyzed ``LogicalRDD``
-    and drop its blocks through ``SparkContext.unpersistRDD`` — the same
-    release ``RDD.unpersist`` makes, without the WARN line that method logs
-    for every locally checkpointed RDD. Best-effort — if that fails (the
-    frame is not a local checkpoint, or the internal surface shifted), one
-    warning names the exception and the blocks wait for GC rather than
-    failing the job."""
-    try:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
-    except Exception as e:
-        warnings.warn(f"could not release a local checkpoint's blocks: {e!r}", stacklevel=2)
-
-
-def _cc_two_phase_star(und: DataFrame, max_iter: int, stats: dict | None = None) -> DataFrame:
-    """Alternating large-star/small-star connected components.
-
-    Edges are kept canonically as (a, b) with a > b. Per round:
+    Alternating large-star/small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014). Edges are kept
+    canonically as (a, b) with a > b. Per round:
 
     - large-star: from the symmetric view, every node u computes
       m = min(Γ(u) ∪ {u}) and reconnects each STRICTLY LARGER neighbor
@@ -467,21 +340,35 @@ def _cc_two_phase_star(und: DataFrame, max_iter: int, stats: dict | None = None)
     - small-star: every node u reconnects its smaller-or-equal
       neighborhood (and itself) to its minimum — stars flatten.
 
-    Each phase is one groupBy(min) + one join, shuffling on the node id —
-    identical per-round cost to a label iteration, but path lengths halve
-    every round, so chains converge in O(log n) rounds instead of O(n).
-    Convergence = the canonical edge set reaches a fixed point. A
-    metadata-sized (count, checksum) action per round is the fast filter;
-    on a signature match, one anti-join confirms exact set equality before
-    the fixed point is declared (a checksum alone could collide).
+    Each phase is one groupBy(min) + one join, shuffling on the node id;
+    path lengths halve every round, so a chain converges in O(log n) rounds
+    where min-label propagation needs its O(n) diameter. Convergence = the
+    canonical edge set reaches a fixed point. A metadata-sized (count,
+    checksum) action per round is the fast filter; on a signature match,
+    one anti-join confirms exact set equality before the fixed point is
+    declared (a checksum alone could collide).
+
+    The input is read once: its canonical pairs (self-pairs kept, so a
+    node seen only in ``(x, x)`` survives) are ``localCheckpoint``-ed, and
+    both the node set and the first round's edges derive from that
+    checkpoint — the caller's action on the result never recomputes the
+    pairs' lineage (tokenizer, signatures, LSH join). Every round
+    checkpoints its edges to truncate the growing lineage and releases the
+    previous round's blocks; hitting ``max_iter`` without converging
+    raises (round-3 ADVICE: silently returning split clusters corrupts the
+    downstream dedup), and releases every checkpoint on the way out.
+
+    Returns (id, root) for every node appearing in ``pairs``; root = the
+    component's minimum id (deterministic keep-one rule). ``stats``, when
+    given, receives the round count as ``stats["iterations"]``.
     """
-    nodes = und.select(F.col("a").alias("id")).union(und.select(F.col("b").alias("id"))).distinct().persist()
-    edges = (
-        und.filter(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
+    base = (
+        pairs.select(F.greatest(id_a, id_b).alias("a"), F.least(id_a, id_b).alias("b"))
         .distinct()
         .localCheckpoint()
     )
+    nodes = base.select(F.col("a").alias("id")).union(base.select(F.col("b").alias("id"))).distinct()
+    edges = base.filter(F.col("a") != F.col("b"))
 
     def _sig(e: DataFrame) -> tuple:
         row = e.agg(
@@ -491,6 +378,7 @@ def _cc_two_phase_star(und: DataFrame, max_iter: int, stats: dict | None = None)
         return (row["n"], row["crc"])
 
     sig = _sig(edges)
+    ckpt: DataFrame | None = None  # the latest round's checkpoint (= edges)
     converged = False
     iters = 0
     try:
@@ -519,39 +407,57 @@ def _cc_two_phase_star(und: DataFrame, max_iter: int, stats: dict | None = None)
                 .localCheckpoint()
             )
             new_sig = _sig(small)
-            prev = edges
-            if new_sig == sig:
-                # the signature (count, crc-sum) is necessary but not
-                # sufficient — a 32-bit commutative sum can collide across
-                # different edge sets (round-4 review finding). Counts are
-                # equal here, so new ⊆ old ⟺ sets equal: confirm with one
-                # anti-join over the two checkpointed frames before
-                # declaring the fixed point.
-                changed = small.join(prev, ["a", "b"], "left_anti").limit(1).count()
-                edges = small
-                _release_local_checkpoint(prev)
-                if changed == 0:
-                    converged = True
-                    break
-            else:
-                edges = small
-                # the _sig action materialized this round's checkpoint; the
-                # previous round's blocks are dead — release them now
-                # (round-4 ADVICE)
-                _release_local_checkpoint(prev)
+            # the signature (count, crc-sum) is necessary but not sufficient
+            # — a 32-bit commutative sum can collide across different edge
+            # sets (round-4 review finding). Counts are equal here, so
+            # new ⊆ old ⟺ sets equal: one anti-join over the two
+            # materialized frames confirms the fixed point.
+            converged = new_sig == sig and small.join(edges, ["a", "b"], "left_anti").limit(1).count() == 0
+            # the _sig action materialized this round's checkpoint; the
+            # previous round's blocks are dead — release them now (round-4
+            # ADVICE). The first round's edges are a view of ``base``, which
+            # the result still reads.
+            if ckpt is not None:
+                _release_local_checkpoint(ckpt)
+            ckpt = edges = small
             sig = new_sig
+            if converged:
+                break
+    finally:
         if stats is not None:
             stats["iterations"] = iters
         if not converged:
-            raise RuntimeError(
-                f"connected_components(method='star') did not converge in {max_iter} rounds"
-            )
-        # fixed point = star edges (u → component min); roots have no out-edge
-        return (
-            nodes.join(edges.select(F.col("a").alias("id"), F.col("b").alias("r")), "id", "left")
-            .select("id", F.coalesce("r", "id").alias("root"))
-        )
-    finally:
-        # unpersist on the raise path too (round-4 review finding — the
-        # same cached-partition leak class as the round-2 slim_ordinals fix)
-        nodes.unpersist()
+            # raise path (or a failed round): nothing reads these any more
+            for df in (base, ckpt):
+                if df is not None:
+                    _release_local_checkpoint(df)
+    if not converged:
+        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    # fixed point = star edges (u → component min); roots have no out-edge
+    return (
+        nodes.join(edges.select(F.col("a").alias("id"), F.col("b").alias("r")), "id", "left")
+        .select("id", F.coalesce("r", "id").alias("root"))
+    )
+
+
+def _release_local_checkpoint(df: DataFrame) -> None:
+    """Free the cached blocks behind a ``localCheckpoint()``-ed frame.
+
+    Spark's cache manager only tracks ``persist()`` registrations, so
+    ``Dataset.unpersist()`` is a no-op for local checkpoints; the blocks
+    live until the backing RDD is garbage-collected. The connected-components
+    loop produces one checkpoint per round, so without an explicit release the
+    dead rounds' blocks pile up proportionally to graph size (round-4
+    ADVICE). Reach the checkpointed RDD through the analyzed ``LogicalRDD``
+    and drop its blocks through ``SparkContext.unpersistRDD`` — the same
+    release ``RDD.unpersist`` makes, without the WARN line that method logs
+    for every locally checkpointed RDD. Best-effort — if that fails (the
+    frame is not a local checkpoint, or the internal surface shifted), one
+    warning names the exception and the blocks wait for GC rather than
+    failing the job."""
+    try:
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+    except Exception as e:
+        warnings.warn(f"could not release a local checkpoint's blocks: {e!r}", stacklevel=2)
+

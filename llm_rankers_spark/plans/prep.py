@@ -37,7 +37,6 @@ def run_prep_pipeline(
     minhash_bands: int = 16,
     shingle_k: int = 3,
     minhash_hash_fn: str = "xxhash64",
-    cc_method: str = "label",
     benchmark: DataFrame | None = None,
     bench_id_col: str = "bench_id",
     bench_content_col: str = "text",
@@ -54,8 +53,9 @@ def run_prep_pipeline(
     2. ``exact`` — one shuffle on the content digest; keeper = min docid.
     3. ``neardup`` (``clean`` when no benchmark) — MinHash signatures
        (map-side), banded LSH candidate join, pair→cluster connected
-       components, then an anti-join dropping every cluster member except
-       its root.
+       components (large-star/small-star, read from its own checkpoint so
+       the write below never recomputes the signatures), then an anti-join
+       dropping every cluster member except its root.
     4. ``clean`` (only with ``benchmark``) — benchmark decontamination:
        docs whose shingle overlap with any eval item reaches
        ``contamination_threshold`` are anti-joined away. The eval set is
@@ -80,9 +80,6 @@ def run_prep_pipeline(
         # sets never recomputes the upstream dedup stages)
         bench_fp = _fingerprint(benchmark, [bench_id_col, bench_content_col])
         decon_cfg = f"|dk{contamination_shingle_k}t{contamination_threshold}b{bench_fp}"
-    # cc_method is deliberately NOT in the fingerprint: label and star
-    # produce identical clusters (only round counts differ), so switching
-    # solvers must not invalidate cached stages
     # identity includes content_sha256, not just docid: a doc whose content
     # changes in place must invalidate the cached stages (round-3 ADVICE —
     # a content-dedup pipeline that ignored content changes on resume)
@@ -129,7 +126,7 @@ def run_prep_pipeline(
         pairs = dedup_ops.minhash_lsh_candidates(
             sigs, num_hashes=minhash_hashes, bands=minhash_bands, hash_fn=minhash_hash_fn
         )
-        cc = dedup_ops.connected_components(pairs, method=cc_method)
+        cc = dedup_ops.connected_components(pairs)
         drop = cc.filter(F.col("id") != F.col("root")).select(F.col("id").alias("docid"))
         exact.join(drop, "docid", "left_anti").write.mode("overwrite").parquet(st3.path)
         st3.mark(fp_e, {"rows": spark.read.parquet(st3.path).count()})

@@ -1,6 +1,7 @@
 """Large-star/small-star connected components (round-3 verdict #4):
-O(log n) convergence on adversarial long-path graphs, equality with the
-min-label method on realistic graphs, and the non-convergence guard."""
+O(log n) convergence on adversarial long-path graphs, equality with a
+union-find oracle on realistic graphs, the non-convergence guard, and a
+result that never recomputes its input."""
 
 import math
 
@@ -17,76 +18,110 @@ def _roots(df):
     return {r["id"]: r["root"] for r in df.collect()}
 
 
-def test_star_equals_label_on_mixed_graph(spark):
-    # two stars, one triangle, one small chain, singleton pair
+def _union_find_roots(pairs):
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_star_equals_union_find_on_mixed_graph(spark):
+    # two stars, one triangle, one small chain, singleton pair, self-pair
     pairs = (
         [("a00", f"a{i:02d}") for i in range(1, 6)]
         + [("b00", f"b{i:02d}") for i in range(1, 4)]
         + [("c1", "c2"), ("c2", "c3"), ("c1", "c3")]
         + [("d1", "d2"), ("d2", "d3"), ("d3", "d4")]
-        + [("e1", "e2")]
+        + [("e1", "e2"), ("f1", "f1")]
     )
-    df = _pairs_df(spark, pairs)
-    assert _roots(connected_components(df, method="star")) == _roots(
-        connected_components(df, method="label")
-    )
+    assert _roots(connected_components(_pairs_df(spark, pairs))) == _union_find_roots(pairs)
 
 
 def test_star_chain_converges_in_log_rounds(spark):
-    # 10^4-node chain: min-label would need 10^4 iterations (diameter);
-    # large/small-star halves path lengths per round → O(log n)
+    # 10^4-node chain: min-label propagation would need 10^4 iterations
+    # (diameter); large/small-star halves path lengths per round → O(log n)
     n = 10_000
     ids = [f"v{i:05d}" for i in range(n)]
     pairs = list(zip(ids[:-1], ids[1:]))
     stats: dict = {}
-    out = connected_components(_pairs_df(spark, pairs), method="star", max_iter=40, stats=stats)
+    out = connected_components(_pairs_df(spark, pairs), max_iter=40, stats=stats)
     roots = _roots(out)
     assert len(roots) == n
     assert set(roots.values()) == {"v00000"}
     # log-ish round count (log2(10^4) ≈ 13.3), nowhere near the O(n)
-    # diameter a label propagation would need
+    # diameter
     assert stats["iterations"] <= 2 * int(math.log2(n)), stats
 
 
-def test_label_raises_instead_of_wrong_labels(spark):
+def test_star_raises_below_its_round_count(spark, monkeypatch):
     # round-3 ADVICE: exhausting max_iter used to silently return split
-    # clusters — now it raises and points at method='star'
+    # clusters — it raises instead, and releases every checkpoint it made
+    from llm_rankers_spark.operators import dedup
+
     ids = [f"w{i:03d}" for i in range(40)]
-    pairs = list(zip(ids[:-1], ids[1:]))
-    with pytest.raises(RuntimeError, match="star"):
-        connected_components(_pairs_df(spark, pairs), method="label", max_iter=3)
-    # star handles the same graph inside the same budget
-    roots = _roots(connected_components(_pairs_df(spark, pairs), method="star", max_iter=10))
-    assert set(roots.values()) == {"w000"}
+    pairs = _pairs_df(spark, list(zip(ids[:-1], ids[1:])))
+    stats: dict = {}
+    roots = _roots(connected_components(pairs, stats=stats))
+    assert set(roots.values()) == {"w000"} and stats["iterations"] > 2
+
+    made, released = [], []
+    frame_cls = type(pairs)
+    checkpoint, release = frame_cls.localCheckpoint, dedup._release_local_checkpoint
+    monkeypatch.setattr(frame_cls, "localCheckpoint", lambda df, *a: made.append(checkpoint(df, *a)) or made[-1])
+    monkeypatch.setattr(dedup, "_release_local_checkpoint", lambda df: released.append(df) or release(df))
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(pairs, max_iter=2)
+    assert len(made) == 3 and sorted(map(id, released)) == sorted(map(id, made))
 
 
 def test_star_empty_and_self_pairs(spark):
-    assert _roots(connected_components(_pairs_df(spark, [("x", "x")]), method="star")) == {"x": "x"}
+    assert _roots(connected_components(_pairs_df(spark, [("x", "x")]))) == {"x": "x"}
+    assert _roots(connected_components(_pairs_df(spark, []))) == {}
 
 
-def test_unknown_method_rejected(spark):
-    with pytest.raises(ValueError):
-        connected_components(_pairs_df(spark, [("a", "b")]), method="nope")
+def test_cc_result_does_not_recompute_its_input(spark):
+    # the pairs come out of a pandas UDF; the result's action must read the
+    # solver's checkpoints, never re-run that lineage
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("string")
+    def succ(s):
+        return s.map(lambda x: f"n{int(x[1:]) + 1:03d}")
+
+    ids = spark.createDataFrame([(f"n{i:03d}",) for i in range(20)], "id_a string")
+    pairs = ids.select("id_a", succ("id_a").alias("id_b"))
+    assert "ArrowEvalPython" in pairs._jdf.queryExecution().executedPlan().toString()
+    counted = connected_components(pairs).groupBy().count()
+    assert counted.collect()[0][0] == 21
+    plan = counted._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan and "ArrowEvalPython" not in plan, plan
 
 
 def test_cc_releases_dead_checkpoint_blocks(spark):
     # round-4 ADVICE: each CC round localCheckpoints a frame; without an
     # explicit release the dead rounds' cached RDD blocks accumulate
     # (bounded by rounds, unbounded by graph size). After convergence at
-    # most the LIVE result's blocks (plus the input fixture's cache) may
-    # remain — not one entry per round.
+    # most the LIVE result's blocks (the canonical pairs and the last
+    # round's edges) may remain — not one entry per round.
     def n_persistent():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
     chain = _pairs_df(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(120)])
-    for method in ("star", "label"):
-        base = n_persistent()
-        cc = connected_components(chain, method=method, max_iter=300)
-        cc.count()
-        # a 120-node chain needs ~7 star rounds / ~120 label rounds; the
-        # leak would add one persistent RDD per round
-        grown = n_persistent() - base
-        assert grown <= 2, f"{method}: {grown} persistent RDDs accumulated"
+    base = n_persistent()
+    stats: dict = {}
+    cc = connected_components(chain, max_iter=300, stats=stats)
+    cc.count()
+    # a 120-node chain needs ~7 rounds; the leak would add one persistent
+    # RDD per round
+    grown = n_persistent() - base
+    assert grown <= 2 < stats["iterations"], (grown, stats)
 
 
 def test_release_of_non_checkpoint_warns(spark):
@@ -98,8 +133,7 @@ def test_release_of_non_checkpoint_warns(spark):
         _release_local_checkpoint(spark.range(1))
 
 
-@pytest.mark.parametrize("method", ["label", "star"])
-def test_cc_releases_without_warning(spark, method):
+def test_cc_releases_without_warning(spark):
     # every per-round release of a real run succeeds (py4j's unclosed
     # socket ResourceWarnings are not the engine's)
     import warnings
@@ -107,6 +141,6 @@ def test_cc_releases_without_warning(spark, method):
     pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")]
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        roots = _roots(connected_components(_pairs_df(spark, pairs), method=method))
+        roots = _roots(connected_components(_pairs_df(spark, pairs)))
     assert roots == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
     assert [str(w.message) for w in caught if not issubclass(w.category, ResourceWarning)] == []

@@ -20,7 +20,7 @@ def test_cc_chain_and_star(spark):
 
 
 def test_cc_long_path_converges(spark):
-    # worst-case diameter: a pure path of 12 nodes; min label must walk it
+    # worst-case diameter for its size: a pure path of 12 nodes
     n = 12
     ids = [f"n{i:02d}" for i in range(n)]
     pairs = spark.createDataFrame(
@@ -63,3 +63,53 @@ def test_contamination_overlap_flags_planted_eval_text(spark):
     # matched aggregate
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def _docs(spark):
+    rows = [(f"d{i:02d}", f"shared words about spark shuffles number {i % 7} and joins") for i in range(40)]
+    return spark.createDataFrame(rows, "docid string, content string")
+
+
+def test_minhash_plan_construction_runs_no_job(spark):
+    # the tokenize repartition is decided from the plan: an input with an
+    # exchange must not have AQE run its shuffle just to report a
+    # partition count
+    from llm_rankers_spark.operators.dedup import minhash_signatures
+
+    sc = spark.sparkContext
+    shuffled = _docs(spark).groupBy("docid").agg(F.first("content").alias("content"))
+    sc.setJobGroup("minhash_plan_construction", "construction only")
+    try:
+        sigs = minhash_signatures(shuffled, num_hashes=8, shingle_k=3)
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("minhash_plan_construction")) == []
+    assert sigs.count() == 40
+
+
+def test_single_split_scan_tokenizes_on_parallelism_tasks(spark, tmp_path):
+    # one parquet file = one input split; the tokenizer must still run on
+    # defaultParallelism tasks
+    from llm_rankers_spark.operators.dedup import minhash_signatures
+
+    path = str(tmp_path / "docs")
+    _docs(spark).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    plan = minhash_signatures(scan, num_hashes=8, shingle_k=3)._jdf.queryExecution().executedPlan().toString()
+    assert f"RoundRobinPartitioning({spark.sparkContext.defaultParallelism})" in plan, plan
+
+
+def test_lsh_plan_computes_signatures_once(spark):
+    # the static plan holds the tokenizer and the signature aggregate three
+    # times (star branch plus both self-join sides); the executed adaptive
+    # plan must run them once and reuse the exchanges for the other two
+    from llm_rankers_spark.operators.dedup import minhash_lsh_candidates, minhash_signatures
+
+    pairs = minhash_lsh_candidates(minhash_signatures(_docs(spark), num_hashes=32, shingle_k=3), num_hashes=32, bands=16)
+    assert len(pairs.collect()) > 0
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+    assert "ReusedExchange" in final, final

@@ -11,9 +11,7 @@ from llm_rankers_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_candidates,
     minhash_signatures,
-    ngram_jaccard_dedup,
     simhash,
-    simhash_duplicates,
 )
 from llm_rankers_spark.operators.multimodal import (
     extract_features,
@@ -111,19 +109,10 @@ def test_minhash_lsh_identical_group_is_linear(spark):
     assert any("near" in p for p in pairs)  # near-dup caught via the representative
 
 
-def test_ngram_jaccard_dedup(docs):
-    out = {(r["id_a"], r["id_b"]): r["jaccard"] for r in ngram_jaccard_dedup(docs, shingle_k=3, threshold=0.5).collect()}
-    assert ("a", "b") in out and out[("a", "b")] == pytest.approx(1.0)
-    assert ("a", "c") in out  # near dup above 0.5
-    assert all(j >= 0.5 for j in out.values())
-
-
 def test_simhash_exact_dups_share_fingerprint(docs):
     sigs = simhash(docs, bits=32)
     fp = {r["id"]: r["simhash"] for r in sigs.collect()}
     assert fp["a"] == fp["b"]
-    dups = simhash_duplicates(sigs).collect()
-    assert any(set(g["ids"]) >= {"a", "b"} for g in dups)
 
 
 @pytest.fixture(scope="module")
