@@ -96,28 +96,6 @@ def with_docid(docs: DataFrame) -> DataFrame:
     ).withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
-def read_code_table(spark: SparkSession, source: str, lang_filter: list[str] | None = None) -> DataFrame:
-    """Load the source-code table ``(repo, path, commit, lang, content)``
-    (BASELINE.json input_hint) and derive docid + sha256 via
-    :func:`with_docid`.
-
-    ``source`` is either a catalog table name (``spark.read.table`` — an
-    Iceberg table when the Iceberg runtime + catalog are configured on the
-    cluster; the engine depends only on the SHAPE, and Catalyst pushes the
-    lang filter down to the Iceberg/parquet scan either way) or a
-    filesystem path read as parquet. The sandbox has no Iceberg runtime, so
-    tests exercise the parquet branch; on a real cluster pass
-    ``catalog.db.code_files``."""
-    looks_like_path = "/" in source or source.endswith(".parquet")
-    df = spark.read.parquet(source) if looks_like_path else spark.read.table(source)
-    missing = {"repo", "path", "commit", "lang", "content"} - set(df.columns)
-    if missing:
-        raise ValueError(f"code table lacks columns {sorted(missing)} (has {df.columns})")
-    if lang_filter:
-        df = df.filter(F.col("lang").isin(lang_filter))
-    return with_docid(df)
-
-
 def driver_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adapt the driver's documents table (doc_id, text, lang, source,
     n_chars) to the engine's corpus contract. docid is the zero-padded

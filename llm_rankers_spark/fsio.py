@@ -86,32 +86,6 @@ def write_text(path: str, content: str) -> None:
         out.close()
 
 
-def append_text(path: str, content: str) -> None:
-    """Append-mode write (TREC run resume sink). Object stores generally do
-    not support append — callers needing resume on such stores should use
-    the parquet stage resume (plans/pipeline.py) instead; this raises with
-    that hint rather than silently truncating."""
-    if not has_scheme(path):
-        with open(path, "a", encoding="utf-8") as f:
-            f.write(content)
-        return
-    _jvm, fs, p = _jvm_fs(path)
-    if not fs.exists(p):
-        write_text(path, content)
-        return
-    try:
-        out = fs.append(p)
-    except Exception as e:  # pragma: no cover - store-dependent capability
-        raise NotImplementedError(
-            f"filesystem for {path!r} does not support append; use the "
-            "pipeline's parquet per-qid resume instead of the text sink"
-        ) from e
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
-
-
 def exists(path: str) -> bool:
     if not has_scheme(path):
         return os.path.exists(path)

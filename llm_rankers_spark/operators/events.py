@@ -1,15 +1,10 @@
-"""Event-stream analytics over the ``events`` table — the batch twins of
-the Structured-Streaming surface (streaming/index_stream.py's watermarked
-windowed aggregation runs these same shapes incrementally).
+"""Event analytics over the ``events`` table, as batch plans.
 
 The reference has no event surface (SURVEY.md §2.8 extension); these are
-the two canonical stateful-stream shapes a training-data pipeline needs,
-expressed so batch and streaming agree:
+the two canonical windowed shapes a training-data pipeline needs:
 
-- :func:`windowed_counts` — fixed tumbling windows (``F.window``), the
-  exact aggregation ``streaming_event_counts`` runs with a watermark.
-- :func:`sessionize` — gap-based sessions per user (the
-  ``session_window``/``applyInPandasWithState`` shape) as a lag +
+- :func:`windowed_counts` — fixed tumbling windows (``F.window``).
+- :func:`sessionize` — gap-based sessions per user as a lag +
   running-sum plan: one shuffle on user_id, windows do the rest.
 """
 

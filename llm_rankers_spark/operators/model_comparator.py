@@ -99,41 +99,6 @@ def fake_model_factory():
     return FakeRelevanceModel()
 
 
-class HFCrossEncoderModel:
-    """Shape of a real integration (NOT runnable here: transformers/torch
-    are absent from this environment — SURVEY.md §2.9 scopes model payloads
-    as pluggable). Mirrors the reference's batched scoring: tokenize the
-    (query, passage) pairs, one forward pass per batch
-    (llmrankers/pairwise.py:176-204)."""
-
-    def __init__(self, checkpoint: str, device: str = "cuda", max_length: int = 512):
-        try:
-            import torch  # noqa: F401
-            from transformers import (  # noqa: F401
-                AutoModelForSequenceClassification,
-                AutoTokenizer,
-            )
-        except ImportError as e:  # pragma: no cover - env without torch
-            raise NotImplementedError(
-                "HFCrossEncoderModel needs torch+transformers; this container "
-                "has neither. Use FakeRelevanceModel for tests, or run on a "
-                "GPU cluster where the factory loads the checkpoint once per "
-                "executor python worker."
-            ) from e
-        self.tok = AutoTokenizer.from_pretrained(checkpoint)  # pragma: no cover
-        self.model = AutoModelForSequenceClassification.from_pretrained(checkpoint).to(device).eval()  # pragma: no cover
-        self.device, self.max_length = device, max_length  # pragma: no cover
-
-    def score_batch(self, pairs):  # pragma: no cover - needs torch
-        import torch
-
-        qs = [q for q, _ in pairs]
-        ts = [t for _, t in pairs]
-        enc = self.tok(qs, ts, truncation=True, padding=True, max_length=self.max_length, return_tensors="pt").to(self.device)
-        with torch.no_grad():
-            return self.model(**enc).logits.squeeze(-1).tolist()
-
-
 # ---------------------------------------------------------------------------
 # comparators over a cached model
 # ---------------------------------------------------------------------------
@@ -215,8 +180,9 @@ class GenerativeModelComparator(ModelComparator):
 class OpenAIGenerativeModel:
     """P-API — the worked API-ranker example (llmrankers/setwise.py:338-399,
     OpenAiSetwiseLlmRanker): truncate each prompt to a token budget, send a
-    chat completion per prompt, retry transient API errors. Satisfies the
-    ``generate_batch`` contract, so it plugs into
+    chat completion per prompt, retry transient API errors: M3, the
+    engine's one retry loop (pairwise.py:380-441 has the same loop).
+    Satisfies the ``generate_batch`` contract, so it plugs into
     :class:`GenerativeModelComparator` / :class:`RankR1Comparator` and
     :func:`rerank_batched`'s cross-query pooling unchanged — one worker
     process keeps ONE client (via :func:`get_model`), and batching happens
@@ -227,9 +193,8 @@ class OpenAIGenerativeModel:
     executor task turns one bad record into a hung stage), and truncation
     falls back to a whitespace clamp when tiktoken is absent (the control
     flow, not the tokenizer, is the semantics). ``transport`` is injectable
-    for tests; the default builds an OpenAI client (absent here — this
-    container has no network/openai package, so construction without a
-    transport raises with that explanation, mirroring HFCrossEncoderModel).
+    for tests; the default builds an OpenAI client, so construction without
+    a transport raises when the openai package is absent.
     """
 
     def __init__(self, model: str = "gpt-4o-mini", api_key: str | None = None,
@@ -325,37 +290,6 @@ class DuoProbPairComparator(ModelComparator):
     def decide(self, req, scores: list[float]) -> tuple[bool, bool]:
         win = scores[0] > scores[1]  # strict, per the reference's batch_probs[0] > [1]
         return win, win
-
-
-class FakeDuoModel:
-    """Deterministic DuoT5 stand-in: parses Document0/Document1 from the duo
-    prompt and returns a monotone P(true) in rel(doc0) − rel(doc1), so
-    ``P(A,B) > P(B,A)  ⟺  rel(A) > rel(B)`` — duo results must equal a
-    plain scoring comparator on the same relevance (tested)."""
-
-    def __init__(self):
-        self.batches = 0
-        self.items = 0
-
-    @staticmethod
-    def _rel(text: str) -> float:
-        return int(hashlib.md5(text.encode()).hexdigest()[:7], 16) / float(1 << 28)
-
-    def score_batch(self, items: list[tuple[str, str]]) -> list[float]:
-        import math
-
-        self.batches += 1
-        self.items += len(items)
-        outs = []
-        for _q, prompt in items:
-            m = re.search(r"Document0: (.*) Document1: (.*) Relevant:$", prompt, re.DOTALL)
-            d0, d1 = m.group(1), m.group(2)
-            outs.append(1.0 / (1.0 + math.exp(-(self._rel(d0) - self._rel(d1)))))
-        return outs
-
-
-def fake_duo_factory():
-    return FakeDuoModel()
 
 
 class RankR1Comparator(GenerativeModelComparator):
@@ -477,34 +411,6 @@ class RankZephyrComparator(GenerativeModelComparator):
         return m.group(1).strip() if m else "None"
 
 
-class FakeZephyrModel:
-    """Deterministic RankZephyr stand-in: recovers the ``[i] passage`` lines
-    and the search query from the chat prompt, ranks by the shared
-    md5-derived relevance, answers '[2] > [1] > ...' — so zephyr listwise
-    results must equal a scoring comparator on the same relevance (tested)."""
-
-    def __init__(self):
-        self.batches = 0
-        self.items = 0
-
-    def generate_batch(self, prompts: list[str]) -> list[str]:
-        self.batches += 1
-        self.items += len(prompts)
-        outs = []
-        for p in prompts:
-            q = re.search(r"Search Query: (.*?)\.\n", p, re.DOTALL).group(1)
-            # anchor to line starts: the instruction tail contains a literal
-            # "e.g., [2] > [1]," that an unanchored pattern would pick up
-            texts = re.findall(r"^\[\d+\] (.*)$", p, re.MULTILINE)
-            order = sorted(range(len(texts)), key=lambda i: (-md5_relevance(q, texts[i]), i))
-            outs.append(" > ".join(f"[{i + 1}]" for i in order))
-        return outs
-
-
-def fake_zephyr_factory():
-    return FakeZephyrModel()
-
-
 class RankR1V02Comparator(RankR1Comparator):
     """P10-v0.2 — the Rank-R1 v0.2 prompt variant
     (Rank-R1/prompts/prompt_setwise-R1-v0.2.toml): analysis-oriented
@@ -535,69 +441,6 @@ class RankR1V02Comparator(RankR1Comparator):
         "Here is the query: {query}\n\nHere are the documents:\n{docs}"
     )
     DOC_SEPARATOR = "\n\n"
-
-
-class FakeReasoningModel:
-    """Deterministic Rank-R1 stand-in: recovers the ``[i]: passage`` lines
-    from the user message, ranks them by the md5 relevance and answers with
-    a ``<think>…</think> <answer>[best]</answer>`` trace."""
-
-    def __init__(self):
-        self.batches = 0
-        self.items = 0
-
-    def generate_batch(self, prompts: list[str]) -> list[str]:
-        self.batches += 1
-        self.items += len(prompts)
-        outs = []
-        for p in prompts:
-            m = re.search(r'Given the query: "([^"]*)"', p)  # v1 prompt
-            if m is None:  # v0.2 prompt
-                m = re.search(r"Here is the query: (.*?)\n\nHere are the documents:", p, re.DOTALL)
-            q = m.group(1)
-            texts = re.findall(r"\[\d+\]: (.*)", p)
-            best = max(range(len(texts)), key=lambda i: (md5_relevance(q, texts[i]), -i))
-            outs.append(f"<think> scored {len(texts)} docs </think> <answer>[{best + 1}]</answer>")
-        return outs
-
-
-def fake_reasoning_factory():
-    return FakeReasoningModel()
-
-
-class FakeGenerativeModel:
-    """Deterministic generation stand-in: answers each prompt by recovering
-    the passages from the prompt text and ranking them with the same
-    md5-derived relevance as FakeRelevanceModel — so generative results are
-    comparable against the scoring-mode comparator in tests."""
-
-    def __init__(self):
-        self.batches = 0
-        self.items = 0
-
-    def generate_batch(self, prompts: list[str]) -> list[str]:
-        self.batches += 1
-        self.items += len(prompts)
-        outs = []
-        for p in prompts:
-            q = re.search(r'query "([^"]*)"', p).group(1)
-            if "Output Passage A or Passage B" in p:
-                a = re.search(r'Passage A: "(.*?)"\n', p, re.DOTALL).group(1)
-                b = re.search(r'Passage B: "(.*?)"\n', p, re.DOTALL).group(1)
-                outs.append("Passage A" if md5_relevance(q, a) >= md5_relevance(q, b) else "Passage B")
-            elif "Output only the passage label" in p:
-                texts = re.findall(r'Passage [A-W]: "(.*?)"\n?', p, re.DOTALL)
-                best = max(range(len(texts)), key=lambda i: (md5_relevance(q, texts[i]), -i))
-                outs.append(f"Passage {GenerativeModelComparator.LABELS[best]}")
-            else:
-                texts = re.findall(r"\[\d+\] (.*)", p)
-                order = sorted(range(len(texts)), key=lambda i: (-md5_relevance(q, texts[i]), i))
-                outs.append(" > ".join(f"[{i + 1}]" for i in order))
-        return outs
-
-
-def fake_generative_factory():
-    return FakeGenerativeModel()
 
 
 # ---------------------------------------------------------------------------

@@ -71,28 +71,6 @@ def mock_monot5_scorer(queries: pd.Series, texts: pd.Series) -> np.ndarray:
 SCORERS = {"yes_no": mock_yes_no_scorer, "qlm": mock_qlm_scorer, "monot5": mock_monot5_scorer}
 
 
-def model_scorer(model_name: str, model_factory, batch_size: int = 64):
-    """Bridge a real batch-scoring model (model_comparator.py contract:
-    ``score_batch([(query, text)]) -> [float]``) into the pointwise pass.
-
-    The model loads once per Python worker (get_model cache — the analogue
-    of the reference holding the HF checkpoint in the ranker object), and
-    each Arrow batch is re-chunked to the model's optimal ``batch_size``
-    (the reference's DataLoader batch_size, pointwise.py:45-56)."""
-
-    def scorer(queries: pd.Series, texts: pd.Series) -> np.ndarray:
-        from llm_rankers_spark.operators.model_comparator import get_model
-
-        model = get_model(model_name, model_factory)
-        pairs = list(zip(queries, texts))
-        out = np.empty(len(pairs), dtype=np.float64)
-        for i in range(0, len(pairs), batch_size):
-            out[i : i + batch_size] = model.score_batch(pairs[i : i + batch_size])
-        return out
-
-    return scorer
-
-
 def pointwise_rerank(
     candidates: DataFrame,
     method: str = "yes_no",

@@ -38,7 +38,6 @@ semantics; no reference code is copied.
 from __future__ import annotations
 
 import random
-import re
 import zlib
 from collections import Counter
 from dataclasses import dataclass
@@ -206,52 +205,6 @@ class VotingComparator(Comparator):
             order[self.base.decide(sub, outputs[p * n : (p + 1) * n])]
             for p, (order, sub) in enumerate(self._votes(req))
         ])
-
-
-@dataclass
-class RetryingComparator(Comparator):
-    """M3 (setwise.py:338-399): retry a failed model call. The reference
-    loops forever with sleep(5); ours is bounded (max_retries) and surfaces
-    the retry count in metrics — an infinite retry inside an executor task
-    would turn one bad record into a hung stage at cluster scale."""
-
-    base: object
-    max_retries: int = 3
-    retries: int = 0
-
-    def model(self):
-        call = self.base.model()
-
-        def retried(inputs):
-            for attempt in range(self.max_retries + 1):
-                try:
-                    return call(inputs)
-                except Exception:  # noqa: BLE001 — model payloads are opaque
-                    self.retries += 1
-                    if attempt == self.max_retries:
-                        raise
-
-        return retried
-
-    def prompt(self, req: Compare) -> list:
-        return self.base.encode(req)
-
-    def decide(self, req: Compare, outputs: list):
-        return self.base.decide(req, outputs)
-
-
-_REASONING_ANSWER_RE = re.compile(r"<answer>.*?\[(\d+)\].*?</answer>", re.DOTALL)
-
-
-def parse_reasoning_answer(response: str, n_docs: int) -> int | None:
-    """P10 (setwise.py:513-516, Rank-R1): extract the ``<answer>[i]</answer>``
-    label from a reasoning trace; 1-based in the prompt → 0-based index;
-    out-of-range / missing → None (caller treats as no-swap)."""
-    m = _REASONING_ANSWER_RE.search(response or "")
-    if not m:
-        return None
-    v = int(m.group(1)) - 1
-    return v if 0 <= v < n_docs else None
 
 
 # ---------------------------------------------------------------------------

@@ -71,69 +71,6 @@ def write_trec_run(run: DataFrame, path: str, tag: str = "llm_rankers_spark", si
     shutil.rmtree(tmp)
 
 
-def append_trec_run(run: DataFrame, path: str, tag: str = "llm_rankers_spark") -> int:
-    """Append-mode TREC resume sink (Rank-R1/run_setwise.py:79-87): the
-    reference appends each finished query's lines to ONE text run file and
-    skips qids already present on restart. Reproduced here for drop-in
-    compatibility: read done qids from the file, anti-join them away, append
-    the remainder (sorted by qid, rank). Returns the number of qids written.
-
-    This is a single local text file, so it is inherently an eval-sized
-    contract (the reference's). The engine-native resume for big runs is the
-    pipeline's per-qid parquet stage (plans/pipeline.py) + write_trec_run.
-    """
-    import os
-
-    spark = run.sparkSession
-    done: set[str] = set()
-    if os.path.exists(path):
-        with open(path) as f:
-            content = f.read()
-        if content and not content.endswith("\n"):
-            # a crash mid-write can truncate the final line — cut it from
-            # the file (so the append restarts cleanly) and keep its qid out
-            # of the done set (round-2 ADVICE)
-            keep = content.rfind("\n") + 1
-            with open(path, "w") as f:
-                f.write(content[:keep])
-            content = content[:keep]
-        done = {ln.split(None, 1)[0] for ln in content.split("\n") if ln.strip()}
-    todo = run
-    if done:
-        done_df = spark.createDataFrame([(q,) for q in sorted(done)], "qid string")
-        todo = run.join(F.broadcast(done_df), "qid", "left_anti")
-    ranked = rerank_by_score(todo)
-    out = ranked.select(
-        "qid",
-        "rank",
-        F.concat_ws(
-            "\t", F.col("qid"), F.lit("Q0"), F.col("docid"),
-            F.col("rank").cast("string"), F.col("score").cast("string"), F.lit(tag),
-        ).alias("line"),
-    ).orderBy("qid", "rank")
-    # buffer each query's lines and append them in ONE write per finished
-    # qid (the reference's per-query append granularity,
-    # Rank-R1/run_setwise.py:79-87): a crash between writes leaves whole
-    # queries, never a half-written qid that resume would wrongly skip
-    new_qids: set[str] = set()
-    buf_qid: str | None = None
-    buf: list[str] = []
-    with open(path, "a") as f:
-        def flush():
-            if buf:
-                f.write("".join(buf))
-                f.flush()
-        for row in out.toLocalIterator():
-            if row["qid"] != buf_qid:
-                flush()
-                buf = []
-                buf_qid = row["qid"]
-                new_qids.add(buf_qid)
-            buf.append(row["line"] + "\n")
-        flush()
-    return len(new_qids)
-
-
 def rerank_by_score(run: DataFrame) -> DataFrame:
     """Dense 1..n rank per qid by (score desc, docid asc)."""
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))

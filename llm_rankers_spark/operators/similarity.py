@@ -10,7 +10,7 @@ Two paths, both shuffle-conscious:
   (multi-table probing optional), then exact re-scoring within buckets.
   At 10^12 vectors the bucket join replaces the full cross product.
 
-Also :func:`embedding_near_duplicates` — cosine-threshold near-dup pairs
+Also :func:`near_duplicate_pairs_exact` — cosine-threshold near-dup pairs
 (the embedding leg of the dedup family).
 """
 
@@ -279,50 +279,14 @@ def quantize_embeddings(
     return corpus.select(F.col(id_col).alias("vec_id"), scale, qvec.alias("qvec"))
 
 
-def dequantize_col(qvec_col, scale_col):
-    """array<tinyint> × scale → array<double> (inverse of quantize)."""
-    q = F.col(qvec_col) if isinstance(qvec_col, str) else qvec_col
-    s = F.col(scale_col) if isinstance(scale_col, str) else scale_col
-    return F.transform(q, lambda x: x.cast("double") * s)
-
-
-def cosine_topk_quantized(
-    quantized: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """Exact-over-quantized cosine top-k: the corpus side is the int8 table
-    from :func:`quantize_embeddings` (scored as dot(q,qv)·scale — the
-    per-vector scale cancels nothing on the query side, which stays
-    float). Same plan shape as :func:`cosine_topk`; the scan reads 1/4 the
-    bytes, which at 100 TB is the difference that matters."""
-    c = quantized.select("vec_id", dequantize_col("qvec", "scale").alias("v")).withColumn(
-        "_nv", _norm("v")
-    )
-    q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qv")).withColumn(
-        "_nq", _norm("qv")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("cos", _dot("v", "qv") / (F.col("_nv") * F.col("_nq")))
-        .select("qid", "vec_id", "cos")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def near_duplicate_pairs_exact(
     corpus: DataFrame,
     threshold: float = 0.8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact near-dup pairs (id_a < id_b, cos ≥ threshold) by self-crossJoin —
-    the O(N²) labeled baseline that calibrates the LSH path
-    (:func:`embedding_near_duplicates` is the scale path). Oracle-checkable
-    because it has no hashing."""
+    """Exact near-dup pairs (id_a < id_b, cos ≥ threshold) by self-crossJoin,
+    O(N²). Oracle-checkable because it has no hashing."""
     # norm hoisted below the self-crossJoin (round-6): once per vector, not
     # once per O(N²) pair; cos still divides by norm(l)·norm(r) → identical
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).withColumn(
@@ -340,70 +304,3 @@ def near_duplicate_pairs_exact(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"), "cos")
     )
     return pairs
-
-
-def embedding_near_duplicates(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int | None = 12,
-    n_tables: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup pairs (id_a < id_b, cos ≥ threshold) via LSH self-join.
-
-    Round-2 verdict fixes, mirroring dedup.minhash_lsh_candidates:
-
-    - **Identical-signature star grouping**: rows whose signature agrees in
-      EVERY table (the degenerate case: 10^6 byte-identical embeddings) are
-      collapsed to one representative before the bucket self-join; members
-      link to their rep with linear star pairs, cos-verified like any other
-      pair. Output is therefore a near-dup *graph* adequate for connected-
-      component dedup (the star stands in for the intra-group clique), with
-      O(n) instead of O(n²) pairs per degenerate group.
-    - **Corpus-derived plane count** (``n_planes=None``): fixed 12 planes =
-      4,096 buckets per table means ~250k-row buckets at 10^9 vectors;
-      planes_for_corpus sizes buckets to ~64 rows instead.
-    """
-    if n_planes is None:
-        n_planes = planes_for_corpus(corpus.count())
-    dim = len(corpus.select(vec_col).first()[0])
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    sig_cols = []
-    s = c
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed=seed + 1000 * t)
-        s = s.withColumn(f"sig{t}", signature_col("v", planes))
-        sig_cols.append(f"sig{t}")
-    # star grouping on the full cross-table signature key (one window shuffle;
-    # the ordered first() rides the same window partition to carry the rep's
-    # vector to every member — no extra join)
-    sigkey = F.concat_ws(",", *[F.col(sc).cast("string") for sc in sig_cols])
-    w = Window.partitionBy(sigkey).orderBy(F.asc("id"))
-    keyed = s.withColumn("rep", F.first("id").over(w)).withColumn("rv", F.first("v").over(w))
-    star = keyed.filter(F.col("id") != F.col("rep")).select(
-        F.col("rep").alias("id_a"), F.col("id").alias("id_b"), F.col("rv").alias("va"), F.col("v").alias("vb")
-    )
-    reps = keyed.filter(F.col("id") == F.col("rep")).select("id", "v", *sig_cols)
-    pairs = None
-    for t in range(n_tables):
-        st = reps.select("id", "v", F.col(f"sig{t}").alias("sig"))
-        p = (
-            st.alias("l")
-            .join(st.alias("r"), "sig")
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(
-                F.col("l.id").alias("id_a"),
-                F.col("r.id").alias("id_b"),
-                F.col("l.v").alias("va"),
-                F.col("r.v").alias("vb"),
-            )
-        )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.unionByName(star).dropDuplicates(["id_a", "id_b"])
-    return (
-        pairs.withColumn("cos", _dot("va", "vb") / (_norm("va") * _norm("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )

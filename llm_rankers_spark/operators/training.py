@@ -205,30 +205,3 @@ def build_setwise_examples(
             F.concat(F.lit("<answer>"), F.col("ground_truth"), F.lit("</answer>")),
         )
     return out
-
-
-def judged_candidates_from_qrels(
-    run: DataFrame,
-    qrels: DataFrame,
-    queries: DataFrame,
-    docs: DataFrame,
-    id_col: str = "docid",
-    text_col: str = "content",
-) -> DataFrame:
-    """Adapter: (first-stage run ⋈ qrels ⋈ queries ⋈ docs) → the judged
-    candidate table :func:`build_setwise_examples` consumes. Positives =
-    qrels rel > 0; negatives = retrieved docs judged non-relevant or
-    unjudged (the standard hard-negative mining shape: the reference
-    datasets' negative_passages are exactly first-stage hits that aren't
-    positives)."""
-    labeled = (
-        run.select("qid", "docid")
-        .join(qrels.select("qid", "docid", "rel"), ["qid", "docid"], "left")
-        .withColumn("label", F.when(F.coalesce(F.col("rel"), F.lit(0)) > 0, 1).otherwise(0))
-        .drop("rel")
-    )
-    return (
-        labeled.join(queries.select("qid", "query"), "qid")
-        .join(docs.select(F.col(id_col).alias("docid"), F.col(text_col).alias("text")), "docid")
-        .select("qid", "query", "docid", "text", "label")
-    )

@@ -174,19 +174,6 @@ def compact_segments(spark: SparkSession, root: str, num_shards: int = 4, name: 
             fsio.delete(os.path.join(root, s))
 
 
-def streaming_event_counts(spark: SparkSession, events_dir: str, window: str = "5 minutes") -> DataFrame:
-    """Watermarked windowed aggregation over the events table (Structured
-    Streaming surface demo): counts + value sums per (window, event_type)."""
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props map<string,string>"
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-    )
-    return agg
-
-
 def start_streaming_dedup(
     spark: SparkSession,
     input_dir: str,
@@ -242,35 +229,4 @@ def start_streaming_dedup(
         .option("checkpointLocation", checkpoint or out_dir + "_checkpoint")
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def streaming_sessionize(
-    spark: SparkSession, events_dir: str, gap_minutes: int = 30, watermark: str = "60 minutes"
-) -> DataFrame:
-    """Gap-based sessionization as a STREAM — the stateful twin of
-    ``operators.events.sessionize``, via the built-in ``session_window``
-    (declarative merging session state; no hand-rolled
-    ``applyInPandasWithState`` needed for this shape).
-
-    Boundary alignment: Spark merges session windows that OVERLAP, and
-    windows are half-open ``[t, t+gap)`` — an event exactly ``gap`` after
-    the previous one would start a new session. The batch operator keeps it
-    in the same session (new session only when the gap is STRICTLY greater).
-    Passing ``gap + 1 microsecond`` as the window gap makes the streaming
-    semantics identical to batch at every boundary (equivalence pinned in
-    test_streaming)."""
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props map<string,string>"
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    gap = f"{gap_minutes * 60_000_000 + 1} microseconds"
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(
-            F.min("ts").alias("start_ts"),
-            F.max("ts").alias("end_ts"),
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select("user_id", "start_ts", "end_ts", "n_events", "total_value")
     )

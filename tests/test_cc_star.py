@@ -60,22 +60,28 @@ def test_star_chain_converges_in_log_rounds(spark):
     assert stats["iterations"] <= 2 * int(math.log2(n)), stats
 
 
+def _track_checkpoints(monkeypatch, frame_cls):
+    """Record every frame ``localCheckpoint`` makes and every frame
+    ``dedup._release_local_checkpoint`` releases, per frame."""
+    from llm_rankers_spark.operators import dedup
+
+    made, released = [], []
+    checkpoint, release = frame_cls.localCheckpoint, dedup._release_local_checkpoint
+    monkeypatch.setattr(frame_cls, "localCheckpoint", lambda df, *a: made.append(checkpoint(df, *a)) or made[-1])
+    monkeypatch.setattr(dedup, "_release_local_checkpoint", lambda df: released.append(df) or release(df))
+    return made, released
+
+
 def test_star_raises_below_its_round_count(spark, monkeypatch):
     # round-3 ADVICE: exhausting max_iter used to silently return split
     # clusters — it raises instead, and releases every checkpoint it made
-    from llm_rankers_spark.operators import dedup
-
     ids = [f"w{i:03d}" for i in range(40)]
     pairs = _pairs_df(spark, list(zip(ids[:-1], ids[1:])))
     stats: dict = {}
     roots = _roots(connected_components(pairs, stats=stats))
     assert set(roots.values()) == {"w000"} and stats["iterations"] > 2
 
-    made, released = [], []
-    frame_cls = type(pairs)
-    checkpoint, release = frame_cls.localCheckpoint, dedup._release_local_checkpoint
-    monkeypatch.setattr(frame_cls, "localCheckpoint", lambda df, *a: made.append(checkpoint(df, *a)) or made[-1])
-    monkeypatch.setattr(dedup, "_release_local_checkpoint", lambda df: released.append(df) or release(df))
+    made, released = _track_checkpoints(monkeypatch, type(pairs))
     with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
         connected_components(pairs, max_iter=2)
     assert len(made) == 3 and sorted(map(id, released)) == sorted(map(id, made))
@@ -104,24 +110,25 @@ def test_cc_result_does_not_recompute_its_input(spark):
     assert "isFinalPlan=true" in plan and "ArrowEvalPython" not in plan, plan
 
 
-def test_cc_releases_dead_checkpoint_blocks(spark):
+def test_cc_releases_dead_checkpoint_blocks(spark, monkeypatch):
     # round-4 ADVICE: each CC round localCheckpoints a frame; without an
-    # explicit release the dead rounds' cached RDD blocks accumulate
-    # (bounded by rounds, unbounded by graph size). After convergence at
-    # most the LIVE result's blocks (the canonical pairs and the last
-    # round's edges) may remain — not one entry per round.
-    def n_persistent():
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
+    # explicit release the dead rounds' cached blocks accumulate (bounded by
+    # rounds, unbounded by graph size). After convergence only the checkpoints
+    # the LIVE result reads may stay: the canonical pairs (the first one
+    # made) and the last round's edges. Checked per frame: a count of
+    # SparkContext.getPersistentRDDs() is a weak-value map that a JVM GC
+    # empties of dropped frames whether or not they were released.
     chain = _pairs_df(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(120)])
-    base = n_persistent()
+    made, released = _track_checkpoints(monkeypatch, type(chain))
     stats: dict = {}
     cc = connected_components(chain, max_iter=300, stats=stats)
-    cc.count()
-    # a 120-node chain needs ~7 rounds; the leak would add one persistent
-    # RDD per round
-    grown = n_persistent() - base
-    assert grown <= 2 < stats["iterations"], (grown, stats)
+    assert cc.count() == 121
+    # a 120-node chain needs ~7 rounds: one checkpoint per round + the pairs
+    assert len(made) == stats["iterations"] + 1 > 3, (len(made), stats)
+    released_ids = set(map(id, released))
+    live = [df for df in made if id(df) not in released_ids]
+    assert len(live) <= 2 and {id(df) for df in live} <= {id(made[0]), id(made[-1])}, (len(live), stats)
+    assert len(released) == len(released_ids)  # no frame released twice
 
 
 def test_release_of_non_checkpoint_warns(spark):

@@ -1,5 +1,7 @@
-"""CLI smoke tests — the reference's run.py driver surface (run.py:20-38)
-as ``python -m llm_rankers_spark``. End-to-end on sf0.001 testdata."""
+"""CLI tests — the reference's run.py driver surface (run.py:20-38) as
+``python -m llm_rankers_spark``. End-to-end on sf0.001 testdata. The
+subcommands run in-process through ``cli.main(argv)`` on the suite's
+session; one test drives the ``python -m`` face in a fresh process."""
 
 import glob
 import json
@@ -7,8 +9,30 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.fixture()
+def cli_main(spark, monkeypatch, capsys):
+    """``run(*argv, code=0)``: ``cli.main(argv)`` in this process, with
+    ``get_spark`` handing it the suite's session. Asserts the exit code and
+    returns the JSON result, the last stdout line."""
+    import llm_rankers_spark
+    from llm_rankers_spark import cli
+
+    monkeypatch.setattr(llm_rankers_spark, "get_spark", lambda master=None: spark)
+
+    def run(*args: str, code: int = 0) -> dict:
+        capsys.readouterr()
+        got = cli.main(list(args))
+        out = capsys.readouterr().out
+        assert got == code, f"CLI exited {got}:\n{out[-2000:]}"
+        return json.loads(out.strip().splitlines()[-1])
+
+    return run
 
 
 def _run_cli(*args: str) -> str:
@@ -22,10 +46,10 @@ def _run_cli(*args: str) -> str:
     return out.stdout.strip().splitlines()[-1]
 
 
-def test_cli_index_then_search(spark, tmp_path):
+def test_cli_index_then_search(spark, tmp_path, cli_main):
     idx_dir = str(tmp_path / "cliidx")
-    res = json.loads(_run_cli("index", "--docs", f"{SF}/documents.parquet",
-                              "--out", idx_dir, "--num-shards", "2"))
+    res = cli_main("index", "--docs", f"{SF}/documents.parquet",
+                   "--out", idx_dir, "--num-shards", "2")
     assert res["n_docs"] == 500
 
     qpath = str(tmp_path / "queries.parquet")
@@ -33,8 +57,8 @@ def test_cli_index_then_search(spark, tmp_path):
         [("q1", "spark query join"), ("q2", "hash scan")], "qid string, query string"
     ).write.parquet(qpath)
     run_dir = str(tmp_path / "clirun")
-    json.loads(_run_cli("search", "--index", idx_dir, "--queries", qpath,
-                        "--out", run_dir, "--hits", "5"))
+    cli_main("search", "--index", idx_dir, "--queries", qpath,
+             "--out", run_dir, "--hits", "5")
     lines = []
     for p in sorted(glob.glob(os.path.join(run_dir, "part-*"))):
         with open(p) as f:
@@ -43,14 +67,14 @@ def test_cli_index_then_search(spark, tmp_path):
     assert {ln.split("\t")[0] for ln in lines} == {"q1", "q2"}
 
 
-def test_cli_index_build_knobs_roundtrip(spark, tmp_path):
+def test_cli_index_build_knobs_roundtrip(spark, tmp_path, cli_main):
     # round-4 verdict #9: build-tuning knobs reachable from the CLI, and the
     # chosen bucket count survives the meta roundtrip into search
     idx_dir = str(tmp_path / "cliidx_knobs")
-    res = json.loads(_run_cli(
+    res = cli_main(
         "index", "--docs", f"{SF}/documents.parquet", "--out", idx_dir,
         "--num-shards", "2", "--num-buckets", "8", "--pack-group", "shard_bucket",
-    ))
+    )
     assert res["num_buckets"] == 8
 
     from llm_rankers_spark.operators.bm25 import search
@@ -62,14 +86,14 @@ def test_cli_index_build_knobs_roundtrip(spark, tmp_path):
     assert search(idx, qs, k=5).count() == 5
 
 
-def test_cli_full_run(spark, tmp_path):
+def test_cli_full_run(spark, tmp_path, cli_main):
     qpath = str(tmp_path / "q.parquet")
     spark.createDataFrame([("q1", "spark query")], "qid string, query string").write.parquet(qpath)
-    res = json.loads(_run_cli(
+    res = cli_main(
         "run", "--docs", f"{SF}/documents.parquet", "--queries", qpath,
         "--work-dir", str(tmp_path / "wd"), "--method", "setwise.heapsort",
         "--hits", "10", "--k", "3", "--num-shards", "2",
-    ))
+    )
     assert os.path.isdir(res["trec_path"])
     assert "rerank_sec" in res["metrics"]
 
@@ -77,7 +101,8 @@ def test_cli_full_run(spark, tmp_path):
 def test_cli_fuse_matches_library(spark, tmp_path):
     # round-4 verdict #5: M4's CLI face (reference hybrid.py:54-80) — fuse
     # two runs through the subprocess CLI and compare against the library
-    # call on the same inputs
+    # call on the same inputs. The one test of the ``python -m`` face: a
+    # fresh process that builds its own session
     from llm_rankers_spark.operators.runs import fuse_runs_many, read_trec_run, write_trec_run
 
     rows_a = [("q1", "d1", 1, 9.0), ("q1", "d2", 2, 5.0), ("q2", "d3", 1, 3.0)]
@@ -106,10 +131,10 @@ def test_cli_fuse_matches_library(spark, tmp_path):
     assert all(r["tag"] == "hyb" for r in got.collect())
 
 
-def test_cli_compact_segments(spark, tmp_path):
+def test_cli_compact_segments(spark, tmp_path, cli_main):
     # streaming-segment compaction through the CLI: two segments fold into
     # one and search results stay rank-identical (library equivalence is
-    # pinned in test_streaming; here the subprocess face)
+    # pinned in test_streaming; here the CLI face)
     from pyspark.sql import functions as F
 
     from llm_rankers_spark.corpus import generate_corpus, with_docid
@@ -127,7 +152,7 @@ def test_cli_compact_segments(spark, tmp_path):
     q2.awaitTermination(120)
     assert len(list_segments(root)) == 2
 
-    res = json.loads(_run_cli("compact", "--root", root, "--num-shards", "2"))
+    res = cli_main("compact", "--root", root, "--num-shards", "2")
     assert res["segments"] == ["segment_compacted"]
     assert res["compacted"] is True and res["n_before"] == 2
     idx = load_index(spark, os.path.join(root, "segment_compacted"))
@@ -135,19 +160,15 @@ def test_cli_compact_segments(spark, tmp_path):
     assert search(idx, qs, k=5).count() == 5
 
     # a bad root must not exit 0 with plausible JSON (round-5 review finding)
-    env = dict(os.environ, PYTHONPATH=REPO)
-    out = subprocess.run(
-        [sys.executable, "-m", "llm_rankers_spark", "compact", "--root", str(tmp_path / "nope")],
-        capture_output=True, text=True, env=env, cwd="/tmp", timeout=420,
-    )
-    assert out.returncode == 2 and "no segment manifest" in out.stdout
+    res = cli_main("compact", "--root", str(tmp_path / "nope"), code=2)
+    assert "no segment manifest" in res["error"]
 
 
-def test_cli_prep(tmp_path):
-    res = json.loads(_run_cli(
+def test_cli_prep(tmp_path, cli_main):
+    res = cli_main(
         "prep", "--docs", f"{SF}/documents.parquet", "--work-dir", str(tmp_path / "prep"),
         "--min-words", "20",
-    ))
+    )
     c = res["counts"]
     assert c["filtered"] >= c["exact"] >= c["clean"] > 0
     assert os.path.exists(os.path.join(res["clean_path"], "_SUCCESS"))

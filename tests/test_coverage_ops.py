@@ -1,26 +1,22 @@
 """Tests for the remaining SURVEY §2 operators: S3/S4 exports, F1/F2
-clamps, A2 permutation vote, P10 reasoning parse, M3 retry wrapper."""
+clamps, A2 permutation vote, P10 reasoning parse."""
 
 import glob
 import json
 import os
-
-import pytest
 
 from llm_rankers_spark.corpus import (
     clean_query_text,
     export_corpus_json,
     export_qrels_tsv,
     export_queries_tsv,
-    generate_corpus,
-    read_code_table,
 )
 from llm_rankers_spark.functions.tokenize import truncate_col, truncate_tokens, word_clamp_col
+from llm_rankers_spark.operators.model_comparator import RankR1Comparator, fake_model_factory
 from llm_rankers_spark.operators.rerank import (
+    Compare,
     MockComparator,
-    RetryingComparator,
     VotingComparator,
-    parse_reasoning_answer,
     run_lockstep,
     setwise_heapsort,
 )
@@ -32,23 +28,6 @@ def _read_lines(path):
         with open(p) as f:
             out.extend(ln.rstrip("\n") for ln in f)
     return out
-
-
-def test_read_code_table_shape_and_filter(spark, tmp_path):
-    # the input_hint table shape (repo, path, commit, lang, content) loads
-    # through one entry point regardless of source (catalog table / parquet)
-    src = str(tmp_path / "code_files")
-    generate_corpus(spark, 60, seed=7).write.parquet(src)
-    docs = read_code_table(spark, src)
-    assert {"docid", "content", "content_sha256"} <= set(docs.columns)
-    assert docs.count() == 60
-    py_only = read_code_table(spark, src, lang_filter=["python"])
-    assert 0 < py_only.count() < 60
-    assert py_only.filter(~py_only.lang.isin(["python"])).count() == 0
-    with pytest.raises(ValueError, match="lacks columns"):
-        bad = str(tmp_path / "bad")
-        spark.createDataFrame([("x",)], "repo string").write.parquet(bad)
-        read_code_table(spark, bad)
 
 
 def test_export_corpus_json_rules(spark, tmp_path):
@@ -122,29 +101,30 @@ def test_voting_comparator_in_heapsort():
     assert [d for d, _ in out[:3]] == ["d3", "d1", "d0"]
 
 
-def test_retrying_comparator():
-    def flaky(fail_times):
-        left = [fail_times]
-
-        def rel(query, text):
-            if left[0] > 0:
-                left[0] -= 1
-                raise RuntimeError("transient")
-            return 0
-
-        return rel
-
-    rc = RetryingComparator(MockComparator(relevance=flaky(2)), max_retries=3)
-    assert rc.best_of("q", ["a"]) == 0
-    assert rc.retries == 2
-    rc2 = RetryingComparator(MockComparator(relevance=flaky(10)), max_retries=2)
-    with pytest.raises(RuntimeError):
-        rc2.best_of("q", ["a"])
-
-
 def test_parse_reasoning_answer():
-    assert parse_reasoning_answer("<think>blah [3] blah</think><answer>[2]</answer>", 4) == 1
-    assert parse_reasoning_answer("<answer>the best is [1]!</answer>", 4) == 0
-    assert parse_reasoning_answer("<answer>[9]</answer>", 4) is None
-    assert parse_reasoning_answer("no tags at all", 4) is None
-    assert parse_reasoning_answer("", 4) is None
+    # P10's one parser is RankR1Comparator.decide with the toml's
+    # ANSWER_PATTERN. A completion it cannot read casts no vote, and with no
+    # vote the parent (index 0) keeps its slot: the reference's
+    # unexpected-output path (setwise.py:546)
+    req = Compare("best_of", "q", ["a", "b", "c", "d"], seq=1)
+    one = RankR1Comparator("r1-parse-1", fake_model_factory)
+    (order,) = one._orders(req)
+    # control: a well-formed trace votes for the doc behind its label, here
+    # not the parent
+    assert one.decide(req, ["<think>blah [3] blah</think><answer>[2]</answer>"]) == order[1] != 0
+    three = RankR1Comparator("r1-parse-3", fake_model_factory, num_permutation=3)
+    orders = three._orders(req)
+    vote = f"<think>t</think> <answer>[{orders[2].index(3) + 1}]</answer>"  # a vote for doc 3
+    unreadable = (
+        "<think>t</think><answer>[9]</answer>",  # label out of range
+        "<answer>[9]</answer>",
+        "",  # empty completion
+        "no tags at all",
+        "<answer>[2]</answer>",  # <answer> with no <think>
+        "<answer>the best is [1]!</answer>",
+    )
+    for bad in unreadable:
+        assert one.decide(req, [bad]) == 0, bad
+        assert three.decide(req, [bad, bad, bad]) == 0, bad
+        # the one readable vote outweighs two unreadable ones: they cast none
+        assert three.decide(req, [bad, bad, vote]) == 3, bad

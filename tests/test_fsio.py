@@ -23,8 +23,8 @@ def test_local_roundtrip(tmp_path):
     fsio.write_json(p, {"a": 1, "b": [2, 3]})
     assert fsio.exists(p)
     assert fsio.read_json(p) == {"a": 1, "b": [2, 3]}
-    fsio.append_text(p, "\nx")
-    assert fsio.read_text(p).endswith("\nx")
+    fsio.write_text(p, "x\ny\n")
+    assert fsio.read_text(p) == "x\ny\n"
     fsio.delete(p)
     assert not fsio.exists(p)
 

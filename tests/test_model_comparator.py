@@ -8,19 +8,24 @@ import itertools
 import threading
 
 import pytest
-from pyspark.sql import functions as F
 
 from llm_rankers_spark.operators.model_comparator import (
-    FakeGenerativeModel,
     FakeRelevanceModel,
     GenerativeModelComparator,
     ModelComparator,
-    fake_generative_factory,
     fake_model_factory,
     get_model,
     rerank_batched,
 )
 from llm_rankers_spark.operators.rerank import MockComparator, rerank, rerank_local, rerank_many
+from tests.fakes import (
+    FakeDuoModel,
+    FakeGenerativeModel,
+    FakeReasoningModel,
+    fake_duo_factory,
+    fake_generative_factory,
+    fake_reasoning_factory,
+)
 
 _names = itertools.count()
 
@@ -142,27 +147,6 @@ def test_one_comparator_serves_many_queries():
         assert ranked == rerank_local("setwise.heapsort", items, q, fresh, k=5, num_child=3), q
 
 
-def test_pointwise_model_scorer_matches_direct(spark):
-    from llm_rankers_spark.operators.pointwise import model_scorer, pointwise_rerank
-
-    rows = []
-    for q in range(3):
-        for d, t in _mk_items(f"q{q}", n=9):
-            rows.append((f"q{q}", f"query {q}", d, int(d[-2:]) + 1, t))
-    cands = spark.createDataFrame(rows, "qid string, query string, docid string, rank int, text string")
-
-    via_model = pointwise_rerank(cands, scorer=model_scorer("pw-test", fake_model_factory, batch_size=4))
-    import numpy as np
-
-    def direct(queries, texts):
-        return np.array([_fake_rel(q, t) for q, t in zip(queries, texts)])
-
-    via_direct = pointwise_rerank(cands, scorer=direct)
-    a = {(r.qid, r.docid, r.rank) for r in via_model.collect()}
-    b = {(r.qid, r.docid, r.rank) for r in via_direct.collect()}
-    assert a == b
-
-
 def test_rerank_batched_matches_per_qid_rerank(spark):
     rows = []
     for q in range(8):
@@ -188,10 +172,7 @@ def test_rerank_batched_matches_per_qid_rerank(spark):
 def test_duo_prob_comparator_matches_scoring():
     # P5: DuoT5 joint-prompt P(true) compare ≡ scoring comparator on the
     # same (text-only) relevance, for every pairwise loop
-    from llm_rankers_spark.operators.model_comparator import (
-        DuoProbPairComparator,
-        FakeDuoModel,
-    )
+    from llm_rankers_spark.operators.model_comparator import DuoProbPairComparator
 
     def text_rel(_q, t):
         return int(hashlib.md5(t.encode()).hexdigest()[:7], 16)
@@ -216,10 +197,7 @@ def test_rank_r1_comparator_matches_scoring():
     # P10: reasoning-prompt flow (shuffled copies, <think>/<answer> parse,
     # vote) ≡ scoring comparator on the same relevance — rels are distinct,
     # so every permutation votes for the same doc
-    from llm_rankers_spark.operators.model_comparator import (
-        FakeReasoningModel,
-        RankR1Comparator,
-    )
+    from llm_rankers_spark.operators.model_comparator import RankR1Comparator
 
     items = _mk_items("r1")
     for nperm in (1, 3):
@@ -236,10 +214,7 @@ def test_rank_r1_comparator_matches_scoring():
 def test_rank_r1_v02_comparator_matches_scoring():
     # P10-v0.2: same voting/parse flow, v0.2 prompt protocol (RankLLM
     # system text, blank-line doc separator, 'Here is the query:' framing)
-    from llm_rankers_spark.operators.model_comparator import (
-        FakeReasoningModel,
-        RankR1V02Comparator,
-    )
+    from llm_rankers_spark.operators.model_comparator import RankR1V02Comparator
 
     items = _mk_items("r1v2")
     m = FakeReasoningModel()
@@ -288,12 +263,7 @@ def test_rank_r1_answer_pattern_matches_reference_trace():
 def test_rerank_batched_duo_and_r1(spark):
     # both new protocols must run through the cross-query stepper and
     # match the per-qid MockComparator path
-    from llm_rankers_spark.operators.model_comparator import (
-        DuoProbPairComparator,
-        RankR1Comparator,
-        fake_duo_factory,
-        fake_reasoning_factory,
-    )
+    from llm_rankers_spark.operators.model_comparator import DuoProbPairComparator, RankR1Comparator
 
     rows = []
     for qi in range(4):
@@ -320,10 +290,7 @@ def test_rerank_batched_duo_and_r1(spark):
 def test_openai_api_ranker_worked_example():
     # P-API (setwise.py:338-399): injectable transport, truncation, bounded
     # retry — end-to-end through GenerativeModelComparator + a rerank loop
-    from llm_rankers_spark.operators.model_comparator import (
-        FakeGenerativeModel,
-        OpenAIGenerativeModel,
-    )
+    from llm_rankers_spark.operators.model_comparator import OpenAIGenerativeModel
 
     inner = FakeGenerativeModel()
     fails = {"n": 2}

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_rankers_spark.operators.runs import (
-    append_trec_run,
     cap_hits,
     filter_excluded,
     filter_qids,
@@ -70,21 +69,6 @@ def test_trec_single_file_equals_parts(spark, run, tmp_path):
     assert lines(p_multi) == lines(p_one)
     assert len([p for p in glob.glob(os.path.join(p_one, "part-*"))]) == 1
     assert read_trec_run(spark, p_one).count() == run.count()
-
-
-def test_append_trec_run_resume(spark, run, tmp_path):
-    # reference contract (Rank-R1/run_setwise.py:79-87): restart appends only
-    # qids missing from the file; a full rerun is a no-op
-    path = str(tmp_path / "resume.trec")
-    part = run.filter(F.col("qid") != "q2")
-    assert append_trec_run(part, path, tag="t") == 2
-    n1 = sum(1 for _ in open(path))
-    assert append_trec_run(run, path, tag="t") == 1  # only q2 appended
-    lines = [ln.split("\t") for ln in open(path)]
-    assert len(lines) == 24 and {ln[0] for ln in lines} == {"q0", "q1", "q2"}
-    assert lines[n1][0] == "q2" and lines[n1][3] == "1"
-    assert append_trec_run(run, path, tag="t") == 0  # idempotent
-    assert sum(1 for _ in open(path)) == 24
 
 
 def test_cap_hits(run):
@@ -168,24 +152,6 @@ def test_run_metrics(run):
     assert m["n_queries"] == 3
     assert m["avg_docs_per_query"] == pytest.approx(8.0)
     assert m["avg_top_score"] == pytest.approx(10.0)
-
-
-def test_append_trec_run_truncated_tail_recovered(spark, run, tmp_path):
-    # round-2 ADVICE: a crash can truncate the final line; resume must drop
-    # it (not parse a garbage done-qid) and rewrite that query's lines
-    path = str(tmp_path / "trunc.trec")
-    append_trec_run(run.filter(F.col("qid") == "q0"), path, tag="t")
-    with open(path) as f:
-        good = f.read()
-    with open(path, "w") as f:
-        f.write(good + "q1\tQ0\tdoc")  # half-written line, no newline
-    assert append_trec_run(run, path, tag="t") == 2  # q1 (retried) + q2
-    lines = [ln.split("\t") for ln in open(path) if ln.strip()]
-    by_qid = {}
-    for ln in lines:
-        by_qid.setdefault(ln[0], []).append(ln)
-    assert set(by_qid) == {"q0", "q1", "q2"}
-    assert [ln[3] for ln in by_qid["q1"]] == [str(i) for i in range(1, len(by_qid["q1"]) + 1)]
 
 
 def test_fuse_runs_many_matches_reference_fuse(spark):

@@ -1,4 +1,4 @@
-"""Structured Streaming: incremental segment index + windowed event aggs."""
+"""Structured Streaming: incremental segment index and stateful dedup."""
 
 import os
 
@@ -14,8 +14,6 @@ from llm_rankers_spark.streaming.index_stream import (
     list_segments,
     search_segments,
     start_index_stream,
-    streaming_event_counts,
-    streaming_sessionize,
 )
 
 from .oracle_bm25 import bm25_oracle
@@ -238,56 +236,6 @@ def test_large_batch_segment_search_persists_nothing(spark, two_segments, monkey
     assert [r[:3] for r in large] == [r[:3] for r in small]
     for a, b in zip(large, small):
         assert a[3] == pytest.approx(b[3], abs=1e-12)
-
-
-@pytest.fixture(scope="module")
-def events_dir(tmp_path_factory):
-    """The file stream source needs a DIRECTORY of matching-schema files —
-    the sf dir also holds the other tables, so isolate events.parquet."""
-    import shutil
-
-    d = tmp_path_factory.mktemp("events_only")
-    shutil.copy("/root/testdata/sf0.001/events.parquet", d / "events.parquet")
-    return str(d)
-
-
-def test_streaming_event_window_counts(spark, events_dir):
-    agg = streaming_event_counts(spark, events_dir)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("evt_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT sum(n) AS total FROM evt_out").collect()[0]["total"]
-    want = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
-    assert got == want
-
-
-def test_streaming_sessionize_matches_batch(spark, events_dir):
-    from llm_rankers_spark.operators.events import sessionize
-
-    q = (
-        streaming_sessionize(spark, events_dir, gap_minutes=30)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["start_ts"], r["end_ts"], r["n_events"], round(r["total_value"], 9))
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    want = {
-        (r["user_id"], r["start_ts"], r["end_ts"], r["n_events"], round(r["total_value"], 9))
-        for r in sessionize(ev, gap_minutes=30).collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_streaming_dedup_stateful_across_restarts(spark, tmp_path):

@@ -16,7 +16,6 @@ from llm_rankers_spark.operators.training import (
     SFT_PROMPT_SYSTEM,
     SFT_PROMPT_USER,
     build_setwise_examples,
-    judged_candidates_from_qrels,
 )
 
 
@@ -136,16 +135,3 @@ def test_seed_changes_the_mix(spark, judged):
     # determinism: same seed → identical output
     a2 = {r["qid"]: r["prompt"] for r in build_setwise_examples(judged, seed=1).collect()}
     assert a == a2
-
-
-def test_judged_candidates_adapter(spark):
-    run = spark.createDataFrame(
-        [("q1", "d1"), ("q1", "d2"), ("q1", "d3")], "qid string, docid string"
-    )
-    qrels = spark.createDataFrame([("q1", "d2", 1), ("q1", "d3", 0)], "qid string, docid string, rel int")
-    queries = spark.createDataFrame([("q1", "the query")], "qid string, query string")
-    docs = spark.createDataFrame(
-        [("d1", "t1"), ("d2", "t2"), ("d3", "t3")], "docid string, content string"
-    )
-    out = {r["docid"]: r["label"] for r in judged_candidates_from_qrels(run, qrels, queries, docs).collect()}
-    assert out == {"d1": 0, "d2": 1, "d3": 0}

@@ -8,14 +8,13 @@ import pandas as pd
 import pytest
 
 from llm_rankers_spark.operators.model_comparator import (
-    FakeZephyrModel,
     ModelComparator,
     RankZephyrComparator,
     fake_model_factory,
-    fake_zephyr_factory,
     rerank_batched,
 )
 from llm_rankers_spark.operators.rerank import listwise_slide, rerank_local, run_lockstep
+from tests.fakes import FakeZephyrModel, fake_zephyr_factory
 
 _names = itertools.count()
 
